@@ -42,8 +42,9 @@ private[delta] case class VersionMark(version: Long, kind: String,
   *     `dataChange=false` (OPTIMIZE/ZORDER) contribute NOTHING and are
   *     skipped without building a snapshot.
   *
-  * Scale shape: one distributed pass over the range's commit JSON
-  * classifies every version; the driver materializes only the cdc-file
+  * Scale shape: one pass over the range's commit JSON, placed on the
+  * driver or in tasks by [[graft.plans.Placement]], classifies every
+  * version; the driver materializes only the cdc-file
   * descriptors of the range (bounded by the range's own change volume,
   * ~32 files per write op) and per-version flags. Reconstruction reads
   * only touched files, and adjacent versions share their snapshot
@@ -127,71 +128,25 @@ object DeltaChanges {
     // ONE pass over the range's commit files classifies every version:
     // cdc actions verbatim, plus one `data` marker per version that
     // carries any dataChange add/remove. Driver holds cdc descriptors +
-    // flags only. SMALL ranges (total commit bytes under
-    // spark.graft.cdf.localMax, default 4 MB) classify driver-side —
-    // the same rows the distributed path would collect anyway, minus a
-    // whole Spark job + shuffle per feed read (guide §1.2); a 1M-file
-    // commit blows past the byte gate and keeps the distributed pass.
-    val files = range.map(v => DeltaLog.versionFile(tablePath, v))
+    // flags only. The lines are read where Placement puts them: a small
+    // range classifies driver-side with no Spark job; a big one keeps
+    // the distributed pass.
     val tp = tablePath
-    val localMax = spark.conf.getOption("spark.graft.cdf.localMax")
-      .map(_.toLong).getOrElse(4L << 20)
-    val conf = HadoopConfs.session(spark)
-    val fs = new org.apache.hadoop.fs.Path(files.head)
-      .getFileSystem(conf)
-    // ONE listStatus of _delta_log answers every version file's size (a
-    // per-file getFileStatus would be O(range) serial namenode RPCs);
-    // the running sum stops as soon as the byte gate is blown, so huge
-    // ranges never even finish the addition
-    val logLens: Map[String, Long] =
-      try fs.listStatus(new org.apache.hadoop.fs.Path(files.head).getParent)
-        .iterator.map(s => s.getPath.getName -> s.getLen).toMap
-      catch { case _: java.io.IOException => Map.empty }
-    def lenOf(f: String): Long = {
-      val p = new org.apache.hadoop.fs.Path(f)
-      logLens.getOrElse(p.getName, fs.getFileStatus(p).getLen)
-    }
-    val underCap = {
-      var total = 0L
-      val it = files.iterator
-      while (it.hasNext && total <= localMax) total += lenOf(it.next())
-      total <= localMax
-    }
-    val marks =
-      if (underCap) {
-        // same dedup key as the distributed path's dropDuplicates
-        val seen = scala.collection.mutable
-          .LinkedHashMap.empty[(Long, String, String), VersionMark]
-        for ((f, v) <- files.zip(range)) {
-          val in = fs.open(new org.apache.hadoop.fs.Path(f))
-          try {
-            val rd = new java.io.BufferedReader(
-              new java.io.InputStreamReader(in,
-                java.nio.charset.StandardCharsets.UTF_8))
-            var line = rd.readLine()
-            while (line != null) {
-              classifyLine(tp, line, v).foreach(m =>
-                seen.getOrElseUpdate((m.version, m.kind, m.path), m))
-              line = rd.readLine()
-            }
-          } finally in.close()
-        }
-        seen.values.toArray
-      } else spark.read.textFile(files: _*)
-        .select(col("value"),
-          regexp_extract(input_file_name(), "(\\d{20})\\.json", 1)
-            .cast("long").as("version"))
-        .as[(String, Long)]
-        .mapPartitions(it =>
-          it.flatMap { case (line, version) =>
-            classifyLine(tp, line, version)
-          })
-        // distributed dedup BEFORE the collect: `data` marks collapse to
-        // one per version (a 1M-file commit must not land 1M rows on the
-        // driver); cdc paths are unique already, so the driver holds only
-        // the range's cdc descriptors plus one flag per version
-        .dropDuplicates("version", "kind", "path")
-        .collect()
+    val marks: Seq[VersionMark] =
+      DeltaSnapshot.versionLines(spark, tablePath, range) match {
+        case Left(lines) =>
+          lines.flatMap { case (line, v) => classifyLine(tp, line, v) }
+            .distinctBy(m => (m.version, m.kind, m.path))
+        case Right(lines) => lines
+          .flatMap { case (line, v) => classifyLine(tp, line, v) }
+          // distributed dedup BEFORE the collect: `data` marks collapse
+          // to one per version (a 1M-file commit must not land 1M rows on
+          // the driver); cdc paths are unique already, so the driver
+          // holds only the range's cdc descriptors plus one flag per
+          // version
+          .dropDuplicates("version", "kind", "path")
+          .collect().toSeq
+      }
 
     val cdcVersions = marks.filter(_.kind == "cdc").map(_.version).toSet
     val reconVersions = marks.filter(_.kind == "data").map(_.version)
@@ -206,10 +161,7 @@ object DeltaChanges {
     else parts.reduce(_ unionByName _)
   }
 
-  /** One commit line's change-feed classification — shared verbatim by
-    * the driver-side (small-range) and distributed classification paths,
-    * so both produce the same marks by construction.
-    */
+  /** One commit line's change-feed classification, in either placement. */
   private def classifyLine(tp: String, line: String,
       version: Long): Option[VersionMark] =
     if (line.isEmpty) None
@@ -251,7 +203,7 @@ object DeltaChanges {
     * layout routed out of the files.
     */
   private def cdcFeed(spark: SparkSession, src: DeltaConversionSource,
-      actions: Array[VersionMark]): DataFrame = {
+      actions: Seq[VersionMark]): DataFrame = {
     import spark.implicits._
     val table = src.currentTable()
     val schema = table.schema
@@ -261,11 +213,11 @@ object DeltaChanges {
       schema.fields.filterNot(f => partCols.contains(f.name)) :+
         org.apache.spark.sql.types.StructField("_change_type",
           org.apache.spark.sql.types.StringType))
-    val byPath = actions.toSeq
+    val byPath = actions
       .map(m => (PathUtils.canonical(m.path), m.version, m.partitionValues))
       .toDF("__cdc_path", "__cdc_version", "__cdc_pv")
     val rows = spark.read.schema(dataSchema)
-      .parquet(actions.map(_.path).toSeq: _*)
+      .parquet(actions.map(_.path): _*)
       .withColumn("__scan_path",
         graft.util.PathCols.scanPath(col("_metadata.file_path")))
       .join(broadcast(byPath), col("__scan_path") === col("__cdc_path"))
@@ -300,37 +252,22 @@ object DeltaChanges {
       beforeSnap: graft.model.TableSnapshot,
       tablePath: String, v: Long): DataFrame = {
     import spark.implicits._
-    // SMALL commits (the byte gate of the classification pass) parse
-    // driver-side: the touched-path sets become literal isin filters on
-    // the snapshot listings, removing the commit-scan job and two
-    // semi-join subtrees per reconstructed version. Large commits keep
-    // the distributed scan with an EAGER pin — concurrently submitted
-    // downstream jobs (broadcast builds) may otherwise each materialize
-    // the unpinned lineage.
-    val conf = HadoopConfs.session(spark)
-    val vf = new org.apache.hadoop.fs.Path(
-      DeltaLog.versionFile(tablePath, v))
-    val localMax = spark.conf.getOption("spark.graft.cdf.localMax")
-      .map(_.toLong).getOrElse(4L << 20)
-    val fs = vf.getFileSystem(conf)
+    // commits read on the driver (Placement) hand back their touched-path
+    // sets: those become literal isin filters on the snapshot listings,
+    // removing the commit-scan job and two semi-join subtrees per
+    // reconstructed version. Large commits keep the distributed scan with
+    // an EAGER pin — concurrently submitted downstream jobs (broadcast
+    // builds) may otherwise each materialize the unpinned lineage.
+    val placed = DeltaSnapshot.placedActions(spark, tablePath, Seq(v))
     val (addPathSet, removePathSet):
-        (Option[Seq[String]], Option[Seq[String]]) =
-      if (fs.getFileStatus(vf).getLen > localMax) (None, None)
-      else {
-        val in = fs.open(vf)
-        val parsed = try {
-          val rd = new java.io.BufferedReader(
-            new java.io.InputStreamReader(in,
-              java.nio.charset.StandardCharsets.UTF_8))
-          Iterator.continually(rd.readLine()).takeWhile(_ != null)
-            .map((_, v)).toSeq
-        } finally in.close()
-        val rows = DeltaSnapshot.parseActions(tablePath)(parsed.iterator)
-          .filter(_.dataChange).toSeq
+        (Option[Seq[String]], Option[Seq[String]]) = placed match {
+      case Left(all) =>
+        val rows = all.filter(_.dataChange)
         (Some(rows.filter(_.kind == "add").map(_.path)),
           Some(rows.filter(_.kind == "remove").map(_.path)))
-      }
-    lazy val acts = DeltaSnapshot.actions(spark, tablePath, Seq(v))
+      case Right(_) => (None, None)
+    }
+    lazy val acts = graft.plans.Placement.dataset(spark, placed)
       .filter(_.dataChange)
       .localCheckpoint()
     val addPaths = addPathSet.map(_.toDF("__p"))

@@ -1,6 +1,5 @@
 package graft.formats.delta
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.model._
@@ -94,26 +93,11 @@ class DeltaConversionSource(spark: SparkSession, tablePath: String,
       vs.lastOption.getOrElse(0L))
   }
 
-  /** Snapshot assembly: a small checkpoint-less log's listing is already
-    * parsed driver-side (DeltaSnapshot.liveFilesLocal) — ship it as a
-    * local Dataset AND seed the listing fast path, so neither the
-    * listing materialization nor the localFor probe runs a Spark job for
-    * it. Past the driver-replay caps the distributed replay is unchanged.
-    */
   private def snapshotOf(vs: Seq[Long], table: graft.model.TableDescriptor,
       schema: org.apache.spark.sql.types.StructType,
-      commitId: String): TableSnapshot = {
-    import spark.implicits._
-    DeltaSnapshot.liveFilesLocal(spark, tablePath, vs, schema) match {
-      case Some(entries) =>
-        val snap = TableSnapshot(table,
-          spark.createDataset(entries), commitId)
-        graft.plans.SnapshotFileIndex.offerLocal(snap, entries)
-        snap
-      case None => TableSnapshot(table,
-        DeltaSnapshot.liveFiles(spark, tablePath, vs, schema), commitId)
-    }
-  }
+      commitId: String): TableSnapshot =
+    graft.plans.SnapshotFileIndex.snapshot(spark, table, commitId,
+      DeltaSnapshot.listing(spark, tablePath, vs, schema))
 
   override def currentSnapshot(): TableSnapshot = {
     val vs = versions

@@ -1,16 +1,18 @@
 package graft.formats.delta
 
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.model._
-import graft.util.{Jsons, PathUtils}
+import graft.plans.Placement
+import graft.plans.Placement.Placed
+import graft.util.{HadoopConfs, Jsons, PathUtils}
 
 /** Table-level metadata carried in the log's `metaData` action. */
 case class DeltaMeta(
@@ -23,11 +25,12 @@ case class DeltaMeta(
     DataType.fromJson(schemaString).asInstanceOf[StructType]
 }
 
-/** Distributed Delta log replay: actions are read with `spark.read.text`
-  * over the commit files and reconciled per path with a window — the live
-  * set of a 10^6-file table never materializes on the driver (the reference
-  * gets the same property by reusing delta-spark's `snapshot.allFiles()`
-  * Dataset — DeltaDataFileExtractor.java).
+/** Delta log replay. Commit JSON is read by [[versionLines]], on the
+  * driver for a small log and with `spark.read.text` otherwise
+  * ([[graft.plans.Placement]]), and reconciled per path by one winner
+  * rule — the live set of a 10^6-file table never materializes on the
+  * driver (the reference gets the same property by reusing delta-spark's
+  * `snapshot.allFiles()` Dataset — DeltaDataFileExtractor.java).
   */
 object DeltaSnapshot {
 
@@ -79,7 +82,16 @@ object DeltaSnapshot {
     lines.flatMap { case (line, version) =>
       if (line.isEmpty) None
       else {
-        val root = Jsons.mapper.readTree(line)
+        // a corrupt line must fail NAMING the log file — a silent partial
+        // replay (or a bare Jackson message) is the wrong-answer class
+        val root =
+          try Jsons.mapper.readTree(line)
+          catch {
+            case e: com.fasterxml.jackson.core.JsonProcessingException =>
+              throw new IllegalStateException("corrupt Delta log entry in " +
+                s"${DeltaLog.versionFile(tablePath, version)}: ${e.getMessage}",
+                e)
+          }
         val add = root.get("add"); val remove = root.get("remove")
         def pv(n: JsonNode): Map[String, String] =
           Option(n.get("partitionValues")).map { o =>
@@ -113,19 +125,52 @@ object DeltaSnapshot {
     }
   }
 
-  /** All add/remove actions up to and including `version`. */
+  /** Every version file's lines tagged with their version, read where
+    * [[Placement]] puts them: on the driver, or as one textFile scan that
+    * takes each line's version from its file name. The one reader of
+    * commit JSON: the live-set replay, the single-version diff, the
+    * change-feed classifier and the metaData/protocol probes all decode
+    * its output. `at` pins a placement for tests; `None` applies the rule.
+    */
+  private[graft] def versionLines(spark: SparkSession, tablePath: String,
+      versions: Seq[Long], at: Option[Placement] = None)
+      : Placed[(String, Long)] = {
+    import spark.implicits._
+    val fs = new Path(tablePath).getFileSystem(HadoopConfs.session(spark))
+    def file(v: Long) = new Path(DeltaLog.versionFile(tablePath, v))
+    at.getOrElse(Placement.of(versions.size,
+        versions.view.map(v => Some(fs.getFileStatus(file(v)).getLen)))) match {
+      case Placement.Driver => Left(versions.toIndexedSeq.flatMap { v =>
+        Using.resource(fs.open(file(v))) { in =>
+          scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+            .map((_, v)).toIndexedSeq
+        }
+      })
+      case Placement.Tasks =>
+        if (versions.isEmpty) Right(spark.emptyDataset[(String, Long)])
+        else Right(spark.read.textFile(versions.map(v =>
+            DeltaLog.versionFile(tablePath, v)): _*)
+          .select(col("value"),
+            regexp_extract(input_file_name(), "(\\d{20})\\.json", 1)
+              .cast("long").as("version"))
+          .as[(String, Long)])
+    }
+  }
+
+  /** Add/remove actions of `versions`, parsed where they were read. */
+  private[graft] def placedActions(spark: SparkSession, tablePath: String,
+      versions: Seq[Long], at: Option[Placement] = None)
+      : Placed[ActionRow] = {
+    import spark.implicits._
+    Placement.mapRows(versionLines(spark, tablePath, versions, at))(
+      parseActions(tablePath))
+  }
+
+  /** All add/remove actions of `versions`. */
   def actions(spark: SparkSession, tablePath: String, versions: Seq[Long])
       : Dataset[ActionRow] = {
     import spark.implicits._
-    if (versions.isEmpty) return spark.emptyDataset[ActionRow]
-    val files = versions.map(v => DeltaLog.versionFile(tablePath, v))
-    val table = tablePath
-    spark.read.textFile(files: _*)
-      .select(col("value"),
-        regexp_extract(input_file_name(), "(\\d{20})\\.json", 1)
-          .cast("long").as("version"))
-      .as[(String, Long)]
-      .mapPartitions(parseActions(table))
+    Placement.dataset(spark, placedActions(spark, tablePath, versions))
   }
 
   // ---- spec-shaped checkpoint rows (PROTOCOL.md §Checkpoints): one
@@ -243,24 +288,6 @@ object DeltaSnapshot {
           baseRowId = a.baseRowId,
           defaultRowCommitVersion = a.defaultRowCommitVersion)
       }
-  }
-
-  /** Latest protocol action at-or-before the head of `versions` (same
-    * distributed scan shape as [[metadata]]); after log cleanup, the
-    * newest checkpoint's protocol row answers instead.
-    */
-  def protocol(spark: SparkSession, tablePath: String, versions: Seq[Long])
-      : Option[CkptProtocol] = {
-    if (versions.isEmpty) return None
-    val fromJson = actionLines(spark, tablePath, versions, "\"protocol\"")
-      .lastOption
-      .flatMap { case (line, _) =>
-        Option(Jsons.mapper.readTree(line).get("protocol")).map(p =>
-          CkptProtocol(p.get("minReaderVersion").asInt,
-            p.get("minWriterVersion").asInt))
-      }
-    fromJson.orElse(checkpointProtocol(spark, tablePath, versions)
-      .map(p => CkptProtocol(p.minReaderVersion, p.minWriterVersion)))
   }
 
   /** Protocol row of the newest checkpoint at-or-before the head —
@@ -442,7 +469,8 @@ object DeltaSnapshot {
       CkptRow(None, Some(CkptMetaData(m.id, CkptFormat("parquet", Map.empty),
         m.schemaString, m.partitionColumns, m.configuration,
         m.createdTime)), None))
-    val protoRow = protocol(spark, tablePath, versions)
+    val protoRow = protocolInfo(spark, tablePath, versions)
+      .map(p => CkptProtocol(p.minReaderVersion, p.minWriterVersion))
       .orElse(Some(CkptProtocol(1, 2)))
       .map(p => CkptRow(None, None, Some(p)))
     // spec: domain metadata actions MUST be included in checkpoints —
@@ -578,139 +606,75 @@ object DeltaSnapshot {
     } finally addRows.unpersist()
   }
 
-  /** A checkpoint-less log this small replays on the driver: one process
-    * parses the JSON lines and folds latest-per-path in a hash map —
-    * no parse job, no shuffle. Four commits on a fresh table cost four
-    * Spark-job-free replays instead of 4 × (scan + shuffle + agg). The
-    * caps keep it honest at scale: a log that outgrows them (or has a
-    * checkpoint) replays distributed.
-    */
-  private val MaxDriverReplayVersions = 64
-  private val MaxDriverReplayBytes = 4L << 20
-
-  private def driverReplay(tablePath: String, versions: Seq[Long],
-      conf: Configuration): Option[Seq[ActionRow]] = {
-    if (versions.isEmpty) return Some(Nil)
-    if (versions.size > MaxDriverReplayVersions) return None
-    val fs = new Path(tablePath).getFileSystem(conf)
-    val files = versions.map(v => new Path(DeltaLog.versionFile(tablePath, v)))
-    val bytes = files.foldLeft(0L)((b, p) => b + fs.getFileStatus(p).getLen)
-    if (bytes > MaxDriverReplayBytes) return None
-    val best = new java.util.HashMap[String, ActionRow]()
-    def rank(a: ActionRow): (Long, Int) =
-      (a.version, if (a.kind == "add") 1 else 0)
-    val ord = Ordering[(Long, Int)]
-    files.zip(versions).foreach { case (p, v) =>
-      val in = fs.open(p)
-      // a corrupt line must fail NAMING the log file — a silent partial
-      // replay (or a bare Jackson message) is the wrong-answer class
-      try parseActions(tablePath)(
-        scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .map(l => (l, v))).foreach { a =>
-        val prev = best.get(a.path)
-        if (prev == null || ord.compare(rank(a), rank(prev)) >= 0)
-          best.put(a.path, a)
-      } catch {
-        case e: Exception => throw new IllegalStateException(
-          s"corrupt Delta log entry in $p: ${e.getMessage}", e)
-      } finally in.close()
-    }
-    Some(best.values.asScala.filter(_.kind == "add").toSeq)
-  }
-
-  /** Commit-log lines containing `token`, ordered by version — driver-side
-    * for small logs (no Spark job: metaData/protocol probes run after
-    * every commit, and each probe was a full textFile job), distributed
-    * textFile scan past the caps.
-    */
+  /** Commit-log lines containing `token`, ordered by version. */
   private[graft] def actionLines(spark: SparkSession, tablePath: String,
       versions: Seq[Long], token: String): Seq[(String, Long)] = {
     import spark.implicits._
-    val conf = graft.util.HadoopConfs.session(spark)
-    val fs = new Path(tablePath).getFileSystem(conf)
-    val paths = versions.map(v => new Path(DeltaLog.versionFile(tablePath, v)))
-    val small = versions.size <= MaxDriverReplayVersions &&
-      paths.foldLeft(0L)((b, p) =>
-        b + fs.getFileStatus(p).getLen) <= MaxDriverReplayBytes
-    if (small) {
-      paths.zip(versions).flatMap { case (p, v) =>
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .filter(_.contains(token)).map((_, v)).toList
-        finally in.close()
-      }.sortBy(_._2)
-    } else spark.read.textFile(
-        versions.map(v => DeltaLog.versionFile(tablePath, v)): _*)
-      .select(col("value"),
-        regexp_extract(input_file_name(), "(\\d{20})\\.json", 1)
-          .cast("long").as("version"))
-      .filter(col("value").contains(token))
-      .as[(String, Long)]
-      .collect().toSeq.sortBy(_._2)
+    (versionLines(spark, tablePath, versions) match {
+      case Left(lines) => lines.filter(_._1.contains(token))
+      case Right(lines) =>
+        lines.filter(col("value").contains(token)).collect().toSeq
+    }).sortBy(_._2)
   }
 
-  /** Live files at a version: the latest action per path wins; within one
-    * commit an add beats a remove (rewrite-in-place). Replay starts from
-    * the newest checkpoint at-or-before the version when one exists.
-    * Small checkpoint-less logs replay on the driver ([[driverReplay]]);
-    * everything else replays distributed with a map-side-combining
-    * `max_by` GROUP BY (the shuffle carries one row per (path, map task)
-    * instead of every action ever logged — at 10^7 logged actions that
-    * is the difference between shuffling the full history and shuffling
-    * ~the live file count).
+  /** Live files at a version. Replay starts from the newest checkpoint
+    * at-or-before the version when one exists (a parquet scan, so the
+    * result is distributed); the commit JSON after it is read where
+    * [[versionLines]] places it. Per path the [[winner]] rule picks the
+    * surviving action — on the driver as a hash-map fold, in tasks as a
+    * map-side-combining `max_by` GROUP BY (the shuffle carries one row
+    * per (path, map task) instead of every action ever logged — at 10^7
+    * logged actions that is the difference between shuffling the full
+    * history and shuffling ~the live file count).
     */
   def liveFiles(spark: SparkSession, tablePath: String, versions: Seq[Long],
       schema: StructType): Dataset[FileEntry] = {
     import spark.implicits._
-    // column mapping: stats JSON and partition values in the log are keyed
-    // by PHYSICAL name — parse against the physical schema, then surface
-    // logical names in the FileEntry (the metadata plane speaks logical)
+    Placement.dataset(spark, listing(spark, tablePath, versions, schema))
+  }
+
+  /** [[liveFiles]] where it was decoded, for the snapshot factory. */
+  private[graft] def listing(spark: SparkSession, tablePath: String,
+      versions: Seq[Long], schema: StructType,
+      at: Option[Placement] = None): Placed[FileEntry] = {
+    import spark.implicits._
+    Placement.mapRows(placedLiveAdds(spark, tablePath, versions, at))(
+      toEntries(schema))
+  }
+
+  /** ActionRow → FileEntry, the one conversion every listing and diff
+    * uses. Column mapping: stats JSON and partition values in the log are
+    * keyed by PHYSICAL name — parse against the physical schema, then
+    * surface logical names in the FileEntry (the metadata plane speaks
+    * logical).
+    */
+  private def toEntries(schema: StructType)
+      : Iterator[ActionRow] => Iterator[FileEntry] = {
     val physSchemaJson = DeltaColumnMapping.physicalSchema(schema).json
     val renames = DeltaColumnMapping.physicalToLogical(schema)
-    liveAdds(spark, tablePath, versions).mapPartitions { it =>
+    it => {
       val sch = DataType.fromJson(physSchemaJson).asInstanceOf[StructType]
-      it.map(toFileEntry(sch, renames))
+      it.map { a =>
+        val (numRecords, stats0) = DeltaStats.parse(sch, a.stats)
+        val stats = stats0.map(s =>
+          s.copy(field = renames.getOrElse(s.field, s.field)))
+        FileEntry(a.path, a.size, numRecords, "parquet",
+          a.partitionValues.toSeq.sortBy(_._1)
+            .map { case (k, v) =>
+              PartitionMember(renames.getOrElse(k, k), v) },
+          stats, a.modificationTime, a.dvDescriptor)
+      }
     }
   }
 
-  /** Shared ActionRow → FileEntry conversion (stats parse + logical
-    * renames) — one body for the distributed mapPartitions and the
-    * driver-side listing below, so both produce identical entries.
+  /** The live-set winner rule, one key for both placements: the latest
+    * version wins and, within one commit, an add beats a remove
+    * (rewrite-in-place).
     */
-  private def toFileEntry(sch: StructType, renames: Map[String, String])
-      (a: ActionRow): FileEntry = {
-    val (numRecords, stats0) = DeltaStats.parse(sch, a.stats)
-    val stats = stats0.map(s =>
-      s.copy(field = renames.getOrElse(s.field, s.field)))
-    FileEntry(a.path, a.size, numRecords, "parquet",
-      a.partitionValues.toSeq.sortBy(_._1)
-        .map { case (k, v) =>
-          PartitionMember(renames.getOrElse(k, k), v) },
-      stats, a.modificationTime, a.dvDescriptor)
-  }
-
-  /** Driver-held FileEntry listing when the log qualifies for the driver
-    * replay (no checkpoint, ≤64 version files, ≤4 MB of log) — the same
-    * winner set [[liveAdds]] would wrap in a Dataset, already parsed on
-    * the driver. Callers seed the listing fast path with it
-    * (SnapshotFileIndex.offerLocal) so per-snapshot metadata questions
-    * skip the probe's plan+collect Spark job entirely. None past the
-    * caps: a 10^6-file table keeps the distributed replay untouched.
-    */
-  def liveFilesLocal(spark: SparkSession, tablePath: String,
-      versions: Seq[Long], schema: StructType)
-      : Option[IndexedSeq[FileEntry]] = {
-    val conf = graft.util.HadoopConfs.session(spark)
-    val head = versions.lastOption.getOrElse(-1L)
-    val cp = DeltaLog.latestCheckpoint(tablePath, head, conf)
-    DeltaLog.requireReplayable(tablePath, versions, cp, conf)
-    if (cp.nonEmpty) return None
-    driverReplay(tablePath, versions, conf).map { adds =>
-      val sch = DeltaColumnMapping.physicalSchema(schema)
-      val renames = DeltaColumnMapping.physicalToLogical(schema)
-      adds.iterator.map(toFileEntry(sch, renames)).toIndexedSeq
-    }
-  }
+  private def winner(a: ActionRow): (Long, Int) =
+    (a.version, if (a.kind == "add") 1 else 0)
+  private def winnerCol =
+    struct(col("version"), when(col("kind") === "add", 1).otherwise(0))
 
   /** The live-set winner at the ACTION level — every field the log
     * carried (raw stats text, row-tracking base ids) survives, which
@@ -719,35 +683,42 @@ object DeltaSnapshot {
   def liveAdds(spark: SparkSession, tablePath: String,
       versions: Seq[Long]): Dataset[ActionRow] = {
     import spark.implicits._
-    val conf = graft.util.HadoopConfs.session(spark)
+    Placement.dataset(spark, placedLiveAdds(spark, tablePath, versions, None))
+  }
+
+  private def placedLiveAdds(spark: SparkSession, tablePath: String,
+      versions: Seq[Long], at: Option[Placement]): Placed[ActionRow] = {
+    import spark.implicits._
+    val conf = HadoopConfs.session(spark)
     val head = versions.lastOption.getOrElse(-1L)
     val cp = DeltaLog.latestCheckpoint(tablePath, head, conf)
     // an unsupported (json-v2-only) or absent checkpoint must fail HERE,
     // with the missing prefix named — not serve a partial live set
     DeltaLog.requireReplayable(tablePath, versions, cp, conf)
-    val jsonVersions = cp match {
-      case Some(c) => versions.filter(_ > c)
-      case None => versions
+    val json = placedActions(spark, tablePath,
+      cp.fold(versions)(c => versions.filter(_ > c)), at)
+    val acts = cp match {
+      case None => json
+      case Some(c) => Right(readCheckpoint(spark, tablePath, c)
+        .union(Placement.dataset(spark, json)))
     }
-    val small =
-      if (cp.nonEmpty) None else driverReplay(tablePath, jsonVersions, conf)
-    small match {
-      case Some(adds) => spark.createDataset(adds)
-      case None =>
-        val jsonActs = actions(spark, tablePath, jsonVersions)
-        val acts = cp match {
-          case Some(c) => readCheckpoint(spark, tablePath, c).union(jsonActs)
-          case None => jsonActs
+    acts match {
+      case Left(rows) =>
+        val best = scala.collection.mutable.HashMap.empty[String, ActionRow]
+        val ord = Ordering[(Long, Int)]
+        rows.foreach { a =>
+          if (best.get(a.path).forall(b => ord.gteq(winner(a), winner(b))))
+            best(a.path) = a
         }
-        val actCols = acts.columns
-        val winner = acts
+        Left(best.valuesIterator.filter(_.kind == "add").toIndexedSeq)
+      case Right(rows) =>
+        val actCols = rows.columns
+        Right(rows
           .groupBy(col("path").as("__p"))
-          .agg(max_by(
-            struct(actCols.map(col).toIndexedSeq: _*),
-            struct(col("version"),
-              when(col("kind") === "add", 1).otherwise(0))).as("__m"))
+          .agg(max_by(struct(actCols.map(col).toIndexedSeq: _*), winnerCol)
+            .as("__m"))
           .select(col("__m.*"))
-        winner.filter(col("kind") === "add").as[ActionRow]
+          .filter(col("kind") === "add").as[ActionRow])
     }
   }
 
@@ -812,20 +783,18 @@ object DeltaSnapshot {
   def changes(spark: SparkSession, tablePath: String, version: Long,
       schema: StructType): (Dataset[FileEntry], Dataset[FileEntry]) = {
     import spark.implicits._
-    val acts = actions(spark, tablePath, Seq(version))
-    val schemaJson = schema.json
-    val toEntries = (it: Iterator[ActionRow]) => {
-      val sch = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-      it.map { a =>
-        val (numRecords, stats) = DeltaStats.parse(sch, a.stats)
-        FileEntry(a.path, a.size, numRecords, "parquet",
-          a.partitionValues.toSeq.sortBy(_._1)
-            .map { case (k, v) => PartitionMember(k, v) },
-          stats, a.modificationTime, a.dvDescriptor)
-      }
-    }
-    val adds = acts.filter(_.kind == "add").mapPartitions(toEntries)
-    val removes = acts.filter(_.kind == "remove").mapPartitions(toEntries)
-    (adds, removes)
+    val (adds, removes) = placedChanges(spark, tablePath, version, schema)
+    (Placement.dataset(spark, adds), Placement.dataset(spark, removes))
+  }
+
+  private[graft] def placedChanges(spark: SparkSession, tablePath: String,
+      version: Long, schema: StructType, at: Option[Placement] = None)
+      : (Placed[FileEntry], Placed[FileEntry]) = {
+    import spark.implicits._
+    val acts = placedActions(spark, tablePath, Seq(version), at)
+    val decode = toEntries(schema)
+    def side(kind: String) =
+      Placement.mapRows(acts)(it => decode(it.filter(_.kind == kind)))
+    (side("add"), side("remove"))
   }
 }

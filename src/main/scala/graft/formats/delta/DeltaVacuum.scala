@@ -111,13 +111,15 @@ object DeltaVacuum {
     // in-flight writers' spools are younger by construction.
     val logDir = java.nio.file.Paths.get(DeltaLog.logPath(tablePath))
     if (java.nio.file.Files.exists(logDir)) {
-      val it = java.nio.file.Files.list(logDir).iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        val n = p.getFileName.toString
-        if (n.startsWith("graft-spool-") && n.endsWith(".jsonl") &&
-            java.nio.file.Files.getLastModifiedTime(p).toMillis < horizon)
-          java.nio.file.Files.deleteIfExists(p)
+      scala.util.Using.resource(java.nio.file.Files.list(logDir)) { s =>
+        val it = s.iterator()
+        while (it.hasNext) {
+          val p = it.next()
+          val n = p.getFileName.toString
+          if (n.startsWith("graft-spool-") && n.endsWith(".jsonl") &&
+              java.nio.file.Files.getLastModifiedTime(p).toMillis < horizon)
+            java.nio.file.Files.deleteIfExists(p)
+        }
       }
     }
 

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.model._
+import graft.plans.Placement
 import graft.spi._
-import graft.sources.ParquetFooters
 import graft.util.{Jsons, PathUtils}
 
 /** Hudi source — reference HudiConversionSource.java:57-341: snapshot =
@@ -101,7 +101,7 @@ class HudiConversionSource(spark: SparkSession, tablePath: String,
   /** Live (partition, WriteStat) pairs as of an instant: latest write per
     * fileId wins; fileIds replaced by a later replacecommit are dropped.
     */
-  private[hudi] def liveStats(upTo: String)
+  private[graft] def liveStats(upTo: String)
       : Seq[(String, HudiTimeline.WriteStat, String)] = {
     val states = timeline()._2
     val idx = states.lastIndexWhere(s => s._1 <= upTo)
@@ -232,90 +232,53 @@ class HudiConversionSource(spark: SparkSession, tablePath: String,
       instants.lastOption.map(_.toLong).getOrElse(0L))
   }
 
-  /** Stat enrichment of a live listing: the metadata index serves stats
-    * when the table has one (zero footer opens — reference
-    * HudiFileStatsExtractor.java:136-188 metadata-table path); files absent
-    * from the index fall back to a distributed footer read (:115-126).
+  /** Stat enrichment of a live listing, decoded where [[Placement]] puts
+    * it: the metadata index serves stats when the table has one (zero
+    * footer opens — reference HudiFileStatsExtractor.java:136-188
+    * metadata-table path); files absent from it fall back to a footer read
+    * (:115-126) under the session's Hadoop conf. The placement's inputs
+    * are the index deltas plus one per listed file, the footer it may
+    * open: counted, not sized, since a footer read is bounded by the
+    * footer and not by the file. `at` pins a placement for tests.
     */
-  private def toFileEntries(rows: Seq[(String, HudiTimeline.WriteStat, String)])
-      : Dataset[FileEntry] = {
+  private[graft] def toFileEntries(
+      rows: Seq[(String, HudiTimeline.WriteStat, String)],
+      at: Option[Placement] = None): Placement.Placed[FileEntry] = {
     import spark.implicits._
-    val tp = tablePath
     val input = rows.map { case (part, s, instant) =>
-      (PathUtils.resolve(tp, s.path), s.fileSizeInBytes, part, instant)
+      (PathUtils.resolve(tablePath, s.path), s.fileSizeInBytes, part, instant)
     }
-    val inputDs = graft.util.Par.ds(spark, input, 128)
-      .toDF("path", "size", "part", "instant")
-    val index = HudiMetadataIndex.read(spark, tablePath)
-      .select("path", "recordCount", "columnStats")
-    inputDs.join(index, Seq("path"), "left")
-      .as[(String, Long, String, String, Option[Long],
-        Option[Seq[FileColumnStat]])]
-      .mapPartitions { it =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        it.map { case (path, size, part, instant, idxRecords, idxStats) =>
-          val (records, stats) = idxStats match {
-            case Some(st) if st.nonEmpty => (idxRecords.getOrElse(0L), st)
-            case _ => ParquetFooters.readFooterStats(path, conf)
-          }
-          val pv = part.split('/').toSeq.filter(_.contains('='))
-            .map { seg =>
-              val i = seg.indexOf('=')
-              PartitionMember(seg.substring(0, i), seg.substring(i + 1))
-            }
-          FileEntry(path, size, records, ParquetFooters.formatOf(path), pv,
-            stats, instant.toLong)
-        }
-      }
-  }
-
-  /** Driver-side FileEntry conversion for SMALL listings over a
-    * json-only metadata index — per-row logic identical to
-    * [[toFileEntries]]'s distributed mapPartitions (index hit with stats
-    * → served from the index; else a parquet footer read). None past the
-    * row cap or when the index carries parquet deltas, so large tables
-    * keep the distributed join+scan untouched.
-    */
-  private def toFileEntriesLocal(
-      rows: Seq[(String, HudiTimeline.WriteStat, String)])
-      : Option[IndexedSeq[FileEntry]] = {
-    if (rows.size > 64) return None
-    HudiMetadataIndex.readLocal(tablePath).map { index =>
-      val conf = graft.util.HadoopConfs.session(spark)
-      rows.iterator.map { case (part, s, instant) =>
-        val path = PathUtils.resolve(tablePath, s.path)
-        val (records, stats) = index.get(path) match {
-          case Some(fe) if fe.columnStats.nonEmpty =>
-            (fe.recordCount, fe.columnStats)
-          case _ => ParquetFooters.readFooterStats(path, conf)
-        }
-        val pv = part.split('/').toSeq.filter(_.contains('='))
-          .map { seg =>
-            val i = seg.indexOf('=')
-            PartitionMember(seg.substring(0, i), seg.substring(i + 1))
-          }
-        FileEntry(path, s.fileSizeInBytes, records,
-          ParquetFooters.formatOf(path), pv, stats, instant.toLong)
-      }.toIndexedSeq
+    val deltas = HudiMetadataIndex.deltas(tablePath)
+    val placement = at.getOrElse(
+      Placement.of(rows.size + deltas.size, deltas.view.map(_.size)))
+    HudiMetadataIndex.read(spark, deltas, placement) match {
+      case Left(index) =>
+        val byPath = index.iterator.map(e => e.path -> e).toMap
+        val conf = graft.util.HadoopConfs.session(spark)
+        Left(input.toIndexedSeq.map { case (path, size, part, instant) =>
+          HudiMetadataIndex.fileEntry(conf, path, size, part, instant,
+            byPath.get(path).map(e => (e.recordCount, e.columnStats)))
+        })
+      case Right(index) =>
+        val bconf = graft.util.HadoopConfs.broadcastSession(spark)
+        Right(graft.util.Par.ds(spark, input, 128)
+          .toDF("path", "size", "part", "instant")
+          .join(index.select("path", "recordCount", "columnStats"),
+            Seq("path"), "left")
+          .as[(String, Long, String, String, Option[Long],
+            Option[Seq[FileColumnStat]])]
+          .mapPartitions(_.map {
+            case (path, size, part, instant, idxRecords, idxStats) =>
+              HudiMetadataIndex.fileEntry(bconf.value.value, path, size, part,
+                instant, idxStats.map(st => (idxRecords.getOrElse(0L), st)))
+          }))
     }
   }
 
-  /** Snapshot assembly: small json-only-index listings ride driver-side
-    * and seed the listing fast path (no localFor probe job); otherwise
-    * the distributed [[toFileEntries]] is unchanged.
-    */
   private def hudiSnapshot(table: TableDescriptor, upTo: String)
-      : TableSnapshot = {
-    import spark.implicits._
-    val rows = liveStats(upTo)
-    toFileEntriesLocal(rows) match {
-      case Some(entries) =>
-        val snap = TableSnapshot(table, spark.createDataset(entries), upTo)
-        graft.plans.SnapshotFileIndex.offerLocal(snap, entries)
-        snap
-      case None => TableSnapshot(table, toFileEntries(rows), upTo)
-    }
-  }
+      : TableSnapshot =
+    graft.plans.SnapshotFileIndex.snapshot(spark, table, upTo,
+      toFileEntries(liveStats(upTo)))
 
   override def currentSnapshot(): TableSnapshot = {
     val last = instants.lastOption.getOrElse(
@@ -368,6 +331,7 @@ class HudiConversionSource(spark: SparkSession, tablePath: String,
   }
 
   override def changeForCommit(commit: String): TableChange = {
+    import spark.implicits._
     val c = HudiTimeline.readCommit(tablePath, commit)
     // log-file write stats (MOR deltacommits) never change the RO view:
     // only base-file writes become adds
@@ -391,7 +355,8 @@ class HudiConversionSource(spark: SparkSession, tablePath: String,
       .getOrElse(Nil)
     TableChange(commit,
       currentTable().copy(latestCommitMillis = commit.toLong),
-      FilesDelta(toFileEntries(adds), toFileEntries(removed)))
+      FilesDelta(Placement.dataset(spark, toFileEntries(adds)),
+        Placement.dataset(spark, toFileEntries(removed))))
   }
 
   override def commitsBacklog(lastSynced: String): Seq[String] =
@@ -431,8 +396,7 @@ class HudiConversionSource(spark: SparkSession, tablePath: String,
     val pending = logPendingFileGroups(last)
     if (queryType == "read_optimized" || pending.isEmpty)
       return graft.formats.delta.DeltaRead.toDataFrame(
-        spark, TableSnapshot(currentTable(), toFileEntries(liveStats(last)),
-          last))
+        spark, hudiSnapshot(currentTable(), last))
     val keyCols = HudiTimeline
       .property(tablePath, HudiLogFiles.RecordKeyFieldsProp)
       .map(_.split(',').toSeq)
@@ -440,10 +404,8 @@ class HudiConversionSource(spark: SparkSession, tablePath: String,
         s"real-time merge at $tablePath needs " +
           s"${HudiLogFiles.RecordKeyFieldsProp} in hoodie.properties — " +
           "without the record key, log records cannot replace base rows"))
-    val snap = TableSnapshot(currentTable(),
-      toFileEntries(liveStats(last)), last)
-    HudiLogFiles.mergedRead(spark, snap, liveLogFiles(last).map(_._1),
-      keyCols)
+    HudiLogFiles.mergedRead(spark, hudiSnapshot(currentTable(), last),
+      liveLogFiles(last).map(_._1), keyCols)
   }
 }
 

@@ -2,9 +2,17 @@ package graft.formats.hudi
 
 import java.nio.file.{Files, Paths => JPaths}
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
-import graft.model.FileEntry
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.model.{FileColumnStat, FileEntry, PartitionMember}
+import graft.plans.Placement
+import graft.plans.Placement.Placed
+import graft.sources.ParquetFooters
 
 /** Hudi metadata-table-shaped file/col-stats index.
   *
@@ -73,45 +81,43 @@ object HudiMetadataIndex {
       graft.util.Jsons.toJson(entries))
   }
 
-  /** The merged index: latest entry per path across all commit deltas
-    * (parquet directories AND json sidecars). Empty when the table has no
-    * index (reader falls back to footers).
+  /** One index delta: the instant that wrote it and its JSON sidecar or
+    * parquet directory.
     */
-  /** Driver-held index when it is json-only (no parquet delta dirs):
-    * latest entry per path, the same winner rule as [[read]]'s window
-    * (descending lastModifiedMillis; first-in-file-order on ties). None
-    * when parquet deltas exist — those keep the distributed read.
+  private[hudi] case class IndexDelta(instant: String,
+      path: java.nio.file.Path) {
+    def isParquet: Boolean = Files.isDirectory(path)
+    /** Bytes a read of it costs. A parquet directory is not listed here,
+      * so its size is unknown and it keeps the read in tasks.
+      */
+    def size: Option[Long] = if (isParquet) None else Some(Files.size(path))
+  }
+
+  /** The index's deltas in instant order; empty when the table has no
+    * index (readers fall back to footers).
     */
-  def readLocal(tablePath: String): Option[Map[String, FileEntry]] = {
+  private[hudi] def deltas(tablePath: String): Seq[IndexDelta] = {
     val dir = resolvedDir(tablePath)
-    if (!Files.exists(dir)) return Some(Map.empty)
-    import scala.jdk.CollectionConverters._
-    val children = Files.list(dir).iterator().asScala.toSeq
-    if (children.exists(Files.isDirectory(_))) return None
-    val best = scala.collection.mutable.Map.empty[String, FileEntry]
-    children.filter(p => p.getFileName.toString.endsWith(".json"))
-      .sortBy(_.getFileName.toString)
-      .foreach { p =>
-        jsonFileEntries(p).foreach { fe =>
-          if (!best.get(fe.path).exists(
-              _.lastModifiedMillis >= fe.lastModifiedMillis))
-            best.put(fe.path, fe)
-        }
-      }
-    Some(best.toMap)
+    if (!Files.exists(dir)) return Nil
+    Using.resource(Files.list(dir))(_.iterator().asScala.flatMap { p =>
+      val name = p.getFileName.toString
+      if (Files.isDirectory(p)) Some(IndexDelta(name, p))
+      else if (name.endsWith(".json"))
+        Some(IndexDelta(name.stripSuffix(".json"), p))
+      else None
+    }.toSeq).sortBy(_.instant)
   }
 
   private def jsonFileEntries(p: java.nio.file.Path): Seq[FileEntry] = {
-    import scala.jdk.CollectionConverters._
     val arr = graft.util.Jsons.mapper.readTree(Files.readString(p))
     arr.elements().asScala.map { n =>
       FileEntry(n.get("path").asText, n.get("fileSizeBytes").asLong,
         n.get("recordCount").asLong, n.get("fileFormat").asText,
         n.get("partitionValues").elements().asScala.map(m =>
-          graft.model.PartitionMember(m.get("field").asText,
+          PartitionMember(m.get("field").asText,
             m.get("value").asText)).toSeq,
         n.get("columnStats").elements().asScala.map(s =>
-          graft.model.FileColumnStat(s.get("field").asText,
+          FileColumnStat(s.get("field").asText,
             Option(s.get("min")).filterNot(_.isNull).map(_.asText),
             Option(s.get("max")).filterNot(_.isNull).map(_.asText),
             s.get("numNulls").asLong, s.get("numValues").asLong,
@@ -120,30 +126,75 @@ object HudiMetadataIndex {
     }.toSeq
   }
 
+  /** The merged index by [[Placement]]: the winning entry per path across
+    * every delta.
+    */
   def read(spark: SparkSession, tablePath: String): Dataset[FileEntry] = {
     import spark.implicits._
-    val dir = resolvedDir(tablePath)
-    if (!Files.exists(dir)) return spark.emptyDataset[FileEntry]
-    import scala.jdk.CollectionConverters._
-    val children = Files.list(dir).iterator().asScala.toSeq
-    val parquetDeltas = children.filter(Files.isDirectory(_))
-      .map(_.toString).sorted
-    val jsonEntries: Seq[FileEntry] = children
-      .filter(p => p.getFileName.toString.endsWith(".json"))
-      .sortBy(_.getFileName.toString)
-      .flatMap(jsonFileEntries)
-    if (parquetDeltas.isEmpty && jsonEntries.isEmpty)
-      return spark.emptyDataset[FileEntry]
-    val parts = Seq.newBuilder[Dataset[FileEntry]]
-    if (parquetDeltas.nonEmpty)
-      parts += FileEntry.aligned(spark.read.parquet(parquetDeltas: _*))
-    if (jsonEntries.nonEmpty) parts += spark.createDataset(jsonEntries)
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val w = Window.partitionBy("path").orderBy(col("lastModifiedMillis").desc)
-    parts.result().reduce(_ union _)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
-      .as[FileEntry]
+    val ds = deltas(tablePath)
+    Placement.dataset(spark, read(spark, ds, Placement.of(ds.map(_.size))))
+  }
+
+  /** The index winner rule, one key for both placements: the latest
+    * `lastModifiedMillis` wins, and a tie goes to the later delta.
+    */
+  private def winner(e: (String, FileEntry)): (Long, String) =
+    (e._2.lastModifiedMillis, e._1)
+
+  /** The merged index decoded where `at` puts it. JSON sidecars parse on
+    * the driver in both placements; parquet deltas are a Spark scan.
+    */
+  private[hudi] def read(spark: SparkSession, deltas: Seq[IndexDelta],
+      at: Placement): Placed[FileEntry] = {
+    import spark.implicits._
+    val (parquet, json) = deltas.partition(_.isParquet)
+    val fromJson = json.flatMap(d => jsonFileEntries(d.path).map((d.instant, _)))
+    at match {
+      case Placement.Driver =>
+        val fromParquet = parquet.flatMap(d =>
+          FileEntry.aligned(spark.read.parquet(d.path.toString)).collect()
+            .map((d.instant, _)))
+        val best = scala.collection.mutable.HashMap.empty[String,
+          (String, FileEntry)]
+        val ord = Ordering[(Long, String)]
+        (fromParquet ++ fromJson).foreach { e =>
+          if (best.get(e._2.path).forall(b => ord.gteq(winner(e), winner(b))))
+            best(e._2.path) = e
+        }
+        Left(best.valuesIterator.map(_._2).toIndexedSeq)
+      case Placement.Tasks =>
+        val fields = org.apache.spark.sql.Encoders.product[FileEntry].schema
+          .fieldNames.toIndexedSeq.map(col)
+        val tagged = Seq(
+          Option.when(parquet.nonEmpty)(FileEntry.aligned(
+              spark.read.parquet(parquet.map(_.path.toString): _*))
+            .select(regexp_extract(input_file_name(), "([^/]+)/[^/]+$", 1)
+              .as("_1"), struct(fields: _*).as("_2"))
+            .as[(String, FileEntry)]),
+          Option.when(fromJson.nonEmpty)(spark.createDataset(fromJson)))
+          .flatten
+        if (tagged.isEmpty) Right(spark.emptyDataset[FileEntry])
+        else Right(tagged.reduce(_ union _)
+          .groupBy(col("_2.path"))
+          .agg(max_by(col("_2"),
+            struct(col("_2.lastModifiedMillis"), col("_1"))).as("__m"))
+          .select(col("__m.*")).as[FileEntry])
+    }
+  }
+
+  /** One listed base file's entry, in either placement: the index's
+    * record count and stats on a hit, else the parquet footer's.
+    */
+  private[hudi] def fileEntry(conf: Configuration, path: String, size: Long,
+      part: String, instant: String,
+      hit: Option[(Long, Seq[FileColumnStat])]): FileEntry = {
+    val (records, stats) = hit.filter(_._2.nonEmpty)
+      .getOrElse(ParquetFooters.readFooterStats(path, conf))
+    val pv = part.split('/').toSeq.filter(_.contains('=')).map { seg =>
+      val i = seg.indexOf('=')
+      PartitionMember(seg.substring(0, i), seg.substring(i + 1))
+    }
+    FileEntry(path, size, records, ParquetFooters.formatOf(path), pv, stats,
+      instant.toLong)
   }
 }

@@ -6,6 +6,7 @@ import java.time.ZoneOffset
 import java.time.format.DateTimeFormatter
 
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import graft.util.Jsons
 
@@ -225,15 +226,14 @@ object HudiTimeline {
     val active = activeTimelineDir(tablePath)
     if (!Files.exists(active)) return Nil
     val v1 = isV1Layout(tablePath)
-    val out = Files.list(active).iterator().asScala
+    Using.resource(Files.list(active))(_.iterator().asScala
       .map(_.getFileName.toString)
       .flatMap {
         case CompletedV1Name(req, _, _) if v1 => Some(req)
         case CompletedLegacyName(req, _) => Some(req)
         case _ => None
       }
-      .toSeq
-    out.sorted
+      .toSeq).sorted
   }
 
   private val CleanV1Name = "([0-9]+)_([0-9]+)\\.clean".r
@@ -251,13 +251,13 @@ object HudiTimeline {
   def cleanHorizons(tablePath: String): Seq[String] = {
     val active = activeTimelineDir(tablePath)
     if (!Files.exists(active)) return Nil
-    val files = Files.list(active).iterator().asScala
+    val files = Using.resource(Files.list(active))(_.iterator().asScala
       .map(p => (p, p.getFileName.toString))
       .flatMap {
         case (p, CleanV1Name(req, _)) => Some((p, req))
         case (p, CleanLegacyName(req)) => Some((p, req))
         case _ => None
-      }.toSeq
+      }.toSeq)
     files.map { case (p, instant) =>
       val horizon: Option[String] =
         try {
@@ -303,13 +303,13 @@ object HudiTimeline {
   def rollbackTargets(tablePath: String): Seq[String] = {
     val active = activeTimelineDir(tablePath)
     if (!Files.exists(active)) return Nil
-    val files = Files.list(active).iterator().asScala
+    val files = Using.resource(Files.list(active))(_.iterator().asScala
       .map(p => (p, p.getFileName.toString))
       .flatMap {
         case (p, RollbackV1Name(req, _)) => Some((p, req))
         case (p, RollbackLegacyName(req)) => Some((p, req))
         case _ => None
-      }.toSeq
+      }.toSeq)
     files.flatMap { case (p, _) =>
       val targets: Option[Seq[String]] =
         try {
@@ -668,9 +668,9 @@ object HudiTimeline {
   def readArchivedCommits(tablePath: String): Seq[CommitMeta] = {
     val dir = JPaths.get(archiveDir(tablePath))
     if (!Files.exists(dir)) return Nil
-    Files.list(dir).iterator().asScala
+    Using.resource(Files.list(dir))(_.iterator().asScala
       .filter(_.getFileName.toString.endsWith(".archived"))
-      .toSeq.sortBy(_.getFileName.toString)
+      .toSeq).sortBy(_.getFileName.toString)
       .flatMap { batch =>
         new String(Files.readAllBytes(batch), StandardCharsets.UTF_8)
           .linesIterator.filter(_.nonEmpty).map { line =>

@@ -63,38 +63,23 @@ class IcebergConversionSource(spark: SparkSession, tablePath: String,
   private[iceberg] def filesAtSeq(m: IcebergTableMetadata, seq: Long)
       : Dataset[FileEntry] = {
     import spark.implicits._
+    graft.plans.Placement.dataset(spark, listingAtSeq(m, seq))
+  }
+
+  private def listingAtSeq(m: IcebergTableMetadata, seq: Long)
+      : graft.plans.Placement.Placed[FileEntry] = {
+    import spark.implicits._
     m.snapshotBySeq(seq) match {
-      case None => spark.emptyDataset[FileEntry]
+      case None => Right(spark.emptyDataset[FileEntry])
       case Some(s) => IcebergManifests.liveFiles(spark,
-        IcebergManifests.readManifestList(s.manifestList), m.schema)
+        IcebergManifests.dataManifests(s.manifestList), m.schema)
     }
   }
 
-  /** Snapshot assembly at a sequence: small-manifest snapshots read their
-    * listing DRIVER-side (IcebergManifests.liveFilesLocal) — shipped as a
-    * local Dataset AND seeded into the listing fast path, so neither the
-    * listing materialization nor the localFor probe runs a Spark job.
-    * Past the caps the distributed manifest scan is unchanged.
-    */
   private[iceberg] def snapshotAtSeq(m: IcebergTableMetadata, seq: Long,
-      table: graft.model.TableDescriptor, commitId: String): TableSnapshot = {
-    import spark.implicits._
-    m.snapshotBySeq(seq) match {
-      case None =>
-        TableSnapshot(table, spark.emptyDataset[FileEntry], commitId)
-      case Some(s) =>
-        IcebergManifests.liveFilesLocal(s.manifestList, m.schema) match {
-          case Some(entries) =>
-            val snap = TableSnapshot(table,
-              spark.createDataset(entries), commitId)
-            graft.plans.SnapshotFileIndex.offerLocal(snap, entries)
-            snap
-          case None => TableSnapshot(table, IcebergManifests.liveFiles(
-            spark, IcebergManifests.readManifestList(s.manifestList),
-            m.schema), commitId)
-        }
-    }
-  }
+      table: graft.model.TableDescriptor, commitId: String): TableSnapshot =
+    graft.plans.SnapshotFileIndex.snapshot(spark, table, commitId,
+      listingAtSeq(m, seq))
 
   /** A snapshot is representable as a bare file listing only when no
     * row-level delete files are live: file-level consumers (sync, the 1:1
@@ -279,9 +264,11 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
         pendingAdds = Some(files); pendingRemoves = None
       case Some(s) =>
         requireNoDeleteManifests(s.manifestList)
+        import spark.implicits._
         val m = currentMeta.get
-        val current = IcebergManifests.liveFiles(spark,
-          IcebergManifests.readManifestList(s.manifestList), m.schema)
+        val current = graft.plans.Placement.dataset(spark,
+          IcebergManifests.liveFiles(spark,
+            IcebergManifests.dataManifests(s.manifestList), m.schema))
         val delta = FilesDelta.between(files, current)
         pendingAdds = Some(delta.added)
         pendingRemoves = Some(delta.removed)

@@ -393,11 +393,8 @@ object IcebergDeletes {
     val partByFile: Map[String, Seq[graft.model.PartitionMember]] =
       if (partFieldNames.isEmpty) Map.empty
       else {
-        val dataManifests = IcebergManifests
-          .readManifestListRecords(manifestList)
-          .filter(r => IcebergManifests.contentOf(r) == 0)
-          .map(_.get("manifest_path").toString)
-        IcebergManifests.liveFiles(spark, dataManifests, m.schema)
+        graft.plans.Placement.dataset(spark, IcebergManifests.liveFiles(
+            spark, IcebergManifests.dataManifests(manifestList), m.schema))
           .map(fe => (fe.path, fe.partitionValues))
           .toDF("pf", "pvals")
           .join(touched, col("pf") === col("file"), "left_semi")

@@ -12,6 +12,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.model._
+import graft.plans.Placement
 
 /** Iceberg-layout Avro manifests (spec: iceberg.apache.org/spec/#manifests).
   *
@@ -616,9 +617,7 @@ object IcebergManifests {
     * (file_path, pos) tuples as table rows.
     */
   def readManifestList(path: String): Seq[String] =
-    readManifestListRecords(path)
-      .filter(r => contentOf(r) == 0)
-      .map(_.get("manifest_path").toString)
+    dataManifests(path).map(_.get("manifest_path").toString)
 
   /** Every manifest_file record of a manifest list, verbatim (data AND
     * delete manifests) — for delete-awareness checks and carry-forward.
@@ -747,8 +746,7 @@ object IcebergManifests {
   def liveDataFileSeqs(spark: SparkSession, manifestListPath: String)
       : Dataset[(String, Long)] = {
     import spark.implicits._
-    val pairs = readManifestListRecords(manifestListPath)
-      .filter(r => contentOf(r) == 0)
+    val pairs = dataManifests(manifestListPath)
       .map(m => (m.get("manifest_path").toString,
         longOf(m.get("sequence_number"), 0L)))
     graft.util.Par.ds(spark, pairs, 64)
@@ -765,45 +763,38 @@ object IcebergManifests {
       }
   }
 
-  /** Driver-side live-file listing when the snapshot's DATA manifests are
-    * few and small (counts from the manifest list's own `manifest_length`
-    * — no extra IO to decide): the exact rows [[liveFiles]] would compute
-    * distributed, already on the driver, for seeding the listing fast
-    * path (SnapshotFileIndex.offerLocal). None past the caps, so a
-    * 10^6-file table keeps the distributed manifest scan untouched.
-    */
-  def liveFilesLocal(manifestListPath: String, schema: StructType,
-      maxBytes: Long = 4L << 20, maxManifests: Int = 64)
-      : Option[IndexedSeq[FileEntry]] = {
-    val recs = readManifestListRecords(manifestListPath)
-      .filter(r => contentOf(r) == 0)
-    if (recs.size > maxManifests) return None
-    val bytes = recs.iterator
-      .map(r => longOf(r.get("manifest_length"), Long.MaxValue)).sum
-    if (bytes > maxBytes || bytes < 0) return None
-    Some(recs.iterator.flatMap { r =>
-      readManifest(r.get("manifest_path").toString)
-        .map(e => fromEntry(e, schema))
-        .collect { case (st, fe) if st != Status.Deleted => fe }
-    }.toIndexedSeq)
-  }
+  /** A manifest list's DATA manifest records (`content`=0), verbatim. */
+  def dataManifests(manifestListPath: String): Seq[GenericRecord] =
+    readManifestListRecords(manifestListPath).filter(r => contentOf(r) == 0)
 
-  /** Distributed manifest scan: manifests read in executors, one iterator
-    * per manifest — the Spark analog of Iceberg's planFiles
-    * (IcebergConversionSource.java:172-186 uses includeColumnStats scans).
+  /** Live data files of the given data-manifest records, decoded where
+    * [[graft.plans.Placement]] puts them: manifest bytes come from the
+    * list's own `manifest_length` (no extra IO to decide), and a record
+    * without one disqualifies the driver. In tasks, manifests are read in
+    * executors, one iterator per manifest — the Spark analog of Iceberg's
+    * planFiles (IcebergConversionSource.java:172-186 uses
+    * includeColumnStats scans). `at` pins a placement for tests.
     */
-  def liveFiles(spark: SparkSession, manifestPaths: Seq[String],
-      schema: StructType): Dataset[FileEntry] = {
+  def liveFiles(spark: SparkSession, manifests: Seq[GenericRecord],
+      schema: StructType, at: Option[Placement] = None)
+      : Placement.Placed[FileEntry] = {
     import spark.implicits._
+    val paths = manifests.map(_.get("manifest_path").toString)
+    val placement = at.getOrElse(Placement.of(manifests.size,
+      manifests.view.map(r => Option(r.get("manifest_length")).collect {
+        case l: java.lang.Long => l.longValue
+      })))
     val schemaJson = schema.json
-    graft.util.Par.ds(spark, manifestPaths, 64)
-      .mapPartitions { paths =>
-        val sch = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-          .asInstanceOf[StructType]
-        paths.flatMap { p =>
-          readManifest(p).map(e => fromEntry(e, sch))
-            .collect { case (st, fe) if st != Status.Deleted => fe }
-        }
+    Placement.mapRows(placement match {
+      case Placement.Driver => Left(paths.toIndexedSeq)
+      case Placement.Tasks => Right(graft.util.Par.ds(spark, paths, 64))
+    }) { paths =>
+      val sch = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
+        .asInstanceOf[StructType]
+      paths.flatMap { p =>
+        readManifest(p).map(e => fromEntry(e, sch))
+          .collect { case (st, fe) if st != Status.Deleted => fe }
       }
+    }
   }
 }

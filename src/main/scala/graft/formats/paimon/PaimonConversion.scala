@@ -2,12 +2,11 @@ package graft.formats.paimon
 
 import java.util.UUID
 
-
-import org.apache.avro.generic.{GenericData, GenericRecord}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.model._
+import graft.plans.Placement
 import graft.spi._
 import graft.util.PathUtils
 
@@ -24,70 +23,60 @@ class PaimonConversionSource(spark: SparkSession, tablePath: String,
   private def latest: Long = PaimonFormat.latestSnapshotId(tablePath)
     .getOrElse(throw new IllegalStateException(s"no Paimon table at $tablePath"))
 
-  private def entryToFile(e: GenericRecord): FileEntry =
-    PaimonFormat.fromEntry(e, tablePath)._2
-
-  /** (kind, entry) pairs for one snapshot's full state. */
-  private def entriesAt(id: Long): Seq[(Int, FileEntry)] = {
-    val snap = PaimonFormat.readSnapshot(tablePath, id)
-    val manifests = PaimonFormat.readManifestList(
-      PaimonFormat.manifestListPath(tablePath, snap.baseManifestList)) ++
-      PaimonFormat.readManifestList(
-        PaimonFormat.manifestListPath(tablePath, snap.deltaManifestList))
-    manifests.flatMap { m =>
-      PaimonFormat.readManifest(s"${PaimonFormat.manifestDir(tablePath)}/$m")
-        .map(PaimonFormat.fromEntry(_, tablePath))
-    }
-  }
-
-  private def liveAt(id: Long): Seq[FileEntry] = {
-    val deleted = entriesAt(id).collect {
-      case (k, f) if k == PaimonFormat.Kind.Delete => f.path
-    }.toSet
-    entriesAt(id).collect {
-      case (k, f) if k == PaimonFormat.Kind.Add && !deleted.contains(f.path) => f
-    }
-  }
-
-  /** Manifest entries as a Dataset: short lists parse on the driver (no
-    * job per gate-scale read); longer ones read one task PER MANIFEST.
+  /** A snapshot's manifests, base ∪ delta, with the sizes their lists
+    * record.
     */
-  private[paimon] def entriesDs(names: Seq[String])
-      : Dataset[(Int, FileEntry)] = {
+  private def manifestsOf(snap: PaimonFormat.PaimonSnapshot)
+      : Seq[(String, Long)] =
+    Seq(snap.baseManifestList, snap.deltaManifestList).flatMap(l =>
+      PaimonFormat.readManifestList(PaimonFormat.manifestListPath(tablePath, l)))
+
+  /** (kind, entry) pairs of `manifests`, decoded where [[Placement]] puts
+    * them: on the driver, or one task PER MANIFEST.
+    */
+  private def entries(manifests: Seq[(String, Long)],
+      at: Option[Placement]): Placement.Placed[(Int, FileEntry)] = {
     import spark.implicits._
-    val mdir = PaimonFormat.manifestDir(tablePath)
     val tp = tablePath
-    if (names.size <= 4)
-      spark.createDataset(names.flatMap(m =>
-        PaimonFormat.readManifest(s"$mdir/$m")
-          .map(PaimonFormat.fromEntry(_, tp))))
-    else {
-      val bconf = graft.util.HadoopConfs.broadcastSession(spark)
-      graft.util.Par.ds(spark, names.map(n => s"$mdir/$n"), 128)
-        .flatMap(mp => PaimonFormat.readManifest(mp, bconf.value.value)
-          .map(PaimonFormat.fromEntry(_, tp)))
+    val paths = manifests.map { case (n, _) =>
+      s"${PaimonFormat.manifestDir(tablePath)}/$n" }
+    at.getOrElse(Placement.of(manifests.map(m => Some(m._2)))) match {
+      case Placement.Driver =>
+        val conf = graft.util.HadoopConfs.session(spark)
+        Left(paths.toIndexedSeq.flatMap(p =>
+          PaimonFormat.readManifest(p, conf).map(PaimonFormat.fromEntry(_, tp))))
+      case Placement.Tasks =>
+        val bconf = graft.util.HadoopConfs.broadcastSession(spark)
+        Right(graft.util.Par.ds(spark, paths, 128)
+          .flatMap(p => PaimonFormat.readManifest(p, bconf.value.value)
+            .map(PaimonFormat.fromEntry(_, tp))))
     }
   }
 
-  /** The snapshot's live listing as a Dataset: ADD/DELETE reconciliation
-    * as a distributed anti-join — a 10^6-file listing never materializes
-    * driver-side.
+  /** A snapshot's live listing, its manifests read and parsed once: ADD
+    * entries whose path no DELETE entry names — a set difference on the
+    * driver, a distributed anti-join in tasks (a 10^6-file listing never
+    * materializes driver-side). `at` pins a placement for tests.
     */
-  private def listingAt(id: Long): Dataset[FileEntry] = {
+  private[graft] def listing(snap: PaimonFormat.PaimonSnapshot,
+      at: Option[Placement] = None): Placement.Placed[FileEntry] = {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val snap = PaimonFormat.readSnapshot(tablePath, id)
-    val names = PaimonFormat.readManifestList(
-      PaimonFormat.manifestListPath(tablePath, snap.baseManifestList)) ++
-      PaimonFormat.readManifestList(
-        PaimonFormat.manifestListPath(tablePath, snap.deltaManifestList))
-    if (names.size <= 4) return spark.createDataset(liveAt(id))
-    val entries = entriesDs(names)
-    val adds = entries.filter(_._1 == PaimonFormat.Kind.Add).map(_._2)
-    val dels = entries.filter(_._1 == PaimonFormat.Kind.Delete)
-      .map(_._2.path).toDF("__del")
-    adds.join(dels, adds("path") === col("__del"), "left_anti")
-      .drop("__del").as[FileEntry]
+    entries(manifestsOf(snap), at) match {
+      case Left(es) =>
+        val deleted = es.collect {
+          case (k, f) if k == PaimonFormat.Kind.Delete => f.path
+        }.toSet
+        Left(es.collect {
+          case (k, f) if k == PaimonFormat.Kind.Add && !deleted(f.path) => f
+        })
+      case Right(es) =>
+        val adds = es.filter(_._1 == PaimonFormat.Kind.Add).map(_._2)
+        val dels = es.filter(_._1 == PaimonFormat.Kind.Delete)
+          .map(_._2.path).toDF("__del")
+        Right(adds.join(dels, adds("path") === col("__del"), "left_anti")
+          .drop("__del").as[FileEntry])
+    }
   }
 
   override def currentTable(): TableDescriptor = {
@@ -117,38 +106,22 @@ class PaimonConversionSource(spark: SparkSession, tablePath: String,
       if (schema.partitionKeys.nonEmpty) Layout.HivePartitioned
       else Layout.Flat,
       id)
-    snapshotOf(table, id)
+    snapshotOf(table, snap)
   }
 
-  /** Snapshot assembly: the ≤4-manifest driver listing (listingAt's own
-    * small path) is also seeded into the listing fast path, so later
-    * metadata questions skip the localFor plan+collect probe job.
-    */
-  private def snapshotOf(table: TableDescriptor, id: Long): TableSnapshot = {
-    import spark.implicits._
-    val snap = PaimonFormat.readSnapshot(tablePath, id)
-    val names = PaimonFormat.readManifestList(
-      PaimonFormat.manifestListPath(tablePath, snap.baseManifestList)) ++
-      PaimonFormat.readManifestList(
-        PaimonFormat.manifestListPath(tablePath, snap.deltaManifestList))
-    if (names.size <= 4) {
-      val entries = liveAt(id).toIndexedSeq
-      val out = TableSnapshot(table, spark.createDataset(entries),
-        id.toString)
-      graft.plans.SnapshotFileIndex.offerLocal(out, entries)
-      out
-    } else TableSnapshot(table, listingAt(id), id.toString)
-  }
+  private def snapshotOf(table: TableDescriptor,
+      snap: PaimonFormat.PaimonSnapshot): TableSnapshot =
+    graft.plans.SnapshotFileIndex.snapshot(spark, table, snap.id.toString,
+      listing(snap))
 
   override def currentSnapshot(): TableSnapshot =
-    snapshotOf(currentTable(), latest)
+    snapshotOf(currentTable(), PaimonFormat.readSnapshot(tablePath, latest))
 
   override def changeForCommit(commit: String): TableChange = {
     import spark.implicits._
     val snap = PaimonFormat.readSnapshot(tablePath, commit.toLong)
-    val delta = entriesDs(
-      PaimonFormat.readManifestList(
-        PaimonFormat.manifestListPath(tablePath, snap.deltaManifestList)))
+    val delta = Placement.dataset(spark, entries(PaimonFormat.readManifestList(
+      PaimonFormat.manifestListPath(tablePath, snap.deltaManifestList)), None))
     TableChange(commit, currentTable().copy(latestCommitMillis = commit.toLong),
       FilesDelta(
         delta.filter(_._1 == PaimonFormat.Kind.Add).map(_._2),
@@ -300,10 +273,9 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
     val base: Seq[(String, Long)] = {
       val raw = prevId.map { p =>
         val s = PaimonFormat.readSnapshot(tablePath, p)
-        PaimonFormat.readManifestList(
-          PaimonFormat.manifestListPath(tablePath, s.baseManifestList)) ++
+        Seq(s.baseManifestList, s.deltaManifestList).flatMap(l =>
           PaimonFormat.readManifestList(
-            PaimonFormat.manifestListPath(tablePath, s.deltaManifestList))
+            PaimonFormat.manifestListPath(tablePath, l)).map(_._1))
       }.getOrElse(Nil)
       if (raw.size <= 16)
         raw.map(n => (n, new java.io.File(s"$mdir/$n").length()))

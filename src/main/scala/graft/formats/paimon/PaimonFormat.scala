@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths => JPaths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
@@ -114,10 +115,10 @@ object PaimonFormat {
     val dir = JPaths.get(schemaDir(tablePath))
     if (!Files.isDirectory(dir)) None
     else {
-      val ids = Files.list(dir).iterator().asScala
+      val ids = Using.resource(Files.list(dir))(_.iterator().asScala
         .map(_.getFileName.toString)
         .filter(n => n.startsWith("schema-") && n.drop(7).forall(_.isDigit))
-        .map(_.drop(7).toLong).toSeq
+        .map(_.drop(7).toLong).toSeq)
       if (ids.isEmpty) None else Some(ids.max)
     }
   }
@@ -256,21 +257,20 @@ object PaimonFormat {
   def listTags(tablePath: String): Seq[(String, Long)] = {
     val dir = JPaths.get(tagDir(tablePath))
     if (!Files.exists(dir)) return Nil
-    Files.list(dir).iterator().asScala
+    Using.resource(Files.list(dir))(_.iterator().asScala
       .map(_.getFileName.toString)
       .filter(_.startsWith("tag-"))
       .map(n => n.stripPrefix("tag-"))
-      .map(n => n -> readTag(tablePath, n).get)
-      .toSeq.sortBy(_._1)
+      .toSeq).map(n => n -> readTag(tablePath, n).get).sortBy(_._1)
   }
 
   def listSnapshotIds(tablePath: String): Seq[Long] = {
     val dir = JPaths.get(snapshotDir(tablePath))
     if (!Files.exists(dir)) return Nil
-    Files.list(dir).iterator().asScala
+    Using.resource(Files.list(dir))(_.iterator().asScala
       .map(_.getFileName.toString)
       .filter(_.startsWith("snapshot-"))
-      .map(_.stripPrefix("snapshot-").toLong).toSeq.sorted
+      .map(_.stripPrefix("snapshot-").toLong).toSeq).sorted
   }
 
   // ---- manifests (avro) ----
@@ -328,12 +328,17 @@ object PaimonFormat {
   def manifestListPath(tablePath: String, ref: String): String =
     if (ref.contains('/')) ref else s"${manifestDir(tablePath)}/$ref"
 
-  def readManifestList(path: String): Seq[String] = {
+  /** (manifest file name, its size) pairs of a manifest list. */
+  def readManifestList(path: String): Seq[(String, Long)] = {
     if (!Files.exists(JPaths.get(path))) return Nil
     val r = new DataFileReader(new File(path),
       new GenericDatumReader[GenericRecord](ListSchema))
-    try { val b = Seq.newBuilder[String]
-      while (r.hasNext) b += r.next().get("fileName").toString
+    try { val b = Seq.newBuilder[(String, Long)]
+      while (r.hasNext) {
+        val m = r.next()
+        b += ((m.get("fileName").toString,
+          m.get("fileSize").asInstanceOf[Long]))
+      }
       b.result() } finally r.close()
   }
 

@@ -88,7 +88,7 @@ object PaimonMaintenance {
       .map(PaimonFormat.manifestListPath(path, _))
       .distinct
     val manifestNames = manifestLists
-      .flatMap(PaimonFormat.readManifestList).distinct
+      .flatMap(PaimonFormat.readManifestList(_).map(_._1)).distinct
     val keepDriver = (manifestLists ++ manifestNames.map(n => s"$mdir/$n"))
       .map(PathUtils.canonical)
 

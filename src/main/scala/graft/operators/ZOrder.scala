@@ -112,6 +112,9 @@ object ZOrder {
     })
   }
 
+  /** Input size up to which [[clusterize]] pins its input. */
+  val PinMaxBytes: Long = 4L << 30
+
   /** Lay `rows` out clustered by the z-order of `cols` into ~`nOut`
     * range groups, each group one reducer (one output file per
     * unpartitioned write task): the rewrite entry point shared by Delta
@@ -124,7 +127,7 @@ object ZOrder {
     * partitioner's sampling pass (RangePartitioner.sketch re-runs the
     * child), and the write itself — each with its own full Catalyst
     * re-plan of the subtree. When `inputBytes` is at most
-    * `spark.graft.zorder.pinMaxBytes` (default 4 GiB) the input is
+    * [[PinMaxBytes]] (4 GiB) the input is
     * pinned with a lazy local checkpoint: the quantile pass materializes
     * it once and the sketch + write read pinned blocks through a tiny
     * LogicalRDD plan. Past the cap (a 100 TB-scale rewrite) pinning all
@@ -135,10 +138,9 @@ object ZOrder {
       partCols: Seq[String] = Nil,
       inputBytes: Long = Long.MaxValue): DataFrame = {
     require(cols.nonEmpty, "clusterize needs >= 1 cluster column")
-    val pinMax = rows.sparkSession.conf
-      .get("spark.graft.zorder.pinMaxBytes", (4L << 30).toString).toLong
     val src =
-      if (inputBytes <= pinMax) rows.localCheckpoint(eager = false) else rows
+      if (inputBytes <= PinMaxBytes) rows.localCheckpoint(eager = false)
+      else rows
     val rangeCols = partCols.map(col) :+ col("__zval")
     src.withColumn("__zval", zValue(src, cols))
       .repartitionByRange(nOut, rangeCols: _*)

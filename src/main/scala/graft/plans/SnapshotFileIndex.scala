@@ -224,18 +224,19 @@ object SnapshotFileIndex {
     cachedLocals.remove(key)
   }
 
-  /** Small-listing fast path: listings at or under
-    * `spark.graft.listing.localMax` entries (default 4096) are collected
-    * ONCE per (table, commit) and every subsequent metadata question —
-    * `sizeInBytes` at plan time, `listFiles` per scan, the DV/format
-    * summary — answers driver-side instead of running its own Spark job
-    * (guide §1.2: the per-read job count IS the hot path at small file
-    * counts). The driver bound is explicit and no larger than what
-    * `listFiles` already collects for a full-table scan; listings past
-    * the threshold keep the distributed path, so a 10^6-file table never
+  /** Small-listing fast path: listings at or under [[LocalListingMax]]
+    * entries are collected ONCE per (table, commit) and every subsequent
+    * metadata question — `sizeInBytes` at plan time, `listFiles` per scan,
+    * the DV/format summary — answers driver-side instead of running its
+    * own Spark job (guide §1.2: the per-read job count IS the hot path at
+    * small file counts). The driver bound is explicit and no larger than
+    * what `listFiles` already collects for a full-table scan; listings
+    * past it keep the distributed path, so a 10^6-file table never
     * materializes on the driver. `None` verdicts (too big) are cached so
     * the probe never re-runs.
     */
+  private val LocalListingMax = 4096
+
   private val cachedLocals =
     new java.util.LinkedHashMap[String, Option[IndexedSeq[FileEntry]]](
       16, 0.75f, true) {
@@ -244,33 +245,34 @@ object SnapshotFileIndex {
           : Boolean = size > 64
     }
 
-  /** Seed the small-listing cache with entries the snapshot BUILDER
-    * already holds driver-side (e.g. Delta's driver log replay): every
-    * later metadata question then answers without [[localFor]]'s
-    * plan+collect probe job. Same cap as the probe; a first-probe win
-    * keeps whichever verdict landed first (both are the same rows).
+  /** The one snapshot factory over a placed listing decode. A listing
+    * decoded on the driver ([[Placement.Driver]]) becomes a local Dataset
+    * and seeds the small-listing cache, so no later metadata question
+    * runs [[localFor]]'s plan+collect probe job for it; a distributed
+    * listing is wrapped as is.
     */
-  def offerLocal(snap: TableSnapshot, entries: IndexedSeq[FileEntry]): Unit = {
-    val max = snap.files.sparkSession.conf
-      .getOption("spark.graft.listing.localMax")
-      .map(_.toInt).getOrElse(4096)
-    if (entries.length <= max) cachedLocals.synchronized {
-      val key = snap.table.basePath + "#" + snap.commitId
-      if (cachedLocals.get(key) == null)
-        cachedLocals.put(key, Some(entries))
-    }
+  def snapshot(spark: SparkSession, table: TableDescriptor,
+      commitId: String, listing: Placement.Placed[FileEntry])
+      : TableSnapshot = listing match {
+    case scala.util.Right(files) => TableSnapshot(table, files, commitId)
+    case scala.util.Left(entries) =>
+      import spark.implicits._
+      val snap = TableSnapshot(table, spark.createDataset(entries), commitId)
+      cachedLocals.synchronized {
+        cachedLocals.putIfAbsent(table.basePath + "#" + commitId,
+          Some(entries))
+      }
+      snap
   }
 
   def localFor(snap: TableSnapshot): Option[IndexedSeq[FileEntry]] = {
     val key = snap.table.basePath + "#" + snap.commitId
     val cached = cachedLocals.synchronized(Option(cachedLocals.get(key)))
     cached.getOrElse {
-      val max = snap.files.sparkSession.conf
-        .getOption("spark.graft.listing.localMax")
-        .map(_.toInt).getOrElse(4096)
-      val probe = listingFor(snap).limit(max + 1).collect().toIndexedSeq
+      val probe = listingFor(snap).limit(LocalListingMax + 1).collect()
+        .toIndexedSeq
       val verdict =
-        if (probe.length > max) None else Some(probe)
+        if (probe.length > LocalListingMax) None else Some(probe)
       cachedLocals.synchronized {
         // the persisted listing is immutable per (table, commit): a
         // racing probe computed the same rows, either verdict is fine

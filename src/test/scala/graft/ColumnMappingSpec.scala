@@ -213,4 +213,18 @@ class ColumnMappingSpec extends SparkSuite {
     }
     assert(e.getMessage.toLowerCase.contains("pos"), e.getMessage)
   }
+
+  test("incremental diff of a mapped table ships the snapshot's entries") {
+    // the fixture's v2 add keys its stats by PHYSICAL column name; the
+    // diff must resolve them to logical names exactly as the listing does
+    val dir = new java.io.File(
+      "src/test/resources/golden/delta_mapped_people").getAbsolutePath
+    val src = new DeltaConversionSource(spark, dir, "people")
+    val added = src.changeForCommit("2").diff.added.collect()
+    val listed = src.snapshotAt(2L).files.collect().map(f => f.path -> f).toMap
+    assert(added.length == 1)
+    added.foreach(f => assert(listed.get(f.path).contains(f), f.toString))
+    assert(added.head.columnStats.exists(s =>
+      s.field == "id" && s.min.contains("4") && s.max.contains("5")))
+  }
 }

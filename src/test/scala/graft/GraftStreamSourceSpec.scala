@@ -129,9 +129,9 @@ class GraftStreamSourceSpec extends SparkSuite {
       graft.formats.iceberg.IcebergMetadata.currentVersion(table).get)
     def pathsAt(seq: Long): Set[String] =
       graft.formats.iceberg.IcebergManifests.liveFiles(spark,
-          graft.formats.iceberg.IcebergManifests.readManifestList(
+          graft.formats.iceberg.IcebergManifests.dataManifests(
             mProbe.snapshotBySeq(seq).get.manifestList), mProbe.schema)
-        .collect().map(_.path).toSet
+        .fold(_.map(_.path).toSet, _.collect().map(_.path).toSet)
     val paths2 = pathsAt(2L)
     val paths3 = pathsAt(3L)
     assert(paths2.subsetOf(paths3), s"lost files: ${paths2.diff(paths3)}")

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one per suite, local[4], UTC. */
+/** Shared session: one per suite, UTC, `local[N]` with N shuffle
+  * partitions where N is `SPARK_GRAFT_CPUS` (4 when unset).
+  */
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   def sf(dir: String): String = s"/root/testdata/$dir"
@@ -12,11 +14,14 @@ trait SparkSuite extends AnyFunSuite {
 }
 
 object SparkSuite {
+  val cores: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+    .filter(_ > 0).getOrElse(4)
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
-      .master("local[4]")
+      .master(s"local[$cores]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

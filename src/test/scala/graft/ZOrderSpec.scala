@@ -65,7 +65,7 @@ class ZOrderSpec extends SparkSuite {
     import spark.implicits._
     val df = spark.range(10000).select(
       (col("id") * 7919 % 10000).as("k"), col("id").as("payload"))
-    // inputBytes below spark.graft.zorder.pinMaxBytes -> pinned input;
+    // inputBytes below ZOrder.PinMaxBytes -> pinned input;
     // layout contract must be identical to the unpinned path
     val out = graft.operators.ZOrder.clusterize(df, Seq("k"), nOut = 8,
       inputBytes = 0L)
