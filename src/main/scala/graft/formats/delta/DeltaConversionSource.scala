@@ -118,7 +118,8 @@ class DeltaConversionSource(spark: SparkSession, tablePath: String,
   override def changeForCommit(commit: String): TableChange = {
     val v = commit.toLong
     val table = currentTable().copy(latestCommitMillis = v)
-    val (adds, removes) = DeltaSnapshot.changes(spark, tablePath, v, table.schema)
+    val (adds, removes) =
+      DeltaSnapshot.placedChanges(spark, tablePath, v, table.schema)
     TableChange(commit, table, FilesDelta(adds, removes))
   }
 

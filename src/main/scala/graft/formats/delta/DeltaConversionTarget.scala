@@ -2,11 +2,11 @@ package graft.formats.delta
 
 import java.util.UUID
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.model._
+import graft.plans.Placement
 import graft.spi._
 import graft.util.{Jsons, PathUtils}
 
@@ -16,9 +16,10 @@ import graft.util.{Jsons, PathUtils}
   * add/remove actions. Zero data copy: add actions point at the source's
   * physical parquet files (absolute paths, allowed by the Delta spec).
   *
-  * Action JSON is built in executors (one string per file) and streamed to
-  * the single commit file via toLocalIterator — the driver never holds the
-  * action list in memory.
+  * Action JSON is built by one per-file function, run over the driver's
+  * rows or per partition where the diff arrived; a distributed side
+  * streams to the single commit file through [[graft.util.StreamedLines]]
+  * (bounded batches), so the driver never holds a large action list.
   */
 class DeltaConversionTarget(spark: SparkSession, tablePath: String)
   extends ConversionTarget {
@@ -31,16 +32,14 @@ class DeltaConversionTarget(spark: SparkSession, tablePath: String)
   private var schema: StructType = _
   private var partitionSpec: Seq[PartitionFieldSpec] = Nil
   private var syncMeta: Option[SyncMetadata] = None
-  private var pendingAdds: Option[Dataset[FileEntry]] = None
-  private var pendingRemoves: Option[Dataset[FileEntry]] = None
+  private var pending = FilesDelta.empty
 
   private def currentVersions: Seq[Long] = DeltaLog.listVersions(tablePath, conf)
 
   override def beginSync(t: TableDescriptor): Unit = {
     table = t
     schema = t.schema
-    pendingAdds = None
-    pendingRemoves = None
+    pending = FilesDelta.empty
   }
 
   override def syncMetadata(meta: SyncMetadata): Unit = syncMeta = Some(meta)
@@ -53,21 +52,13 @@ class DeltaConversionTarget(spark: SparkSession, tablePath: String)
     */
   override def syncFilesForSnapshot(files: Dataset[FileEntry]): Unit = {
     val versions = currentVersions
-    if (versions.isEmpty) {
-      pendingAdds = Some(files)
-      pendingRemoves = None
-    } else {
-      val current = DeltaSnapshot.liveFiles(spark, tablePath, versions, schema)
-      val delta = FilesDelta.between(files, current)
-      pendingAdds = Some(delta.added)
-      pendingRemoves = Some(delta.removed)
-    }
+    pending =
+      if (versions.isEmpty) FilesDelta(Right(files), Left(Vector.empty))
+      else FilesDelta.between(files,
+        DeltaSnapshot.liveFiles(spark, tablePath, versions, schema))
   }
 
-  override def syncFilesForDiff(diff: FilesDelta): Unit = {
-    pendingAdds = Some(diff.added)
-    pendingRemoves = Some(diff.removed)
-  }
+  override def syncFilesForDiff(diff: FilesDelta): Unit = pending = diff
 
   override def completeSync(): Unit = {
     val versions = currentVersions
@@ -117,58 +108,50 @@ class DeltaConversionTarget(spark: SparkSession, tablePath: String)
     val tp = tablePath
     // row tracking (PROTOCOL.md §Row Tracking): adds on a supported
     // table carry fresh baseRowId ranges + this commit's version, and
-    // the same commit advances the high-water-mark domain action.
-    // Executors emit "count\tjson"; the driver stamps in its single
+    // the same commit advances the high-water-mark domain action. The
+    // per-file lines are "count\tjson"; the driver stamps in its single
     // streaming pass.
     val rowTracking = DeltaRowTracking.isSupported(st)
-    val rtBase =
-      if (rowTracking) DeltaRowTracking.highWaterMark(st) + 1 else 0L
-    val addLines = pendingAdds.map { ds =>
-      import ds.sparkSession.implicits._
-      val rt = rowTracking
-      val raw = ds.mapPartitions { it =>
-        val sch = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-        it.map { f =>
-          // Delta's format action admits parquet only (PROTOCOL.md
-          // §Format); registering an ORC/avro file would make every
-          // Delta reader misparse it — refuse loudly, Iceberg/Hudi
-          // targets carry those formats natively
-          if (f.fileFormat != "parquet")
-            throw new UnsupportedOperationException(
-              s"Delta data files must be parquet; ${f.path} is " +
-                s"${f.fileFormat} — sync this source to Iceberg instead")
-          val line = Jsons.toJson(Map("add" -> Map(
-            // PROTOCOL.md: action paths are URL-encoded URIs
-            "path" -> PathUtils.toDeltaUri(PathUtils.relativize(tp, f.path)),
-            "partitionValues" -> f.partitionValues
-              .map(p => p.field -> p.value).toMap,
-            "size" -> f.fileSizeBytes,
-            "modificationTime" -> f.lastModifiedMillis,
-            "dataChange" -> true,
-            "stats" -> DeltaStats.toJson(sch, f.recordCount, f.columnStats))))
-          if (rt) s"${f.recordCount}\t$line" else line
-        }
+    val rt = rowTracking
+    val addLines = DeltaConversionTarget.lines(pending.added) { it =>
+      val sch = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+      it.map { f =>
+        // Delta's format action admits parquet only (PROTOCOL.md
+        // §Format); registering an ORC/avro file would make every
+        // Delta reader misparse it — refuse loudly, Iceberg/Hudi
+        // targets carry those formats natively
+        if (f.fileFormat != "parquet")
+          throw new UnsupportedOperationException(
+            s"Delta data files must be parquet; ${f.path} is " +
+              s"${f.fileFormat} — sync this source to Iceberg instead")
+        val line = Jsons.toJson(Map("add" -> Map(
+          // PROTOCOL.md: action paths are URL-encoded URIs
+          "path" -> PathUtils.toDeltaUri(PathUtils.relativize(tp, f.path)),
+          "partitionValues" -> f.partitionValues
+            .map(p => p.field -> p.value).toMap,
+          "size" -> f.fileSizeBytes,
+          "modificationTime" -> f.lastModifiedMillis,
+          "dataChange" -> true,
+          "stats" -> DeltaStats.toJson(sch, f.recordCount, f.columnStats))))
+        if (rt) s"${f.recordCount}\t$line" else line
       }
+    }
+    val stampedAdds =
       if (rowTracking)
-        DeltaRowTracking.stampFreshIds(
-          DeltaRowTracking.countedLines(raw), rtBase, version)
-      else graft.util.StreamedLines.iterate(raw)
-    }.getOrElse(Iterator.empty)
+        DeltaRowTracking.stampFreshIds(DeltaRowTracking.countedLines(addLines),
+          DeltaRowTracking.highWaterMark(st) + 1, version)
+      else addLines
 
     val now = System.currentTimeMillis()
-    val removeLines = pendingRemoves.map { ds =>
-      import ds.sparkSession.implicits._
-      ds.map { f =>
-        Jsons.toJson(Map("remove" -> Map(
-          "path" -> PathUtils.toDeltaUri(PathUtils.relativize(tp, f.path)),
-          "deletionTimestamp" -> now,
-          "dataChange" -> true)))
-      }
-    }.map(graft.util.StreamedLines.iterate(_))
-      .getOrElse(Iterator.empty)
+    val removeLines = DeltaConversionTarget.lines(pending.removed)(_.map { f =>
+      Jsons.toJson(Map("remove" -> Map(
+        "path" -> PathUtils.toDeltaUri(PathUtils.relativize(tp, f.path)),
+        "deletionTimestamp" -> now,
+        "dataChange" -> true)))
+    })
 
     val ok = DeltaLog.writeCommit(tablePath, version,
-      header ++ addLines ++ removeLines)
+      header ++ stampedAdds ++ removeLines)
     if (!ok) throw new IllegalStateException(
       s"concurrent writer committed version $version first at $tablePath")
 
@@ -186,4 +169,14 @@ class DeltaConversionTarget(spark: SparkSession, tablePath: String)
 object DeltaConversionTarget {
   /** Checkpoint cadence, matching delta-spark's default. */
   val CheckpointInterval = 10
+
+  /** One side's commit lines, made by `line` where the side is: over the
+    * driver's rows, or per partition and streamed in bounded batches.
+    */
+  private def lines(side: Placement.Placed[FileEntry])(
+      line: Iterator[FileEntry] => Iterator[String]): Iterator[String] = {
+    import org.apache.spark.sql.Encoders
+    Placement.mapRows(side)(line)(Encoders.STRING)
+      .fold(_.iterator, graft.util.StreamedLines.iterate)
+  }
 }

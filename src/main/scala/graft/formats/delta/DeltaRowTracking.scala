@@ -101,14 +101,12 @@ object DeltaRowTracking {
       s""","baseRowId":$baseRowId,"defaultRowCommitVersion":$commitVersion}}"""
   }
 
-  /** Stream `"count\tpayload"` strings (the executor-side encoding of
-    * (line, recordCount) pairs) and decode driver-side — reuses the
-    * bounded [[graft.util.StreamedLines]] machinery, which is
-    * String-typed.
+  /** Decode `"count\tpayload"` strings (the executor-side encoding of
+    * (line, recordCount) pairs, so they stream through the String-typed
+    * [[graft.util.StreamedLines]]).
     */
-  def countedLines(ds: org.apache.spark.sql.Dataset[String])
-      : Iterator[(String, Long)] =
-    graft.util.StreamedLines.iterate(ds).map { sline =>
+  def countedLines(lines: Iterator[String]): Iterator[(String, Long)] =
+    lines.map { sline =>
       val cut = sline.indexOf('\t')
       (sline.substring(cut + 1), sline.substring(0, cut).toLong)
     }
@@ -288,7 +286,8 @@ object DeltaRowTracking {
         }
       }
     var base = 0L
-    val lines = countedLines(pairs).flatMap { case (both, n) =>
+    val counted = countedLines(graft.util.StreamedLines.iterate(pairs))
+    val lines = counted.flatMap { case (both, n) =>
       val cut = both.indexOf('\n')
       val remove = both.substring(0, cut)
       val add = both.substring(cut + 1)

@@ -824,13 +824,6 @@ object DeltaSnapshot {
     * refuses loudly (targets that cannot represent row-level deletes) or
     * converts the DV — never advances past it serving phantom rows.
     */
-  def changes(spark: SparkSession, tablePath: String, version: Long,
-      schema: StructType): (Dataset[FileEntry], Dataset[FileEntry]) = {
-    import spark.implicits._
-    val (adds, removes) = placedChanges(spark, tablePath, version, schema)
-    (Placement.dataset(spark, adds), Placement.dataset(spark, removes))
-  }
-
   private[graft] def placedChanges(spark: SparkSession, tablePath: String,
       version: Long, schema: StructType, at: Option[Placement] = None)
       : (Placed[FileEntry], Placed[FileEntry]) = {

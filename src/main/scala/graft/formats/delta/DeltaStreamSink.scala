@@ -69,13 +69,16 @@ object DeltaStreamSink {
     val schemaJson =
       if (mapped) DeltaColumnMapping.physicalSchema(tableSchema).json
       else schema.json
+    // row tracking: stamp fresh base ids + advance the high-water mark
+    // in this commit, as DeltaWrite does (PROTOCOL.md §Row Tracking)
+    val rt = DeltaRowTracking.isSupported(st)
     import batch.sparkSession.implicits._
     val adds = graft.sources.ParquetFooters
       .fileEntries(spark, dataDir, listed)
       .mapPartitions { it =>
         val sch = DataType.fromJson(schemaJson).asInstanceOf[StructType]
         it.map { fe =>
-          Jsons.toJson(Map("add" -> Map(
+          val line = Jsons.toJson(Map("add" -> Map(
             "path" -> PathUtils.toDeltaUri(PathUtils.relativize(tp, fe.path)),
             "partitionValues" -> Map.empty,
             "size" -> fe.fileSizeBytes,
@@ -83,6 +86,7 @@ object DeltaStreamSink {
             "dataChange" -> true,
             "stats" -> DeltaStats.toJson(sch, fe.recordCount,
               fe.columnStats))))
+          if (rt) s"${fe.recordCount}\t$line" else line
         }
       }
     val now = System.currentTimeMillis()
@@ -107,23 +111,29 @@ object DeltaStreamSink {
         "operationParameters" -> Map("epochId" -> batchId.toString)))))
 
     val version = head.map(_ + 1).getOrElse(0L)
-    if (head.isEmpty) {
+    val addLines = graft.util.StreamedLines.iterate(adds)
+    val lines = header ++ (if (!rt) addLines
+      else DeltaRowTracking.stampFreshIds(
+        DeltaRowTracking.countedLines(addLines),
+        DeltaRowTracking.highWaterMark(st) + 1, version))
+    if (head.isEmpty || rt) {
       // table creation (batch 0): strict CAS — losing it means another
       // writer created the table, and re-deriving the metaData header
-      // against it is a different operation
-      val ok = DeltaLog.writeCommit(tablePath, version,
-        header ++ graft.util.StreamedLines.iterate(adds))
-      if (!ok) throw new IllegalStateException(
+      // against it is a different operation. Row-id-assigning commits
+      // CAS strictly too: a re-landed commit would reuse stale ids. A
+      // lost race that landed this same batch is a replay, not an error.
+      if (DeltaLog.writeCommit(tablePath, version, lines)) true
+      else if (lastTxnVersion(spark, tablePath, appId).exists(batchId <= _))
+        false
+      else throw new IllegalStateException(
         s"concurrent writer committed version $version first at " +
           s"$tablePath — streaming sink cannot continue safely")
-      true
     } else
       // appends ride the conflict retry WITH the exactly-once guard:
       // a concurrent/zombie replay of this same batch that wins the
       // race is detected between attempts and skipped (None), while an
       // unrelated disjoint commit just re-lands us at the new head
-      DeltaConflicts.commitWithRetryTxn(spark, tablePath, version,
-        header ++ graft.util.StreamedLines.iterate(adds),
+      DeltaConflicts.commitWithRetryTxn(spark, tablePath, version, lines,
         appId, batchId).isDefined
   }
 

@@ -135,7 +135,8 @@ object DeltaWrite {
     val addIt =
       if (rowTracking)
         DeltaRowTracking.stampFreshIds(
-          DeltaRowTracking.countedLines(adds),
+          DeltaRowTracking.countedLines(
+            graft.util.StreamedLines.iterate(adds)),
           DeltaRowTracking.highWaterMark(st) + 1,
           version)
       else graft.util.StreamedLines.iterate(adds)

@@ -355,8 +355,7 @@ class HudiConversionSource(spark: SparkSession, tablePath: String,
       .getOrElse(Nil)
     TableChange(commit,
       currentTable().copy(latestCommitMillis = commit.toLong),
-      FilesDelta(Placement.dataset(spark, toFileEntries(adds)),
-        Placement.dataset(spark, toFileEntries(removed))))
+      FilesDelta(toFileEntries(adds), toFileEntries(removed)))
   }
 
   override def commitsBacklog(lastSynced: String): Seq[String] =
@@ -424,8 +423,9 @@ class HudiConversionTarget(spark: SparkSession, tablePath: String)
   private var schema: StructType = _
   private var partitionSpec: Seq[PartitionFieldSpec] = Nil
   private var syncMeta: Option[SyncMetadata] = None
-  private var pendingAdds: Option[Dataset[FileEntry]] = None
-  private var pendingRemoves: Option[Dataset[FileEntry]] = None
+  private var pending = FilesDelta.empty
+  /** Pins where this target's commit writes run (tests only). */
+  private[graft] var at: Option[Placement] = None
   private var extraStamps: Map[String, String] = Map.empty
   private var expectedBase: Option[String] = None
 
@@ -440,7 +440,7 @@ class HudiConversionTarget(spark: SparkSession, tablePath: String)
 
   override def beginSync(t: TableDescriptor): Unit = {
     table = t; schema = t.schema
-    pendingAdds = None; pendingRemoves = None
+    pending = FilesDelta.empty
     extraStamps = Map.empty
     expectedBase = None
     if (!HudiTimeline.exists(tablePath))
@@ -465,19 +465,12 @@ class HudiConversionTarget(spark: SparkSession, tablePath: String)
     partitionSpec = spec
 
   override def syncFilesForSnapshot(files: Dataset[FileEntry]): Unit =
-    if (HudiTimeline.listInstants(tablePath).isEmpty) {
-      pendingAdds = Some(files); pendingRemoves = None
-    } else {
-      val current = source.listingFromTimeline()
-      val delta = FilesDelta.between(files, current)
-      pendingAdds = Some(delta.added)
-      pendingRemoves = Some(delta.removed)
-    }
+    pending =
+      if (HudiTimeline.listInstants(tablePath).isEmpty)
+        FilesDelta(Right(files), Left(Vector.empty))
+      else FilesDelta.between(files, source.listingFromTimeline())
 
-  override def syncFilesForDiff(diff: FilesDelta): Unit = {
-    pendingAdds = Some(diff.added)
-    pendingRemoves = Some(diff.removed)
-  }
+  override def syncFilesForDiff(diff: FilesDelta): Unit = pending = diff
 
   override def completeSync(): Unit = {
     expectedBase.foreach { planned =>
@@ -500,88 +493,35 @@ class HudiConversionTarget(spark: SparkSession, tablePath: String)
     val tp = tablePath
     import spark.implicits._
 
-    // the adds Dataset feeds the commit's write stats, the small-commit
-    // sidecar probe AND the metadata-index delta; persist so the
-    // (footer-scanning) source lineage evaluates once
-    pendingAdds = pendingAdds.map(_.persist())
-    pendingRemoves = pendingRemoves.map(_.persist())
-
-    def partitionPathOf(f: FileEntry): String =
-      f.partitionValues.map(p => s"${p.field}=${p.value}").mkString("/")
+    // one fetch per side: a side at most Placement.MaxRows rows long
+    // is on the driver from here on, and every artifact below (stat and
+    // replace lines, index delta, metadata table) is written from it
+    // with no further job; a longer side stays distributed, pinned.
+    val added = Placement.fetch(pending.added, at)(_ => 0L)
+    val adds = added.rows
+    val removes = Placement.fetch(pending.removed, at)(_ => 0L)
 
     // Hudi's commit JSON inherently lists every write stat, but the
-    // driver never needs to HOLD them: the per-file stat objects are
-    // authored executor-side, sorted by partition path, and streamed to
-    // the commit writer in bounded batches (same discipline as Delta
-    // commit lines) — driver state is one partition name + one batch,
-    // O(1) in commit size. Small commits also read the first
-    // SmallDeltaThreshold entries for the sidecar fast path.
-    // ONE fused probe per side (guide §1.2): count + the entries
-    // themselves for small commits, replacing the count job, the
-    // sidecar collect AND the sorted StreamedLines shuffle each with
-    // driver-side work on rows the driver was going to hold anyway.
-    // Rare skew-truncated small probes fall back to the old collect;
-    // big commits keep the distributed sorted-stream path untouched.
-    val emptyProbe = graft.util.ProbedRows.Probe[FileEntry](0L, 0L, Some(Nil))
-    val addsProbe = pendingAdds.map(graft.util.ProbedRows.probe(_,
-        (f: FileEntry) => f.recordCount,
-        HudiMetadataIndex.SmallDeltaThreshold)).getOrElse(emptyProbe)
-    val addCount = addsProbe.count
-    val smallAddRows: Option[Seq[FileEntry]] =
-      if (addCount > HudiMetadataIndex.SmallDeltaThreshold) None
-      else addsProbe.rows.orElse(pendingAdds.map(_.collect().toSeq))
-    val smallBuf: Seq[FileEntry] = smallAddRows.getOrElse(Nil)
+    // driver never needs to HOLD them: one `partition<sep>json` line per
+    // file, sorted by partition path and streamed to the commit writer
+    // — driver state is one partition name + one bounded batch.
     val sep = HudiTimeline.GroupSep
-    // driver-side lines must sort exactly like the distributed path's
-    // orderBy (UTF8String = UTF-8 byte lexicographic); Java's String
-    // ordering compares UTF-16 code units, which orders supplementary
-    // characters differently — byte-identical output either path
-    val utf8Order: Ordering[String] = (a: String, b: String) => {
-      val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val n = math.min(x.length, y.length)
-      var i = 0
-      var c = 0
-      while (i < n && c == 0) { c = (x(i) & 0xff) - (y(i) & 0xff); i += 1 }
-      if (c != 0) c else x.length - y.length
-    }
-    def groupedLines(ds: org.apache.spark.sql.Dataset[FileEntry],
-        payload: FileEntry => String): Iterator[String] =
-      // lexicographic sort on the whole line groups partitions
-      // contiguously: the  separator sorts below every path char,
-      // so no other partition's lines can interleave a prefix group
-      graft.util.StreamedLines.iterate(
-        ds.map(f => partitionPathOf(f) + sep + payload(f)).orderBy("value"))
-    val statPayload = (f: FileEntry) =>
+    def lines(side: Placement.Placed[FileEntry])(payload: FileEntry => String)
+        : Iterator[String] =
+      HudiTimeline.sortedLines(Placement.mapRows(side)(_.map(f =>
+        f.partitionValues.map(p => s"${p.field}=${p.value}").mkString("/") +
+          sep + payload(f))))
+    val statLines = lines(adds)(f =>
       Jsons.toJson(Map(
         "fileId" -> HudiTimeline.fileId(f.path),
         "path" -> PathUtils.relativize(tp, f.path),
         "numWrites" -> f.recordCount,
         "fileSizeInBytes" -> f.fileSizeBytes,
-        "totalWriteBytes" -> f.fileSizeBytes))
-    val statLines = smallAddRows match {
-      case Some(rows) =>
-        rows.map(f => partitionPathOf(f) + sep + statPayload(f))
-          .sorted(utf8Order).iterator
-      case None => pendingAdds.map(groupedLines(_, statPayload))
-        .getOrElse(Iterator.empty)
-    }
-    val removesProbe = pendingRemoves.map(graft.util.ProbedRows.probe(_,
-        (_: FileEntry) => 0L,
-        HudiMetadataIndex.SmallDeltaThreshold)).getOrElse(emptyProbe)
-    val removeCount = removesProbe.count
-    val replacePayload = (f: FileEntry) =>
-      Jsons.toJson(HudiTimeline.fileId(f.path))
-    val replaceLines = removesProbe.rows match {
-      case Some(rows)
-          if removeCount <= HudiMetadataIndex.SmallDeltaThreshold =>
-        rows.map(f => partitionPathOf(f) + sep + replacePayload(f))
-          .sorted(utf8Order).iterator
-      case _ => pendingRemoves.map(groupedLines(_, replacePayload))
-        .getOrElse(Iterator.empty)
-    }
+        "totalWriteBytes" -> f.fileSizeBytes)))
+    val replaceLines = lines(removes.rows)(f =>
+      Jsons.toJson(HudiTimeline.fileId(f.path)))
 
-    val action = if (removeCount > 0) "replacecommit" else "commit"
+    val action = if (removes.count > 0) "replacecommit" else "commit"
     val extra = Map(
       // a real Hudi reader resolves the table schema from extraMetadata
       // "schema" and expects AVRO there (HoodieCommitMetadata SCHEMA_KEY;
@@ -605,45 +545,27 @@ class HudiConversionTarget(spark: SparkSession, tablePath: String)
 
     val ok = HudiTimeline.writeCommitStreamed(tablePath, instant, action,
       statLines, replaceLines, extra)
-    if (!ok) {
-      pendingAdds.foreach(_.unpersist())
-      pendingRemoves.foreach(_.unpersist())
-      throw new IllegalStateException(
-        s"concurrent writer committed instant $instant first at $tablePath")
-    }
+    if (!ok) throw new IllegalStateException(
+      s"concurrent writer committed instant $instant first at $tablePath")
     // maintain the metadata index: one per-instant delta with the commit's
     // added files and their stats — readers then answer stats queries from
-    // the index instead of opening every data file's footer. Small commits
-    // use the buffered sidecar (no Spark job); big ones write distributed.
-    try {
-      if (addCount <= HudiMetadataIndex.SmallDeltaThreshold)
-        HudiMetadataIndex.writeSmall(tablePath, instant, smallBuf)
-      else pendingAdds.foreach { ds =>
-        HudiMetadataIndex.write(spark, tablePath, instant, ds)
-      }
-      // and the REAL .hoodie/metadata files partition (HFile wire
-      // format), so external Hudi readers with metadata enabled list
-      // without walking the filesystem. replacecommits add their new
-      // files only — replaced files stay listed until clean() deletes
-      // them physically (the files partition tracks filesystem state;
-      // visibility stays with the timeline).
-      if (addCount <= HudiMetadataIndex.SmallDeltaThreshold)
-        HudiMetadataTable.maintain(spark, tablePath, table.name, instant,
-          smallBuf.map { f =>
-            val rel = PathUtils.relativize(tp, f.path)
-            val cut = rel.lastIndexOf('/')
-            (if (cut < 0) "" else rel.substring(0, cut),
-              if (cut < 0) rel else rel.substring(cut + 1),
-              f.fileSizeBytes)
-          })
-      else pendingAdds.foreach { ds =>
-        HudiMetadataTable.maintainFromDataset(spark, tablePath,
-          table.name, instant, ds)
-      }
-    } finally {
-      pendingAdds.foreach(_.unpersist())
-      pendingRemoves.foreach(_.unpersist())
+    // the index instead of opening every data file's footer. A delta the
+    // index read could take on the driver is a JSON sidecar (no job).
+    adds match {
+      case Left(rows) if rows.size <= Placement.MaxFiles =>
+        HudiMetadataIndex.writeSmall(tablePath, instant, rows)
+      case _ => HudiMetadataIndex.write(spark, tablePath, instant,
+        Placement.dataset(spark, adds))
     }
+    // and the REAL .hoodie/metadata files partition (HFile wire
+    // format), so external Hudi readers with metadata enabled list
+    // without walking the filesystem. replacecommits add their new
+    // files only — replaced files stay listed until clean() deletes
+    // them physically (the files partition tracks filesystem state;
+    // visibility stays with the timeline).
+    HudiMetadataTable.maintain(spark, tablePath, table.name, instant,
+      Placement.mapRows(adds)(HudiMetadataTable.addsOf(tp)))
+    added.unpin(); removes.unpin()
   }
 
   override def tableMetadata(): Option[SyncMetadata] = {

@@ -652,7 +652,8 @@ object HudiLogFiles {
     graft.util.PhaseTimer.time("hudi_log.maintain") {
       HudiMetadataTable.maintain(spark, tablePath,
         HudiTimeline.tableName(tablePath).getOrElse("table"), instant,
-        statRows.map { case (_, name, _, size) => ("", name, size) }.toSeq)
+        Left(statRows.toIndexedSeq.map { case (_, name, _, size) =>
+          ("", name, size, false) }))
     }
     statRows.map(_._3).sum
   }
@@ -833,7 +834,8 @@ object HudiLogFiles {
       Map("schema" -> schema.json)), tablePath))
     HudiMetadataTable.maintain(spark, tablePath,
       HudiTimeline.tableName(tablePath).getOrElse("table"), instant,
-      stats.result().map(s => ("", s.path, s.fileSizeInBytes)))
+      Left(stats.result().toIndexedSeq.map(s =>
+        ("", s.path, s.fileSizeInBytes, false))))
     graft.plans.SnapshotFileIndex.invalidate(snap)
     total
   }

@@ -118,13 +118,12 @@ object HudiMaintenance {
     if (HudiMetadataTable.exists(tablePath))
       HudiMetadataTable.maintain(spark, tablePath,
         HudiTimeline.tableName(tablePath).getOrElse("table"), instant,
-        adds = Nil,
-        deletes = dead.map { case (p, _) =>
+        Left(dead.toIndexedSeq.map { case (p, _) =>
           val rel = PathUtils.relativize(tablePath, p)
           val cut = rel.lastIndexOf('/')
           (if (cut < 0) "" else rel.substring(0, cut),
-            if (cut < 0) rel else rel.substring(cut + 1))
-        })
+            if (cut < 0) rel else rel.substring(cut + 1), 0L, true)
+        }))
 
     CleanResult(sums.map(_._1).sum, sums.map(_._2).sum, horizon)
   }

@@ -29,16 +29,6 @@ import graft.sources.ParquetFooters
   */
 object HudiMetadataIndex {
 
-  /** Commits at or below this many files write their index delta as a
-    * driver-side JSON sidecar (`<instant>.json`) instead of a Spark
-    * parquet job — the entries are already in driver memory from building
-    * the commit JSON, so the sidecar costs one small file write where the
-    * parquet delta costs a whole job launch. Readers merge both forms, so
-    * the index stays complete either way; large commits keep the
-    * distributed parquet write.
-    */
-  val SmallDeltaThreshold = 64
-
   /** Writes live under a graft-owned dot-dir inside `.hoodie` (like
     * Hudi's own `.aux`/`.temp`) — NOT `.hoodie/metadata`, which is real
     * Hudi's metadata-table namespace: parquet deltas there could be
@@ -70,7 +60,10 @@ object HudiMetadataIndex {
     adds.write.mode("overwrite").parquet(s"${indexDir(tablePath)}/$instant")
 
   /** The small-commit path: the same delta as `write`, but a single JSON
-    * sidecar written by the driver — no Spark job.
+    * sidecar written by the driver — no Spark job. Commits write it when
+    * their adds are on the driver and number at most
+    * [[Placement.MaxFiles]], so the index read can still take the
+    * sidecar on the driver; readers merge both forms.
     */
   def writeSmall(tablePath: String, instant: String,
       entries: Seq[FileEntry]): Unit = {

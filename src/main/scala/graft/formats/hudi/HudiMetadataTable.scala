@@ -10,7 +10,11 @@ import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumReader,
   GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
-import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.SparkSession
+
+import graft.plans.Placement
+import graft.plans.Placement.Placed
+import graft.util.{HadoopConfs, PathUtils}
 
 /** Hudi's `.hoodie/metadata` table — the `files` partition, in the real
   * wire format a Hudi reader with `hoodie.metadata.enable=true` consumes
@@ -153,7 +157,7 @@ object HudiMetadataTable {
     Files.write(filesDir.resolve(baseName), hfile)
 
     val logName = s".${FileGroupId}_$BootstrapInstant.log.1_0-0-0"
-    HudiLogFiles.writeDeleteMarker(new Configuration(),
+    HudiLogFiles.writeDeleteMarker(HadoopConfs.active(),
       filesDir.resolve(logName).toString, BootstrapInstant)
 
     writeDeltaCommit(mp, BootstrapInstant,
@@ -210,7 +214,7 @@ object HudiMetadataTable {
     val baseInstant = latestBaseInstant(filesDir)
     val version = nextLogVersion(filesDir, baseInstant)
     val logName = s".${FileGroupId}_$baseInstant.log.${version}_0-0-0"
-    val logLen = HudiLogFiles.appendHFileBlock(new Configuration(),
+    val logLen = HudiLogFiles.appendHFileBlock(HadoopConfs.active(),
       filesDir.resolve(logName).toString, instant, schemaJson, hfile)
 
     writeDeltaCommit(mp, instant,
@@ -279,25 +283,6 @@ object HudiMetadataTable {
           n.contains(s"_$oldBase.hfile"))))
     stale.foreach(n => Files.deleteIfExists(filesDir.resolve(n)))
   }
-
-  /** Convenience wrapper for commit-sized deltas already on the driver. */
-  def appendCommitSmall(tablePath: String, instant: String,
-      adds: Seq[(String, String, Long)],
-      deletes: Seq[(String, String)] = Nil): Unit = {
-    val rows: Seq[(String, String, Long, Boolean)] =
-      (adds.map { case (p, n, s) => (p, n, s, false) } ++
-        deletes.map { case (p, n) => (p, n, 0L, true) })
-    val sorted = rows.sortWith { case ((p1, n1, _, _), (p2, n2, _, _)) =>
-      val c = compareUtf8(p1, p2)
-      if (c != 0) c < 0 else compareUtf8(n1, n2) < 0
-    }
-    appendCommit(tablePath, instant, sorted.iterator,
-      adds.map(_._1).distinct)
-  }
-
-  private def compareUtf8(a: String, b: String): Int =
-    HFiles.RowOrdering.compare(
-      a.getBytes(StandardCharsets.UTF_8), b.getBytes(StandardCharsets.UTF_8))
 
   private def mergeSorted(
       a: Iterator[(Array[Byte], Array[Byte])],
@@ -426,7 +411,7 @@ object HudiMetadataTable {
     applyCells(HFiles.read(
       Files.readAllBytes(filesDir.resolve(base))).cells)
 
-    val conf = new Configuration()
+    val conf = HadoopConfs.active()
     names.filter(_.startsWith(s".${FileGroupId}_$baseInstant.log."))
       .sortBy(n => n.substring(n.indexOf(".log.") + 5)
         .takeWhile(_.isDigit).toInt)
@@ -525,31 +510,45 @@ object HudiMetadataTable {
       case Some((upTo, catchUp)) =>
         bootstrap(tablePath, tableName)
         if (catchUp.nonEmpty)
-          appendCommitSmall(tablePath, upTo,
-            catchUp.map { case (p, n, s) => (partitionKey(p), n, s) })
+          append(spark, tablePath, upTo,
+            Left(catchUp.toIndexedSeq.map { case (p, n, s) =>
+              (p, n, s, false) }))
         true
     }
   }
 
-  /** Post-commit maintenance with commit-sized driver-held deltas.
-    * Serialized under the table lock (concurrent winners would race the
-    * single file group's next log version); any failure drops the
-    * table rather than leaving a stale listing behind.
+  /** One files-partition delta: (partition dir relative to the table,
+    * file name, size, isDeleted).
     */
-  def maintain(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, tableName: String, instant: String,
-      adds: Seq[(String, String, Long)],
-      deletes: Seq[(String, String)] = Nil): Unit =
+  type FileDelta = (String, String, Long, Boolean)
+
+  /** The files-partition deltas of a commit's added files. */
+  def addsOf(tablePath: String)(it: Iterator[graft.model.FileEntry])
+      : Iterator[FileDelta] = it.map { f =>
+    val rel = PathUtils.relativize(tablePath, f.path)
+    val cut = rel.lastIndexOf('/')
+    (if (cut < 0) "" else rel.substring(0, cut),
+      if (cut < 0) rel else rel.substring(cut + 1), f.fileSizeBytes, false)
+  }
+
+  /** Post-commit maintenance: record `deltas` where the caller holds
+    * them, on the driver or in a Dataset. Serialized under the table
+    * lock (concurrent winners would race the single file group's next
+    * log version); any failure drops the table rather than leaving a
+    * stale listing behind.
+    */
+  def maintain(spark: SparkSession, tablePath: String, tableName: String,
+      instant: String, deltas: Placed[FileDelta]): Unit =
     try HudiLock.withLock(tablePath, "metadata") {
-      if (adds.exists(a => external(a._1)) ||
-          deletes.exists(d => external(d._1))) {
+      // one external path means split-dir layout — the whole commit
+      // shares one layout, so a distributed side's head decides
+      if (deltas.fold(_.iterator, _.take(1).iterator)
+          .exists(d => external(d._1))) {
         drop(tablePath)
         return
       }
       if (!ensureTable(spark, tablePath, tableName, instant)) return
-      appendCommitSmall(tablePath, instant,
-        adds.map { case (p, n, s) => (partitionKey(p), n, s) },
-        deletes.map { case (p, n) => (partitionKey(p), n) })
+      append(spark, tablePath, instant, deltas)
     } catch {
       case e: Exception =>
         drop(tablePath)
@@ -558,52 +557,24 @@ object HudiMetadataTable {
             s"maintenance for instant $instant: ${e.getMessage}")
     }
 
-  /** Same contract for commits too large to hold on the driver: the
-    * adds stream through one sorted pass ((partition, name) order via a
-    * -joined sort key, the writeCommitStreamed discipline), so
-    * driver state is one partition's delta plus the HFile block buffer.
+  /** [[appendCommit]] over placed deltas: one line per delta, sorted by
+    * [[HudiTimeline.sortedLines]] into (partition, name) order, and the
+    * added files' partitions as the touched set.
     */
-  def maintainFromDataset(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, tableName: String, instant: String,
-      adds: org.apache.spark.sql.Dataset[graft.model.FileEntry]): Unit =
-    try HudiLock.withLock(tablePath, "metadata") {
-      // layout probe: one external path means split-dir layout — the
-      // whole commit shares one layout, so the head decides
-      val probe = adds.take(1).headOption
-        .map(f => graft.util.PathUtils.relativize(tablePath, f.path))
-      if (probe.exists(external)) {
-        drop(tablePath)
-        return
-      }
-      if (!ensureTable(spark, tablePath, tableName, instant)) return
-      import spark.implicits._
-      val sep = HudiTimeline.GroupSep
-      val tp = tablePath
-      val lines = adds.map { f =>
-        val rel = graft.util.PathUtils.relativize(tp, f.path)
-        val cut = rel.lastIndexOf('/')
-        val part = partitionKey(if (cut < 0) "" else rel.substring(0, cut))
-        val name = if (cut < 0) rel else rel.substring(cut + 1)
-        s"$part$sep$name$sep${f.fileSizeBytes}"
-      }
-      val parts = adds.map { f =>
-        val rel = graft.util.PathUtils.relativize(tp, f.path)
-        val cut = rel.lastIndexOf('/')
-        partitionKey(if (cut < 0) "" else rel.substring(0, cut))
-      }.distinct().collect().toSeq // O(#partitions)
-      val it = graft.util.StreamedLines.iterate(lines.orderBy("value"))
-        .map { line =>
-          val a = line.indexOf(sep)
-          val b = line.indexOf(sep, a + 1)
-          (line.substring(0, a), line.substring(a + 1, b),
-            line.substring(b + 1).toLong, false)
-        }
-      appendCommit(tablePath, instant, it, parts)
-    } catch {
-      case e: Exception =>
-        drop(tablePath)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"dropping .hoodie/metadata at $tablePath after failed " +
-            s"maintenance for instant $instant: ${e.getMessage}")
+  private def append(spark: SparkSession, tablePath: String,
+      instant: String, deltas: Placed[FileDelta]): Unit = {
+    import spark.implicits._
+    val sep = HudiTimeline.GroupSep
+    val lines = Placement.mapRows(deltas)(_.map { case (p, n, size, del) =>
+      s"${partitionKey(p)}$sep$n$sep$size$sep$del"
+    })
+    val touched = Placement.mapRows(deltas)(
+      _.collect { case (p, _, _, false) => partitionKey(p) })
+      .fold(_.distinct, _.distinct().collect().toSeq) // O(#partitions)
+    val it = HudiTimeline.sortedLines(lines).map { line =>
+      val Array(p, n, size, del) = line.split(sep)
+      (p, n, size.toLong, del.toBoolean)
     }
+    appendCommit(tablePath, instant, it, touched)
+  }
 }

@@ -106,9 +106,7 @@ object HudiStreamSink {
           tgt.syncSchema(table.schema)
           tgt.syncPartitionSpec(table.partitionFields)
           tgt.stampCommit(txnKey(appId) -> batchId.toString)
-          tgt.syncFilesForDiff(FilesDelta(added,
-            spark.emptyDataset[graft.model.FileEntry](
-              org.apache.spark.sql.Encoders.product[graft.model.FileEntry])))
+          tgt.syncFilesForDiff(FilesDelta(Right(added), Left(Vector.empty)))
           tgt.completeSync()
           return true
         } catch {

@@ -8,6 +8,7 @@ import java.time.format.DateTimeFormatter
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
+import graft.plans.Placement.Placed
 import graft.util.Jsons
 
 /** Hudi-layout commit timeline (public table layout: `.hoodie/` holding
@@ -479,6 +480,19 @@ object HudiTimeline {
     * partition path or JSON fragment legally contains.
     */
   val GroupSep = '\u0001'
+
+  /** Grouped lines in UTF-8 byte order — Spark's string order, which
+    * differs from Java's UTF-16 one on supplementary characters — sorted
+    * where they are: on the driver, or by a distributed sort streamed in
+    * bounded batches. Either way the output is byte-identical; `GroupSep`
+    * sorts below every path char, so groups stay contiguous.
+    */
+  def sortedLines(lines: Placed[String]): Iterator[String] = lines match {
+    case Left(ls) =>
+      ls.sorted(Ordering.by[String, Array[Byte]](
+        _.getBytes(StandardCharsets.UTF_8))(HFiles.RowOrdering)).iterator
+    case Right(ds) => graft.util.StreamedLines.iterate(ds.orderBy("value"))
+  }
 
   def writeCommitStreamed(tablePath: String, instant: String, action: String,
       stats: Iterator[String], replaced: Iterator[String],

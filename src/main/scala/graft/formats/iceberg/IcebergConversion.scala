@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.model._
+import graft.plans.Placement
 import graft.spi._
 
 /** Iceberg source — reference IcebergConversionSource.java:72-299. Commits
@@ -171,9 +172,10 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
   private var schema: StructType = _
   private var partitionSpec: Seq[PartitionFieldSpec] = Nil
   private var syncMeta: Option[SyncMetadata] = None
-  private var pendingAdds: Option[Dataset[FileEntry]] = None
-  private var pendingRemoves: Option[Dataset[FileEntry]] = None
+  private var pending = FilesDelta.empty
   private var expectedBaseSeq: Option[Long] = None
+  /** Pins where this target's commit writes run (tests only). */
+  private[graft] var at: Option[Placement] = None
 
   private def currentMeta: Option[IcebergTableMetadata] =
     IcebergMetadata.currentVersion(tablePath)
@@ -197,7 +199,7 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
     rollbackCorruptCommits()
     table = t
     schema = withStableIds(t.schema)
-    pendingAdds = None; pendingRemoves = None
+    pending = FilesDelta.empty
     expectedBaseSeq = None
   }
 
@@ -259,28 +261,20 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
           "delete files) first")
 
   override def syncFilesForSnapshot(files: Dataset[FileEntry]): Unit =
-    currentMeta.flatMap(_.currentSnapshot) match {
-      case None =>
-        pendingAdds = Some(files); pendingRemoves = None
+    pending = currentMeta.flatMap(_.currentSnapshot) match {
+      case None => FilesDelta(Right(files), Left(Vector.empty))
       case Some(s) =>
         requireNoDeleteManifests(s.manifestList)
         import spark.implicits._
         val m = currentMeta.get
-        val current = graft.plans.Placement.dataset(spark,
+        FilesDelta.between(files, Placement.dataset(spark,
           IcebergManifests.liveFiles(spark,
-            IcebergManifests.dataManifests(s.manifestList), m.schema))
-        val delta = FilesDelta.between(files, current)
-        pendingAdds = Some(delta.added)
-        pendingRemoves = Some(delta.removed)
+            IcebergManifests.dataManifests(s.manifestList), m.schema)))
     }
 
-  override def syncFilesForDiff(diff: FilesDelta): Unit = {
-    pendingAdds = Some(diff.added)
-    pendingRemoves = Some(diff.removed)
-  }
+  override def syncFilesForDiff(diff: FilesDelta): Unit = pending = diff
 
   override def completeSync(): Unit = {
-    import scala.jdk.CollectionConverters._
     val prev = currentMeta
     expectedBaseSeq.foreach { planned =>
       val cur = prev.map(_.headSequence).getOrElse(0L)
@@ -302,7 +296,6 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
     val fmtV = prev.map(_.formatVersion).getOrElse(2)
     val isV3 = fmtV >= 3
     val baseRowId = prev.map(_.nextRowId).getOrElse(0L)
-    var newRowsTotal = 0L
 
     // schema / partition-spec EVOLUTION (spec v2): a sync whose
     // partitioning or schema differs from the table's current one appends
@@ -338,80 +331,57 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
       else p.otherSchemas
     }.getOrElse(Nil)
 
-    // removed paths: normally small relative to the live set (a commit's
-    // delta) — collected to pick which previous manifests need rewriting.
-    // A full resync of a heavily churned table can make the delta
-    // O(table): above the threshold the driver Set is skipped entirely
-    // and the carry-forward becomes a distributed anti-join below.
-    // ONE fused probe answers the count AND ships the paths (guide §1.2:
-    // the former count job + collect job per commit).
-    val removesProbe = pendingRemoves.map(graft.util.ProbedRows.probe(_,
-        (_: FileEntry) => 0L, IcebergConversionTarget.BigRemovesThreshold))
-      .getOrElse(graft.util.ProbedRows.Probe[FileEntry](0L, 0L, Some(Nil)))
-    val removesCount: Long = removesProbe.count
-    val bigRemoves =
-      removesCount > IcebergConversionTarget.BigRemovesThreshold
+    // removed paths: one fetch brings a commit's removes to the driver,
+    // which then picks the previous manifests to rewrite. A side longer
+    // than Placement.MaxRows (a full resync of a heavily churned table)
+    // never becomes a driver Set: it stays distributed and the
+    // carry-forward becomes a distributed anti-join below.
+    val removed = Placement.fetch(pending.removed, at)(_ => 0L)
+    val removes = removed.rows
     IcebergConversionTarget.lastCarryForwardMode =
-      if (bigRemoves) "distributed-anti-join" else "driver-set"
-    val removedPaths: Set[String] = pendingRemoves match {
-      case Some(ds) if !bigRemoves =>
-        removesProbe.rows match {
-          case Some(rs) => rs.map(_.path).toSet
-          case None =>   // rare: per-partition skew truncated the probe
-            import ds.sparkSession.implicits._
-            ds.select("path").as[String].collect().toSet
-        }
-      case _ => Set.empty
-    }
+      if (removes.isLeft) "driver-set" else "distributed-anti-join"
+    val removedPaths: Set[String] =
+      removes.fold(_.iterator.map(_.path).toSet, _ => Set.empty)
 
     // previous DATA manifests with the spec id AND sequence number each
     // was written under — carried-forward manifests must keep both (the
     // partition struct is typed by the spec; the sequence is each file's
     // commit ordinal, which v3 row lineage inherits as last-updated and
     // equality-delete ordering compares against)
-    val prevManifestRecs: Seq[(String, Int, Long)] =
+    val prevManifests: Seq[IcebergConversionTarget.PrevManifest] =
       prev.flatMap(_.currentSnapshot)
         .map { s =>
           requireNoDeleteManifests(s.manifestList)
-          IcebergManifests.readManifestListRecords(s.manifestList)
-            .filter(IcebergManifests.contentOf(_) == 0)
-            .map(r => (r.get("manifest_path").toString,
-              r.get("partition_spec_id") match {
-                case i: java.lang.Integer => i.intValue
-                case _ => 0
-              },
-              IcebergManifests.longOf(r.get("sequence_number"), seq)))
+          IcebergManifests.dataManifests(s.manifestList)
+            .map(IcebergConversionTarget.PrevManifest.of(_, seq))
         }
         .getOrElse(Nil)
-    val prevManifests: Seq[String] = prevManifestRecs.map(_._1)
 
-    // carry-forward / rewrite of previous manifests: one task PER MANIFEST
-    // on the cluster (a 10⁶-file table has hundreds of manifests — a
-    // driver-serial read/filter/rewrite loop was the round-4 bottleneck);
-    // only the per-manifest summary tuples come back to the driver. Small
-    // lists stay driver-side to skip the job-launch overhead per sync.
+    // carry-forward / rewrite of previous manifests, placed by the bytes
+    // of the manifests it must open: an untouched manifest whose list
+    // record carries its counts is carried from the record with no IO; a
+    // 10⁶-file table's hundreds of manifests are opened one task PER
+    // MANIFEST, and only the summaries come back to the driver.
     val kept = Seq.newBuilder[IcebergManifests.ManifestSummary]
-    val processed: Seq[Option[(String, Long, Int, Int, Long)]] =
-      if (bigRemoves) Nil
-      else if (prevManifests.size <= 4)
-        prevManifests.map(
-          IcebergConversionTarget.carryForwardManifest(_, removedPaths, mdir))
-      else {
-        val sc = spark.sparkContext
-        val bc = sc.broadcast(removedPaths)
-        val md = mdir
-        try sc.parallelize(prevManifests,
-            math.min(prevManifests.size, 128))
-          .map(mp =>
-            IcebergConversionTarget.carryForwardManifest(mp, bc.value, md))
-          .collect().toSeq
-        finally bc.unpersist()
-      }
-    processed.zip(prevManifestRecs).foreach {
-      case (Some((p, len, existing, deleted, rows)), (_, sid, origSeq)) =>
-        kept += IcebergManifests.ManifestSummary(p, len, origSeq,
-          0, existing, deleted, 0L, rows, specId = sid)
-      case (None, _) => () // fully-dropped manifest: not carried forward at all
+    if (removes.isLeft) {
+      val opened = prevManifests.filter(_.mustOpen(removedPaths))
+      val md = mdir
+      kept ++= (Placement.of(opened.map(_.length)) match {
+        case Placement.Driver =>
+          val conf = graft.util.HadoopConfs.session(spark)
+          prevManifests.map(IcebergConversionTarget.carryForwardManifest(
+            _, removedPaths, md, conf))
+        case Placement.Tasks =>
+          val sc = spark.sparkContext
+          val bc = sc.broadcast(removedPaths)
+          val bconf = graft.util.HadoopConfs.broadcastSession(spark)
+          try sc.parallelize(prevManifests,
+              math.min(prevManifests.size, 128))
+            .map(IcebergConversionTarget.carryForwardManifest(_, bc.value,
+              md, bconf.value.value))
+            .collect().toSeq
+          finally bc.unpersist()
+      }).flatten // a fully-dropped manifest is not carried forward at all
     }
 
     // big-removes carry-forward: previous manifest entries become a
@@ -419,7 +389,7 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
     // driver Set or broadcast), survivors rewrite as EXISTING manifests —
     // one per join partition, written through the Hadoop FS. Only
     // (path, length, count) summaries return to the driver.
-    if (bigRemoves && prevManifests.nonEmpty) {
+    for (removesDs <- removes.toOption if prevManifests.nonEmpty) {
       import spark.implicits._
       import org.apache.spark.sql.functions.col
       val sch = schema
@@ -427,7 +397,8 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
       val md = mdir
       val sfb = specFieldsBySid
       val bconf = graft.util.HadoopConfs.broadcastSession(spark)
-      val prevEntries = graft.util.Par.ds(spark, prevManifestRecs, 128)
+      val prevEntries = graft.util.Par.ds(spark,
+          prevManifests.map(m => (m.path, m.specId, m.seq)), 128)
         .flatMap { case (mp, sid, origSeq) =>
           IcebergManifests.readManifest(mp)
             .filter(_.get("status").asInstanceOf[Int] !=
@@ -445,13 +416,13 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
               (sid, origSeq, IcebergManifests.fromEntry(e, sch)._2, fr)
             }
         }
-      val removes = pendingRemoves.get.select(col("path").as("__rm"))
+      val removesCol = removesDs.select(col("path").as("__rm"))
       // survivors keep their source manifest's spec id AND sequence;
       // entries sort by both WITHIN each join partition (no extra
       // shuffle) so each output manifest is uniform in spec (partition
       // struct shape) and sequence (the per-file commit ordinal)
       val survivors = prevEntries
-        .join(removes, col("_3.path") === col("__rm"), "left_anti")
+        .join(removesCol, col("_3.path") === col("__rm"), "left_anti")
         .as[(Int, Long, FileEntry, Option[Long])]
         .sortWithinPartitions(col("_1"), col("_2"))
       val summaries = survivors.mapPartitions { it =>
@@ -485,149 +456,39 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
       }
     }
 
-    // added-files manifest(s): OPTIMISTIC driver stream — the common
-    // incremental commit writes one manifest in the same single pass it
-    // always did (no extra job, no cache). Only a commit that exceeds
-    // the cap mid-stream abandons the driver manifest and re-authors
-    // distributed — one ADDED manifest per task with bounded entries, so
-    // a 10^6-file full sync never serializes its adds through a single
-    // driver writer (same move as the carry-forward above); the rare
-    // fallback re-runs the adds lineage once, persisted for its two
-    // passes (count + write).
-    pendingAdds.foreach { ds =>
-      var addedCount = 0L
-      var addedRows = 0L
-      val np = s"$mdir/m-${UUID.randomUUID()}.avro"
-      val cap = IcebergConversionTarget.DriverAddsThreshold
-      // fused probe: the common small commit ships its adds in the ONE
-      // job that also counts them (toLocalIterator was a job per
-      // partition); a probe-truncated but under-cap commit keeps the
-      // streaming iterator, an over-cap commit skips the driver attempt
-      // entirely (the old path wrote a partial manifest and deleted it)
-      // probe cap = the driver-path gate, so a 65k-100k-add commit does
-      // not truncate the probe and pay the extra per-partition
-      // toLocalIterator pass the fusion exists to remove
-      val addsProbe = graft.util.ProbedRows.probe(ds,
-        (f: FileEntry) => f.recordCount, cap = cap)
-      val overCap = addsProbe.count > cap
-      val it: Iterator[graft.model.FileEntry] =
-        if (overCap) Iterator.empty
-        else addsProbe.rows.map(_.iterator)
-          .getOrElse(ds.toLocalIterator().asScala)
-      // spec field_summary bounds (ids 509-511) per partition-spec
-      // field, tracked while the entries stream — real readers prune
-      // whole manifests by them before opening any entry
-      val partOrder = partitionSpec.map(_.partitionColumnName)
-      val partBounds = scala.collection.mutable.Map
-        .empty[String, (Boolean, String, String)]
-      def track(f: graft.model.FileEntry): Unit = partOrder.foreach { pf =>
-        f.partitionValues.find(_.field == pf) match {
-          case Some(p) =>
-            val numeric = IcebergManifests
-              .partitionAvroType(schema, pf) != "string"
-            def lt(a: String, b: String): Boolean =
-              if (numeric) a.toLong < b.toLong else a < b
-            partBounds.get(pf) match {
-              case None => partBounds(pf) = (false, p.value, p.value)
-              case Some((n, lo, hi)) => partBounds(pf) = (n,
-                if (lt(p.value, lo)) p.value else lo,
-                if (lt(hi, p.value)) p.value else hi)
-            }
-          case None => partBounds.get(pf) match {
-            case None => partBounds(pf) = (true, null, null)
-            case Some((_, lo, hi)) => partBounds(pf) = (true, lo, hi)
-          }
-        }
-      }
-      val entryIt = it.map { f =>
-        val fr = if (isV3) Some(baseRowId + addedRows) else None
-        addedCount += 1; addedRows += f.recordCount
-        track(f)
-        IcebergManifests.toEntry(f, IcebergManifests.Status.Added,
-          snapshotId, schema, firstRowId = fr,
-          specFields = specFieldsNow)
-      }.takeWhile(_ => addedCount <= cap)
-      val len = IcebergManifests.writeManifest(np, entryIt)
-      def boundBytes(pf: String, v: String): Option[Array[Byte]] =
-        Option(v).map { s =>
-          IcebergManifests.partitionAvroType(schema, pf) match {
-            case "int" => java.nio.ByteBuffer.allocate(4)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-              .putInt(s.toInt).array()
-            case "long" => java.nio.ByteBuffer.allocate(8)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-              .putLong(s.toLong).array()
-            case _ => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          }
-        }
-      val summaries = partOrder.flatMap(pf => partBounds.get(pf).map {
-        case (containsNull, lo, hi) =>
-          IcebergManifests.PartitionFieldSummary(containsNull,
-            boundBytes(pf, lo), boundBytes(pf, hi))
-      })
-      if (!overCap && addedCount > 0) {
-        kept += IcebergManifests.ManifestSummary(
-          np, len, snapshotId, addedCount.toInt, 0, 0, addedRows, 0L,
-          partitions = summaries, specId = defaultSpecId)
-        newRowsTotal = addedRows
-      } else {
-        // over the cap (or empty): drop the partial driver manifest
-        val hp = new org.apache.hadoop.fs.Path(np)
-        hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-          .delete(hp, false)
-      }
-      if (overCap) {
-        val sch = schema
-        val snapId = snapshotId
-        val md = mdir
-        val v3 = isV3
-        val base = baseRowId
-        val sfNow = specFieldsNow
-        val bconf = graft.util.HadoopConfs.broadcastSession(spark)
-        val cached = ds.persist()
-        val addTotal = addsProbe.count
-        val nParts = math.max(1, math.min(256,
-          math.ceil(addTotal.toDouble /
-            IcebergConversionTarget.EntriesPerManifest).toInt))
+    // added-files manifest(s): one writer, run where the adds are — ONE
+    // manifest from the driver's rows (no job), or one ADDED manifest per
+    // task with bounded entries, so a 10^6-file full sync never
+    // serializes its adds through a single driver writer. v3 row ids
+    // come from the next-row-id watermark, in entry order either way.
+    val adds = Placement.fetch(pending.added, at)(_.recordCount)
+    val newRowsTotal = adds.weight
+    val writer = IcebergConversionTarget.AddedManifest(mdir, snapshotId,
+      schema, partitionSpec.map(_.partitionColumnName), specFieldsNow,
+      defaultSpecId, isV3)
+    kept ++= (adds.rows match {
+      case Left(rows) => writer.write(rows.iterator, baseRowId,
+        graft.util.HadoopConfs.session(spark)).toSeq
+      case Right(ds) =>
+        val nParts = math.max(1, math.min(256, math.ceil(
+          adds.count.toDouble / IcebergConversionTarget.EntriesPerManifest)
+          .toInt))
         // the repartitioned set is persisted so the v3 row-id passes
         // (per-partition counts, then assignment) see ONE partitioning
-        val rep = cached.repartition(nParts).persist()
+        val rep = ds.repartition(nParts).persist()
         val bases: Array[Long] =
-          if (!v3) Array.empty
-          else {
-            val counts = rep.rdd.mapPartitionsWithIndex { (i, it2) =>
-              Iterator((i, it2.map(_.recordCount).sum))
-            }.collect().sortBy(_._1).map(_._2)
-            newRowsTotal = counts.sum
-            counts.scanLeft(base)(_ + _)
-          }
+          if (!isV3) Array.fill(nParts)(0L)
+          else rep.rdd.mapPartitionsWithIndex { (i, it) =>
+            Iterator((i, it.map(_.recordCount).sum))
+          }.collect().sortBy(_._1).map(_._2).scanLeft(baseRowId)(_ + _)
         val bBases = spark.sparkContext.broadcast(bases)
-        val summaries = rep.rdd.mapPartitionsWithIndex { (i, it2) =>
-          if (!it2.hasNext) Iterator.empty
-          else {
-            val p = s"$md/m-${UUID.randomUUID()}.avro"
-            var n = 0
-            var rows = 0L
-            var cursor = if (v3) bBases.value(i) else 0L
-            val len2 = IcebergManifests.writeManifest(p,
-              it2.map { f =>
-                val fr = if (v3) Some(cursor) else None
-                cursor += f.recordCount
-                n += 1; rows += f.recordCount
-                IcebergManifests.toEntry(f, IcebergManifests.Status.Added,
-                  snapId, sch, firstRowId = fr, specFields = sfNow)
-              }, bconf.value.value)
-            Iterator((p, len2, n, rows))
-          }
-        }.collect()
-        summaries.foreach { case (p, len2, n, rows) =>
-          kept += IcebergManifests.ManifestSummary(
-            p, len2, snapshotId, n, 0, 0, rows, 0L,
-            specId = defaultSpecId)
-        }
-        rep.unpersist(); cached.unpersist(); bBases.unpersist()
-      }
-    }
+        val bconf = graft.util.HadoopConfs.broadcastSession(spark)
+        try rep.rdd.mapPartitionsWithIndex { (i, it) =>
+          writer.write(it, bBases.value(i), bconf.value.value).iterator
+        }.collect().toSeq
+        finally { rep.unpersist(); bBases.unpersist() }
+    })
+    removed.unpin(); adds.unpin()
 
     // manifest compaction: when the list grows past the threshold, merge
     // everything into one EXISTING-status manifest (keeps per-commit cost
@@ -716,33 +577,127 @@ object IcebergConversionTarget {
   /** Max manifests per snapshot before a compacting rewrite. */
   val CompactionThreshold = 16
 
-  /** Commits at or under this many adds write ONE driver-streamed
-    * manifest (no extra job); above it, one ADDED manifest per task.
-    */
-  val DriverAddsThreshold = 100000L
   /** Target entries per executor-written ADDED manifest. */
   val EntriesPerManifest = 200000L
-
-  /** Removed-path count above which completeSync never materializes the
-    * driver Set: the carry-forward switches to a distributed anti-join
-    * over the previous manifest entries.
-    */
-  private[iceberg] var BigRemovesThreshold: Long = 100000L
 
   /** Observability hook for specs: which carry-forward path the last
     * completeSync took ("driver-set" | "distributed-anti-join").
     */
   @volatile private[graft] var lastCarryForwardMode: String = ""
 
-  /** Carry one previous manifest into the next snapshot: untouched →
-    * `(path, len, liveCount, 0)` (stat only); partially removed → rewrite
+  /** A data manifest of the previous snapshot, as its manifest-list
+    * record gives it: `live` is its (files, rows) of ADDED + EXISTING
+    * entries when the record carries those counts (v1 lists from other
+    * writers may not).
+    */
+  private[iceberg] final case class PrevManifest(path: String, specId: Int,
+      seq: Long, length: Option[Long], live: Option[(Int, Long)]) {
+    /** Whether carrying it forward must read its entries. */
+    def mustOpen(removed: Set[String]): Boolean =
+      removed.nonEmpty || live.isEmpty || length.isEmpty
+  }
+
+  private[iceberg] object PrevManifest {
+    def of(r: org.apache.avro.generic.GenericRecord, seq: Long)
+        : PrevManifest = {
+      def long(name: String): Option[Long] =
+        Option(IcebergManifests.fieldOr(r, name))
+          .map(IcebergManifests.longOf(_, 0L))
+      PrevManifest(r.get("manifest_path").toString,
+        long("partition_spec_id").fold(0)(_.toInt),
+        long("sequence_number").getOrElse(seq),
+        long("manifest_length"),
+        for {
+          af <- long("added_data_files_count")
+          ef <- long("existing_data_files_count")
+          ar <- long("added_rows_count")
+          er <- long("existing_rows_count")
+        } yield ((af + ef).toInt, ar + er))
+    }
+  }
+
+  /** The one writer of a commit's ADDED manifests, run over the driver's
+    * rows or per partition. Writes nothing for no entries. Tracks the
+    * spec field_summary bounds (ids 509-511) per partition field while
+    * the entries stream — real readers prune whole manifests by them
+    * before opening any entry.
+    */
+  private[iceberg] final case class AddedManifest(mdir: String,
+      snapshotId: Long, schema: StructType, partitionFields: Seq[String],
+      specFields: Seq[(String, Int)], specId: Int, v3: Boolean) {
+
+    def write(files: Iterator[FileEntry], firstRowId: Long,
+        conf: org.apache.hadoop.conf.Configuration)
+        : Option[IcebergManifests.ManifestSummary] =
+      if (!files.hasNext) None
+      else {
+        val numeric = partitionFields.map(pf =>
+          pf -> (IcebergManifests.partitionAvroType(schema, pf) != "string"))
+          .toMap
+        val bounds = scala.collection.mutable.Map
+          .empty[String, (Boolean, String, String)]
+        def track(f: FileEntry): Unit = partitionFields.foreach { pf =>
+          def lt(a: String, b: String): Boolean =
+            if (numeric(pf)) a.toLong < b.toLong else a < b
+          (f.partitionValues.find(_.field == pf), bounds.get(pf)) match {
+            case (Some(p), None) => bounds(pf) = (false, p.value, p.value)
+            case (Some(p), Some((n, lo, hi))) => bounds(pf) = (n,
+              if (lo == null || lt(p.value, lo)) p.value else lo,
+              if (hi == null || lt(hi, p.value)) p.value else hi)
+            case (None, b) =>
+              bounds(pf) = (true, b.map(_._2).orNull, b.map(_._3).orNull)
+          }
+        }
+        val path = s"$mdir/m-${UUID.randomUUID()}.avro"
+        var n = 0
+        var rows = 0L
+        val len = IcebergManifests.writeManifest(path, files.map { f =>
+          val fr = if (v3) Some(firstRowId + rows) else None
+          n += 1; rows += f.recordCount
+          track(f)
+          IcebergManifests.toEntry(f, IcebergManifests.Status.Added,
+            snapshotId, schema, firstRowId = fr, specFields = specFields)
+        }, conf)
+        def boundBytes(pf: String, v: String): Option[Array[Byte]] =
+          Option(v).map { s =>
+            IcebergManifests.partitionAvroType(schema, pf) match {
+              case "int" => java.nio.ByteBuffer.allocate(4)
+                .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+                .putInt(s.toInt).array()
+              case "long" => java.nio.ByteBuffer.allocate(8)
+                .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+                .putLong(s.toLong).array()
+              case _ => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+            }
+          }
+        Some(IcebergManifests.ManifestSummary(path, len, snapshotId, n, 0, 0,
+          rows, 0L,
+          partitions = partitionFields.flatMap(pf => bounds.get(pf).map {
+            case (containsNull, lo, hi) =>
+              IcebergManifests.PartitionFieldSummary(containsNull,
+                boundBytes(pf, lo), boundBytes(pf, hi))
+          }),
+          specId = specId))
+      }
+  }
+
+  /** Carry one previous manifest into the next snapshot: untouched → its
+    * summary as EXISTING entries (from the list record when it has the
+    * counts, else from one counting pass); partially removed → rewrite
     * live entries minus `removed` to a fresh manifest; fully removed →
     * None. Static so the closure ships to executors without dragging the
     * target (SparkSession and all) along.
     */
-  private[iceberg] def carryForwardManifest(mp: String,
-      removed: Set[String], mdir: String)
-      : Option[(String, Long, Int, Int, Long)] = {
+  private[iceberg] def carryForwardManifest(m: PrevManifest,
+      removed: Set[String], mdir: String,
+      conf: org.apache.hadoop.conf.Configuration)
+      : Option[IcebergManifests.ManifestSummary] = {
+    def summary(path: String, len: Long, files: Int, dropped: Int,
+        rows: Long) = IcebergManifests.ManifestSummary(path, len, m.seq,
+      0, files, dropped, 0L, rows, specId = m.specId)
+    if (!m.mustOpen(removed))
+      return m.live.map { case (files, rows) =>
+        summary(m.path, m.length.get, files, 0, rows) }
     def dataFile(e: org.apache.avro.generic.GenericRecord) =
       e.get("data_file").asInstanceOf[org.apache.avro.generic.GenericRecord]
     def pathOf(e: org.apache.avro.generic.GenericRecord): String =
@@ -752,7 +707,7 @@ object IcebergConversionTarget {
     // pass 1 streams counts only — a 10^6-entry manifest never
     // materializes; the rewrite (pass 2) streams reader→writer
     var remaining = 0; var dropped = 0; var remainingRows = 0L
-    IcebergManifests.readManifest(mp).foreach { e =>
+    IcebergManifests.readManifest(m.path).foreach { e =>
       if (isLive(e)) {
         if (removed.contains(pathOf(e))) dropped += 1
         else {
@@ -763,17 +718,18 @@ object IcebergConversionTarget {
       }
     }
     if (dropped == 0) {
-      val hp = new org.apache.hadoop.fs.Path(mp)
-      val len = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        .getFileStatus(hp).getLen
-      Some((mp, len, remaining, 0, remainingRows))
+      val len = m.length.getOrElse {
+        val hp = new org.apache.hadoop.fs.Path(m.path)
+        hp.getFileSystem(conf).getFileStatus(hp).getLen
+      }
+      Some(summary(m.path, len, remaining, 0, remainingRows))
     } else if (remaining > 0) {
       val np = s"$mdir/m-${UUID.randomUUID()}.avro"
-      val survivors = IcebergManifests.readManifest(mp)
+      val survivors = IcebergManifests.readManifest(m.path)
         .filter(e => isLive(e) && !removed.contains(pathOf(e)))
         .map { e => e.put("status", IcebergManifests.Status.Existing); e }
-      val len = IcebergManifests.writeManifest(np, survivors)
-      Some((np, len, remaining, dropped, remainingRows))
+      val len = IcebergManifests.writeManifest(np, survivors, conf)
+      Some(summary(np, len, remaining, dropped, remainingRows))
     } else None
   }
 }

@@ -1,9 +1,11 @@
 package graft.formats.paimon
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{FileEntry, TableSnapshot}
+import graft.plans.Placement
+import graft.plans.Placement.Placed
 import graft.util.PathUtils
 
 /** Row-level change feed over a Paimon table — the Paimon twin of
@@ -36,8 +38,10 @@ object PaimonChanges {
     val cols = table.schema.fieldNames.toSeq.map(col)
     val parts = ids.map { id =>
       val change = src.changeForCommit(id.toString)
-      def readTagged(files: Dataset[FileEntry], tag: String): DataFrame = {
-        val snap = TableSnapshot(table, files, s"$id-cdf-$tag")
+      def readTagged(files: Placed[FileEntry], tag: String): DataFrame = {
+        import spark.implicits._
+        val snap = TableSnapshot(table, Placement.dataset(spark, files),
+          s"$id-cdf-$tag")
         val out = graft.formats.delta.DeltaRead.toDataFrame(spark, snap)
           .select(cols :+ lit(tag).as("_change_type"): _*)
         graft.plans.SnapshotFileIndex.invalidate(snap)

@@ -120,12 +120,12 @@ class PaimonConversionSource(spark: SparkSession, tablePath: String,
   override def changeForCommit(commit: String): TableChange = {
     import spark.implicits._
     val snap = PaimonFormat.readSnapshot(tablePath, commit.toLong)
-    val delta = Placement.dataset(spark, entries(PaimonFormat.readManifestList(
-      PaimonFormat.manifestListPath(tablePath, snap.deltaManifestList)), None))
+    val delta = entries(PaimonFormat.readManifestList(
+      PaimonFormat.manifestListPath(tablePath, snap.deltaManifestList)), None)
+    def side(kind: Int) = Placement.mapRows(delta)(
+      _.collect { case (k, f) if k == kind => f })
     TableChange(commit, currentTable().copy(latestCommitMillis = commit.toLong),
-      FilesDelta(
-        delta.filter(_._1 == PaimonFormat.Kind.Add).map(_._2),
-        delta.filter(_._1 == PaimonFormat.Kind.Delete).map(_._2)))
+      FilesDelta(side(PaimonFormat.Kind.Add), side(PaimonFormat.Kind.Delete)))
   }
 
   override def commitsBacklog(lastSynced: String): Seq[String] =
@@ -155,8 +155,9 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
   private var schema: StructType = _
   private var partitionSpec: Seq[PartitionFieldSpec] = Nil
   private var syncMeta: Option[SyncMetadata] = None
-  private var pendingAdds: Option[Dataset[FileEntry]] = None
-  private var pendingRemoves: Option[Dataset[FileEntry]] = None
+  private var pending = FilesDelta.empty
+  /** Pins where this target's commit writes run (tests only). */
+  private[graft] var at: Option[Placement] = None
   private var expectedBase: Option[Long] = None
 
   private var commitStamp: Option[(String, Long)] = None
@@ -185,7 +186,7 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
 
   override def beginSync(t: TableDescriptor): Unit = {
     table = t; schema = t.schema
-    pendingAdds = None; pendingRemoves = None
+    pending = FilesDelta.empty
     expectedBase = None
     commitStamp = None
   }
@@ -195,19 +196,14 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
     partitionSpec = spec
 
   override def syncFilesForSnapshot(files: Dataset[FileEntry]): Unit =
-    PaimonFormat.latestSnapshotId(tablePath) match {
-      case None => pendingAdds = Some(files); pendingRemoves = None
-      case Some(_) =>
-        val current = new PaimonConversionSource(spark, tablePath, "target")
-          .currentSnapshot().files
-        val delta = FilesDelta.between(files, current)
-        pendingAdds = Some(delta.added)
-        pendingRemoves = Some(delta.removed)
+    pending = PaimonFormat.latestSnapshotId(tablePath) match {
+      case None => FilesDelta(Right(files), Left(Vector.empty))
+      case Some(_) => FilesDelta.between(files,
+        new PaimonConversionSource(spark, tablePath, "target")
+          .currentSnapshot().files)
     }
 
-  override def syncFilesForDiff(diff: FilesDelta): Unit = {
-    pendingAdds = Some(diff.added); pendingRemoves = Some(diff.removed)
-  }
+  override def syncFilesForDiff(diff: FilesDelta): Unit = pending = diff
 
   override def completeSync(): Unit = {
     import spark.implicits._
@@ -246,22 +242,11 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
         }
     }
 
-    pendingAdds = pendingAdds.map(_.persist())
-    pendingRemoves = pendingRemoves.map(_.persist())
-    // ONE fused probe job per side answers the entry count, the record
-    // sum (the snapshot's row accounting) AND — for small commits —
-    // ships the entries for the driver-written delta manifest; the
-    // former count + toLocalIterator + sum(recordCount) trio was 3+
-    // scheduler round-trips per side on every commit (guide §1.2)
-    val emptyProbe = graft.util.ProbedRows.Probe[FileEntry](0L, 0L, Some(Nil))
-    val addProbe = pendingAdds.map(graft.util.ProbedRows.probe(_,
-      (f: FileEntry) => f.recordCount,
-      PaimonConversionTarget.DriverDeltaThreshold)).getOrElse(emptyProbe)
-    val removeProbe = pendingRemoves.map(graft.util.ProbedRows.probe(_,
-      (f: FileEntry) => f.recordCount,
-      PaimonConversionTarget.DriverDeltaThreshold)).getOrElse(emptyProbe)
-    val addCount = addProbe.count
-    val removeCount = removeProbe.count
+    // one fetch per side answers the entry count and the record sum
+    // (the snapshot's row accounting), and brings a side of at most
+    // Placement.MaxRows entries to the driver for the delta manifest
+    val adds = Placement.fetch(pending.added, at)(_.recordCount)
+    val removes = Placement.fetch(pending.removed, at)(_.recordCount)
     val bconf = graft.util.HadoopConfs.broadcastSession(spark)
 
     // base = previous base ∪ previous delta (manifest reuse, no rewrite);
@@ -303,45 +288,37 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
       }
     }
 
-    // delta manifest(s): small commits stay a single driver-written
-    // manifest (no job); big ones author one manifest PER TASK with
-    // bounded entries each — the commit's write path is O(1) on the
-    // driver at any commit size
-    val deltaManifests: Seq[(String, Long)] = {
-      val total = addCount + removeCount
-      if (total <= PaimonConversionTarget.DriverDeltaThreshold &&
-          addProbe.rows.isDefined && removeProbe.rows.isDefined) {
-        // the probe already shipped every entry — zero further jobs
-        val deltaName = s"manifest-${UUID.randomUUID()}"
-        val entries =
-          addProbe.rows.get.iterator
-            .map(PaimonFormat.toEntry(_, PaimonFormat.Kind.Add)) ++
-          removeProbe.rows.get.iterator
-            .map(PaimonFormat.toEntry(_, PaimonFormat.Kind.Delete))
-        val len = PaimonFormat.writeManifest(s"$mdir/$deltaName", entries)
-        Seq((deltaName, len))
-      } else {
-        val md = mdir
-        val empty = spark.emptyDataset[(Int, FileEntry)]
-        val tagged =
-          pendingAdds.map(_.map(f => (PaimonFormat.Kind.Add, f)))
-            .getOrElse(empty)
-          .union(pendingRemoves
-            .map(_.map(f => (PaimonFormat.Kind.Delete, f))).getOrElse(empty))
-        val nParts = math.max(1, math.min(256, math.ceil(total.toDouble /
-          PaimonConversionTarget.EntriesPerManifest).toInt))
-        tagged.repartition(nParts).mapPartitions { it =>
-          if (!it.hasNext) Iterator.empty
-          else {
-            val np = s"manifest-${UUID.randomUUID()}"
-            val len = PaimonFormat.writeManifest(s"$md/$np",
-              it.map { case (k, f) => PaimonFormat.toEntry(f, k) },
-              bconf.value.value)
-            Iterator((np, len))
-          }
-        }.collect().toSeq
+    // delta manifest(s): one writer, run where the entries are — a
+    // commit whose sides are both on the driver writes ONE manifest (no
+    // job); otherwise one manifest PER TASK with bounded entries each, so
+    // the commit's write path is O(1) on the driver at any commit size
+    val md = mdir
+    val writeDelta = (conf: org.apache.hadoop.conf.Configuration) =>
+      (it: Iterator[(Int, FileEntry)]) =>
+        if (!it.hasNext) Iterator.empty
+        else {
+          val np = s"manifest-${UUID.randomUUID()}"
+          val len = PaimonFormat.writeManifest(s"$md/$np",
+            it.map { case (k, f) => PaimonFormat.toEntry(f, k) }, conf)
+          Iterator((np, len))
+        }
+    def tagged(side: Placement.Placed[FileEntry], kind: Int) =
+      Placement.mapRows(side)(_.map(f => (kind, f)))
+    val deltaManifests: Seq[(String, Long)] =
+      (tagged(adds.rows, PaimonFormat.Kind.Add),
+        tagged(removes.rows, PaimonFormat.Kind.Delete)) match {
+        case (Left(a), Left(r)) =>
+          writeDelta(graft.util.HadoopConfs.session(spark))(
+            a.iterator ++ r.iterator).toSeq
+        case (a, r) =>
+          val nParts = math.max(1, math.min(256, math.ceil(
+            (adds.count + removes.count).toDouble /
+              PaimonConversionTarget.EntriesPerManifest).toInt))
+          Placement.dataset(spark, a).union(Placement.dataset(spark, r))
+            .repartition(nParts)
+            .mapPartitions(it => writeDelta(bconf.value.value)(it))
+            .collect().toSeq
       }
-    }
 
     val baseListName = s"manifest-list-${UUID.randomUUID()}-base"
     val deltaListName = s"manifest-list-${UUID.randomUUID()}-delta"
@@ -352,7 +329,7 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
     // adds − removes; total chains from the previous snapshot's total
     // (None there — a pre-r12 snapshot — keeps the chain honest by
     // staying None rather than recounting the world)
-    val deltaRows = addProbe.weight - removeProbe.weight
+    val deltaRows = adds.weight - removes.weight
     val totalRows: Option[Long] = prevId match {
       case None => Some(deltaRows)
       case Some(p) => PaimonFormat.readSnapshot(tablePath, p)
@@ -360,7 +337,7 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
     }
 
     val ok = PaimonFormat.writeSnapshot(tablePath, PaimonFormat.PaimonSnapshot(
-      id, schemaId, if (removeCount > 0) "COMPACT" else "APPEND",
+      id, schemaId, if (removes.count > 0) "COMPACT" else "APPEND",
       System.currentTimeMillis(),
       deltaListName, baseListName,   // real Paimon: bare names
       syncMeta.map(_.toJson),
@@ -368,8 +345,7 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
       commitIdentifier = commitStamp.map(_._2),
       totalRecordCount = totalRows,
       deltaRecordCount = Some(deltaRows)))
-    pendingAdds.foreach(_.unpersist())
-    pendingRemoves.foreach(_.unpersist())
+    adds.unpin(); removes.unpin()
     if (!ok) throw new IllegalStateException(
       s"concurrent writer committed snapshot $id first at $tablePath")
   }
@@ -381,10 +357,6 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
 }
 
 object PaimonConversionTarget {
-  /** Commits at or under this many entries write ONE driver-side delta
-    * manifest (no Spark job — the common incremental-sync shape).
-    */
-  val DriverDeltaThreshold = 10000L
   /** Target entries per executor-written manifest on big commits. */
   val EntriesPerManifest = 50000L
 }

@@ -75,9 +75,7 @@ object PaimonStreamSink {
         tgt.syncSchema(table.schema)
         tgt.syncPartitionSpec(table.partitionFields)
         tgt.stampCommit(appId, batchId)
-        tgt.syncFilesForDiff(FilesDelta(added,
-          spark.emptyDataset[graft.model.FileEntry](
-            org.apache.spark.sql.Encoders.product[graft.model.FileEntry])))
+        tgt.syncFilesForDiff(FilesDelta(Right(added), Left(Vector.empty)))
         tgt.completeSync()
         return true
       } catch {

@@ -3,6 +3,8 @@ package graft.model
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.plans.Placement.Placed
+
 /** Canonical metadata model, mirroring the reference's internal model
   * (xtable-api/.../model/InternalTable.java:38-55, InternalDataFile.java:45-55,
   * ColumnStat.java:28-33, PartitionValue.java:28-30) but shaped as
@@ -137,10 +139,19 @@ case class TableSnapshot(
     commitId: String,
     pendingCommits: Seq[String] = Nil)
 
-/** Reference InternalFilesDiff.java:35-80 — both sides stay Datasets. */
-case class FilesDelta(added: Dataset[FileEntry], removed: Dataset[FileEntry])
+/** Reference InternalFilesDiff.java:35-80. Each side crosses the SPI
+  * where its source decoded it: rows on the driver or a distributed
+  * Dataset ([[graft.plans.Placement]]).
+  */
+case class FilesDelta(added: Placed[FileEntry], removed: Placed[FileEntry])
 
 object FilesDelta {
+  val empty: FilesDelta = FilesDelta(Left(Vector.empty), Left(Vector.empty))
+
+  /** A diff whose sides are both distributed. */
+  def apply(added: Dataset[FileEntry], removed: Dataset[FileEntry])
+      : FilesDelta = FilesDelta(Right(added), Right(removed))
+
   /** Reference FilesDiff.findNewAndRemovedFiles (FilesDiff.java:67-85):
     * keyed set-match on path, expressed as two anti-joins so Catalyst can
     * pick broadcast/shuffled-hash and AQE can re-plan at runtime.

@@ -114,8 +114,8 @@ object GraftBatchWrite {
               target.beginSync(table)
               target.syncSchema(table.schema)
               target.syncPartitionSpec(table.partitionFields)
-              target.syncFilesForDiff(graft.model.FilesDelta(adds,
-                spark.emptyDataset[graft.model.FileEntry]))
+              target.syncFilesForDiff(
+                graft.model.FilesDelta(Right(adds), Left(Vector.empty)))
               target.completeSync()
           }
           done = true

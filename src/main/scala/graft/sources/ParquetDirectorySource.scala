@@ -103,7 +103,7 @@ class ParquetDirectorySource(
       spark, basePath, files, statsColumns)
     val table = currentTable().copy(latestCommitMillis = ts)
     TableChange(commit, table,
-      FilesDelta(added, spark.emptyDataset[FileEntry]))
+      FilesDelta(Right(added), Left(Vector.empty)))
   }
 
   override def commitsBacklog(lastSynced: String): Seq[String] = {

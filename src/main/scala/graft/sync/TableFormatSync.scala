@@ -1,6 +1,7 @@
 package graft.sync
 
 import graft.model._
+import graft.plans.Placement
 import graft.spi._
 
 /** The per-target sync protocol — reference TableFormatSync.java:153-188,
@@ -9,27 +10,26 @@ import graft.spi._
   */
 object TableFormatSync {
 
-  /** Lazy guard: file-level sync cannot represent row-level deletes, so a
-    * DV'd entry flowing into any target is refused. Fused into the files
-    * Dataset (no extra Spark action); the failure is rethrown — not folded
-    * into an ERROR outcome — because silently propagating a file with
+  /** Guard: file-level sync cannot represent row-level deletes, so a
+    * DV'd entry flowing into any target is refused. One decode step, run
+    * where the files are (over driver rows, or fused into the Dataset with
+    * no extra Spark action); the failure is rethrown — not folded into an
+    * ERROR outcome — because silently propagating a file with
     * logically-deleted rows is the wrong-answer class the reference guards
     * against (DeltaConversionSource.java:104-174).
     */
-  private def refuseDvs(files: org.apache.spark.sql.Dataset[FileEntry],
-      context: String): org.apache.spark.sql.Dataset[FileEntry] =
-    files.mapPartitions { it =>
-      it.map { f =>
-        f.deletionVector.foreach { dv =>
-          throw new DeletionVectorsUnsupported(
-            s"$context: file ${f.path} carries a live deletion vector " +
-              s"(${dv.cardinality} deleted row(s)) — file-level metadata " +
-              "sync would propagate logically-deleted rows to every " +
-              "target; compact/rewrite the source table (purge DVs) first")
-        }
-        f
+  private def refuseDvs(context: String)(it: Iterator[FileEntry])
+      : Iterator[FileEntry] =
+    it.map { f =>
+      f.deletionVector.foreach { dv =>
+        throw new DeletionVectorsUnsupported(
+          s"$context: file ${f.path} carries a live deletion vector " +
+            s"(${dv.cardinality} deleted row(s)) — file-level metadata " +
+            "sync would propagate logically-deleted rows to every " +
+            "target; compact/rewrite the source table (purge DVs) first")
       }
-    }(files.encoder)
+      f
+    }
 
   private def isDvRefusal(e: Throwable): Boolean = {
     var t = e
@@ -58,8 +58,9 @@ object TableFormatSync {
         target.syncMetadata(meta)
         target.syncSchema(snapshot.table.schema)
         target.syncPartitionSpec(snapshot.table.partitionFields)
-        target.syncFilesForSnapshot(
-          refuseDvs(snapshot.files, s"snapshot sync ${snapshot.commitId}"))
+        target.syncFilesForSnapshot(snapshot.files.mapPartitions(
+          refuseDvs(s"snapshot sync ${snapshot.commitId}"))(
+          snapshot.files.encoder))
         target.completeSync()
         SyncOutcome(target.targetFormat, SyncMode.Full, "SUCCESS",
           snapshot.commitId, System.currentTimeMillis() - t0)
@@ -99,8 +100,9 @@ object TableFormatSync {
             target.syncSchema(change.tableAsOfChange.schema)
             target.syncPartitionSpec(change.tableAsOfChange.partitionFields)
             target.syncFilesForDiff(change.diff.copy(added =
-              refuseDvs(change.diff.added,
-                s"incremental sync ${change.commitId}")))
+              Placement.mapRows(change.diff.added)(
+                refuseDvs(s"incremental sync ${change.commitId}"))(
+                org.apache.spark.sql.Encoders.product[FileEntry])))
             target.completeSync()
             lastApplied += target -> change.commitId
             outcomes += target -> (Some(change.commitId), None)

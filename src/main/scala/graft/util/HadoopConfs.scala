@@ -46,6 +46,13 @@ object HadoopConfs {
     c
   }
 
+  /** [[session]] of the active session, for driver-side helpers called
+    * without one (a bare `new Configuration()` when there is none).
+    */
+  def active(): Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(session).getOrElse(new Configuration())
+
   /** Broadcast form for use inside `mapPartitions`/`flatMap` closures. */
   def broadcastSession(spark: SparkSession): Broadcast[SerializableHadoopConf] =
     spark.sparkContext.broadcast(new SerializableHadoopConf(session(spark)))

@@ -2,79 +2,52 @@ package graft.util
 
 import org.apache.spark.sql.Dataset
 
+import graft.plans.Placement
+
 /** Stream a `Dataset[String]` of commit lines to the driver with BOTH
   * bounds that matter:
   *
-  * - **memory**: at most ~`linesPerJob` lines buffered on the driver at
-  *   once (same guarantee the per-partition `toLocalIterator` gave, but
-  *   expressed in lines instead of "whatever one partition holds");
-  * - **scheduler round-trips**: a small commit streams in ONE job (the
-  *   probe job below both materializes the persisted pin and ships the
-  *   lines); larger commits fall back to GROUPS sized by the probe's
-  *   per-partition counts. `toLocalIterator` costs a full job per
-  *   partition — a single-file sync was spending 32 of its 33 Spark jobs
-  *   streaming a handful of commit lines through an empty 32-partition
-  *   dataset, and that constant overhead dominated every sync-shaped
-  *   bench query.
+  * - **memory**: at most ~[[Placement.MaxRows]] lines buffered on the
+  *   driver at once;
+  * - **scheduler round-trips**: a small commit streams in the ONE job of
+  *   [[Placement.probe]], which also pins the lines; larger commits fall
+  *   back to GROUPS of partitions sized by the probe's per-partition
+  *   counts, read from the pinned blocks (never the lineage).
+  *   `toLocalIterator` costs a full job per partition.
   *
-  * A 10^6-file commit still streams in ~16 bounded jobs of ≤65536 lines
-  * each; the driver never holds the whole action log.
+  * A 10^6-file commit still streams in ~16 bounded jobs; the driver never
+  * holds the whole action log.
   */
 object StreamedLines {
 
-  def iterate(ds: Dataset[String], linesPerJob: Long = 65536L)
-      : Iterator[String] = {
-    // pin the lines executor-side so the fetches never re-run the
-    // upstream lineage (footer scans, log replay) — but pin LAZILY
-    // (block-manager persist, materialized by the probe job itself)
-    // instead of the former eager localCheckpoint, whose dedicated
-    // materialization job was pure overhead on every commit. Blocks are
-    // reclaimed by the ContextCleaner when the RDD is GC'd, same as a
-    // local checkpoint's.
-    val rdd = ds.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = rdd.getNumPartitions
-    if (n == 0) return Iterator.empty
-    val sc = rdd.sparkContext
-    // fused probe: each partition ships up to `linesPerJob / n` lines AND
-    // its total count in the one materializing job — a small commit (the
-    // overwhelmingly common case: a handful of add/remove lines spread
-    // over an n-partition dataset) streams entirely out of this one job;
-    // the former pin + count + fetch trio collapses to it. The driver
-    // buffer stays ≤ linesPerJob lines; only commits past the cap pay
-    // the grouped refetch below (reading the persisted blocks, never
-    // the lineage).
-    val perPart = math.max(1L, linesPerJob / n)
-    val probe: Array[(Array[String], Long)] = sc.runJob(rdd,
-      (it: Iterator[String]) => {
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        var c = 0L
-        while (it.hasNext) {
-          val l = it.next(); c += 1
-          if (c <= perPart) buf += l
+  def iterate(ds: Dataset[String]): Iterator[String] = {
+    val probe = Placement.probe(ds, (_: String) => 0L)
+    probe.rows match {
+      case Some(rows) => rows.iterator
+      case None =>
+        val rdd = probe.pinned
+        val counts = probe.counts
+        // greedy in-order grouping: each group's lines stay under the
+        // budget (a single partition over budget forms its own group)
+        val groups = Seq.newBuilder[Seq[Int]]
+        var cur = Seq.newBuilder[Int]
+        var curLines = 0L
+        var curEmpty = true
+        for (p <- counts.indices) {
+          if (!curEmpty && curLines + counts(p) > Placement.MaxRows) {
+            groups += cur.result(); cur = Seq.newBuilder[Int]
+            curLines = 0L; curEmpty = true
+          }
+          if (counts(p) > 0) {
+            cur += p; curLines += counts(p); curEmpty = false
+          }
         }
-        (buf.toArray, c)
-      })
-    if (probe.forall { case (taken, c) => c <= taken.length })
-      return probe.iterator.flatMap(_._1.iterator)
-    val counts: Array[Long] = probe.map(_._2)
-    // greedy in-order grouping: each group's lines stay under the budget
-    // (a single partition over budget forms its own group)
-    val groups = Seq.newBuilder[Seq[Int]]
-    var cur = Seq.newBuilder[Int]
-    var curLines = 0L
-    var curEmpty = true
-    for (p <- 0 until n) {
-      if (!curEmpty && curLines + counts(p) > linesPerJob) {
-        groups += cur.result(); cur = Seq.newBuilder[Int]
-        curLines = 0L; curEmpty = true
-      }
-      if (counts(p) > 0) { cur += p; curLines += counts(p); curEmpty = false }
-    }
-    if (!curEmpty) groups += cur.result()
-    groups.result().iterator.flatMap { ids =>
-      sc.runJob(rdd, (it: Iterator[String]) => it.toArray, ids)
-        .iterator.flatMap(_.iterator)
+        if (!curEmpty) groups += cur.result()
+        groups.result().iterator.flatMap { ids =>
+          rdd.sparkContext.runJob(rdd,
+            (it: Iterator[String]) => it.toArray, ids)
+            .iterator.flatMap(_.iterator)
+        } ++ { rdd.unpersist(blocking = false); Iterator.empty }
     }
   }
 }

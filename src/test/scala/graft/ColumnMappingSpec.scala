@@ -220,7 +220,7 @@ class ColumnMappingSpec extends SparkSuite {
     val dir = new java.io.File(
       "src/test/resources/golden/delta_mapped_people").getAbsolutePath
     val src = new DeltaConversionSource(spark, dir, "people")
-    val added = src.changeForCommit("2").diff.added.collect()
+    val added = placedRows(src.changeForCommit("2").diff.added)
     val listed = src.snapshotAt(2L).files.collect().map(f => f.path -> f).toMap
     assert(added.length == 1)
     added.foreach(f => assert(listed.get(f.path).contains(f), f.toString))

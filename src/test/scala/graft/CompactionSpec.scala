@@ -77,7 +77,7 @@ class CompactionSpec extends SparkSuite {
     import spark.implicits._
     val target = tmpDir("ice_big_rm")
     val n = 120000L
-    val nRemoved = 105000L         // > BigRemovesThreshold (100k)
+    val nRemoved = 105000L         // > Placement.MaxRows (65 536)
     val schema = spark.read.parquet(sf("sf0.001/region.parquet")).schema
     def entry(i: Long) = FileEntry(s"/data/p=${i % 100}/f$i.parquet",
       1000L + i, 100L, "parquet",

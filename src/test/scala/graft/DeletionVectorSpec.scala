@@ -33,8 +33,8 @@ class DeletionVectorSpec extends SparkSuite {
 
     val src = new DeltaConversionSource(spark, table, "dv")
     val change = src.changeForCommit("1")
-    val added = change.diff.added.collect()
-    val removed = change.diff.removed.collect().map(_.path)
+    val added = placedRows(change.diff.added)
+    val removed = placedRows(change.diff.removed).map(_.path)
     // a.parquet DV-rewrite surfaces on BOTH sides (add carries the DV —
     // a diff that hid it would let targets advance past the delete);
     // b.parquet: real removal

@@ -125,6 +125,23 @@ class DeltaRowTrackingSpec extends SparkSuite {
       "OPTIMIZE must preserve every row's id AND commit version")
   }
 
+  test("stream sink batches on a rowTracking table draw fresh ids") {
+    val dir = mkTable("rt_sink")
+    DeltaRowTracking.enable(spark, dir)
+    assert(DeltaStreamSink.appendBatch(spark, dir,
+      Seq((200L, "s0"), (201L, "s1")).toDF("k", "v"), "app", 0L))
+    assert(DeltaStreamSink.appendBatch(spark, dir,
+      Seq((202L, "s2")).toDF("k", "v"), "app", 1L))
+    val l = lineage(dir)
+    assert(l.size == 43)
+    assert(l.values.map(_._1).toSeq.distinct.size == 43, "ids must be unique")
+    assert(DeltaRowTracking.highWaterMark(
+      DeltaSnapshot.state(spark, dir, versionsOf(dir))) == 42L)
+    // a replayed batch is still skipped
+    assert(!DeltaStreamSink.appendBatch(spark, dir,
+      Seq((202L, "s2")).toDF("k", "v"), "app", 1L))
+  }
+
   test("ids, versions and the high-water mark survive checkpoints") {
     val dir = mkTable("rt_ckpt", n = 12)
     DeltaRowTracking.enable(spark, dir)

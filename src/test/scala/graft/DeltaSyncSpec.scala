@@ -43,7 +43,8 @@ class DeltaSyncSpec extends SparkSuite {
     assert(v0Files == v1Files)
     // second commit exists but adds/removes nothing
     val change = src2.changeForCommit("1")
-    assert(change.diff.added.count() == 0 && change.diff.removed.count() == 0)
+    assert(placedRows(change.diff.added).isEmpty &&
+      placedRows(change.diff.removed).isEmpty)
   }
 
   test("footer stats survive the delta stats JSON round trip") {

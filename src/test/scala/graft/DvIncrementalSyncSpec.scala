@@ -38,11 +38,11 @@ class DvIncrementalSyncSpec extends SparkSuite {
     // the DV commit's diff names the rewritten file on BOTH sides (same
     // path: the add carries the DV, the remove retires the DV-less entry)
     val change = dsrc.changeForCommit("1")
-    val addPaths = change.diff.added.collect().map(_.path).toSeq.sorted
-    val removePaths = change.diff.removed.collect().map(_.path).toSeq.sorted
+    val addPaths = placedRows(change.diff.added).map(_.path).toSeq.sorted
+    val removePaths = placedRows(change.diff.removed).map(_.path).toSeq.sorted
     assert(addPaths.nonEmpty && addPaths == removePaths,
       s"adds=$addPaths removes=$removePaths")
-    assert(change.diff.added.collect().forall(_.deletionVector.isDefined))
+    assert(placedRows(change.diff.added).forall(_.deletionVector.isDefined))
 
     // incremental sync must NOT advance the target past the DV commit
     // while its rows still include the deleted ones: until position-delete

@@ -134,18 +134,18 @@ class HudiMetadataTableSpec extends SparkSuite {
     val (p0, f0) = HudiMetadataTable.readFiles(dir)
     assert(p0.isEmpty && f0.isEmpty)
 
-    HudiMetadataTable.appendCommitSmall(dir, "20260101000000000",
-      adds = Seq(("level=INFO", "a.parquet", 100L),
-        ("level=WARN", "b.parquet", 200L)))
+    HudiMetadataTable.maintain(spark, dir, "t1", "20260101000000000",
+      Left(Vector(("level=INFO", "a.parquet", 100L, false),
+        ("level=WARN", "b.parquet", 200L, false))))
     val (p1, f1) = HudiMetadataTable.readFiles(dir)
     assert(p1 == Set("level=INFO", "level=WARN"))
     assert(f1("level=INFO") == Map("a.parquet" -> 100L))
     assert(f1("level=WARN") == Map("b.parquet" -> 200L))
 
     // second commit: new file in an existing partition + a tombstone
-    HudiMetadataTable.appendCommitSmall(dir, "20260101000000001",
-      adds = Seq(("level=INFO", "c.parquet", 300L)),
-      deletes = Seq(("level=WARN", "b.parquet")))
+    HudiMetadataTable.maintain(spark, dir, "t1", "20260101000000001",
+      Left(Vector(("level=INFO", "c.parquet", 300L, false),
+        ("level=WARN", "b.parquet", 0L, true))))
     val (p2, f2) = HudiMetadataTable.readFiles(dir)
     assert(p2 == Set("level=INFO", "level=WARN"))
     assert(f2("level=INFO") == Map("a.parquet" -> 100L,
@@ -165,8 +165,8 @@ class HudiMetadataTableSpec extends SparkSuite {
     HudiMetadataTable.bootstrap(dir, "tc")
     val n = HudiMetadataTable.CompactLogThreshold + 2
     (1 to n).foreach { i =>
-      HudiMetadataTable.appendCommitSmall(dir, f"2026010100000$i%04d",
-        adds = Seq((s"day=$i", s"f$i.parquet", i.toLong)))
+      HudiMetadataTable.maintain(spark, dir, "tc", f"2026010100000$i%04d",
+        Left(Vector((s"day=$i", s"f$i.parquet", i.toLong, false))))
     }
     val filesDir = Paths.get(HudiMetadataTable.metadataPath(dir), "files")
     val names = filesDir.toFile.list().toSeq

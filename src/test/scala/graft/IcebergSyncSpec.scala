@@ -252,6 +252,44 @@ class IcebergSyncSpec extends SparkSuite {
     assert(after.length == 1, after.map(_.path).mkString(","))
   }
 
+  test("ADDED manifests written in tasks carry partition summaries") {
+    import spark.implicits._
+    // 100 001 adds: past the driver's row budget, so the ADDED manifest
+    // is written in tasks
+    val target = tmpDir("ice_task_summaries")
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType)))
+    val spec = Seq(PartitionFieldSpec("p", Transform.Value))
+    val tgt = new IcebergConversionTarget(spark, target)
+    tgt.beginSync(TableDescriptor("t", TableFormats.Iceberg, target, schema,
+      spec, Layout.HivePartitioned, 0L))
+    tgt.syncMetadata(graft.spi.SyncMetadata("1", Nil, TableFormats.Parquet,
+      target))
+    tgt.syncSchema(schema)
+    tgt.syncPartitionSpec(spec)
+    tgt.syncFilesForSnapshot(spark.range(100001L).map(i =>
+      FileEntry(s"/data/p=${i % 3}/f$i.parquet", 1000L, 10L, "parquet",
+        Seq(PartitionMember("p", (i % 3).toString)), Nil, 1000L)))
+    tgt.completeSync()
+    val m = IcebergMetadata.read(target,
+      IcebergMetadata.currentVersion(target).get)
+    val recs =
+      IcebergManifests.dataManifests(m.currentSnapshot.get.manifestList)
+    assert(recs.nonEmpty)
+    val bounds = recs.map { r =>
+      val ps = r.get("partitions")
+      assert(ps != null, s"no partition summary on ${r.get("manifest_path")}")
+      val f = ps.asInstanceOf[java.util.List[_]].get(0)
+        .asInstanceOf[org.apache.avro.generic.GenericRecord]
+      def text(k: String) = new String(f.get(k).asInstanceOf[
+        java.nio.ByteBuffer].array(), "UTF-8")
+      (text("lower_bound"), text("upper_bound"))
+    }
+    assert(bounds.map(_._1).min == "0" && bounds.map(_._2).max == "2",
+      bounds.toString)
+  }
+
   test("field ids stay stable across repeated syncs") {
     val target = tmpDir("ice_ids")
     def sync() = fullSync(new ParquetDirectorySource(spark,

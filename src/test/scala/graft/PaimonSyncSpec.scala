@@ -52,7 +52,8 @@ class PaimonSyncSpec extends SparkSuite {
     assert(paimonSrc.currentSnapshot().files.count() == 2)
     // per-snapshot diff readable back
     val change = paimonSrc.changeForCommit("2")
-    assert(change.diff.added.count() == 1 && change.diff.removed.count() == 0)
+    assert(placedRows(change.diff.added).size == 1 &&
+      placedRows(change.diff.removed).isEmpty)
     assert(graft.sources.CatalogConversionSource.detectFormat(target) == "PAIMON")
   }
 

@@ -78,7 +78,7 @@ class ParquetSourceSpec extends SparkSuite {
     val a = src.currentSnapshot().files
     val b = src.currentSnapshot().files
     val d = FilesDelta.between(a, b)
-    assert(d.added.count() == 0 && d.removed.count() == 0)
+    assert(placedRows(d.added).isEmpty && placedRows(d.removed).isEmpty)
   }
 
   test("orc base files: listing, file-tail stats, scan, delta refusal") {

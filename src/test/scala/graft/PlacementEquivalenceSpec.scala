@@ -3,21 +3,26 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.types._
 
 import graft.formats.delta.{DeltaConversionSource, DeltaLog, DeltaSnapshot}
-import graft.formats.hudi.{HudiConversionSource, HudiConversionTarget, HudiMetadataIndex, HudiTimeline}
-import graft.formats.iceberg.{IcebergManifests, IcebergMetadata}
+import graft.formats.hudi.{HudiConversionSource, HudiConversionTarget, HudiMetadataIndex, HudiMetadataTable, HudiTimeline}
+import graft.formats.iceberg.{IcebergConversionSource, IcebergConversionTarget, IcebergManifests, IcebergMetadata}
 import graft.formats.paimon.{PaimonConversionSource, PaimonFormat}
 import graft.model._
 import graft.plans.Placement
 import graft.plans.Placement.Placed
 import graft.sources.ParquetDirectorySource
+import graft.spi.ConversionTarget
 import graft.sync.TableFormatSync
 
 /** Every format's listing decode gives the same `FileEntry`s, field for
   * field, whether it runs on the driver or in tasks: the golden fixtures
   * plus generated tables that stress each format's per-path winner rule.
+  * Every target's commit writes give the same table from driver rows and
+  * from tasks.
   */
 class PlacementEquivalenceSpec extends SparkSuite {
 
@@ -224,5 +229,159 @@ class PlacementEquivalenceSpec extends SparkSuite {
     val live = paimonListings(dir)
     assert(live.map(_.path) ==
       ((0 until 12).toSet -- Set(0, 3, 7)).toSeq.map(entry(_).path).sorted)
+  }
+
+  // ---- commit writes ----
+
+  private val commitSchema = StructType(Seq(StructField("id", LongType),
+    StructField("p", StringType)))
+  private val commitSpec = Seq(PartitionFieldSpec("p", Transform.Value))
+
+  /** File `i` of partition `p` under `dir`, Hudi-named so its file id
+    * comes from the name.
+    */
+  private def commitEntry(dir: String, i: Int, p: String) = FileEntry(
+    s"$dir/p=$p/fg-${i}_0-1-0_20260101000000000.parquet", 100L + i,
+    10L + i, "parquet", Seq(PartitionMember("p", p)),
+    Seq(FileColumnStat("id", Some("1"), Some(s"${10 + i}"), 0L, 10L + i,
+      0L)), 1000L + i)
+
+  /** A three-file base commit, then one diff (three adds over two
+    * partitions, one remove) placed at `at`: driver rows, or a
+    * two-partition Dataset in the same row order whose target keeps it
+    * in tasks.
+    */
+  private def commitBaseAndDiff(dir: String, target: ConversionTarget,
+      at: Placement): Unit = {
+    import spark.implicits._
+    def side(rows: Seq[FileEntry]): Placed[FileEntry] = at match {
+      case Placement.Driver => Left(rows.toIndexedSeq)
+      case Placement.Tasks =>
+        Right(spark.createDataset(spark.sparkContext.parallelize(rows, 2)))
+    }
+    def commit(instant: String, diff: FilesDelta): Unit = {
+      target.beginSync(TableDescriptor("t", TableFormats.Parquet, dir,
+        commitSchema, commitSpec, Layout.HivePartitioned, 0L))
+      target.syncMetadata(graft.spi.SyncMetadata(instant, Nil,
+        TableFormats.Parquet, dir))
+      target.syncSchema(commitSchema)
+      target.syncPartitionSpec(commitSpec)
+      target.syncFilesForDiff(diff)
+      target.completeSync()
+    }
+    val base =
+      Seq(1, 2, 3).map(i => commitEntry(dir, i, if (i < 3) "a" else "b"))
+    commit("1", FilesDelta(Left(base.toIndexedSeq), Left(Vector.empty)))
+    commit("2", FilesDelta(
+      side(Seq(commitEntry(dir, 6, "b"), commitEntry(dir, 4, "a"),
+        commitEntry(dir, 5, "b"))),
+      side(Seq(base(1)))))
+  }
+
+  /** Commits under both placements into fresh tables; returns both dirs
+    * after checking the read-back listings agree on every field.
+    */
+  private def sameCommit(what: String, target: (String, Placement) =>
+      ConversionTarget, read: String => Seq[FileEntry]): (String, String) = {
+    val Seq(d, t) = Both.map { at =>
+      val dir = tmpDir(s"commit_${what}_$at")
+      commitBaseAndDiff(dir, target(dir, at), at)
+      dir
+    }
+    def listing(dir: String) = read(dir)
+      .map(e => e.copy(path = e.path.stripPrefix(dir))).sortBy(_.path)
+    val (ld, lt) = (listing(d), listing(t))
+    assert(ld.map(_.path) == Seq(1, 3, 4, 5, 6).map(i => commitEntry("", i,
+      if (i == 1 || i == 4) "a" else "b").path).sorted, what)
+    assert(ld == lt, s"$what: driver $ld != tasks $lt")
+    (d, t)
+  }
+
+  test("delta commits the same lines from driver rows and from tasks") {
+    val (d, t) = sameCommit("delta", (dir, _) =>
+      new graft.formats.delta.DeltaConversionTarget(spark, dir),
+      dir => new DeltaConversionSource(spark, dir, "t").currentSnapshot()
+        .files.collect().toSeq)
+    // add lines verbatim and in order; removes by path (their
+    // deletionTimestamp is the commit's clock)
+    def actions(dir: String) = Files.readAllLines(
+        Paths.get(DeltaLog.versionFile(dir, 1L))).asScala.toSeq
+      .filter(l => l.startsWith("{\"add\"") || l.startsWith("{\"remove\""))
+      .map(l => if (l.startsWith("{\"add\"")) l
+        else l.substring(0, l.indexOf("\"deletionTimestamp\"")))
+    assert(actions(d).size == 4 && actions(d) == actions(t))
+  }
+
+  test("hudi commits the same stat lines, index and metadata table from " +
+      "driver rows and from tasks") {
+    val (d, t) = sameCommit("hudi", (dir, at) => {
+        val tgt = new HudiConversionTarget(spark, dir)
+        tgt.at = Some(at)
+        tgt
+      },
+      // the entries' lastModifiedMillis is the commit instant, a clock
+      dir => new HudiConversionSource(spark, dir, "t").currentSnapshot()
+        .files.collect().toSeq.map(_.copy(lastModifiedMillis = 0L)))
+    def commit(dir: String) = {
+      val c = HudiTimeline.readCommit(dir, HudiTimeline.listInstants(dir).last)
+      (c.action, c.partitionToWriteStats.toSeq.sortBy(_._1).map {
+        case (p, ss) => p -> ss.map(s => (s.fileId, s.path, s.numWrites,
+          s.fileSizeInBytes))
+      }, c.partitionToReplaceFileIds.toSeq.sortBy(_._1))
+    }
+    assert(commit(d)._1 == "replacecommit" && commit(d) == commit(t))
+    assert(HudiMetadataTable.readFiles(d) == HudiMetadataTable.readFiles(t))
+    def index(dir: String) = HudiMetadataIndex.read(spark, dir).collect()
+      .map(e => e.copy(path = e.path.stripPrefix(dir))).sortBy(_.path).toSeq
+    assert(index(d).size == 6 && index(d) == index(t))
+  }
+
+  test("iceberg commits the same manifest-list counts and partition " +
+      "summaries from driver rows and from tasks") {
+    val (d, t) = sameCommit("iceberg", (dir, at) => {
+        val tgt = new IcebergConversionTarget(spark, dir)
+        tgt.at = Some(at)
+        tgt
+      },
+      dir => new IcebergConversionSource(spark, dir, "t").currentSnapshot()
+        .files.collect().toSeq)
+    def list(dir: String) = {
+      val m = IcebergMetadata.read(dir, IcebergMetadata.currentVersion(dir).get)
+      IcebergManifests.dataManifests(m.currentSnapshot.get.manifestList)
+    }
+    def long(r: org.apache.avro.generic.GenericRecord, k: String) =
+      r.get(k).toString.toLong
+    def totals(dir: String) = {
+      val rs = list(dir)
+      (rs.map(r => long(r, "added_data_files_count") +
+        long(r, "existing_data_files_count")).sum,
+        rs.map(r => long(r, "added_rows_count") +
+          long(r, "existing_rows_count")).sum)
+    }
+    assert(totals(d) == ((5L, 11L + 13 + 14 + 15 + 16)))
+    assert(totals(d) == totals(t))
+    def summaries(dir: String) = list(dir)
+      .filter(r => long(r, "added_data_files_count") > 0)
+      .map(r => Option(r.get("partitions")).map(_.toString))
+    assert(summaries(d).size == 1 && summaries(d).head.isDefined)
+    assert(summaries(d) == summaries(t))
+  }
+
+  test("paimon commits the same snapshot from driver rows and from tasks") {
+    val (d, t) = sameCommit("paimon", (dir, at) => {
+        val tgt = new graft.formats.paimon.PaimonConversionTarget(spark, dir)
+        tgt.at = Some(at)
+        tgt
+      },
+      dir => new PaimonConversionSource(spark, dir, "t").currentSnapshot()
+        .files.collect().toSeq)
+    def counts(dir: String) = {
+      val s = PaimonFormat.readSnapshot(dir,
+        PaimonFormat.listSnapshotIds(dir).last)
+      (s.commitKind, s.totalRecordCount, s.deltaRecordCount)
+    }
+    assert(counts(d) == (("COMPACT", Some(11L + 13 + 14 + 15 + 16),
+      Some(14L + 15 + 16 - 12))))
+    assert(counts(d) == counts(t))
   }
 }

@@ -11,6 +11,9 @@ trait SparkSuite extends AnyFunSuite {
   def sf(dir: String): String = s"/root/testdata/$dir"
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A placed side's entries, wherever they were decoded. */
+  def placedRows(p: graft.plans.Placement.Placed[graft.model.FileEntry])
+      : Seq[graft.model.FileEntry] = p.fold(identity, _.collect().toSeq)
 }
 
 object SparkSuite {
