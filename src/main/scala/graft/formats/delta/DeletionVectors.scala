@@ -150,13 +150,42 @@ object DeletionVectors {
   }
 
   /** Deleted 64-bit row positions from a portable RoaringBitmapArray. */
-  def deserializeBitmap(payload: Array[Byte]): Array[Long] = {
+  def deserializeBitmap(payload: Array[Byte]): Array[Long] =
+    readMask(payload).positions
+
+  /** A decoded deletion vector kept as its 32-bit roaring bitmaps, keyed
+    * (ascending) by the positions' high word: [[contains]] tests one row
+    * position without expanding the vector into a position array.
+    */
+  final class RowMask(keys: Array[Int], maps: Array[RoaringBitmap]) {
+    def contains(pos: Long): Boolean = {
+      val i = java.util.Arrays.binarySearch(keys, (pos >>> 32).toInt)
+      i >= 0 && maps(i).contains(pos.toInt)
+    }
+
+    def cardinality: Long = maps.iterator.map(_.getLongCardinality).sum
+
+    def positions: Array[Long] = {
+      val out = Array.newBuilder[Long]
+      keys.indices.foreach { i =>
+        val hi = keys(i).toLong << 32
+        maps(i).forEach(new org.roaringbitmap.IntConsumer {
+          override def accept(v: Int): Unit = out += (hi | (v & 0xffffffffL))
+        })
+      }
+      out.result()
+    }
+  }
+
+  /** Parse a portable RoaringBitmapArray into a [[RowMask]]. */
+  def readMask(payload: Array[Byte]): RowMask = {
     val buf = ByteBuffer.wrap(payload).order(ByteOrder.LITTLE_ENDIAN)
     val magic = buf.getInt
     require(magic == PortableMagic,
       s"bad deletion-vector magic $magic (want $PortableMagic)")
     val n = buf.getLong
-    val out = Array.newBuilder[Long]
+    val keys = Array.newBuilder[Int]
+    val maps = Array.newBuilder[RoaringBitmap]
     var i = 0L
     var lastKey = -1L
     while (i < n) {
@@ -178,13 +207,11 @@ object DeletionVectors {
       val rb = new RoaringBitmap()
       rb.deserialize(slice)
       buf.position(buf.position() + rb.serializedSizeInBytes())
-      val hi = key.toLong << 32
-      rb.forEach(new org.roaringbitmap.IntConsumer {
-        override def accept(v: Int): Unit = out += (hi | (v & 0xffffffffL))
-      })
+      keys += key
+      maps += rb
       i += 1
     }
-    out.result()
+    new RowMask(keys.result(), maps.result())
   }
 
   // ---------------------------------------------------------- file I/O
@@ -205,7 +232,12 @@ object DeletionVectors {
 
   /** Read + verify one descriptor's deleted positions. */
   def deletedPositions(conf: Configuration, tablePath: String,
-      d: DvDescriptor): Array[Long] = {
+      d: DvDescriptor): Array[Long] =
+    rowMask(conf, tablePath, d).positions
+
+  /** Read + verify one descriptor's vector as a [[RowMask]]. */
+  def rowMask(conf: Configuration, tablePath: String,
+      d: DvDescriptor): RowMask = {
     val payload = d.storageType match {
       case "i" => z85Decode(d.pathOrInlineDv, d.sizeInBytes)
       case "u" | "p" =>
@@ -229,11 +261,32 @@ object DeletionVectors {
       case other =>
         throw new IllegalArgumentException(s"unknown DV storageType '$other'")
     }
-    val positions = deserializeBitmap(payload)
-    require(d.cardinality < 0 || positions.length.toLong == d.cardinality,
+    val mask = readMask(payload)
+    require(d.cardinality < 0 || mask.cardinality == d.cardinality,
       s"DV cardinality mismatch: descriptor ${d.cardinality}, " +
-        s"bitmap ${positions.length}")
-    positions
+        s"bitmap ${mask.cardinality}")
+    mask
+  }
+
+  /** The descriptor as a scan carries it beside its data file (the
+    * `graft_dv` file-constant field of [[DeltaRead]]'s scan): a
+    * table-relative `u` path is resolved to the absolute `p` form, so an
+    * executor decodes it without the table root. Layout
+    * `storageType|offset|sizeInBytes|cardinality|pathOrInlineDv`; only
+    * the last field, split off last, may itself hold a `|`.
+    */
+  def toScanField(tablePath: String, d: DvDescriptor): String = {
+    val r =
+      if (d.storageType != "u") d
+      else d.copy(storageType = "p",
+        pathOrInlineDv = absolutePath(tablePath, d))
+    s"${r.storageType}|${r.offset}|${r.sizeInBytes}|${r.cardinality}|" +
+      r.pathOrInlineDv
+  }
+
+  def fromScanField(s: String): DvDescriptor = {
+    val f = s.split("\\|", 5)
+    DvDescriptor(f(0), f(4), f(1).toInt, f(2).toInt, f(3).toLong)
   }
 
   /** Write one DV file holding `dvs.length` vectors; returns a descriptor

@@ -153,75 +153,56 @@ class DeltaConversionSource(spark: SparkSession, tablePath: String,
   * stays a Dataset, partition pruning and stat-based file skipping run
   * distributed, and the driver only ever holds the query's matching files —
   * never a million-path list in the plan.
+  *
+  * Deletion vectors are masked inside the scan (reference: DVs handled at
+  * the source, DeltaConversionSource.java:104-174). Each file's descriptor
+  * rides with it as the file-constant `_metadata.graft_dv`, and one filter
+  * `NOT graft_dv_contains(_metadata.graft_dv, _metadata.row_index)`
+  * ([[graft.plans.DvContains]]) drops its deleted positions: no join, no
+  * broadcast, no extra job, and nothing listing-sized shipped, whatever
+  * the DV count. Keyed scans key rows by the file-constant
+  * `_metadata.graft_path` (the listing's canonical path) and the
+  * file-global `_metadata.row_index`.
   */
 object DeltaRead {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions.col
 
-  /** Deletion-vector summary of a snapshot's live set: files with a DV,
-    * total deleted rows, and the estimated in-memory size of the anti-join
-    * build side (each deleted position carries its file's full path string
-    * plus a long). Runs on the shared persisted listing.
+  /** Deletion-vector summary of a snapshot's live set: files with a DV
+    * and total deleted rows. Runs on the shared persisted listing.
     */
-  final case class DvSummary(files: Long, rows: Long, joinKeyBytes: Long)
+  final case class DvSummary(files: Long, rows: Long)
 
   def liveDvSummary(snap: TableSnapshot): DvSummary = {
     val s = graft.plans.SnapshotFileIndex.summaryFor(snap)
-    DvSummary(s.dvFiles, s.dvRows, s.dvKeyBytes)
-  }
-
-  /** Broadcast the deleted-position set only while its estimated footprint
-    * stays modest; above that the anti-join shuffles both sides (still
-    * correct, never memory-bound). Gated on bytes, not row count: 4M
-    * positions under 100-byte paths is already a ~0.5 GB broadcast.
-    */
-  private val BroadcastDvBytes = 64L * 1024 * 1024
-
-  /** Mask deletion-vector'd positions out of a snapshot scan. The deleted
-    * set is produced executor-side (one task per DV'd file reads its
-    * bitmap) and anti-joined on (file, row_index) via the parquet reader's
-    * `_metadata` column — no driver-side materialization of positions.
-    */
-  private def applyDeletionVectors(spark: SparkSession, snap: TableSnapshot,
-      df: DataFrame, keepKeys: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    def withKeys(d: DataFrame): DataFrame = d
-      .withColumn("__scan_path",
-        graft.util.PathCols.scanPath(col("_metadata.file_path")))
-      .withColumn("__scan_pos", col("_metadata.row_index"))
-    val summary = liveDvSummary(snap)
-    if (summary.files == 0L) return if (keepKeys) withKeys(df) else df
-    val tablePath = snap.table.basePath
-    // executor tasks open DV files through the session's Hadoop settings
-    // (object-store credentials, endpoints) — never a default Configuration
-    val bconf = graft.util.HadoopConfs.broadcastSession(spark)
-    val deleted = graft.plans.SnapshotFileIndex.listingFor(snap)
-      .filter(col("deletionVector").isNotNull)
-      .flatMap { f =>
-        DeletionVectors.deletedPositions(bconf.value.value, tablePath,
-          f.deletionVector.get).map(pos => (f.path, pos))
-      }.toDF("__dv_path", "__dv_pos")
-    // `_metadata.file_path` is URI-encoded (with or without a scheme):
-    // scheme-strip AND %-decode so the key matches the listing side's
-    // PathUtils.canonical form (space / percent in partition dirs)
-    val keyed = withKeys(df)
-    val right =
-      if (summary.joinKeyBytes <= BroadcastDvBytes) broadcast(deleted)
-      else deleted
-    val masked = keyed.join(right,
-      keyed("__scan_path") === right("__dv_path") &&
-        keyed("__scan_pos") === right("__dv_pos"), "left_anti")
-    if (keepKeys) masked else masked.drop("__scan_path", "__scan_pos")
+    DvSummary(s.dvFiles, s.dvRows)
   }
 
   def toDataFrame(spark: SparkSession, snap: TableSnapshot): DataFrame =
-    toDataFrameImpl(spark, snap, keepKeys = false)
+    toDataFrameImpl(spark, snap, Nil)
 
   /** [[toDataFrame]] plus each live row's (file, position) key —
-    * `__scan_path` (canonical path) and `__scan_pos` (row index) — for
-    * row-level write operations ([[DeltaDeletes.deleteWhere]]).
+    * `__scan_path` (the listing's canonical path) and `__scan_pos` (its
+    * file-global row index) — for row-level operations (DML, change
+    * feeds, row tracking). `withDv` adds `__scan_dv`, the row's file's
+    * current deletion vector ([[DeletionVectors.toScanField]] form, null
+    * when none), which a DELETE folds into the file's new vector.
     */
-  def toKeyedDataFrame(spark: SparkSession, snap: TableSnapshot): DataFrame =
-    toDataFrameImpl(spark, snap, keepKeys = true)
+  def toKeyedDataFrame(spark: SparkSession, snap: TableSnapshot,
+      withDv: Boolean = false): DataFrame =
+    toDataFrameImpl(spark, snap,
+      Seq(ScanPath, ScanPos) ++ (if (withDv) Seq(ScanDv) else Nil))
+
+  private val ScanPath = "__scan_path"
+  private val ScanPos = "__scan_pos"
+  private val ScanDv = "__scan_dv"
+
+  /** A key column read from the scan's file constants and row index. */
+  private def keyCol(name: String): Column = name match {
+    case ScanPath => col("_metadata." + graft.plans.ListingFields.Path)
+    case ScanPos => col("_metadata.row_index")
+    case ScanDv => col("_metadata." + graft.plans.ListingFields.Dv)
+  }
 
   /** The scan's FileFormat, chosen by the LISTING's format labels: all
     * parquet → ParquetFileFormat, all orc → OrcFileFormat (reference
@@ -233,9 +214,11 @@ object DeltaRead {
       : org.apache.spark.sql.execution.datasources.FileFormat = {
     graft.plans.SnapshotFileIndex.summaryFor(snap).formats match {
       case Seq() | Seq("parquet") =>
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetFileFormat with graft.plans.ListingFields
       case Seq("orc") =>
         new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
+          with graft.plans.ListingFields
       case Seq("avro") => throw new UnsupportedOperationException(
         "avro data files are a row format with no in-core Spark " +
           "FileFormat — read them via the conversion source's " +
@@ -256,9 +239,10 @@ object DeltaRead {
     * format, the same trade Spark's own avro reader makes.
     */
   private def avroScan(spark: SparkSession, snap: TableSnapshot,
-      keepKeys: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.col
+      keys: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.lit
     import org.apache.spark.sql.types._
+    val keepKeys = keys.nonEmpty
     require(liveDvSummary(snap).files == 0L,
       "deletion vectors on an avro-file table are unsupported")
     val schema = snap.table.schema
@@ -289,22 +273,22 @@ object DeltaRead {
             StructField("__scan_pos", LongType))
         else Nil))
     // one select types the partition strings and restores schema order
+    // (no vector on an avro table: `__scan_dv` is null)
     spark.createDataFrame(rdd, rawSchema)
       .select(schema.fields.toSeq.map(f =>
         col(f.name).cast(f.dataType).as(f.name)) ++
-        (if (keepKeys) Seq(col("__scan_path"), col("__scan_pos"))
-         else Nil): _*)
+        keys.map(k => if (k == ScanDv) lit(null).cast(StringType).as(k)
+          else col(k)): _*)
   }
 
   private def toDataFrameImpl(spark: SparkSession, snap: TableSnapshot,
-      keepKeys: Boolean): DataFrame = {
+      keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-    import org.apache.spark.sql.functions.col
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val schema = snap.table.schema
     val partCols = snap.table.partitionFields.map(_.partitionColumnName).toSet
     if (listingFormats(snap) == Seq("avro"))
-      return avroScan(spark, snap, keepKeys)
+      return avroScan(spark, snap, keys)
     // column-mapped tables: the parquet files spell data columns by their
     // PHYSICAL names — scan under those, then rename back to logical.
     // Partition columns come from the metadata plane (already logical).
@@ -347,15 +331,22 @@ object DeltaRead {
     val relation = HadoopFsRelation(index, index.partitionSchema,
       index.dataSchema, None, scanFileFormat(scanSnap), Map.empty)(cs)
     val df = cs.baseRelationToDataFrame(relation)
-    val masked = applyDeletionVectors(spark, scanSnap, df, keepKeys)
+    val live =
+      if (liveDvSummary(scanSnap).files == 0L) df
+      else {
+        import org.apache.spark.sql.GraftShims.{column, expression}
+        df.filter(!column(graft.plans.DvContains(expression(keyCol(ScanDv)),
+          expression(keyCol(ScanPos)))(
+          graft.util.HadoopConfs.broadcastSession(spark))))
+      }
+    val masked = keys.foldLeft(live)((d, k) => d.withColumn(k, keyCol(k)))
     if (mapped)
       masked.select(schema.fields.toSeq.map { f =>
         if (partCols.contains(f.name)) col(f.name)
         // positional struct cast renames nested physical fields back to
         // their logical names at every level in one expression
         else col(DeltaColumnMapping.physicalName(f)).cast(f.dataType).as(f.name)
-      } ++ (if (keepKeys) Seq(col("__scan_path"), col("__scan_pos"))
-            else Nil): _*)
+      } ++ keys.map(col): _*)
     else if (renamed.isEmpty) masked
     else masked.select(schema.fields.toSeq.map { f =>
       renamedMap.get(f.name) match {
@@ -365,7 +356,6 @@ object DeltaRead {
             .as(f.name, f.metadata)
         case None => col(f.name)
       }
-    } ++ (if (keepKeys) Seq(col("__scan_path"), col("__scan_pos"))
-          else Nil): _*)
+    } ++ keys.map(col): _*)
   }
 }

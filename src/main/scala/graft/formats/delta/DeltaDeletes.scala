@@ -55,18 +55,17 @@ object DeltaDeletes {
     // the matched live rows drive BOTH the DV mask and the CDC
     // pre-images — persist them (O(deleted rows), spills past memory)
     // so the table is scanned once, not once per consumer
-    val matched = DeltaRead.toKeyedDataFrame(spark, snap).filter(predicate)
+    val matched = DeltaRead.toKeyedDataFrame(spark, snap, withDv = true)
+      .filter(predicate)
     val pinned = if (cdf) matched.persist() else matched
     try {
-      val hits = pinned.select(col("__scan_path"), col("__scan_pos"))
-        .as[(String, Long)]
-      planMask(spark, snap, hits) match {
+      planMask(spark, snap, hitsOf(pinned)) match {
         case None => 0L
         case Some(plan) =>
           val cdc =
             if (!cdf) Iterator.empty
             else writeCdcFiles(spark, snap, pinned
-              .drop("__scan_path", "__scan_pos")
+              .drop("__scan_path", "__scan_pos", "__scan_dv")
               .withColumn("_change_type", lit("delete")), "delete")
           // the predicate is this commit's READ footprint: on a conflict
           // retry, an intervening append whose rows may match it must
@@ -110,9 +109,7 @@ object DeltaDeletes {
     val matched = keyedScanWithIds(spark, snap, rt).filter(predicate)
       .persist()
     try {
-      val hits = matched.select(col("__scan_path"), col("__scan_pos"))
-        .as[(String, Long)]
-      planMask(spark, snap, hits) match {
+      planMask(spark, snap, hitsOf(matched)) match {
         case None => 0L
         case Some(plan) =>
           val rewritten = matched.select(schema.fieldNames.toSeq.map { f =>
@@ -188,9 +185,7 @@ object DeltaDeletes {
         .join(srcKeys, keyCols, "left_semi")
         .persist()
       try {
-        val hits = matched.select(col("__scan_path"), col("__scan_pos"))
-          .as[(String, Long)]
-        val plan = planMask(spark, snap, hits)
+        val plan = planMask(spark, snap, hitsOf(matched))
           .getOrElse(DeletePlan(snap, emptyMasked(spark), 0L))
         DeltaConstraints.enforce(srcProj, src.currentMeta(), "MERGE")
         // row tracking: a source row whose key matched a live target row
@@ -281,7 +276,7 @@ object DeltaDeletes {
   private[delta] def keyedScanWithIds(spark: SparkSession,
       snap: graft.model.TableSnapshot, rt: Option[RowTrackingCtx])
       : DataFrame = rt match {
-    case None => DeltaRead.toKeyedDataFrame(spark, snap)
+    case None => DeltaRead.toKeyedDataFrame(spark, snap, withDv = true)
     case Some(c) =>
       val scanSnap =
         if (!c.haveMaterialized) snap
@@ -293,7 +288,7 @@ object DeltaDeletes {
               org.apache.spark.sql.types.StructField(c.rcvCol,
                 org.apache.spark.sql.types.LongType, nullable = true)))
             .json))
-      val keyed = DeltaRead.toKeyedDataFrame(spark, scanSnap)
+      val keyed = DeltaRead.toKeyedDataFrame(spark, scanSnap, withDv = true)
       val info = DeltaRowTracking.liveRowInfo(spark, c.tablePath,
         c.versions)
       val nFiles = graft.plans.SnapshotFileIndex.listingFor(snap).count()
@@ -498,23 +493,29 @@ object DeltaDeletes {
     */
   private[graft] def planDelete(spark: SparkSession, tablePath: String,
       predicate: Column): Option[DeletePlan] = {
-    import spark.implicits._
     val src = new DeltaConversionSource(spark, tablePath,
       PathUtils.canonical(tablePath).stripSuffix("/").split('/').last)
     val snap = src.currentSnapshot()
-    // (file, position) of live rows matching the predicate — existing DV
-    // positions are already masked out by the keyed read
-    val hits = DeltaRead.toKeyedDataFrame(spark, snap)
-      .filter(predicate)
-      .select(col("__scan_path"), col("__scan_pos"))
-      .as[(String, Long)]
-    planMask(spark, snap, hits)
+    // existing DV positions are already masked out by the keyed read
+    planMask(spark, snap, hitsOf(
+      DeltaRead.toKeyedDataFrame(spark, snap, withDv = true)
+        .filter(predicate)))
   }
 
-  /** Union each hit file's prior DV with its new hit positions and write
-    * one DV file per affected data file (executor-side); None when `hits`
-    * is empty. The (FileEntry, descriptor) result is PINNED with an eager
-    * localCheckpoint AFTER the listing join: the DV-file writes are side
+  /** The (file, position, file's current DV) of each row of a keyed scan
+    * taken `withDv`.
+    */
+  private def hitsOf(keyed: DataFrame): Dataset[(String, Long, String)] = {
+    import keyed.sparkSession.implicits._
+    keyed.select(col("__scan_path"), col("__scan_pos"), col("__scan_dv"))
+      .as[(String, Long, String)]
+  }
+
+  /** Union each hit file's prior DV (the hit rows carry its descriptor)
+    * with its new hit positions and write one DV file per affected data
+    * file (executor-side); None when `hits` is empty. The (FileEntry,
+    * descriptor) result is PINNED with an eager localCheckpoint AFTER
+    * the listing join: the DV-file writes are side
     * effects of exactly one execution, and the count aggregate, the
     * emptiness probe and the commit-line stream all reuse the pinned
     * partitions instead of re-running the join — nothing proportional to
@@ -522,40 +523,25 @@ object DeltaDeletes {
     */
   private[graft] def planMask(spark: SparkSession,
       snap: graft.model.TableSnapshot,
-      hits: Dataset[(String, Long)]): Option[DeletePlan] = {
+      hits: Dataset[(String, Long, String)]): Option[DeletePlan] = {
     import spark.implicits._
     val tp = snap.table.basePath
     val bconf = HadoopConfs.broadcastSession(spark)
     val listing = graft.plans.SnapshotFileIndex.listingFor(snap)
 
-    // prior DV positions of the affected files (the new DV must hold the
-    // UNION — the new add replaces the old one wholesale). When the
-    // snapshot carries no DVs at all — every FIRST delete — the whole
-    // semi-join + decode pipeline is skipped (the summary already knows).
-    val prior: Dataset[(String, Long)] =
-      if (graft.plans.SnapshotFileIndex.summaryFor(snap).dvFiles == 0L)
-        spark.emptyDataset[(String, Long)]
-      else {
-        val affectedPaths =
-          hits.toDF("path", "pos").select("path").distinct()
-        listing
-          .join(affectedPaths.withColumnRenamed("path", "__ap"),
-            col("path") === col("__ap"), "left_semi")
-          .filter(col("deletionVector").isNotNull)
-          .as[FileEntry]
-          .flatMap(f => DeletionVectors.deletedPositions(bconf.value.value,
-            tp, f.deletionVector.get).map(p => (f.path, p)))
-      }
-
     // one bitmap per affected data file, ONE DV FILE per write task
     // (delta-spark's shape: descriptors share the file, differ by
     // offset) — a delete touching 10^6 files writes ~32 DV files. The
     // spec's random-prefix directory spreads object-store key prefixes.
-    val newDvs: Dataset[(String, DvDescriptor)] = hits.union(prior)
-      .toDF("path", "pos")
+    // The new DV holds the UNION of the new hits and the file's prior DV
+    // (the new add replaces the old one wholesale): every hit row of a
+    // file carries that prior descriptor, decoded here in the write task
+    // — the table is scanned once.
+    val newDvs: Dataset[(String, DvDescriptor)] = hits
+      .toDF("path", "pos", "dv")
       .repartition(col("path"))
       .sortWithinPartitions("path", "pos")
-      .as[(String, Long)]
+      .as[(String, Long, String)]
       .mapPartitions { it =>
         val buf = it.buffered
         if (!buf.hasNext) Iterator.empty
@@ -564,10 +550,13 @@ object DeltaDeletes {
           val groups = new Iterator[(String, Array[Long])] {
             def hasNext: Boolean = buf.hasNext
             def next(): (String, Array[Long]) = {
-              val path = buf.head._1
+              val (path, _, prior) = buf.head
               val arr = Array.newBuilder[Long]
               while (buf.hasNext && buf.head._1 == path)
                 arr += buf.next()._2
+              if (prior != null)
+                arr ++= DeletionVectors.deletedPositions(bconf.value.value,
+                  tp, DeletionVectors.fromScanField(prior))
               (path, arr.result())
             }
           }

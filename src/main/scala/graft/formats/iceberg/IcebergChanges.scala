@@ -143,8 +143,7 @@ object IcebergChanges {
     def keyedRead(at: Long, files: Dataset[FileEntry]): DataFrame = {
       val sub = TableSnapshot(src.currentTable(), files,
         s"$at-cdf-${java.util.UUID.randomUUID()}")
-      val keyed = graft.formats.delta.DeltaRead.toKeyedDataFrame(spark, sub)
-      val out = IcebergDeletes.applyDeletes(spark, keyed, m, at, tablePath)
+      val out = IcebergDeletes.scan(spark, sub, m, at, tablePath, keyed = true)
       graft.plans.SnapshotFileIndex.invalidate(sub)
       out
     }

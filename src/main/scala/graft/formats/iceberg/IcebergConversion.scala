@@ -136,10 +136,10 @@ class IcebergConversionSource(spark: SparkSession, tablePath: String,
     meta.snapshotBySeq(commit.toLong).isDefined ||
       commit.toLong == 0 && meta.snapshots.nonEmpty
 
-  /** Delete-aware read: scans the data files, then masks position deletes
-    * (anti-join on (file, pos)) and equality deletes (null-safe anti-join
-    * on the equality columns, sequence-ordered) via
-    * [[IcebergDeletes.applyDeletes]].
+  /** Delete-aware read: scans the data files with deletion vectors
+    * masked in the scan, v2 position-delete files anti-joined on (file,
+    * pos) and equality deletes (null-safe anti-join on the equality
+    * columns, sequence-ordered) — [[IcebergDeletes.scan]].
     */
   def toDataFrame: DataFrame = toDataFrameAt(meta.headSequence)
 
@@ -153,8 +153,7 @@ class IcebergConversionSource(spark: SparkSession, tablePath: String,
       s"no snapshot at sequence $seq in $tablePath (expired?)")
     val snap = TableSnapshot(currentTable(),
       filesAtSeq(m, seq), seq.toString)
-    val base = graft.formats.delta.DeltaRead.toDataFrame(spark, snap)
-    IcebergDeletes.applyDeletes(spark, base, m, seq, tablePath)
+    IcebergDeletes.scan(spark, snap, m, seq, tablePath, keyed = false)
   }
 }
 
@@ -251,9 +250,9 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
     * the manifest list from data manifests only, which would silently
     * drop the delete files and resurrect their deleted rows.
     */
-  private def requireNoDeleteManifests(listPath: String): Unit =
-    if (IcebergManifests.readManifestListRecords(listPath)
-        .exists(IcebergManifests.contentOf(_) != 0))
+  private def requireNoDeleteManifests(
+      listRecords: Seq[org.apache.avro.generic.GenericRecord]): Unit =
+    if (listRecords.exists(IcebergManifests.contentOf(_) != 0))
       throw new DeletionVectorsUnsupported(
         s"Iceberg table at $tablePath has live row-level delete " +
           "manifests; a file-level metadata sync would drop them and " +
@@ -264,12 +263,13 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
     pending = currentMeta.flatMap(_.currentSnapshot) match {
       case None => FilesDelta(Right(files), Left(Vector.empty))
       case Some(s) =>
-        requireNoDeleteManifests(s.manifestList)
+        val records = IcebergManifests.readManifestListRecords(s.manifestList)
+        requireNoDeleteManifests(records)
         import spark.implicits._
         val m = currentMeta.get
         FilesDelta.between(files, Placement.dataset(spark,
           IcebergManifests.liveFiles(spark,
-            IcebergManifests.dataManifests(s.manifestList), m.schema)))
+            records.filter(IcebergManifests.contentOf(_) == 0), m.schema)))
     }
 
   override def syncFilesForDiff(diff: FilesDelta): Unit = pending = diff
@@ -351,8 +351,10 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
     val prevManifests: Seq[IcebergConversionTarget.PrevManifest] =
       prev.flatMap(_.currentSnapshot)
         .map { s =>
-          requireNoDeleteManifests(s.manifestList)
-          IcebergManifests.dataManifests(s.manifestList)
+          val records =
+            IcebergManifests.readManifestListRecords(s.manifestList)
+          requireNoDeleteManifests(records)
+          records.filter(IcebergManifests.contentOf(_) == 0)
             .map(IcebergConversionTarget.PrevManifest.of(_, seq))
         }
         .getOrElse(Nil)
@@ -427,10 +429,12 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
         .sortWithinPartitions(col("_1"), col("_2"))
       val summaries = survivors.mapPartitions { it =>
         val buf = it.buffered
-        val out = Seq.newBuilder[(String, Long, Int, Long, Int, Long)]
+        val out = Seq.newBuilder[(String, Long, Int, Long, Int, Long,
+          Seq[IcebergManifests.PartitionFieldSummary])]
         while (buf.hasNext) {
           val (sid, origSeq) = (buf.head._1, buf.head._2)
           val np = s"$md/m-${UUID.randomUUID()}.avro"
+          val bounds = new IcebergConversionTarget.PartitionBounds
           var n = 0
           var rows = 0L
           val run = new Iterator[org.apache.avro.generic.GenericRecord] {
@@ -439,20 +443,20 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
             def next(): org.apache.avro.generic.GenericRecord = {
               val (_, _, f, fr) = buf.next()
               n += 1; rows += f.recordCount
-              IcebergManifests.toEntry(f,
+              bounds.track(IcebergManifests.toEntry(f,
                 IcebergManifests.Status.Existing, snapId, sch,
                 firstRowId = fr,
-                specFields = sfb.getOrElse(sid, null))
+                specFields = sfb.getOrElse(sid, null)))
             }
           }
           val len = IcebergManifests.writeManifest(np, run, bconf.value.value)
-          out += ((np, len, n, rows, sid, origSeq))
+          out += ((np, len, n, rows, sid, origSeq, bounds.summaries))
         }
         out.result().iterator
       }.collect()
-      summaries.foreach { case (p, len, n, rows, sid, origSeq) =>
+      summaries.foreach { case (p, len, n, rows, sid, origSeq, parts) =>
         kept += IcebergManifests.ManifestSummary(p, len, origSeq,
-          0, n, 0, 0L, rows, specId = sid)
+          0, n, 0, 0L, rows, partitions = parts, specId = sid)
       }
     }
 
@@ -464,8 +468,7 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
     val adds = Placement.fetch(pending.added, at)(_.recordCount)
     val newRowsTotal = adds.weight
     val writer = IcebergConversionTarget.AddedManifest(mdir, snapshotId,
-      schema, partitionSpec.map(_.partitionColumnName), specFieldsNow,
-      defaultSpecId, isV3)
+      schema, specFieldsNow, defaultSpecId, isV3)
     kept ++= (adds.rows match {
       case Left(rows) => writer.write(rows.iterator, baseRowId,
         graft.util.HadoopConfs.session(spark)).toSeq
@@ -591,7 +594,8 @@ object IcebergConversionTarget {
     * writers may not).
     */
   private[iceberg] final case class PrevManifest(path: String, specId: Int,
-      seq: Long, length: Option[Long], live: Option[(Int, Long)]) {
+      seq: Long, length: Option[Long], live: Option[(Int, Long)],
+      partitions: Seq[IcebergManifests.PartitionFieldSummary]) {
     /** Whether carrying it forward must read its entries. */
     def mustOpen(removed: Set[String]): Boolean =
       removed.nonEmpty || live.isEmpty || length.isEmpty
@@ -612,18 +616,82 @@ object IcebergConversionTarget {
           ef <- long("existing_data_files_count")
           ar <- long("added_rows_count")
           er <- long("existing_rows_count")
-        } yield ((af + ef).toInt, ar + er))
+        } yield ((af + ef).toInt, ar + er),
+        IcebergManifests.partitionSummaries(r))
+    }
+  }
+
+  /** The spec field_summary bounds (ids 509-511) of one manifest, tracked
+    * over its entries as they stream to the writer: per partition field
+    * (spec order, as the entries' partition struct spells it), whether a
+    * null was seen and the least and greatest value. Real readers prune
+    * whole manifests by them before opening any entry. Values other than
+    * int, long and string have no bound encoding here: a manifest holding
+    * one gets no summaries (readers then open it), never a wrong bound.
+    */
+  private[iceberg] final class PartitionBounds {
+    private var names: Seq[String] = Nil
+    private val bounds = scala.collection.mutable.Map
+      .empty[String, (Boolean, AnyRef, AnyRef)]
+    private var encodable = true
+
+    private def lt(a: AnyRef, b: AnyRef): Boolean = (a, b) match {
+      case (x: java.lang.Integer, y: java.lang.Integer) => x < y
+      case (x: java.lang.Long, y: java.lang.Long) => x < y
+      case _ => a.toString < b.toString
+    }
+
+    /** Fold one manifest entry into the bounds; returns it. */
+    def track(e: org.apache.avro.generic.GenericRecord)
+        : org.apache.avro.generic.GenericRecord = {
+      val part = e.get("data_file")
+        .asInstanceOf[org.apache.avro.generic.GenericRecord]
+        .get("partition").asInstanceOf[org.apache.avro.generic.GenericRecord]
+      if (part != null) {
+        import scala.jdk.CollectionConverters._
+        if (names.isEmpty)
+          names = part.getSchema.getFields.asScala.map(_.name).toSeq
+        names.foreach { n =>
+          val v = part.get(n) match {
+            case null => null
+            case i: java.lang.Integer => i
+            case l: java.lang.Long => l
+            case c: CharSequence => c.toString
+            case _ => encodable = false; null
+          }
+          bounds(n) = (v, bounds.get(n)) match {
+            case (null, b) => (true, b.map(_._2).orNull, b.map(_._3).orNull)
+            case (v, None) => (false, v, v)
+            case (v, Some((nul, lo, hi))) => (nul,
+              if (lo == null || lt(v, lo)) v else lo,
+              if (hi == null || lt(hi, v)) v else hi)
+          }
+        }
+      }
+      e
+    }
+
+    def summaries: Seq[IcebergManifests.PartitionFieldSummary] = {
+      def bytes(v: AnyRef): Option[Array[Byte]] = Option(v).map {
+        case i: java.lang.Integer => java.nio.ByteBuffer.allocate(4)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(i).array()
+        case l: java.lang.Long => java.nio.ByteBuffer.allocate(8)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(l).array()
+        case s => s.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      }
+      if (!encodable) Nil
+      else names.flatMap(n => bounds.get(n).map { case (nul, lo, hi) =>
+        IcebergManifests.PartitionFieldSummary(nul, bytes(lo), bytes(hi))
+      })
     }
   }
 
   /** The one writer of a commit's ADDED manifests, run over the driver's
     * rows or per partition. Writes nothing for no entries. Tracks the
-    * spec field_summary bounds (ids 509-511) per partition field while
-    * the entries stream — real readers prune whole manifests by them
-    * before opening any entry.
+    * manifest's [[PartitionBounds]] while the entries stream.
     */
   private[iceberg] final case class AddedManifest(mdir: String,
-      snapshotId: Long, schema: StructType, partitionFields: Seq[String],
+      snapshotId: Long, schema: StructType,
       specFields: Seq[(String, Int)], specId: Int, v3: Boolean) {
 
     def write(files: Iterator[FileEntry], firstRowId: Long,
@@ -631,70 +699,40 @@ object IcebergConversionTarget {
         : Option[IcebergManifests.ManifestSummary] =
       if (!files.hasNext) None
       else {
-        val numeric = partitionFields.map(pf =>
-          pf -> (IcebergManifests.partitionAvroType(schema, pf) != "string"))
-          .toMap
-        val bounds = scala.collection.mutable.Map
-          .empty[String, (Boolean, String, String)]
-        def track(f: FileEntry): Unit = partitionFields.foreach { pf =>
-          def lt(a: String, b: String): Boolean =
-            if (numeric(pf)) a.toLong < b.toLong else a < b
-          (f.partitionValues.find(_.field == pf), bounds.get(pf)) match {
-            case (Some(p), None) => bounds(pf) = (false, p.value, p.value)
-            case (Some(p), Some((n, lo, hi))) => bounds(pf) = (n,
-              if (lo == null || lt(p.value, lo)) p.value else lo,
-              if (hi == null || lt(hi, p.value)) p.value else hi)
-            case (None, b) =>
-              bounds(pf) = (true, b.map(_._2).orNull, b.map(_._3).orNull)
-          }
-        }
         val path = s"$mdir/m-${UUID.randomUUID()}.avro"
+        val bounds = new PartitionBounds
         var n = 0
         var rows = 0L
         val len = IcebergManifests.writeManifest(path, files.map { f =>
           val fr = if (v3) Some(firstRowId + rows) else None
           n += 1; rows += f.recordCount
-          track(f)
-          IcebergManifests.toEntry(f, IcebergManifests.Status.Added,
-            snapshotId, schema, firstRowId = fr, specFields = specFields)
+          bounds.track(IcebergManifests.toEntry(f,
+            IcebergManifests.Status.Added, snapshotId, schema,
+            firstRowId = fr, specFields = specFields))
         }, conf)
-        def boundBytes(pf: String, v: String): Option[Array[Byte]] =
-          Option(v).map { s =>
-            IcebergManifests.partitionAvroType(schema, pf) match {
-              case "int" => java.nio.ByteBuffer.allocate(4)
-                .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-                .putInt(s.toInt).array()
-              case "long" => java.nio.ByteBuffer.allocate(8)
-                .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-                .putLong(s.toLong).array()
-              case _ => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            }
-          }
         Some(IcebergManifests.ManifestSummary(path, len, snapshotId, n, 0, 0,
-          rows, 0L,
-          partitions = partitionFields.flatMap(pf => bounds.get(pf).map {
-            case (containsNull, lo, hi) =>
-              IcebergManifests.PartitionFieldSummary(containsNull,
-                boundBytes(pf, lo), boundBytes(pf, hi))
-          }),
+          rows, 0L, partitions = bounds.summaries,
           specId = specId))
       }
   }
 
   /** Carry one previous manifest into the next snapshot: untouched → its
     * summary as EXISTING entries (from the list record when it has the
-    * counts, else from one counting pass); partially removed → rewrite
-    * live entries minus `removed` to a fresh manifest; fully removed →
-    * None. Static so the closure ships to executors without dragging the
-    * target (SparkSession and all) along.
+    * counts, else from one counting pass) with the record's partition
+    * summaries; partially removed → rewrite live entries minus `removed`
+    * to a fresh manifest, its partition summaries recomputed; fully
+    * removed → None. Static so the closure ships to executors without
+    * dragging the target (SparkSession and all) along.
     */
   private[iceberg] def carryForwardManifest(m: PrevManifest,
       removed: Set[String], mdir: String,
       conf: org.apache.hadoop.conf.Configuration)
       : Option[IcebergManifests.ManifestSummary] = {
     def summary(path: String, len: Long, files: Int, dropped: Int,
-        rows: Long) = IcebergManifests.ManifestSummary(path, len, m.seq,
-      0, files, dropped, 0L, rows, specId = m.specId)
+        rows: Long, partitions: Seq[IcebergManifests.PartitionFieldSummary]
+          = m.partitions) = IcebergManifests.ManifestSummary(path, len,
+      m.seq, 0, files, dropped, 0L, rows, partitions = partitions,
+      specId = m.specId)
     if (!m.mustOpen(removed))
       return m.live.map { case (files, rows) =>
         summary(m.path, m.length.get, files, 0, rows) }
@@ -725,11 +763,16 @@ object IcebergConversionTarget {
       Some(summary(m.path, len, remaining, 0, remainingRows))
     } else if (remaining > 0) {
       val np = s"$mdir/m-${UUID.randomUUID()}.avro"
+      val bounds = new PartitionBounds
       val survivors = IcebergManifests.readManifest(m.path)
         .filter(e => isLive(e) && !removed.contains(pathOf(e)))
-        .map { e => e.put("status", IcebergManifests.Status.Existing); e }
+        .map { e =>
+          e.put("status", IcebergManifests.Status.Existing)
+          bounds.track(e)
+        }
       val len = IcebergManifests.writeManifest(np, survivors, conf)
-      Some(summary(np, len, remaining, dropped, remainingRows))
+      Some(summary(np, len, remaining, dropped, remainingRows,
+        bounds.summaries))
     } else None
   }
 }

@@ -30,18 +30,18 @@ import graft.model.{DeletionVectorsUnsupported, FileEntry}
   *   the new sequence number, previous manifests carried verbatim) —
   *   needed because file-level metadata sync is refused while deletes
   *   are live, and because delete application is sequence-ordered.
-  * - [[applyDeletes]] masks deleted rows out of a data scan. Position
-  *   deletes anti-join on (file, pos) via the parquet reader's
-  *   `_metadata` column. Equality deletes follow the spec's ordering
-  *   rule: a delete at sequence S masks only rows of data files with
-  *   sequence < S — a row re-inserted AFTER the delete survives. Both
-  *   are scan + (broadcast) anti-join plans at any table size.
+  * - [[scan]] is the delete-aware read. v3 deletion vectors are masked
+  *   inside the parquet scan; v2 position-delete files anti-join on
+  *   (file, pos) via the scan's `_metadata` columns. Equality deletes
+  *   follow the spec's ordering rule: a delete at sequence S masks only
+  *   rows of data files with sequence < S — a row re-inserted AFTER the
+  *   delete survives. All are plans that hold at any table size.
   */
 object IcebergDeletes {
 
   /** Broadcast a deleted-key set only while its estimated footprint
-    * stays modest (mirrors the Delta DV byte gate): above it, the
-    * anti-join shuffles both sides — still correct, never memory-bound.
+    * stays modest: above it, the anti-join shuffles both sides — still
+    * correct, never memory-bound.
     */
   private val BroadcastDeleteBytes = 64L * 1024 * 1024
 
@@ -111,8 +111,7 @@ object IcebergDeletes {
       m.properties.getOrElse("graft.table-name", "table"))
     val snap = graft.model.TableSnapshot(src.currentTable(),
       src.filesAtSeq(m, m.headSequence), m.headSequence.toString)
-    val keyed = graft.formats.delta.DeltaRead.toKeyedDataFrame(spark, snap)
-    val live = applyDeletes(spark, keyed, m, m.headSequence, tablePath)
+    val live = scan(spark, snap, m, m.headSequence, tablePath, keyed = true)
     val victims = live.filter(predicate)
       .select(col("__scan_path").as("file_path"),
         col("__scan_pos").as("pos"))
@@ -1026,73 +1025,88 @@ object IcebergDeletes {
 
   val MaxCommitRetries = 3
 
-  /** Mask every live row-level delete out of a data scan. `df` must be a
-    * direct file-scan DataFrame (the `_metadata` column must still
-    * resolve). Position deletes anti-join on (file, pos); equality
+  /** Delete-aware scan of `snap`, a listing of the table at `seq`.
+    * v3 deletion vectors ride the scan as each data file's `graft_dv`
+    * descriptor and are masked inside it ([[DeltaRead]]): a puffin
+    * `deletion-vector-v1` blob IS the Delta DV frame (length, portable
+    * Roaring64, CRC), so it reads as a `p` descriptor at the blob's
+    * offset. v2 position-delete files anti-join on (file, pos); equality
     * deletes anti-join on the equality columns with the sequence rule
-    * `delete seq > data-file seq`.
+    * `delete seq > data-file seq`. `keyed` adds `__scan_path` /
+    * `__scan_pos` ([[DeltaRead.toKeyedDataFrame]]).
     */
-  def applyDeletes(spark: SparkSession, df: DataFrame,
-      m: IcebergTableMetadata, seq: Long, tablePath: String): DataFrame = {
+  def scan(spark: SparkSession, snap: graft.model.TableSnapshot,
+      m: IcebergTableMetadata, seq: Long, tablePath: String,
+      keyed: Boolean): DataFrame = {
     val refs = liveDeleteRefs(m, seq)
-    if (refs.isEmpty) return df
-    val pos = refs.filter(_.content == 1)
-    val eq = refs.filter(_.content == 2)
-    val bad = eq.filter(_.equalityIds.isEmpty)
+    val bad = refs.filter(r => r.content == 2 && r.equalityIds.isEmpty)
     if (bad.nonEmpty) throw new DeletionVectorsUnsupported(
       s"table at $tablePath has ${bad.size} equality delete file(s) with " +
         "no equality_ids recorded — cannot apply them correctly")
-    val manifestList = m.snapshotBySeq(seq).get.manifestList
-    var out = applyPositionDeletes(spark, df, pos, tablePath)
-    if (eq.nonEmpty)
-      out = applyEqualityDeletes(spark, out, eq, manifestList, m, tablePath)
-    out
+    val (dvs, files) =
+      refs.partition(r => r.content == 1 && r.isDeletionVector)
+    val masked = withDeletionVectors(spark, snap, dvs, tablePath)
+    val base =
+      if (keyed) graft.formats.delta.DeltaRead.toKeyedDataFrame(spark, masked)
+      else graft.formats.delta.DeltaRead.toDataFrame(spark, masked)
+    val pos = files.filter(_.content == 1)
+    val eq = files.filter(_.content == 2)
+    val out = applyPositionDeletes(spark, base, pos)
+    if (eq.isEmpty) out
+    else applyEqualityDeletes(spark, out, eq,
+      m.snapshotBySeq(seq).get.manifestList, m, tablePath)
   }
 
-  /** Mask position-deleted rows out of a data scan. Position deletes name
-    * their data file by path, and paths are write-once, so no sequence
-    * comparison is needed (a delete can only follow its file).
+  /** `snap` with each v3 deletion vector attached to its data file's
+    * listing entry. The listing keeps the snapshot's id: every
+    * delete-aware read of the table at one sequence attaches the same
+    * vectors, so the shared listing cache stays consistent.
     */
-  def applyPositionDeletes(spark: SparkSession, df: DataFrame,
-      refs: Seq[DeleteFileRef], tablePath: String): DataFrame = {
+  private def withDeletionVectors(spark: SparkSession,
+      snap: graft.model.TableSnapshot, dvs: Seq[DeleteFileRef],
+      tablePath: String): graft.model.TableSnapshot = {
+    if (dvs.isEmpty) return snap
     import spark.implicits._
-    val pos = refs.filter(_.content == 1)
-    if (pos.isEmpty) return df
-    // v3 deletion vectors decode EXECUTOR-side (a DV can carry millions
-    // of positions — the driver sees only the blob coordinates); v2
-    // parquet position-delete files scan as parquet. Both shapes land in
-    // the same (__del_path, __del_pos) frame.
-    val (dvRefs, fileRefs) = pos.partition(_.isDeletionVector)
-    val badDv = dvRefs.filter(r => r.referencedDataFile.isEmpty ||
-      r.contentOffset.isEmpty || r.contentSizeBytes.isEmpty)
+    val badDv = dvs.filter(r => r.referencedDataFile.isEmpty ||
+      r.contentOffset.isEmpty || r.contentSizeBytes.isEmpty ||
+      r.contentOffset.exists(_ > Int.MaxValue))
     if (badDv.nonEmpty) throw new DeletionVectorsUnsupported(
       s"table at $tablePath has deletion-vector entries missing " +
         s"referenced_data_file/content_offset/content_size_in_bytes: " +
         badDv.map(_.path).mkString(", "))
-    val fromFiles =
-      if (fileRefs.isEmpty) None
-      else Some(spark.read.parquet(fileRefs.map(_.path): _*)
-        .select(graft.util.PathCols.canonical(col("file_path"))
-          .as("__del_path"), col("pos").as("__del_pos")))
-    val fromDvs =
-      if (dvRefs.isEmpty) None
-      else Some(graft.util.Par.ds(spark,
-          dvRefs.map(r => (r.path, r.referencedDataFile.get,
-            r.contentOffset.get, r.contentSizeBytes.get)), 64)
-        .flatMap { case (p, refFile, off, len) =>
-          Puffin.readDeletionVector(p, off, len).iterator
-            .map(ps => (graft.util.PathUtils.canonical(refFile), ps))
-        }
-        .toDF("__del_path", "__del_pos"))
-    val deleted = (fromFiles.toSeq ++ fromDvs.toSeq).reduce(_ union _)
-    // a caller that already keyed the scan (change-feed diffs) keeps its
-    // keys; otherwise derive them from the scan metadata and strip after
+    val byFile = dvs.map { r =>
+      graft.util.PathUtils.canonical(r.referencedDataFile.get) ->
+        graft.model.DvDescriptor("p", graft.util.PathUtils.canonical(r.path),
+          r.contentOffset.get.toInt, (r.contentSizeBytes.get - 8).toInt,
+          r.recordCount)
+    }
+    val shared =
+      byFile.groupBy(_._1).collect { case (f, ds) if ds.size > 1 => f }
+    if (shared.nonEmpty) throw new DeletionVectorsUnsupported(
+      s"table at $tablePath has more than one live deletion vector for " +
+        s"data file(s) ${shared.mkString(", ")}")
+    val b = spark.sparkContext.broadcast(byFile.toMap)
+    snap.copy(files = snap.files.map(f =>
+      f.copy(deletionVector = b.value.get(f.path))))
+  }
+
+  /** Mask v2 position-deleted rows out of a data scan. Position deletes
+    * name their data file by path, and paths are write-once, so no
+    * sequence comparison is needed (a delete can only follow its file).
+    */
+  private def applyPositionDeletes(spark: SparkSession, df: DataFrame,
+      pos: Seq[DeleteFileRef]): DataFrame = {
+    if (pos.isEmpty) return df
+    val deleted = spark.read.parquet(pos.map(_.path): _*)
+      .select(graft.util.PathCols.canonical(col("file_path"))
+        .as("__del_path"), col("pos").as("__del_pos"))
+    // a caller that already keyed the scan keeps its keys; otherwise key
+    // it from the scan's file constants and strip after
     val hasKeys = df.columns.contains("__scan_path")
     val keyed =
       if (hasKeys) df
       else df
-        .withColumn("__scan_path",
-          graft.util.PathCols.scanPath(col("_metadata.file_path")))
+        .withColumn("__scan_path", col("_metadata.graft_path"))
         .withColumn("__scan_pos", col("_metadata.row_index"))
     val estBytes = pos.map(r => r.recordCount * 116L).sum
     val right =
@@ -1136,8 +1150,7 @@ object IcebergDeletes {
     val hasKeys = df.columns.contains("__scan_path")
     val keyedIn =
       if (hasKeys) df
-      else df.withColumn("__scan_path",
-        graft.util.PathCols.scanPath(col("_metadata.file_path")))
+      else df.withColumn("__scan_path", col("_metadata.graft_path"))
     var out = keyedIn
       .join(seqRight, col("__scan_path") === col("__ds_path"), "left")
       .drop("__ds_path")

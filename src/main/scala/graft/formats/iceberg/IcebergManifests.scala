@@ -611,6 +611,23 @@ object IcebergManifests {
       }.asJava)
     }
 
+  /** A manifest-list record's partition summaries, as
+    * [[putPartitionSummaries]] writes them (`contains_nan` is not kept).
+    */
+  def partitionSummaries(r: GenericRecord): Seq[PartitionFieldSummary] =
+    Option(fieldOr(r, "partitions")).toSeq.flatMap { ps =>
+      ps.asInstanceOf[java.util.List[GenericRecord]].asScala.map { f =>
+        def bytes(k: String): Option[Array[Byte]] = Option(f.get(k)).map {
+          b =>
+            val d = b.asInstanceOf[ByteBuffer].duplicate()
+            val a = new Array[Byte](d.remaining()); d.get(a); a
+        }
+        PartitionFieldSummary(
+          f.get("contains_null").asInstanceOf[java.lang.Boolean],
+          bytes("lower_bound"), bytes("upper_bound"))
+      }
+    }
+
   /** DATA manifest paths only (`content`=0) — the scan/sync planning
     * input. Delete manifests (`content`=1) must never flow into the data
     * plane: a position-delete parquet scanned as a data file serves
@@ -623,8 +640,9 @@ object IcebergManifests {
     * delete manifests) — for delete-awareness checks and carry-forward.
     */
   def readManifestListRecords(path: String): Seq[GenericRecord] = {
-    val r = new DataFileReader(
-      new File(graft.util.PathUtils.canonical(path)),
+    val hp = new org.apache.hadoop.fs.Path(graft.util.PathUtils.canonical(path))
+    val r = new org.apache.avro.file.DataFileStream(
+      hp.getFileSystem(graft.util.HadoopConfs.active()).open(hp),
       new GenericDatumReader[GenericRecord]())
     try {
       val out = Seq.newBuilder[GenericRecord]

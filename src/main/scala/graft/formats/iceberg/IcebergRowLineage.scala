@@ -96,8 +96,7 @@ object IcebergRowLineage {
     val snap = graft.model.TableSnapshot(
       base.copy(schemaJson = ext.json), src.filesAtSeq(m, seq),
       seq.toString)
-    val keyed = graft.formats.delta.DeltaRead.toKeyedDataFrame(spark, snap)
-    val live = IcebergDeletes.applyDeletes(spark, keyed, m, seq, tablePath)
+    val live = IcebergDeletes.scan(spark, snap, m, seq, tablePath, keyed = true)
     graft.plans.SnapshotFileIndex.invalidate(snap)
     val manifestList = m.snapshotBySeq(seq).getOrElse(
       throw new IllegalStateException(

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,9 +27,11 @@ import graft.model._
   *      min/max column stats (same design as Delta data skipping; the stats
   *      come from the metadata plane, reference ColumnStat.java:28-33).
   *
-  * Only the surviving files' (path, size, mtime, partitionValues) rows are
-  * collected to build `PartitionDirectory`s — proportional to the query's
-  * matching files, never the table's total file count.
+  * Only the surviving files' (path, size, mtime, partitionValues,
+  * deletion vector) rows are collected to build `PartitionDirectory`s —
+  * proportional to the query's matching files, never the table's total
+  * file count. Each file's canonical path and deletion-vector descriptor
+  * ride with it as file-constant metadata ([[ListingFields]]).
   */
 class SnapshotFileIndex(spark: SparkSession, snap: TableSnapshot)
   extends FileIndex {
@@ -106,6 +108,7 @@ class SnapshotFileIndex(spark: SparkSession, snap: TableSnapshot)
       partPredicate.map(_._2).getOrElse(Nil)
     val skip = StatSkipping.compile(dataFilters, tableSchema)
     val pSchema = partitionSchema
+    val tablePath = snap.table.basePath
 
     def keepEntry(pred: Option[InterpretedPredicate])(f: FileEntry)
         : Boolean = {
@@ -123,7 +126,9 @@ class SnapshotFileIndex(spark: SparkSession, snap: TableSnapshot)
     def shape(f: FileEntry) =
       (f.path, f.fileSizeBytes, f.lastModifiedMillis,
         pSchema.fieldNames.toSeq.map(n =>
-          f.partitionValues.find(_.field == n).map(_.value).orNull))
+          f.partitionValues.find(_.field == n).map(_.value).orNull),
+        f.deletionVector.map(graft.formats.delta.DeletionVectors
+          .toScanField(tablePath, _)).orNull)
 
     // small listings (already bounded on the driver by the collect below)
     // prune driver-side — the same predicates over the same rows, minus
@@ -156,8 +161,12 @@ class SnapshotFileIndex(spark: SparkSession, snap: TableSnapshot)
       val row = InternalRow.fromSeq(partVals.zip(pSchema.fields).map {
         case (v, f) => SnapshotFileIndex.catalystValue(v, f.dataType)
       })
-      val statuses = group.map { case (path, size, mtime, _) =>
-        new FileStatus(size, false, 1, math.max(size, 1L), mtime, new Path(path))
+      val statuses = group.toSeq.map { case (path, size, mtime, _, dv) =>
+        FileStatusWithMetadata(
+          new FileStatus(size, false, 1, math.max(size, 1L), mtime,
+            new Path(path)),
+          Map(ListingFields.Path -> path) ++
+            Option(dv).map(ListingFields.Dv -> _))
       }
       PartitionDirectory(row, statuses)
     }.toSeq
@@ -284,13 +293,12 @@ object SnapshotFileIndex {
   }
 
   /** One-job roll-up of the scan-relevant listing facts: deletion-vector
-    * volume (drives the DV anti-join's broadcast decision) and the file
-    * formats present (drives FileFormat selection). Every keyed/DV read
-    * needs both; computing them separately cost two Spark jobs per read —
-    * cached here beside the listing, dropped on [[invalidate]].
+    * volume (whether the scan needs its row mask) and the file formats
+    * present (drives FileFormat selection). Every read needs both;
+    * computing them separately cost two Spark jobs per read — cached here
+    * beside the listing, dropped on [[invalidate]].
     */
-  case class ScanSummary(dvFiles: Long, dvRows: Long, dvKeyBytes: Long,
-      formats: Seq[String])
+  case class ScanSummary(dvFiles: Long, dvRows: Long, formats: Seq[String])
 
   private val cachedSummaries =
     new java.util.LinkedHashMap[String, ScanSummary](16, 0.75f, true) {
@@ -308,21 +316,16 @@ object SnapshotFileIndex {
       val s = localFor(snap) match {
         case Some(entries) =>
           // small listing already on the driver: same roll-up, no job
-          val dvs = entries.flatMap(e =>
-            e.deletionVector.map(d => (d.cardinality,
-              d.cardinality * (e.path.length.toLong + 16L))))
-          ScanSummary(dvs.length.toLong, dvs.iterator.map(_._1).sum,
-            dvs.iterator.map(_._2).sum,
+          val dvs = entries.flatMap(_.deletionVector.map(_.cardinality))
+          ScanSummary(dvs.length.toLong, dvs.sum,
             entries.iterator.map(_.fileFormat).toSeq.distinct.sorted)
         case None =>
           val row = listingFor(snap).agg(
             sum(when(col("deletionVector").isNotNull, 1L).otherwise(0L)),
             sum(col("deletionVector.cardinality")),
-            sum(col("deletionVector.cardinality") *
-              (length(col("path")).cast("long") + lit(16L))),
             sort_array(collect_set(col("fileFormat")))).head()
           def l(i: Int): Long = if (row.isNullAt(i)) 0L else row.getLong(i)
-          ScanSummary(l(0), l(1), l(2), row.getSeq[String](3))
+          ScanSummary(l(0), l(1), row.getSeq[String](2))
       }
       cachedSummaries.synchronized { cachedSummaries.put(key, s) }
       s

@@ -3,17 +3,21 @@ package graft.util
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Column-expression path canonicalization for row-level-delete
-  * reconciliation joins (Delta deletion vectors, Iceberg position
-  * deletes). The join key must be identical on both sides or deleted rows
-  * are silently served back.
+/** Column-expression path canonicalization for joins whose two sides
+  * spell a data file's path differently. A snapshot scan needs none: its
+  * rows carry the listing's canonical path as the file-constant
+  * `_metadata.graft_path` ([[graft.plans.ListingFields]]). What remains
+  * are scans and files outside the listing: Iceberg v2 position- and
+  * equality-delete files, Delta CDC sidecars read by path, and the bloom
+  * index build. The join key must be identical on both sides or deleted
+  * rows are silently served back.
   *
   * Two rules, because the two sides carry different forms:
   *
-  * - [[scanPath]] for `_metadata.file_path`: the parquet reader renders it
-  *   in Hadoop URI form — percent-encoded EVEN WHEN the scheme is absent
-  *   (a `SnapshotFileIndex` scan yields `/tmp/t/cat=a%20b/f.parquet`, a
-  *   `spark.read.parquet` scan `file:/tmp/t/cat=a%20b/f.parquet`) — so it
+  * - [[scanPath]] for `_metadata.file_path` / `input_file_name()`: the
+  *   parquet reader renders it in Hadoop URI form — percent-encoded EVEN
+  *   WHEN the scheme is absent (`/tmp/t/cat=a%20b/f.parquet`, or
+  *   `file:/tmp/t/cat=a%20b/f.parquet` from `spark.read.parquet`) — so it
   *   scheme-strips and %-decodes unconditionally. Literal '+' pre-encodes
   *   to %2B because `url_decode` form-decodes bare '+' to space.
   * - [[canonical]] for metadata-plane values (Iceberg delete-file

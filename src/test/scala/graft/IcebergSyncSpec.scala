@@ -290,6 +290,97 @@ class IcebergSyncSpec extends SparkSuite {
       bounds.toString)
   }
 
+  /** Commit `diffs` in turn to an Iceberg target partitioned by `p`,
+    * each side placed as given.
+    */
+  private def commitDiffs(target: String, at: Option[graft.plans.Placement],
+      diffs: Seq[FilesDelta]): Unit = {
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType)))
+    val spec = Seq(PartitionFieldSpec("p", Transform.Value))
+    diffs.zipWithIndex.foreach { case (diff, i) =>
+      val tgt = new IcebergConversionTarget(spark, target)
+      tgt.at = at
+      tgt.beginSync(TableDescriptor("t", TableFormats.Iceberg, target,
+        schema, spec, Layout.HivePartitioned, 0L))
+      tgt.syncMetadata(graft.spi.SyncMetadata((i + 1).toString, Nil,
+        TableFormats.Parquet, target))
+      tgt.syncSchema(schema)
+      tgt.syncPartitionSpec(spec)
+      tgt.syncFilesForDiff(diff)
+      tgt.completeSync()
+    }
+  }
+
+  private def partEntry(i: Int, p: String) = FileEntry(
+    s"/data/p=$p/f$i.parquet", 100L + i, 10L, "parquet",
+    Seq(PartitionMember("p", p)), Nil, 1000L + i)
+
+  /** Each data manifest's (lower, upper) partition bound text. */
+  private def listBounds(target: String): Seq[(String, String)] = {
+    val m = IcebergMetadata.read(target,
+      IcebergMetadata.currentVersion(target).get)
+    IcebergManifests.dataManifests(m.currentSnapshot.get.manifestList)
+      .map { r =>
+        val ps = r.get("partitions")
+        assert(ps != null,
+          s"no partition summary on ${r.get("manifest_path")}")
+        val f = ps.asInstanceOf[java.util.List[_]].get(0)
+          .asInstanceOf[org.apache.avro.generic.GenericRecord]
+        def text(k: String) = new String(f.get(k).asInstanceOf[
+          java.nio.ByteBuffer].array(), "UTF-8")
+        (text("lower_bound"), text("upper_bound"))
+      }
+  }
+
+  test("carried and rewritten manifests keep their partition summaries") {
+    import spark.implicits._
+    def side(es: Seq[FileEntry]) = Left(es.toIndexedSeq)
+    val base = Seq(partEntry(1, "a"), partEntry(2, "c"), partEntry(3, "b"))
+    // driver carry-forward: commit 2 carries the base manifest untouched,
+    // commit 3 rewrites it without one file
+    val t1 = tmpDir("ice_carry_summaries")
+    commitDiffs(t1, None, Seq(
+      FilesDelta(side(base), side(Nil)),
+      FilesDelta(side(Seq(partEntry(4, "x"))), side(Nil))))
+    assert(listBounds(t1).toSet == Set(("a", "c"), ("x", "x")))
+    commitDiffs(t1, None, Seq(
+      FilesDelta(side(Seq(partEntry(5, "y"))), side(Seq(base(1))))))
+    assert(IcebergConversionTarget.lastCarryForwardMode == "driver-set")
+    assert(listBounds(t1).toSet == Set(("a", "b"), ("x", "x"), ("y", "y")))
+    // distributed carry-forward: the removes stay a Dataset, survivors
+    // are rewritten by the anti-join
+    val t2 = tmpDir("ice_carry_summaries_tasks")
+    commitDiffs(t2, Some(graft.plans.Placement.Tasks), Seq(
+      FilesDelta(side(base), side(Nil)),
+      FilesDelta(side(Seq(partEntry(4, "x"))),
+        Right(spark.createDataset(Seq(base(1)))))))
+    assert(IcebergConversionTarget.lastCarryForwardMode ==
+      "distributed-anti-join")
+    assert(listBounds(t2).toSet == Set(("a", "b"), ("x", "x")))
+  }
+
+  test("an incremental commit opens the previous manifest list once") {
+    val target = tmpDir("ice_list_reads")
+    commitDiffs(target, None, Seq(FilesDelta(
+      Left(Vector(partEntry(1, "a"), partEntry(2, "b"))), Left(Vector.empty))))
+    val prevList = IcebergMetadata.read(target,
+      IcebergMetadata.currentVersion(target).get)
+      .currentSnapshot.get.manifestList
+    val keys = Seq(
+      "spark.hadoop.fs.file.impl" -> classOf[OpenRecordingFileSystem].getName,
+      "spark.hadoop.fs.file.impl.disable.cache" -> "true")
+    OpenRecordingFileSystem.opened.clear()
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try commitDiffs(target, None, Seq(FilesDelta(
+      Left(Vector(partEntry(3, "c"))), Left(Vector(partEntry(1, "a"))))))
+    finally keys.foreach { case (k, _) => spark.conf.unset(k) }
+    val opens = OpenRecordingFileSystem.opened.toArray.toSeq
+      .count(_ == graft.util.PathUtils.canonical(prevList))
+    assert(opens == 1, s"previous manifest list opened $opens times")
+  }
+
   test("field ids stay stable across repeated syncs") {
     val target = tmpDir("ice_ids")
     def sync() = fullSync(new ParquetDirectorySource(spark,
@@ -363,4 +454,17 @@ class IcebergSyncSpec extends SparkSuite {
     }
     assert(ids2("ext_col") == hudiIds("ext_col"))
   }
+}
+
+/** A local filesystem that records every path it opens. */
+class OpenRecordingFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    OpenRecordingFileSystem.opened.add(f.toUri.getPath)
+    super.open(f, bufferSize)
+  }
+}
+
+object OpenRecordingFileSystem {
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }

@@ -121,7 +121,7 @@ class MillionFileScaleSpec extends SparkSuite {
     val snap = new DeltaConversionSource(spark, target, "mm")
       .currentSnapshot()
     val hits = spark.range(0, n)
-      .map(i => (s"/data/p=${i % 1000}/f$i.parquet", 0L))
+      .map(i => (s"/data/p=${i % 1000}/f$i.parquet", 0L, null: String))
     val t0 = System.nanoTime()
     val plan = graft.formats.delta.DeltaDeletes
       .planMask(spark, snap, hits).get
