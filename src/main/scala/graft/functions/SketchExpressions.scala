@@ -5,7 +5,8 @@ import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native sketch expressions over a shingle array. Each replaces an
   * explode → 64-aggregate → re-group pipeline (a full shuffle of every
@@ -15,6 +16,32 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * stay INSIDE whole-stage codegen.
   */
 object SketchImpl {
+
+  private val Space = UTF8String.fromString(" ")
+
+  /** Word n-grams of `words` in order (each the n consecutive words
+    * joined by one space; null words skipped, as `concat_ws` does); with
+    * `distinct`, each gram once, at its first occurrence.
+    */
+  def shingles(words: ArrayData, n: Int, distinct: Boolean): ArrayData = {
+    val count = words.numElements() - n + 1
+    val seen = new java.util.HashSet[UTF8String]()
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val gram = new Array[UTF8String](n)
+    var i = 0
+    while (i < count) {
+      var k = 0
+      while (k < n) {
+        gram(k) = if (words.isNullAt(i + k)) null
+          else words.getUTF8String(i + k)
+        k += 1
+      }
+      val s = UTF8String.concatWs(Space, gram: _*)
+      if (!distinct || seen.add(s)) out += s
+      i += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
 
   def minhashBandKeys(shingles: ArrayData, numHashes: Int,
       bands: Int): ArrayData = {
@@ -119,7 +146,32 @@ case class SimHash64(child: Expression)
   override def prettyName: String = "simhash64"
 }
 
+/** Word n-grams of a word array ([[SketchImpl.shingles]]): one pass per
+  * row, where a `transform` lambda over `element_at`/`slice` evaluates
+  * interpreted (and, once the optimizer inlines a `split` into it,
+  * re-splits the text for every element it reads).
+  */
+case class Shingles(child: Expression, n: Int, distinct: Boolean)
+  extends UnaryExpression {
+  require(n >= 1)
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
+  override def nullSafeEval(input: Any): Any =
+    SketchImpl.shingles(input.asInstanceOf[ArrayData], n, distinct)
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.SketchImpl.shingles($c, $n, $distinct)")
+
+  override protected def withNewChildInternal(newChild: Expression)
+      : Shingles = copy(child = newChild)
+  override def prettyName: String = "shingles"
+}
+
 object SketchFunctions {
+  def shingles(words: Column, n: Int, distinct: Boolean): Column =
+    GraftShims.column(Shingles(GraftShims.expression(words), n, distinct))
   def minhash_band_keys(c: Column, numHashes: Int, bands: Int): Column =
     GraftShims.column(MinHashBandKeys(GraftShims.expression(c), numHashes, bands))
   def simhash64(c: Column): Column =

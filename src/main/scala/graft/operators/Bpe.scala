@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding tokenizer (Sennrich et al. 2016, arXiv 1508.07909)
@@ -13,9 +14,10 @@ import org.apache.spark.sql.functions._
   * 10^7-word vocabulary trains at the same per-iteration cost as a 1 GB
   * one. Each iteration is one pair-count aggregation (shuffle keyed on
   * the symbol pair) plus a one-row argmax collect; the symbol table is
-  * re-persisted per iteration and checkpointed every 16 to keep the plan
-  * linear. The argmax tie-break is (max count, then lexicographically
-  * smallest pair) so training is deterministic on any cluster layout.
+  * re-persisted per iteration and checkpointed every 16 to keep the
+  * lineage short. The argmax tie-break is (max count, then
+  * lexicographically smallest pair) so training is deterministic on any
+  * cluster layout.
   *
   * Words follow the shared `\s+` lowercase tokenization
   * ([[TextAnalysis.whitespaceTokens]]) and carry the paper's explicit
@@ -44,39 +46,64 @@ object Bpe {
     */
   def train(docs: DataFrame, textCol: String, numMerges: Int)
       : Seq[(String, String)] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    var words: Dataset[(Seq[String], Long)] =
-      wordFrequencies(docs, textCol).as[(String, Long)]
-        .map { case (w, f) => (toSymbols(w), f) }
-        .persist()
-    words.count()
+    var words = symbolTable(docs, textCol)
     val merges = Seq.newBuilder[(String, String)]
     var i = 0
     var exhausted = false
     while (i < numMerges && !exhausted) {
-      val top = words.flatMap { case (syms, f) =>
-        syms.iterator.zip(syms.iterator.drop(1)).map(p => (p._1, p._2, f))
-      }.toDF("a", "b", "f")
-        .groupBy("a", "b").agg(sum("f").as("cnt"))
-        .orderBy(desc("cnt"), asc("a"), asc("b"))
-        .limit(1).collect()
-      if (top.isEmpty || top(0).getLong(2) < 2) exhausted = true
+      val top = pairCounts(words).takeOrdered(1)(ArgmaxOrder)
+      if (top.isEmpty || top(0)._2 < 2) exhausted = true
       else {
-        val (a, b) = (top(0).getString(0), top(0).getString(1))
+        val (a, b) = top(0)._1
         merges += ((a, b))
-        val prev = words
-        words = prev
-          .map { case (syms, f) => (mergePair(syms, a, b), f) }
-          .persist()
-        if ((i + 1) % 16 == 0) words = words.localCheckpoint()
-        else words.count()
-        prev.unpersist()
+        words = advance(words, i + 1)(mergePair(_, a, b))
       }
       i += 1
     }
     words.unpersist()
     merges.result()
+  }
+
+  /** The argmax order of a pair count: count descending, then the pair
+    * lexicographically ascending (the same tie-break as [[driverTrain]]).
+    */
+  private val ArgmaxOrder: Ordering[((String, String), Long)] =
+    Ordering.by[((String, String), Long), (Long, String, String)] {
+      case ((a, b), c) => (-c, a, b)
+    }
+
+  /** The distinct-word table as symbol sequences, persisted. The merge
+    * loops run on RDDs: each round is one pair-count shuffle and one
+    * re-persist over a vocabulary-sized table, and a DataFrame query's
+    * planning would cost more than either job.
+    */
+  private def symbolTable(docs: DataFrame, textCol: String)
+      : RDD[(Seq[String], Long)] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val words = wordFrequencies(docs, textCol).as[(String, Long)].rdd
+      .map { case (w, f) => (toSymbols(w), f) }
+      .persist()
+    words.count()
+    words
+  }
+
+  private def pairCounts(words: RDD[(Seq[String], Long)])
+      : RDD[((String, String), Long)] =
+    words.flatMap { case (syms, f) =>
+      syms.iterator.zip(syms.iterator.drop(1)).map(p => (p, f))
+    }.reduceByKey(_ + _)
+
+  /** The symbol table after `merge`, persisted before `prev` is dropped;
+    * every 16th round checkpoints it to keep the lineage short.
+    */
+  private def advance(prev: RDD[(Seq[String], Long)], round: Int)(
+      merge: Seq[String] => Seq[String]): RDD[(Seq[String], Long)] = {
+    val next = prev.map { case (syms, f) => (merge(syms), f) }.persist()
+    if (round % 16 == 0) next.localCheckpoint()
+    next.count()
+    prev.unpersist()
+    next
   }
 
   /** Job-efficient training — IDENTICAL merge list to [[train]], without
@@ -258,26 +285,15 @@ object Bpe {
     */
   def trainBatched(docs: DataFrame, textCol: String, numMerges: Int,
       candidateLimit: Int = 10000): Seq[(String, String)] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    var words: Dataset[(Seq[String], Long)] =
-      wordFrequencies(docs, textCol).as[(String, Long)]
-        .map { case (w, f) => (toSymbols(w), f) }
-        .persist()
-    words.count()
+    var words = symbolTable(docs, textCol)
     val merges = Seq.newBuilder[(String, String)]
     var learned = 0
     var exhausted = false
     var rounds = 0
     while (learned < numMerges && !exhausted) {
-      val top = words.flatMap { case (syms, f) =>
-        syms.iterator.zip(syms.iterator.drop(1)).map(p => (p._1, p._2, f))
-      }.toDF("a", "b", "f")
-        .groupBy("a", "b").agg(sum("f").as("cnt"))
-        .filter(col("cnt") >= 2)
-        .orderBy(desc("cnt"), asc("a"), asc("b"))
-        .limit(candidateLimit)
-        .as[(String, String, Long)].collect().toIndexedSeq
+      val top = pairCounts(words).filter(_._2 >= 2)
+        .takeOrdered(candidateLimit)(ArgmaxOrder)
+        .map { case ((a, b), c) => (a, b, c) }.toIndexedSeq
       rounds += 1
       if (top.isEmpty) exhausted = true
       else {
@@ -286,13 +302,7 @@ object Bpe {
         merges ++= batch
         learned += batch.length
         val rules = batch.toSet
-        val prev = words
-        words = prev
-          .map { case (syms, f) => (mergeBatch(syms, rules), f) }
-          .persist()
-        if (rounds % 16 == 0) words = words.localCheckpoint()
-        else words.count()
-        prev.unpersist()
+        words = advance(words, rounds)(mergeBatch(_, rules))
       }
     }
     words.unpersist()

@@ -29,11 +29,10 @@ object Dedup {
     graft.util.Fanout.widen(docs)
       .select(col(idCol).as("doc"), words.as("words"))
       .filter(size(col("words")) >= n)
-      .select(col("doc"), array_distinct(transform(
-        sequence(lit(1), size(col("words")) - (n - 1)),
-        i => concat_ws(" ",
-          (0 until n).map(k => element_at(col("words"), i + k)): _*)))
-        .as("shingles"))
+      .select(col("doc"),
+        graft.functions.SketchFunctions.shingles(col("words"), n,
+          distinct = true)
+          .as("shingles"))
   }
 
   /** Exact Jaccard between two distinct-element array columns. */

@@ -314,23 +314,20 @@ object TextAnalysis {
   }
 
   /** Token n-gram shingles of a document under the shared tokenization —
-    * empty array when the document has fewer than n tokens (the unguarded
-    * `sequence(1, size-n+1)` would DESCEND through 0 for short docs and
-    * fabricate out-of-range slices).
+    * empty array when the document has fewer than n tokens.
     */
   def ngramShingles(text: Column, n: Int): Column =
     shinglesFromTokens(whitespaceTokens(text), n)
 
-  /** Shingles from an ALREADY-TOKENIZED array column. Callers that explode
-    * shingles should materialize the token array in a projection below the
-    * Generate first: every `w` reference here re-evaluates its expression,
-    * so handing this a raw `split(...)` tree re-tokenizes once per slice —
-    * O(tokens²) per document instead of O(tokens).
+  /** Shingles from an ALREADY-TOKENIZED array column (one native pass,
+    * [[graft.functions.Shingles]]); a null token array gives an empty
+    * array. Callers that explode shingles should materialize the token
+    * array in a projection below the Generate first: `w` is referenced
+    * twice here, so a raw `split(...)` tree would tokenize twice.
     */
   def shinglesFromTokens(w: Column, n: Int): Column =
     when(size(w) >= n,
-      transform(sequence(lit(1), size(w) - (n - 1)),
-        i => concat_ws(" ", slice(w, i, lit(n)))))
+      graft.functions.SketchFunctions.shingles(w, n, distinct = false))
       .otherwise(array().cast("array<string>"))
 
   /** Benchmark decontamination — the eval-overlap check every training
@@ -499,7 +496,7 @@ object TextAnalysis {
   def charTrigramNovelty(docs: DataFrame, idCol: String, textCol: String,
       sourceCol: String): DataFrame = {
     // substring needs the dynamic start — expr form keeps codegen.
-    // Guard len < 3 like shinglesFromTokens: sequence(1, 0) defaults to
+    // Guard len < 3: sequence(1, 0) defaults to
     // step -1 and yields [1, 0], so an unguarded transform would emit two
     // bogus partial-trigram rows per short doc (and pollute the reference
     // table) while DuckDB's generate_series(1, 0) is empty.

@@ -127,6 +127,27 @@ class PipelineOpsSpec extends SparkSuite {
     assert(fp1.distinct.length == fp1.length) // all docs md5-distinct
   }
 
+  test("native shingles equal the transform/concat_ws formulation") {
+    import spark.implicits._
+    import graft.functions.SketchFunctions.shingles
+    val extra = Seq(" Lead and trail  ", "a b a b a b", "one two", "",
+      "x y z x y z x").toDF("text")
+    val words = docs.select("text").union(extra)
+      .select(split(lower(col("text")), "\\s+").as("w"))
+    // short rows (fewer than 3 words) take the guard: an empty array
+    val grams = when(size(col("w")) >= 3,
+      transform(sequence(lit(1), size(col("w")) - 2),
+        i => concat_ws(" ", slice(col("w"), i, lit(3)))))
+      .otherwise(array().cast("array<string>"))
+    val mismatches = words
+      .select(
+        (shingles(col("w"), 3, distinct = false) === grams).as("all"),
+        (shingles(col("w"), 3, distinct = true) === array_distinct(grams))
+          .as("distinct"))
+      .filter(!col("all") || !col("distinct"))
+    assert(mismatches.count() == 0L)
+  }
+
   test("brute-force topk self-similarity sanity") {
     val topk = Similarity.bruteForceTopK(emb,
       emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 5)
