@@ -8,16 +8,20 @@ import graft.util.Jsons
 
 /** Delta source — reference DeltaConversionSource.java:63-239: snapshot from
   * log replay, per-version diffs, backlog by version number. Table state
-  * (protocol, metaData, domains, txns) comes from one
-  * [[DeltaSnapshot.state]] decode per version list — the newest
-  * checkpoint plus the JSON after it, as the reference gets it from
-  * delta-spark's snapshot — memoized for the operation ([[stateAt]]).
+  * (protocol, metaData, domains, txns) comes from [[DeltaSnapshot.state]]:
+  * the first read decodes the newest checkpoint plus the JSON after it,
+  * as the reference gets it from delta-spark's snapshot, and the source
+  * holds each state it read by head version ([[stateAt]]). A source that
+  * outlives one commit — a sync controller's, [[graft.sync.ContinuousSync]]'s
+  * — reads a later head by folding only the new commits' JSON into the
+  * greatest state it holds below it.
   */
 class DeltaConversionSource(spark: SparkSession, tablePath: String,
     tableName: String)
   extends ConversionSource {
 
   private val conf = graft.util.HadoopConfs.session(spark)
+  private val fs = new org.apache.hadoop.fs.Path(tablePath).getFileSystem(conf)
   override def sourceFormat: String = TableFormats.Delta
 
   /** The raw log path, for change-feed internals ([[DeltaChanges]]). */
@@ -25,29 +29,53 @@ class DeltaConversionSource(spark: SparkSession, tablePath: String,
 
   private def versions: Seq[Long] = DeltaLog.listVersions(tablePath, conf)
 
-  /** [[DeltaSnapshot.state]] memo keyed by the exact version list it was
-    * read from — commit files are immutable once published, so the same
-    * version set always yields the same state; within one operation
-    * (snapshot + change feed + commit) the log state is decoded once. The
-    * version list itself is ALWAYS re-listed from the filesystem
-    * (long-lived polling sources see new commits). The reader-feature gate
-    * (PROTOCOL.md §Reader Requirements) runs on every decode, and every
-    * read path funnels through here, so an unimplemented reader feature
-    * refuses BEFORE any row is served.
+  /** A log state read at a head version, with the [[stamp]] its version
+    * file had when it was read.
     */
-  private val stateMemo = scala.collection.mutable.Map
-    .empty[Seq[Long], DeltaSnapshot.DeltaLogState]
+  private case class Held(state: DeltaSnapshot.DeltaLogState,
+      stamp: (Long, Long))
 
-  private[delta] def stateAt(vs: Seq[Long]): DeltaSnapshot.DeltaLogState =
-    stateMemo.synchronized { stateMemo.get(vs) }.getOrElse {
-      val st = DeltaSnapshot.state(spark, tablePath, vs)
-      DeltaSnapshot.requireReadable(tablePath, st)
-      stateMemo.synchronized {
-        if (stateMemo.size > 64) stateMemo.clear()
-        stateMemo.put(vs, st)
-      }
-      st
+  /** The states read so far, by head version (at most 64; the lowest
+    * head goes first). Commit files are immutable once published, so the
+    * state at head h holds while version file h keeps its stamp; a table
+    * dropped and re-created at the same path changes it.
+    */
+  private val held = scala.collection.mutable.TreeMap.empty[Long, Held]
+
+  /** Version file `v`'s (length, modification time), if it exists. */
+  private def stamp(v: Long): Option[(Long, Long)] =
+    try {
+      val st = fs.getFileStatus(
+        new org.apache.hadoop.fs.Path(DeltaLog.versionFile(tablePath, v)))
+      Some((st.getLen, st.getModificationTime))
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** The state at the head of `vs`: a held state at that head, else the
+    * greatest held state below it with the commits after it folded in
+    * ([[DeltaSnapshot.state]] decodes afresh when versions in between are
+    * missing), else a full decode. The version list itself is ALWAYS
+    * re-listed by the caller, so a long-lived polling source sees new
+    * commits. The reader-feature gate (PROTOCOL.md §Reader Requirements)
+    * runs on every result, and every read path funnels through here, so
+    * an unimplemented reader feature refuses BEFORE any row is served.
+    */
+  private[graft] def stateAt(vs: Seq[Long]): DeltaSnapshot.DeltaLogState = {
+    val head = vs.lastOption.getOrElse(-1L)
+    val below = held.synchronized(held.rangeTo(head).lastOption)
+    val start = below.filter { case (h, s) => stamp(h).contains(s.stamp) }
+    val headStamp =
+      if (vs.isEmpty || start.exists(_._1 == head)) None else stamp(head)
+    val st = DeltaSnapshot.state(spark, tablePath, vs,
+      start.map { case (h, s) => (h, s.state) })
+    DeltaSnapshot.requireReadable(tablePath, st)
+    held.synchronized {
+      // a version file changed under a held state: the table was replaced
+      if (below.isDefined && start.isEmpty) held.clear()
+      headStamp.foreach(t => held(head) = Held(st, t))
+      if (held.size > 64) held -= held.firstKey
     }
+    st
+  }
 
   /** The state a snapshot of this table was taken at. */
   private[delta] def stateOf(snap: TableSnapshot)
@@ -58,7 +86,7 @@ class DeltaConversionSource(spark: SparkSession, tablePath: String,
     stateAt(vs).metaData.getOrElse(throw new IllegalStateException(
       s"no Delta metaData action at $tablePath"))
 
-  /** The table's current metaData (memoized per version set). */
+  /** The table's current metaData. */
   private[delta] def currentMeta(): DeltaMeta = metadataAt(versions)
 
   private def partitionSpecOf(meta: DeltaMeta): Seq[PartitionFieldSpec] =
@@ -76,8 +104,9 @@ class DeltaConversionSource(spark: SparkSession, tablePath: String,
       // DeltaPartitionExtractor.convertFromDeltaPartitionFormat:105)
       DeltaPartitions.specsFromSchema(meta.schema, meta.partitionColumns))
 
-  override def currentTable(): TableDescriptor = {
-    val vs = versions
+  override def currentTable(): TableDescriptor = tableAt(versions)
+
+  private def tableAt(vs: Seq[Long]): TableDescriptor = {
     val meta = metadataAt(vs)
     // generated partition columns are physical-layout artifacts, excluded
     // from the logical schema (reference DeltaSchemaExtractor.java:128-134)
@@ -99,7 +128,7 @@ class DeltaConversionSource(spark: SparkSession, tablePath: String,
 
   override def currentSnapshot(): TableSnapshot = {
     val vs = versions
-    val table = currentTable()
+    val table = tableAt(vs)
     snapshotOf(vs, table, table.schema, vs.lastOption.getOrElse(0L).toString)
   }
 

@@ -149,18 +149,16 @@ object DeltaLog {
         "covers them")
   }
 
-  /** Latest complete checkpoint at or before `version`, if any. */
-  def latestCheckpoint(tablePath: String, version: Long, conf: Configuration)
-      : Option[Long] =
-    completeCheckpoints(tablePath, conf).map(_._1)
-      .filter(_ <= version).sorted.lastOption
+  /** A complete checkpoint: its version and every parquet file of it. */
+  final case class Checkpoint(version: Long, files: Seq[String])
 
-  /** All parquet files of the checkpoint at `version`. */
-  def checkpointFilesAt(tablePath: String, version: Long, conf: Configuration)
-      : Seq[String] =
-    completeCheckpoints(tablePath, conf)
-      .collectFirst { case (v, files) if v == version => files }
-      .getOrElse(Seq(checkpointFile(tablePath, version)))
+  /** Latest complete checkpoint at or before `version`, if any, with its
+    * files — from one listing of the log.
+    */
+  def latestCheckpoint(tablePath: String, version: Long, conf: Configuration)
+      : Option[Checkpoint] =
+    completeCheckpoints(tablePath, conf).filter(_._1 <= version)
+      .sortBy(_._1).lastOption.map { case (v, files) => Checkpoint(v, files) }
 
   /** Metadata-plane log cleanup (Delta's logRetention maintenance): delete
     * commit JSON strictly OLDER than the newest complete checkpoint — replay

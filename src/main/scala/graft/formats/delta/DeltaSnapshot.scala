@@ -5,8 +5,6 @@ import scala.util.Using
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -215,12 +213,10 @@ object DeltaSnapshot {
     * add struct's extra columns are simply not selected) plus the legacy
     * flat ActionRow shape graft wrote before r7.
     */
-  def readCheckpoint(spark: SparkSession, tablePath: String, cpVersion: Long)
-      : Dataset[ActionRow] = {
+  def readCheckpoint(spark: SparkSession, tablePath: String,
+      cp: DeltaLog.Checkpoint): Dataset[ActionRow] = {
     import spark.implicits._
-    val files = DeltaLog.checkpointFilesAt(tablePath, cpVersion,
-      graft.util.HadoopConfs.session(spark))
-    val df = spark.read.parquet(files: _*)
+    val df = spark.read.parquet(cp.files: _*)
     if (!df.columns.contains("add") && !df.columns.contains("sidecar")) {
       // legacy flat shape: checkpoints written before a field existed
       // read under its default
@@ -242,10 +238,10 @@ object DeltaSnapshot {
       else df.filter(col("sidecar").isNotNull)
         .select(col("sidecar.path")).as[String].collect().toSeq
         .map(DeltaLog.sidecarPath(tablePath, _))
-    val main = checkpointAdds(spark, df, tablePath, cpVersion)
+    val main = checkpointAdds(spark, df, tablePath, cp.version)
     if (sidecars.isEmpty) main
     else main.union(checkpointAdds(spark,
-      spark.read.parquet(sidecars: _*), tablePath, cpVersion))
+      spark.read.parquet(sidecars: _*), tablePath, cp.version))
   }
 
   /** Add rows of one checkpoint (or sidecar) DataFrame in the spec shape
@@ -377,9 +373,17 @@ object DeltaSnapshot {
     StructType.fromDDL(StateKinds.filter(k => kinds.contains(k._1))
       .map { case (k, fields) => s"$k struct<$fields>" }.mkString(", "))
 
-  /** The log state at the head of `versions`, from ONE decode: the
-    * newest checkpoint's non-add rows, then the commit JSON after it (read
-    * where [[versionLines]] places it) — the replay start [[liveFiles]]
+  /** The log state at the head of `versions`.
+    *
+    * From `from`, the state `(h, st)` at an earlier version h, it is `st`
+    * with the state actions of the commits in (h, head] applied — the
+    * state is a left fold of the actions in version order (PROTOCOL.md
+    * §Action Reconciliation) — when every one of those versions is
+    * listed. Their JSON is read where [[versionLines]] places it, and no
+    * checkpoint is opened.
+    *
+    * Otherwise it comes from ONE decode: the newest checkpoint's non-add
+    * rows, then the commit JSON after it — the replay start [[liveFiles]]
     * uses. The JSON at or before the checkpoint is read only for a kind
     * the checkpoint lacks — its column is absent (a legacy flat
     * checkpoint, one written before txns were checkpointed) or its
@@ -387,16 +391,22 @@ object DeltaSnapshot {
     * that a later commit does not restate. A kind found in neither
     * source is absent.
     */
-  def state(spark: SparkSession, tablePath: String, versions: Seq[Long])
-      : DeltaLogState = {
+  def state(spark: SparkSession, tablePath: String, versions: Seq[Long],
+      from: Option[(Long, DeltaLogState)] = None): DeltaLogState = {
     if (versions.isEmpty) return DeltaLogState.Empty
-    val conf = HadoopConfs.session(spark)
     val kinds = StateKinds.map(_._1)
+    def after(h: Long) = versions.filter(_ > h)
+    from.filter { case (h, _) => after(h).size == versions.last - h } match {
+      case Some((h, st)) =>
+        return stateActions(spark, tablePath, after(h), kinds)
+          .foldLeft(st)(_ applied _)
+      case None =>
+    }
+    val conf = HadoopConfs.session(spark)
     val cp = DeltaLog.latestCheckpoint(tablePath, versions.last, conf)
     val (base, lacking) = cp.fold((DeltaLogState.Empty, kinds)) { c =>
-      val files = DeltaLog.checkpointFilesAt(tablePath, c, conf)
-      val present = Using.resource(ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(files.head), conf))) { r =>
+      val present = Using.resource(graft.sources.ParquetFooters.open(
+          new Path(c.files.head), conf)) { r =>
         r.getFooter.getFileMetaData.getSchema.getFields.asScala
           .map(_.getName).toSet
       }
@@ -405,7 +415,7 @@ object DeltaSnapshot {
       // sources
       val st = if (read.isEmpty) DeltaLogState.Empty
         else spark.read.schema(checkpointStateSchema(read))
-          .parquet(files: _*)
+          .parquet(c.files: _*)
           .filter(read.map(col(_).isNotNull).reduce(_ || _))
           .toJSON.collect()
           .foldLeft(DeltaLogState.Empty)((s, l) =>
@@ -417,11 +427,11 @@ object DeltaSnapshot {
         (if (bareProtocol) Seq("protocol") else Nil))
     }
     val tail = stateActions(spark, tablePath,
-      cp.fold(versions)(c => versions.filter(_ > c)), kinds)
+      cp.fold(versions)(c => after(c.version)), kinds)
     val restated =
       Set("protocol", "metaData").filter(k => tail.exists(_.has(k)))
     val before = cp.fold(Seq.empty[JsonNode])(c => stateActions(spark,
-      tablePath, versions.filter(_ <= c), lacking.filterNot(restated)))
+      tablePath, versions.filter(_ <= c.version), lacking.filterNot(restated)))
     (before ++ tail).foldLeft(base)(_ applied _)
   }
 
@@ -778,9 +788,9 @@ object DeltaSnapshot {
     val cp = DeltaLog.latestCheckpoint(tablePath, head, conf)
     // an unsupported (json-v2-only) or absent checkpoint must fail HERE,
     // with the missing prefix named — not serve a partial live set
-    DeltaLog.requireReplayable(tablePath, versions, cp, conf)
+    DeltaLog.requireReplayable(tablePath, versions, cp.map(_.version), conf)
     val json = placedActions(spark, tablePath,
-      cp.fold(versions)(c => versions.filter(_ > c)), at)
+      cp.fold(versions)(c => versions.filter(_ > c.version)), at)
     val acts = cp match {
       case None => json
       case Some(c) => Right(readCheckpoint(spark, tablePath, c)

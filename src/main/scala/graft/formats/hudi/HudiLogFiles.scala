@@ -811,9 +811,8 @@ object HudiLogFiles {
         s"compaction expected one file per group, got ${files.size} for $fid")
       val n = {
         import scala.jdk.CollectionConverters._
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new Path(files.head.toString), bconfOf(spark)))
+        val reader = graft.sources.ParquetFooters.open(
+          new Path(files.head.toString), bconfOf(spark))
         try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
         finally reader.close()
       }

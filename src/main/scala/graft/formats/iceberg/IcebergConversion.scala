@@ -402,7 +402,7 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
       val prevEntries = graft.util.Par.ds(spark,
           prevManifests.map(m => (m.path, m.specId, m.seq)), 128)
         .flatMap { case (mp, sid, origSeq) =>
-          IcebergManifests.readManifest(mp)
+          IcebergManifests.readManifest(mp, bconf.value.value)
             .filter(_.get("status").asInstanceOf[Int] !=
               IcebergManifests.Status.Deleted)
             .map { e =>
@@ -509,6 +509,7 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
         // last-updated — merging across sequences would falsify it.
         // (v2 keeps the coarser spec-only merge; nothing reads per-file
         // sequences there once delete manifests are refused.)
+        val conf = graft.util.HadoopConfs.session(spark)
         val grouped =
           if (isV3) ks.groupBy(s => (s.specId, s.snapshotId)).toSeq
           else ks.groupBy(s => (s.specId, snapshotId)).toSeq
@@ -517,7 +518,7 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
           var n = 0
           var rows = 0L
           val entries = grp.iterator.flatMap { case m =>
-            IcebergManifests.readManifest(m.path).filter(e =>
+            IcebergManifests.readManifest(m.path, conf).filter(e =>
               e.get("status").asInstanceOf[Int] != IcebergManifests.Status.Deleted)
           }.map { e =>
             e.put("status", IcebergManifests.Status.Existing); n += 1
@@ -745,7 +746,7 @@ object IcebergConversionTarget {
     // pass 1 streams counts only — a 10^6-entry manifest never
     // materializes; the rewrite (pass 2) streams reader→writer
     var remaining = 0; var dropped = 0; var remainingRows = 0L
-    IcebergManifests.readManifest(m.path).foreach { e =>
+    IcebergManifests.readManifest(m.path, conf).foreach { e =>
       if (isLive(e)) {
         if (removed.contains(pathOf(e))) dropped += 1
         else {
@@ -764,7 +765,7 @@ object IcebergConversionTarget {
     } else if (remaining > 0) {
       val np = s"$mdir/m-${UUID.randomUUID()}.avro"
       val bounds = new PartitionBounds
-      val survivors = IcebergManifests.readManifest(m.path)
+      val survivors = IcebergManifests.readManifest(m.path, conf)
         .filter(e => isLive(e) && !removed.contains(pathOf(e)))
         .map { e =>
           e.put("status", IcebergManifests.Status.Existing)

@@ -412,13 +412,16 @@ object IcebergDeletes {
         .map(graft.util.PathUtils.canonical).exists(touchedSet.contains))
     val oldPositions =
       if (superseded.isEmpty) None
-      else Some(graft.util.Par.ds(spark,
-          superseded.map(r => (r.path, r.referencedDataFile.get,
-            r.contentOffset.get, r.contentSizeBytes.get)), 64)
-        .flatMap { case (p, f, off, len) =>
-          Puffin.readDeletionVector(p, off, len).iterator
-            .map(ps => (graft.util.PathUtils.canonical(f), ps))
-        }.toDF("file", "pos"))
+      else Some {
+        val bconf = graft.util.HadoopConfs.broadcastSession(spark)
+        graft.util.Par.ds(spark,
+            superseded.map(r => (r.path, r.referencedDataFile.get,
+              r.contentOffset.get, r.contentSizeBytes.get)), 64)
+          .flatMap { case (p, f, off, len) =>
+            Puffin.readDeletionVector(p, off, len, bconf.value.value).iterator
+              .map(ps => (graft.util.PathUtils.canonical(f), ps))
+          }.toDF("file", "pos")
+      }
     val all = (Seq(keyed) ++ oldPositions).reduce(_ union _).distinct()
 
     val mdir = IcebergMetadata.metadataDir(tablePath)
@@ -490,9 +493,10 @@ object IcebergDeletes {
         IcebergRowLineage.assignOnUpgrade(spark, dataRecs, m.schema, mdir,
         IcebergMetadata.specFieldsById(m))
       else (Nil, 0L)
+    val conf = graft.util.HadoopConfs.session(spark)
     val (needRewrite, untouched) = carried.partition { r =>
       IcebergManifests.contentOf(r) == 1 && supersededManifests.nonEmpty && {
-        IcebergManifests.readManifest(r.get("manifest_path").toString)
+        IcebergManifests.readManifest(r.get("manifest_path").toString, conf)
           .exists { e =>
             val df = e.get("data_file").asInstanceOf[GenericRecord]
             val ref = Option(IcebergManifests
@@ -503,7 +507,7 @@ object IcebergDeletes {
     }
     val rewritten = needRewrite.flatMap { r =>
       val kept = IcebergManifests
-        .readManifest(r.get("manifest_path").toString)
+        .readManifest(r.get("manifest_path").toString, conf)
         .filter { e =>
           val df = e.get("data_file").asInstanceOf[GenericRecord]
           val ref = Option(IcebergManifests
@@ -825,7 +829,8 @@ object IcebergDeletes {
           .map(_.get("manifest_path").toString))
         .getOrElse(Nil)
       newManifests.forall { mp =>
-        IcebergManifests.readManifest(mp).forall { rec =>
+        IcebergManifests.readManifest(mp,
+          graft.util.HadoopConfs.session(spark)).forall { rec =>
           val (_, fe) = IcebergManifests.fromEntry(rec, meta.schema)
           deleteKeyBounds.exists { case (nm, (dmn, dmx, dt)) =>
             fe.columnStats.find(_.field == nm).exists(st =>

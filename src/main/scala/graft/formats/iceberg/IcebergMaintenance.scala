@@ -87,7 +87,7 @@ object IcebergMaintenance {
       else graft.util.Par.ds(spark, manifests, 64)
         .mapPartitions { it =>
           it.flatMap { mp =>
-            IcebergManifests.readManifest(mp).map { e =>
+            IcebergManifests.readManifest(mp, bconf.value.value).map { e =>
               val df = e.get("data_file")
                 .asInstanceOf[org.apache.avro.generic.GenericRecord]
               PathUtils.canonical(df.get("file_path").toString)

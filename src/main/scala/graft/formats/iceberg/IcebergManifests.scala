@@ -554,13 +554,16 @@ object IcebergManifests {
     fs.getFileStatus(hp).getLen
   }
 
-  def readManifest(path: String): Iterator[GenericRecord] = {
+  /** A manifest's entries, read through the FileSystem `conf` names. */
+  def readManifest(path: String, conf: org.apache.hadoop.conf.Configuration)
+      : Iterator[GenericRecord] = {
     // embedded writer schema, not a fixed reader schema: real-writer
     // manifests (k_v arrays, unions, no engine-extension fields) resolve
     // exactly; graft's own files read as before. `file:` URIs (what real
     // java writers store) canonicalize to filesystem paths.
-    val r = new DataFileReader(
-      new File(graft.util.PathUtils.canonical(path)),
+    val r = new DataFileReader(new org.apache.avro.mapred.FsInput(
+        new org.apache.hadoop.fs.Path(graft.util.PathUtils.canonical(path)),
+        conf),
       new GenericDatumReader[GenericRecord]())
     new Iterator[GenericRecord] {
       def hasNext: Boolean = { val h = r.hasNext; if (!h) r.close(); h }
@@ -719,12 +722,13 @@ object IcebergManifests {
     * its manifest's sequence number (the application-ordering key) and
     * the entry's equality field ids (empty for position deletes).
     */
-  def liveDeleteFiles(manifestListPath: String): Seq[DeleteFileRef] =
+  def liveDeleteFiles(manifestListPath: String): Seq[DeleteFileRef] = {
+    val conf = graft.util.HadoopConfs.active()
     readManifestListRecords(manifestListPath)
       .filter(r => contentOf(r) == 1)
       .flatMap { m =>
         val seq = longOf(m.get("sequence_number"), 0L)
-        readManifest(m.get("manifest_path").toString)
+        readManifest(m.get("manifest_path").toString, conf)
           .filter(_.get("status").asInstanceOf[Int] != Status.Deleted)
           .map { e =>
             val df = e.get("data_file").asInstanceOf[GenericRecord]
@@ -754,6 +758,7 @@ object IcebergManifests {
               contentSizeBytes = optLong("content_size_in_bytes"))
           }
       }
+  }
 
   /** Live DATA files of a snapshot with the sequence number each was
     * committed at (its data manifest's `sequence_number`) — the other
@@ -767,10 +772,11 @@ object IcebergManifests {
     val pairs = dataManifests(manifestListPath)
       .map(m => (m.get("manifest_path").toString,
         longOf(m.get("sequence_number"), 0L)))
+    val bconf = graft.util.HadoopConfs.broadcastSession(spark)
     graft.util.Par.ds(spark, pairs, 64)
       .mapPartitions { it =>
         it.flatMap { case (p, seq) =>
-          readManifest(p)
+          readManifest(p, bconf.value.value)
             .filter(_.get("status").asInstanceOf[Int] != Status.Deleted)
             .map { e =>
               val df = e.get("data_file").asInstanceOf[GenericRecord]
@@ -803,14 +809,20 @@ object IcebergManifests {
         case l: java.lang.Long => l.longValue
       })))
     val schemaJson = schema.json
-    Placement.mapRows(placement match {
-      case Placement.Driver => Left(paths.toIndexedSeq)
-      case Placement.Tasks => Right(graft.util.Par.ds(spark, paths, 64))
-    }) { paths =>
+    // the session's Hadoop settings: as is on the driver, broadcast to tasks
+    val (placed, conf) = placement match {
+      case Placement.Driver =>
+        val c = graft.util.HadoopConfs.session(spark)
+        (Left(paths.toIndexedSeq), () => c)
+      case Placement.Tasks =>
+        val b = graft.util.HadoopConfs.broadcastSession(spark)
+        (Right(graft.util.Par.ds(spark, paths, 64)), () => b.value.value)
+    }
+    Placement.mapRows(placed) { paths =>
       val sch = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
         .asInstanceOf[StructType]
       paths.flatMap { p =>
-        readManifest(p).map(e => fromEntry(e, sch))
+        readManifest(p, conf()).map(e => fromEntry(e, sch))
           .collect { case (st, fe) if st != Status.Deleted => fe }
       }
     }

@@ -57,10 +57,11 @@ object IcebergRowLineage {
       .filter(r => IcebergManifests.contentOf(r) == 0)
       .map(m => (m.get("manifest_path").toString,
         IcebergManifests.longOf(m.get("sequence_number"), 0L)))
+    val bconf = graft.util.HadoopConfs.broadcastSession(spark)
     graft.util.Par.ds(spark, pairs, 64)
       .mapPartitions { it =>
         it.flatMap { case (p, seq) =>
-          IcebergManifests.readManifest(p)
+          IcebergManifests.readManifest(p, bconf.value.value)
             .filter(_.get("status").asInstanceOf[Int] !=
               IcebergManifests.Status.Deleted)
             .map { e =>
@@ -149,8 +150,12 @@ object IcebergRowLineage {
           case _ => 0
         })
     }
+    // executor tasks read and write through the session's Hadoop
+    // settings, same as every other distributed manifest writer in this
+    // engine
+    val bconf = graft.util.HadoopConfs.broadcastSession(spark)
     def liveRows(mp: String): Long =
-      IcebergManifests.readManifest(mp)
+      IcebergManifests.readManifest(mp, bconf.value.value)
         .filter(_.get("status").asInstanceOf[Int] !=
           IcebergManifests.Status.Deleted)
         .map(_.get("data_file").asInstanceOf[GenericRecord]
@@ -167,9 +172,6 @@ object IcebergRowLineage {
     val bases = counts.scanLeft(0L)(_ + _)
     val schemaJson = schema.json
     val md = mdir
-    // executor tasks write through the session's Hadoop settings, same
-    // as every other distributed manifest writer in this engine
-    val bconf = graft.util.HadoopConfs.broadcastSession(spark)
     def rewriteOne(mp: String, origSeq: Long, specId: Int, base: Long)
         : IcebergManifests.ManifestSummary = {
       val sch = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
@@ -178,7 +180,7 @@ object IcebergRowLineage {
       var n = 0
       var rows = 0L
       val np = s"$md/m-${UUID.randomUUID()}-rowids.avro"
-      val entries = IcebergManifests.readManifest(mp)
+      val entries = IcebergManifests.readManifest(mp, bconf.value.value)
         .filter(_.get("status").asInstanceOf[Int] !=
           IcebergManifests.Status.Deleted)
         .map { e =>

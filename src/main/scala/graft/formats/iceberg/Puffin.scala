@@ -6,6 +6,10 @@ import java.nio.charset.StandardCharsets
 import java.util.zip.CRC32
 
 import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
 
 import graft.util.Jsons
 
@@ -120,50 +124,57 @@ object Puffin {
     } finally out.close()
   }
 
+  /** `path` opened through the FileSystem `conf` names, with a probe of
+    * its length.
+    */
+  private def open[A](path: String, conf: Configuration)(
+      read: (FSDataInputStream, () => Long) => A): A = {
+    val p = new Path(graft.util.PathUtils.canonical(path))
+    val fs = p.getFileSystem(conf)
+    Using.resource(fs.open(p))(read(_, () => fs.getFileStatus(p).getLen))
+  }
+
   /** Parse the footer: every blob's metadata plus the file properties. */
-  def readBlobs(path: String): (Seq[Blob], Map[String, String]) = {
-    val f = new java.io.RandomAccessFile(
-      new File(graft.util.PathUtils.canonical(path)), "r")
-    try {
-      val len = f.length()
-      require(len >= 20, s"puffin file $path too short (${len}B)")
-      def readAt(pos: Long, n: Int): Array[Byte] = {
-        val a = new Array[Byte](n); f.seek(pos); f.readFully(a); a
+  def readBlobs(path: String, conf: Configuration)
+      : (Seq[Blob], Map[String, String]) = open(path, conf) { (f, size) =>
+    val len = size()
+    require(len >= 20, s"puffin file $path too short (${len}B)")
+    def readAt(pos: Long, n: Int): Array[Byte] = {
+      val a = new Array[Byte](n); f.readFully(pos, a); a
+    }
+    require(readAt(0, 4).sameElements(Magic),
+      s"$path is not a puffin file (bad leading magic)")
+    require(readAt(len - 4, 4).sameElements(Magic),
+      s"$path is not a puffin file (bad trailing magic)")
+    val tail = ByteBuffer.wrap(readAt(len - 12, 8))
+      .order(ByteOrder.LITTLE_ENDIAN)
+    val payloadSize = tail.getInt
+    val flags = tail.getInt
+    require((flags & 1) == 0,
+      s"puffin footer at $path is lz4-compressed — not implemented; " +
+        "refusing rather than misparse")
+    val payloadStart = len - 12 - payloadSize
+    require(readAt(payloadStart - 4, 4).sameElements(Magic),
+      s"$path puffin footer magic missing before payload")
+    val json = Jsons.mapper.readTree(
+      new String(readAt(payloadStart, payloadSize),
+        StandardCharsets.UTF_8))
+    val blobs = Option(json.get("blobs")).toSeq
+      .flatMap(_.elements().asScala)
+      .map { b =>
+        Blob(b.get("type").asText(),
+          b.get("offset").asLong(), b.get("length").asLong(),
+          Option(b.get("snapshot-id")).map(_.asLong()).getOrElse(-1L),
+          Option(b.get("sequence-number")).map(_.asLong()).getOrElse(-1L),
+          Option(b.get("properties")).map(_.properties().asScala
+            .map(e => e.getKey -> e.getValue.asText()).toMap)
+            .getOrElse(Map.empty))
       }
-      require(readAt(0, 4).sameElements(Magic),
-        s"$path is not a puffin file (bad leading magic)")
-      require(readAt(len - 4, 4).sameElements(Magic),
-        s"$path is not a puffin file (bad trailing magic)")
-      val tail = ByteBuffer.wrap(readAt(len - 12, 8))
-        .order(ByteOrder.LITTLE_ENDIAN)
-      val payloadSize = tail.getInt
-      val flags = tail.getInt
-      require((flags & 1) == 0,
-        s"puffin footer at $path is lz4-compressed — not implemented; " +
-          "refusing rather than misparse")
-      val payloadStart = len - 12 - payloadSize
-      require(readAt(payloadStart - 4, 4).sameElements(Magic),
-        s"$path puffin footer magic missing before payload")
-      val json = Jsons.mapper.readTree(
-        new String(readAt(payloadStart, payloadSize),
-          StandardCharsets.UTF_8))
-      val blobs = Option(json.get("blobs")).toSeq
-        .flatMap(_.elements().asScala)
-        .map { b =>
-          Blob(b.get("type").asText(),
-            b.get("offset").asLong(), b.get("length").asLong(),
-            Option(b.get("snapshot-id")).map(_.asLong()).getOrElse(-1L),
-            Option(b.get("sequence-number")).map(_.asLong()).getOrElse(-1L),
-            Option(b.get("properties")).map(_.properties().asScala
-              .map(e => e.getKey -> e.getValue.asText()).toMap)
-              .getOrElse(Map.empty))
-        }
-      val props = Option(json.get("properties"))
-        .map(_.properties().asScala
-          .map(e => e.getKey -> e.getValue.asText()).toMap)
-        .getOrElse(Map.empty)
-      (blobs, props)
-    } finally f.close()
+    val props = Option(json.get("properties"))
+      .map(_.properties().asScala
+        .map(e => e.getKey -> e.getValue.asText()).toMap)
+      .getOrElse(Map.empty)
+    (blobs, props)
   }
 
   /** Read one deletion-vector blob at (offset, length) — the coordinates
@@ -171,23 +182,19 @@ object Puffin {
     * return the deleted row positions. Verifies the frame length, magic
     * (via the shared payload codec) and CRC-32 before trusting a bit.
     */
-  def readDeletionVector(path: String, offset: Long,
-      length: Long): Array[Long] = {
-    val f = new java.io.RandomAccessFile(
-      new File(graft.util.PathUtils.canonical(path)), "r")
-    try {
-      f.seek(offset)
-      val payloadLen = f.readInt() // BE
-      require(payloadLen.toLong == length - 8,
-        s"deletion-vector frame at $path:$offset says $payloadLen payload " +
-          s"bytes but blob length $length implies ${length - 8}")
-      val payload = new Array[Byte](payloadLen)
-      f.readFully(payload)
-      val expected = f.readInt() // BE
-      val crc = new CRC32(); crc.update(payload)
-      require(crc.getValue.toInt == expected,
-        s"deletion-vector CRC mismatch at $path:$offset")
-      graft.formats.delta.DeletionVectors.deserializeBitmap(payload)
-    } finally f.close()
+  def readDeletionVector(path: String, offset: Long, length: Long,
+      conf: Configuration): Array[Long] = open(path, conf) { (f, _) =>
+    f.seek(offset)
+    val payloadLen = f.readInt() // BE
+    require(payloadLen.toLong == length - 8,
+      s"deletion-vector frame at $path:$offset says $payloadLen payload " +
+        s"bytes but blob length $length implies ${length - 8}")
+    val payload = new Array[Byte](payloadLen)
+    f.readFully(payload)
+    val expected = f.readInt() // BE
+    val crc = new CRC32(); crc.update(payload)
+    require(crc.getValue.toInt == expected,
+      s"deletion-vector CRC mismatch at $path:$offset")
+    graft.formats.delta.DeletionVectors.deserializeBitmap(payload)
   }
 }

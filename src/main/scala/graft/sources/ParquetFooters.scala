@@ -184,6 +184,15 @@ object ParquetFooters {
     }
   }
 
+  /** A parquet reader of `path` whose read options come from `conf`.
+    * Opened from the `InputFile` alone, the reader builds them from a
+    * fresh default `Configuration` instead: the caller's settings are
+    * ignored, and the Hadoop default resources are parsed on every open.
+    */
+  def open(path: Path, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf, path).build())
+
   /** Read one file's footer → (recordCount, merged column stats).
     * `columns` projects stat extraction to the given dotted paths —
     * reference behavior: stats only for fields in the read schema
@@ -197,8 +206,7 @@ object ParquetFooters {
       return OrcFooters.readFooterStats(path, conf, columns)
     if (path.endsWith(".avro"))
       return AvroFiles.readFooterStats(path, conf)
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(path), conf))
+    val reader = open(new Path(path), conf)
     try {
       val footer = reader.getFooter
       val blocks = footer.getBlocks.asScala.toSeq

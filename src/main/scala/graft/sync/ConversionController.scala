@@ -15,8 +15,12 @@ class ConversionController {
     if (mode == SyncMode.Full) return fullSync(source, targets)
 
     val withMeta = targets.map(t => t -> t.tableMetadata())
+    // targets at the same instant share one answer from the source
+    val safeFrom = scala.collection.mutable.Map.empty[String, Boolean]
     val (incremental, full) = withMeta.partition { case (_, meta) =>
-      meta.exists(m => incrementalSufficient(source, m))
+      meta.exists(m => incrementalSufficient(source, m, earliest =>
+        safeFrom.getOrElseUpdate(earliest,
+          source.isIncrementalSyncSafeFrom(earliest))))
     }
     val fullOutcomes =
       if (full.isEmpty) Nil
@@ -52,11 +56,10 @@ class ConversionController {
     * instant (including pending commits).
     */
   private def incrementalSufficient(source: ConversionSource,
-      meta: SyncMetadata): Boolean = {
+      meta: SyncMetadata, safeFrom: String => Boolean): Boolean = {
     if (meta.sourceFormat.nonEmpty && meta.sourceFormat != source.sourceFormat)
       return false
-    val earliest = (meta.lastInstantSynced +: meta.pendingCommits)
-      .minBy(identity)(Ordering.fromLessThan(TableFormatSync.isBefore))
-    source.isIncrementalSyncSafeFrom(earliest)
+    safeFrom((meta.lastInstantSynced +: meta.pendingCommits)
+      .minBy(identity)(Ordering.fromLessThan(TableFormatSync.isBefore)))
   }
 }

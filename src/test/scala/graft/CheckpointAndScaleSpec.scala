@@ -222,13 +222,15 @@ class CheckpointAndScaleSpec extends SparkSuite {
       DeltaLog.checkpointPartFile(target, 0L, 1, 2)))
     // incomplete multi-part (1 of 2): must NOT be treated as complete;
     // the single-file checkpoint still wins
-    assert(DeltaLog.checkpointFilesAt(target, 0L, conf).size == 1)
+    assert(DeltaLog.latestCheckpoint(target, 0L, conf)
+      .map(_.files.size).contains(1))
     Files.copy(single, Paths.get(
       DeltaLog.checkpointPartFile(target, 0L, 2, 2)))
     Files.delete(single)
     // now only the complete 2-part checkpoint remains
-    assert(DeltaLog.latestCheckpoint(target, 0L, conf).contains(0L))
-    val parts = DeltaLog.checkpointFilesAt(target, 0L, conf)
+    val cp = DeltaLog.latestCheckpoint(target, 0L, conf)
+    assert(cp.map(_.version).contains(0L))
+    val parts = cp.get.files
     assert(parts.size == 2, parts.toString)
     // replay through the parts (each holds the full set here, so the
     // de-duplicating replay must still see every path)

@@ -30,14 +30,16 @@ class DeltaLogStateSpec extends SparkSuite {
 
   private val mapper = new ObjectMapper()
 
-  /** Reference: every commit JSON line present in the log, folded in
-    * order — the last action wins per kind, per domain and per appId.
+  /** Reference: every commit JSON line present in the log up to version
+    * `upTo`, folded in order — the last action wins per kind, per domain
+    * and per appId.
     */
-  private def jsonFold(dir: String): DeltaLogState = {
+  private def jsonFold(dir: String, upTo: Long = Long.MaxValue)
+      : DeltaLogState = {
     def strs(a: JsonNode): Seq[String] =
       if (a == null || a.isNull) Nil
       else a.elements().asScala.map(_.asText).toList
-    versionsOf(dir)
+    versionsOf(dir).filter(_ <= upTo)
       .flatMap(v => Files.readAllLines(
         Paths.get(DeltaLog.versionFile(dir, v))).asScala)
       .filter(_.nonEmpty).map(mapper.readTree)
@@ -240,53 +242,181 @@ class DeltaLogStateSpec extends SparkSuite {
     assert(strs(p.get("writerFeatures")) == before.writerFeatures, p)
   }
 
-  test("a 70-version table checkpointed at version 70 decodes its state " +
-    "in at most one Spark job") {
-    val dir = tmpDir("state_jobs")
-    def line(kind: String, action: Map[String, Any]) =
-      graft.util.Jsons.toJson(Map(kind -> action))
-    (0L to 70L).foreach { v =>
-      val header =
-        if (v > 0) Nil
-        else Seq(line("protocol",
-            Map("minReaderVersion" -> 1, "minWriterVersion" -> 2)),
-          line("metaData", Map("id" -> "t",
-            "format" -> Map("provider" -> "parquet", "options" -> Map.empty),
-            "schemaString" -> new org.apache.spark.sql.types.StructType()
-              .add("id", "long").json,
-            "partitionColumns" -> Nil, "configuration" -> Map.empty,
-            "createdTime" -> 1L)))
-      assert(DeltaLog.writeCommit(dir, v, (header ++ Seq(
-        line("add", Map("path" -> s"f$v.parquet",
-          "partitionValues" -> Map.empty, "size" -> 10L,
-          "modificationTime" -> v, "dataChange" -> true,
-          "stats" -> """{"numRecords":1}""")),
-        line("txn", Map("appId" -> s"app${v % 3}", "version" -> v))))
-        .iterator))
-    }
-    val versions = versionsOf(dir)
-    DeltaSnapshot.writeCheckpoint(spark, dir, 70L, schemaOf(dir))
+  // ---- hand-written commit lines over fake data files (nothing reads
+  // the files: state, checkpoints and diffs need only the log)
+  private def line(kind: String, action: Map[String, Any]) =
+    graft.util.Jsons.toJson(Map(kind -> action))
+  private def protocolLine(reader: Int, writer: Int,
+      readerFeatures: Seq[String] = Nil, writerFeatures: Seq[String] = Nil) =
+    line("protocol", Map("minReaderVersion" -> reader,
+      "minWriterVersion" -> writer) ++
+      (if (reader >= 3) Map("readerFeatures" -> readerFeatures)
+       else Map.empty) ++
+      (if (writer >= 7) Map("writerFeatures" -> writerFeatures)
+       else Map.empty))
+  private def metaLine(columns: Seq[String],
+      configuration: Map[String, String] = Map.empty) =
+    line("metaData", Map("id" -> "t",
+      "format" -> Map("provider" -> "parquet", "options" -> Map.empty),
+      "schemaString" -> columns.foldLeft(
+        new org.apache.spark.sql.types.StructType())(_.add(_, "long")).json,
+      "partitionColumns" -> Nil, "configuration" -> configuration,
+      "createdTime" -> 1L))
+  private def addLine(v: Long) = line("add", Map("path" -> s"f$v.parquet",
+    "partitionValues" -> Map.empty, "size" -> 10L,
+    "modificationTime" -> v, "dataChange" -> true,
+    "stats" -> """{"numRecords":1}"""))
+  private def txnLine(app: String, v: Long) =
+    line("txn", Map("appId" -> app, "version" -> v))
+  private def domainLine(domain: String, configuration: String,
+      removed: Boolean = false) =
+    line("domainMetadata", Map("domain" -> domain,
+      "configuration" -> configuration, "removed" -> removed))
 
+  /** `body`'s result and the Spark jobs it launched. */
+  private def jobsDuring[A](body: => A): (A, Seq[String]) = {
+    val sentinel = "jobsDuring sentinel"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(j.stageInfos.map(_.name).mkString("+"))
+        jobs.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(j.stageInfos.map(_.name).mkString("+")))
     }
     spark.sparkContext.addSparkListener(listener)
-    val st = try {
-      val st = DeltaSnapshot.state(spark, dir, versions)
-      // the listener bus is async: a one-job sentinel's start event
-      // arrives after every earlier one (FIFO bus)
-      val before = jobs.size
-      spark.sparkContext.parallelize(Seq(1), 1).count()
+    try {
+      val out = body
+      // the listener bus is async: a sentinel job's start event arrives
+      // after every earlier one (FIFO bus)
+      spark.sparkContext.setJobDescription(sentinel)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
       val deadline = System.nanoTime() + 10_000_000_000L
-      while (jobs.size <= before && System.nanoTime() < deadline)
+      while (!jobs.contains(sentinel) && System.nanoTime() < deadline)
         Thread.sleep(50)
-      st
+      assert(jobs.contains(sentinel))
+      (out, jobs.asScala.toSeq.filterNot(_ == sentinel))
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.size - 1 <= 1, s"jobs besides the sentinel: $jobs")
+  }
+
+  test("a 70-version table checkpointed at version 70 decodes its state " +
+    "in at most one Spark job") {
+    val dir = tmpDir("state_jobs")
+    (0L to 70L).foreach { v =>
+      val header =
+        if (v > 0) Nil else Seq(protocolLine(1, 2), metaLine(Seq("id")))
+      assert(DeltaLog.writeCommit(dir, v,
+        (header ++ Seq(addLine(v), txnLine(s"app${v % 3}", v))).iterator))
+    }
+    val versions = versionsOf(dir)
+    DeltaSnapshot.writeCheckpoint(spark, dir, 70L, schemaOf(dir))
+
+    val (st, jobs) = jobsDuring(DeltaSnapshot.state(spark, dir, versions))
+    assert(jobs.size <= 1, s"jobs: $jobs")
     assert(st == jsonFold(dir))
     assert(st.txns == Map("app0" -> 69L, "app1" -> 70L, "app2" -> 68L))
+  }
+
+  test("a source reading a growing table one version at a time equals " +
+    "the full-JSON fold at every version, and decodes afresh past a " +
+    "cleaned gap") {
+    val dir = tmpDir("state_fold")
+    val dv = Seq("deletionVectors")
+    val commits: Map[Long, Seq[String]] = Map(
+      0L -> Seq(protocolLine(1, 2), metaLine(Seq("id"))),
+      1L -> Seq(txnLine("app0", 1L)),
+      2L -> Seq(protocolLine(3, 7, dv, dv :+ "domainMetadata")),
+      4L -> Seq(metaLine(Seq("id", "n"), Map("k" -> "v1"))),
+      5L -> Seq(domainLine("d1", "c1")),
+      6L -> Seq(txnLine("app1", 6L)),
+      7L -> Seq(domainLine("d1", "", removed = true), domainLine("d2", "c2")),
+      8L -> Seq(metaLine(Seq("id", "n"), Map("k" -> "v2"))),
+      9L -> Seq(protocolLine(3, 7, dv :+ "timestampNtz",
+        dv ++ Seq("domainMetadata", "timestampNtz"))),
+      10L -> Seq(txnLine("app0", 10L)),
+      12L -> Seq(txnLine("app2", 12L)))
+    def commit(v: Long): Unit = assert(DeltaLog.writeCommit(dir, v,
+      (commits.getOrElse(v, Nil) :+ addLine(v)).iterator))
+    val src = new DeltaConversionSource(spark, dir, "t")
+    (0L to 11L).foreach { v =>
+      commit(v)
+      if (Set(3L, 6L, 10L)(v))
+        DeltaSnapshot.writeCheckpoint(spark, dir, v, schemaOf(dir))
+      assert(src.stateAt(versionsOf(dir)) == jsonFold(dir), s"version $v")
+    }
+    val held = src.stateAt(versionsOf(dir))
+    assert(held.protocol.exists(_.readerFeatures.contains("timestampNtz")))
+    assert(held.metaData.exists(m => m.configuration == Map("k" -> "v2") &&
+      m.schema.fieldNames.toSeq == Seq("id", "n")))
+    assert(held.domains.keySet == Set("d1", "d2") && held.domains("d1").removed)
+    assert(held.txns == Map("app0" -> 10L, "app1" -> 6L))
+    // earlier heads read by the same source still match
+    Seq(4L, 9L).foreach(v =>
+      assert(src.stateAt(versionsOf(dir).filter(_ <= v)) == jsonFold(dir, v)))
+
+    // version 12 carries the only app2 txn; cleanup after a checkpoint at
+    // 13 removes it together with the held head's version file
+    commit(12L); commit(13L)
+    DeltaSnapshot.writeCheckpoint(spark, dir, 13L, schemaOf(dir))
+    val ref = jsonFold(dir)
+    assert(ref.txns.get("app2").contains(12L))
+    assert(DeltaLog.cleanupLogBeforeCheckpoint(dir, conf) == 13)
+    assert(versionsOf(dir) == Seq(13L))
+    // a start below a gap is not folded from
+    assert(DeltaSnapshot.state(spark, dir, versionsOf(dir),
+      Some((11L, held))) == ref)
+    assert(src.stateAt(versionsOf(dir)) == ref)
+  }
+
+  test("a folded commit that raises an unsupported reader feature refuses " +
+    "as the full decode does") {
+    val dir = tmpDir("state_refuse")
+    assert(DeltaLog.writeCommit(dir, 0L, Iterator(protocolLine(1, 2),
+      metaLine(Seq("id")), addLine(0L))))
+    assert(DeltaLog.writeCommit(dir, 1L, Iterator(addLine(1L))))
+    DeltaSnapshot.writeCheckpoint(spark, dir, 1L, schemaOf(dir))
+    val src = new DeltaConversionSource(spark, dir, "t")
+    src.currentTable()
+    assert(DeltaLog.writeCommit(dir, 2L, Iterator(protocolLine(3, 7,
+      Seq("deletionVectors", "futureFeature"), Seq("deletionVectors")),
+      addLine(2L))))
+    val folded = intercept[UnsupportedOperationException](src.currentTable())
+    val decoded = intercept[UnsupportedOperationException](
+      new DeltaConversionSource(spark, dir, "t").currentTable())
+    assert(folded.getMessage.contains("futureFeature"), folded.getMessage)
+    assert(folded.getMessage == decoded.getMessage)
+  }
+
+  test("a table dropped and re-created at the same path: the same source " +
+    "reports the new schema") {
+    val dir = tmpDir("state_recreate")
+    (0 until 3).foreach(i => DeltaWrite.write(spark, dir,
+      Seq((i.toLong, s"v$i")).toDF("k", "v"), overwrite = false))
+    val src = new DeltaConversionSource(spark, dir, "t")
+    assert(src.currentTable().schema.fieldNames.toSeq == Seq("k", "v"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    (0 until 5).foreach(i => DeltaWrite.write(spark, dir,
+      Seq((i, s"n$i", i * 1.5)).toDF("a", "b", "c"), overwrite = false))
+    assert(versionsOf(dir).last == 4L)
+    assert(src.currentTable().schema.fieldNames.toSeq == Seq("a", "b", "c"))
+  }
+
+  test("a steady-state changeForCommit on a checkpointed table launches " +
+    "no Spark job") {
+    val dir = tmpDir("state_steady")
+    (0L to 10L).foreach { v =>
+      val header =
+        if (v > 0) Nil else Seq(protocolLine(1, 2), metaLine(Seq("id")))
+      assert(DeltaLog.writeCommit(dir, v, (header :+ addLine(v)).iterator))
+    }
+    DeltaSnapshot.writeCheckpoint(spark, dir, 10L, schemaOf(dir))
+    val src = new DeltaConversionSource(spark, dir, "t")
+    src.changeForCommit("10")
+    assert(DeltaLog.writeCommit(dir, 11L, Iterator(addLine(11L))))
+    val (change, jobs) = jobsDuring(src.changeForCommit("11"))
+    assert(jobs.isEmpty, s"jobs: $jobs")
+    assert(change.diff.added.fold(_.toSeq, _.collect().toSeq).map(_.path) ==
+      Seq(s"$dir/f11.parquet"))
   }
 }

@@ -298,7 +298,7 @@ class DvMaskSpec extends SparkSuite {
     val deleted = refs.map { r =>
       graft.util.PathUtils.canonical(r.referencedDataFile.get) ->
         Puffin.readDeletionVector(r.path, r.contentOffset.get,
-          r.contentSizeBytes.get).toSet
+          r.contentSizeBytes.get, conf).toSet
     }.toMap
     val want = reference(files.toSeq.map(f =>
       f.path -> deleted.getOrElse(f.path, Set.empty[Long])))

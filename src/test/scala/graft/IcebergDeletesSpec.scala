@@ -85,7 +85,8 @@ class IcebergDeletesSpec extends SparkSuite {
     val listPath = m.currentSnapshot.get.manifestList
     // the data-manifest view must still see exactly the one data file
     val dataManifests = IcebergManifests.readManifestList(listPath)
-    val entries = dataManifests.flatMap(IcebergManifests.readManifest)
+    val entries = dataManifests.flatMap(
+      IcebergManifests.readManifest(_, graft.util.HadoopConfs.session(spark)))
     assert(entries.size == 1)
     assert(entries.head.get("data_file")
       .asInstanceOf[org.apache.avro.generic.GenericRecord]

@@ -15,6 +15,8 @@ import graft.sync.TableFormatSync
   */
 class IcebergV3Spec extends SparkSuite {
 
+  private def hconf = graft.util.HadoopConfs.session(spark)
+
   private def syncNation(prefix: String): (String, graft.model.FileEntry) = {
     val stage = tmpDir(prefix + "_src")
     spark.read.parquet(s"${sf("sf0.001")}/nation.parquet")
@@ -41,14 +43,14 @@ class IcebergV3Spec extends SparkSuite {
     val blobs = Puffin.writeDeletionVectors(p, snapshotId = 42L,
       sequenceNumber = 7L, dvs)
     assert(blobs.size == 2)
-    val (read, props) = Puffin.readBlobs(p)
+    val (read, props) = Puffin.readBlobs(p, hconf)
     assert(props.get("created-by").contains("graft"))
     assert(read.map(_.blobType).distinct == Seq(Puffin.DeletionVectorV1))
     assert(read.map(_.snapshotId).distinct == Seq(42L))
     read.zip(dvs).foreach { case (b, dv) =>
       assert(b.properties("referenced-data-file") == dv.referencedDataFile)
       assert(b.properties("cardinality") == dv.positions.size.toString)
-      val pos = Puffin.readDeletionVector(p, b.offset, b.length)
+      val pos = Puffin.readDeletionVector(p, b.offset, b.length, hconf)
       assert(pos.toSeq.sorted == dv.positions.sorted)
     }
     // a flipped payload byte must fail the CRC, not decode quietly
@@ -57,7 +59,8 @@ class IcebergV3Spec extends SparkSuite {
       (bytes(read.head.offset.toInt + 9) ^ 0x1).toByte
     Files.write(Paths.get(p), bytes)
     val e = intercept[IllegalArgumentException] {
-      Puffin.readDeletionVector(p, read.head.offset, read.head.length)
+      Puffin.readDeletionVector(p, read.head.offset, read.head.length,
+        hconf)
     }
     assert(e.getMessage.contains("CRC"), e.getMessage)
   }
@@ -168,7 +171,7 @@ class IcebergV3Spec extends SparkSuite {
       .filter(r => IcebergManifests.contentOf(r) == 0)
       .map(_.get("manifest_path").toString)
       .find(_.contains("-append")).get
-    val firstRowIds = IcebergManifests.readManifest(appendManifest)
+    val firstRowIds = IcebergManifests.readManifest(appendManifest, hconf)
       .map { e =>
         val df = e.get("data_file")
           .asInstanceOf[org.apache.avro.generic.GenericRecord]
@@ -241,7 +244,7 @@ class IcebergV3Spec extends SparkSuite {
     assert(size < (1L << 21), s"puffin size $size for 1M positions")
     val t1 = System.nanoTime()
     val read = Puffin.readDeletionVector(p, blobs.head.offset,
-      blobs.head.length)
+      blobs.head.length, hconf)
     val readSec = (System.nanoTime() - t1) / 1e9
     assert(read.length == 1000000, read.length)
     assert(read(0) == 0L && read(999999) == 2999997L)
@@ -262,7 +265,7 @@ class IcebergV3Spec extends SparkSuite {
     val bytes = Files.readAllBytes(Paths.get(p))
     bytes(bytes.length - 8) = 1
     Files.write(Paths.get(p), bytes)
-    val e = intercept[IllegalArgumentException](Puffin.readBlobs(p))
+    val e = intercept[IllegalArgumentException](Puffin.readBlobs(p, hconf))
     assert(e.getMessage.contains("lz4"), e.getMessage)
   }
 
@@ -380,7 +383,7 @@ class IcebergV3Spec extends SparkSuite {
         m2.currentSnapshot.get.manifestList)
       .filter(r => IcebergManifests.contentOf(r) == 1)
       .map(_.get("manifest_path").toString)
-    val entries = dvManifests.flatMap(IcebergManifests.readManifest)
+    val entries = dvManifests.flatMap(IcebergManifests.readManifest(_, hconf))
       .filter(_.get("status").asInstanceOf[Int] !=
         IcebergManifests.Status.Deleted)
     assert(entries.nonEmpty)

@@ -28,6 +28,40 @@ class OrchestrationSpec extends SparkSuite {
     assert(new HudiConversionSource(spark, h, "customer").toDataFrame.count() == n)
   }
 
+  test("targets at the same instant share one incremental-safety check " +
+    "per sync") {
+    val data = tmpDir("safe_data")
+    val srcFile = Paths.get(sf("sf0.001/nation.parquet"))
+    Files.copy(srcFile, Paths.get(data, "f1.parquet"))
+    Paths.get(data, "f1.parquet").toFile.setLastModified(1000000L)
+    val i = tmpDir("safe_ice"); val h = tmpDir("safe_hudi")
+    val targets = Seq(new IcebergConversionTarget(spark, i),
+      new HudiConversionTarget(spark, h))
+    val src = new ParquetDirectorySource(spark, data, "nation")
+    val asked = new java.util.concurrent.atomic.AtomicInteger
+    val counting = new graft.spi.ConversionSource {
+      def sourceFormat: String = src.sourceFormat
+      def currentTable() = src.currentTable()
+      def currentSnapshot() = src.currentSnapshot()
+      def changeForCommit(commit: String) = src.changeForCommit(commit)
+      def commitsBacklog(lastSynced: String) = src.commitsBacklog(lastSynced)
+      def isIncrementalSyncSafeFrom(commit: String): Boolean = {
+        asked.incrementAndGet(); src.isIncrementalSyncSafeFrom(commit)
+      }
+    }
+    val controller = new ConversionController
+    val full = controller.sync(counting, targets)
+    assert(full.forall(o => o.status == "SUCCESS" &&
+      o.mode == graft.spi.SyncMode.Full), full.mkString(";"))
+    Files.copy(srcFile, Paths.get(data, "f2.parquet"))
+    Paths.get(data, "f2.parquet").toFile.setLastModified(2000000L)
+    asked.set(0)
+    val inc = controller.sync(counting, targets)
+    assert(inc.forall(o => o.status == "SUCCESS" &&
+      o.mode == graft.spi.SyncMode.Incremental), inc.mkString(";"))
+    assert(asked.get == 1)
+  }
+
   test("schema evolution: column added at source appears in target, old files read null") {
     import spark.implicits._
     val dataDir = tmpDir("evo_data")
