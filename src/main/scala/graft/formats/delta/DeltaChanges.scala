@@ -239,8 +239,8 @@ object DeltaChanges {
     val cache = scala.collection.mutable.Map.empty[Long, graft.model.TableSnapshot]
     def snapAt(v: Long): graft.model.TableSnapshot =
       if (v < 0)   // before the table existed: version 0 diffs vs nothing
-        graft.model.TableSnapshot(src.currentTable(),
-          spark.emptyDataset[graft.model.FileEntry], "-1")
+        graft.plans.SnapshotFileIndex.snapshot(spark, src.currentTable(),
+          "-1", Left(Vector.empty))
       else cache.getOrElseUpdate(v, src.snapshotAt(v))
     versions.map { v =>
       changesOf(spark, snapAt(v), snapAt(v - 1), src.tablePathForChanges, v)
@@ -280,17 +280,19 @@ object DeltaChanges {
     // a file whose LIVE ROWS may be new (or re-masked), a remove names a
     // file whose v-1 live rows may be gone
     def restricted(snap: graft.model.TableSnapshot,
-        paths: Either[Seq[String], DataFrame], tag: String): DataFrame = {
-      val sub = (paths match {
-        case Left(ps) => snap.files.filter(col("path").isInCollection(ps))
-        case Right(df) =>
-          snap.files.join(df, snap.files("path") === col("__p"), "left_semi")
-      }).as[graft.model.FileEntry]
-      val subSnap = snap.copy(files = sub,
-        commitId = snap.commitId + s"-cdf-$tag")
-      val out = DeltaRead.toKeyedDataFrame(spark, subSnap)
-      graft.plans.SnapshotFileIndex.invalidate(subSnap)
-      out
+        paths: Either[Seq[String], DataFrame]): DataFrame = {
+      val sub = (snap.listing.placed, paths) match {
+        case (Left(entries), Left(ps)) =>
+          val touched = ps.toSet
+          Left(entries.filter(e => touched(e.path)))
+        case (listing, _) =>
+          val files = graft.plans.Placement.dataset(spark, listing)
+          Right(paths.fold(ps => files.filter(col("path").isInCollection(ps)),
+            df => files.join(df, files("path") === col("__p"), "left_semi"))
+            .as[graft.model.FileEntry])
+      }
+      DeltaRead.toKeyedDataFrame(spark,
+        snap.copy(listing = new graft.plans.Listing(spark, sub)))
     }
 
     // PURE-APPEND fast path (guide §1.2): a small commit with adds, NO
@@ -304,26 +306,25 @@ object DeltaChanges {
     // after side still reads through the same keyed/DV-masked path).
     val pureAppend = (addPathSet, removePathSet) match {
       case (Some(adds), Some(Seq())) if adds.nonEmpty =>
-        graft.plans.SnapshotFileIndex.localFor(beforeSnap).exists { entries =>
+        beforeSnap.listing.placed.fold({ entries =>
           val before = entries.iterator.map(_.path).toSet
           !adds.exists(before.contains)
-        }
+        }, _ => false)
       case _ => false
     }
     if (pureAppend) {
       val cols = schema.fieldNames.toSeq.map(col)
-      return restricted(afterSnap, Left(addPathSet.get), s"a$v")
+      return restricted(afterSnap, Left(addPathSet.get))
         .select(cols :+ lit("insert").as("_change_type"): _*)
         .withColumn("_commit_version", lit(v))
     }
 
-    val after = restricted(afterSnap,
-      addPathSet.toLeft(addPaths), s"a$v")
+    val after = restricted(afterSnap, addPathSet.toLeft(addPaths))
     val before = restricted(beforeSnap,
       (addPathSet, removePathSet) match {
         case (Some(a), Some(r)) => Left(a ++ r)
         case _ => Right(addPaths.union(removePaths))
-      }, s"b$v")
+      })
 
     val key = Seq("__scan_path", "__scan_pos")
     val cols = schema.fieldNames.toSeq.map(col)

@@ -34,15 +34,15 @@ object DeltaClone {
     val src = new DeltaConversionSource(spark, srcPath,
       PathUtils.canonical(srcPath).stripSuffix("/").split('/').last)
     val snap = versionAsOf.map(src.snapshotAt).getOrElse(src.currentSnapshot())
-    val dv = DeltaRead.liveDvSummary(snap)
-    require(dv.files == 0L,
-      s"source has ${dv.files} file(s) with live deletion vectors — " +
+    val dv = snap.listing.summary
+    require(dv.dvFiles == 0L,
+      s"source has ${dv.dvFiles} file(s) with live deletion vectors — " +
         "shallow clone would share their DV lifecycle; compact the " +
         "source first (OPTIMIZE retires DVs)")
 
     val meta = src.currentMeta()
     val now = System.currentTimeMillis()
-    val listing = graft.plans.SnapshotFileIndex.listingFor(snap)
+    val listing = snap.listing.dataset
     val schemaJson = snap.table.schema.json
     import spark.implicits._
     val adds = listing.mapPartitions(_.map { fe =>
@@ -97,6 +97,6 @@ object DeltaClone {
       header ++ graft.util.StreamedLines.iterate(adds))
     if (!ok) throw new IllegalStateException(
       s"concurrent writer created version 0 first at $dstPath")
-    CloneResult(snap.files.count(), 0L)
+    CloneResult(snap.listing.fetched.count, 0L)
   }
 }

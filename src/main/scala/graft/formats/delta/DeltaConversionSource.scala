@@ -197,16 +197,6 @@ object DeltaRead {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions.col
 
-  /** Deletion-vector summary of a snapshot's live set: files with a DV
-    * and total deleted rows. Runs on the shared persisted listing.
-    */
-  final case class DvSummary(files: Long, rows: Long)
-
-  def liveDvSummary(snap: TableSnapshot): DvSummary = {
-    val s = graft.plans.SnapshotFileIndex.summaryFor(snap)
-    DvSummary(s.dvFiles, s.dvRows)
-  }
-
   def toDataFrame(spark: SparkSession, snap: TableSnapshot): DataFrame =
     toDataFrameImpl(spark, snap, Nil)
 
@@ -241,7 +231,7 @@ object DeltaRead {
     */
   private[graft] def scanFileFormat(snap: TableSnapshot)
       : org.apache.spark.sql.execution.datasources.FileFormat = {
-    graft.plans.SnapshotFileIndex.summaryFor(snap).formats match {
+    snap.listing.summary.formats match {
       case Seq() | Seq("parquet") =>
         new org.apache.spark.sql.execution.datasources.parquet
           .ParquetFileFormat with graft.plans.ListingFields
@@ -258,9 +248,6 @@ object DeltaRead {
     }
   }
 
-  private def listingFormats(snap: TableSnapshot): Seq[String] =
-    graft.plans.SnapshotFileIndex.summaryFor(snap).formats
-
   /** Record-level scan for all-avro snapshots: one executor task per
     * slice of the listing decodes its files via avro-core, hive
     * partition values appended from the metadata plane (typed by the
@@ -272,7 +259,7 @@ object DeltaRead {
     import org.apache.spark.sql.functions.lit
     import org.apache.spark.sql.types._
     val keepKeys = keys.nonEmpty
-    require(liveDvSummary(snap).files == 0L,
+    require(snap.listing.summary.dvFiles == 0L,
       "deletion vectors on an avro-file table are unsupported")
     val schema = snap.table.schema
     val partCols = snap.table.partitionFields.map(_.partitionColumnName)
@@ -280,7 +267,7 @@ object DeltaRead {
       schema.fields.filterNot(f => partCols.contains(f.name)))
     val dataJson = dataSchema.json
     val bconf = graft.util.HadoopConfs.broadcastSession(spark)
-    val listing = graft.plans.SnapshotFileIndex.listingFor(snap)
+    val listing = snap.listing.dataset
     val pc = partCols
     val rdd = listing.rdd.flatMap { fe =>
       val sch = org.apache.spark.sql.types.DataType.fromJson(dataJson)
@@ -316,7 +303,7 @@ object DeltaRead {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val schema = snap.table.schema
     val partCols = snap.table.partitionFields.map(_.partitionColumnName).toSet
-    if (listingFormats(snap) == Seq("avro"))
+    if (snap.listing.summary.formats == Seq("avro"))
       return avroScan(spark, snap, keys)
     // column-mapped tables: the parquet files spell data columns by their
     // PHYSICAL names — scan under those, then rename back to logical.
@@ -361,7 +348,7 @@ object DeltaRead {
       index.dataSchema, None, scanFileFormat(scanSnap), Map.empty)(cs)
     val df = cs.baseRelationToDataFrame(relation)
     val live =
-      if (liveDvSummary(scanSnap).files == 0L) df
+      if (scanSnap.listing.summary.dvFiles == 0L) df
       else {
         import org.apache.spark.sql.GraftShims.{column, expression}
         df.filter(!column(graft.plans.DvContains(expression(keyCol(ScanDv)),

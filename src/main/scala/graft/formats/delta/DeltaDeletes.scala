@@ -291,7 +291,7 @@ object DeltaDeletes {
       val keyed = DeltaRead.toKeyedDataFrame(spark, scanSnap, withDv = true)
       val info = DeltaRowTracking.liveRowInfo(spark, c.tablePath,
         c.versions)
-      val nFiles = graft.plans.SnapshotFileIndex.listingFor(snap).count()
+      val nFiles = snap.listing.fetched.count
       val right =
         if (nFiles * 150L <= 64L * 1024 * 1024) broadcast(info) else info
       def mat(name: String): Column =
@@ -527,7 +527,7 @@ object DeltaDeletes {
     import spark.implicits._
     val tp = snap.table.basePath
     val bconf = HadoopConfs.broadcastSession(spark)
-    val listing = graft.plans.SnapshotFileIndex.listingFor(snap)
+    val listing = snap.listing.dataset
 
     // one bitmap per affected data file, ONE DV FILE per write task
     // (delta-spark's shape: descriptors share the file, differ by
@@ -751,6 +751,5 @@ object DeltaDeletes {
     } else
       DeltaConflicts.commitWithRetry(spark, tablePath, version,
         header ++ dvIt ++ extraLines, read)
-    graft.plans.SnapshotFileIndex.invalidate(plan.snap)
   }
 }

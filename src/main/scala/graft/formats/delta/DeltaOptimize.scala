@@ -84,8 +84,7 @@ object DeltaOptimize {
       where: Option[String] = None): RewriteResult = {
     import spark.implicits._
     val snap = sourceOf(spark, tablePath).currentSnapshot()
-    val listing = filterByPartition(snap,
-      graft.plans.SnapshotFileIndex.listingFor(snap), where)
+    val listing = filterByPartition(snap, snap.listing.dataset, where)
 
     // partition key = canonical partitionValues rendering; a partition is
     // eligible when compaction changes its layout: >=2 small files to
@@ -114,8 +113,7 @@ object DeltaOptimize {
     if (agg.getLong(0) == 0L) return NoOp
     val (nOld, oldBytes) = (agg.getLong(0), agg.getLong(1))
     // DV-applied rows of ONLY the candidate files, via a sub-snapshot
-    val sub = snap.copy(files = candidates,
-      commitId = snap.commitId + "-compact")
+    val sub = snap.withFiles(candidates)
     val rt = DeltaDeletes.rowTrackingCtx(spark, tablePath, snap,
       sourceOf(spark, tablePath))
     val rows = rewriteRows(spark, sub, rt)
@@ -131,7 +129,6 @@ object DeltaOptimize {
       else rows.repartition(nOut.toInt)
     val wrote = commitRewrite(spark, tablePath, snap, candidates, packed,
       "optimize", rt)
-    graft.plans.SnapshotFileIndex.invalidate(sub)
     RewriteResult(nOld, oldBytes, wrote)
   }
 
@@ -152,8 +149,7 @@ object DeltaOptimize {
     cols.foreach(c => require(schema.fieldNames.contains(c),
       s"zorder column $c is not in the table schema " +
         schema.fieldNames.mkString("[", ",", "]")))
-    val listing = filterByPartition(snap,
-      graft.plans.SnapshotFileIndex.listingFor(snap), where)
+    val listing = filterByPartition(snap, snap.listing.dataset, where)
       // lazy pin + emptiness answered by the sizing aggregate (see
       // compact) — two jobs saved per rewrite
       .localCheckpoint(eager = false)
@@ -162,9 +158,7 @@ object DeltaOptimize {
     val (nOld, oldBytes) = (agg.getLong(0), agg.getLong(1))
 
     // rows of ONLY the selected files (whole table when no WHERE)
-    val sub =
-      if (where.isEmpty) snap
-      else snap.copy(files = listing, commitId = snap.commitId + "-zw")
+    val sub = if (where.isEmpty) snap else snap.withFiles(listing)
     val rt = DeltaDeletes.rowTrackingCtx(spark, tablePath, snap,
       sourceOf(spark, tablePath))
     val rows = rewriteRows(spark, sub, rt)
@@ -175,7 +169,6 @@ object DeltaOptimize {
       nOut.toInt, partCols, inputBytes = oldBytes)
     val wrote = commitRewrite(spark, tablePath, snap,
       listing, clustered, "zorder", rt)
-    if (where.isDefined) graft.plans.SnapshotFileIndex.invalidate(sub)
     RewriteResult(nOld, oldBytes, wrote)
   }
 
@@ -293,7 +286,6 @@ object DeltaOptimize {
     } else
       DeltaConflicts.commitWithRetry(spark, tablePath, version,
         header ++ streamOf(removes) ++ addIt)
-    graft.plans.SnapshotFileIndex.invalidate(snap)
     listed.size.toLong
   }
 

@@ -51,8 +51,8 @@ object DeltaRestore {
         coalesce(col("deletionVector.pathOrInlineDv"), lit("")),
         coalesce(col("deletionVector.offset").cast("string"), lit("")),
         coalesce(col("deletionVector.cardinality").cast("string"), lit(""))))
-    val curFiles = keyed(graft.plans.SnapshotFileIndex.listingFor(cur))
-    val tgtFiles = keyed(graft.plans.SnapshotFileIndex.listingFor(target))
+    val curFiles = keyed(cur.listing.dataset)
+    val tgtFiles = keyed(target.listing.dataset)
 
     val toAdd = tgtFiles.join(curFiles.select(col("__k").as("__ck")),
         col("__k") === col("__ck"), "left_anti")
@@ -145,7 +145,6 @@ object DeltaRestore {
     if (!ok) throw new IllegalStateException(
       s"concurrent writer committed version $newV first at $tablePath — " +
         "re-run RESTORE against the new snapshot")
-    graft.plans.SnapshotFileIndex.invalidate(cur)
     RestoreResult(nAdd, nRemove, newV)
   }
 }

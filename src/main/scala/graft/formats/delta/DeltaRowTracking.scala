@@ -188,7 +188,7 @@ object DeltaRowTracking {
            else Nil)).json))
     val keyed = DeltaRead.toKeyedDataFrame(spark, augmented)
     val info = liveRowInfo(spark, tablePath, versions)
-    val nFiles = graft.plans.SnapshotFileIndex.listingFor(snap).count()
+    val nFiles = snap.listing.fetched.count
     val right =
       if (nFiles * 150L <= 64L * 1024 * 1024) broadcast(info) else info
     val matRid: org.apache.spark.sql.Column =

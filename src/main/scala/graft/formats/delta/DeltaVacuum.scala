@@ -45,7 +45,7 @@ object DeltaVacuum {
     val tp = snap.table.basePath
 
     // reference set 1: live data files + their DV files
-    val listing = graft.plans.SnapshotFileIndex.listingFor(snap)
+    val listing = snap.listing.dataset
     val liveRefs: Dataset[String] = listing.flatMap { f =>
       f.path +: f.deletionVector.toSeq
         .filter(_.storageType != "i")
@@ -123,7 +123,6 @@ object DeltaVacuum {
       }
     }
 
-    graft.plans.SnapshotFileIndex.invalidate(snap)
     VacuumResult(deleted, bytes, scanned, scanned - deleted)
   }
 

@@ -107,7 +107,7 @@ object DeltaWrite {
     val removes: Iterator[String] = prevSnap match {
       case None => Iterator.empty
       case Some(snap) =>
-        val lines = graft.plans.SnapshotFileIndex.listingFor(snap)
+        val lines = snap.listing.dataset
           .mapPartitions(_.map(fe => Jsons.toJson(Map("remove" -> Map(
             "path" -> PathUtils.toDeltaUri(PathUtils.relativize(tp, fe.path)),
             "deletionTimestamp" -> now,
@@ -158,7 +158,6 @@ object DeltaWrite {
         // intervening commit that doesn't change metadata/protocol —
         // delta-spark's most-retryable transaction class
         DeltaConflicts.commitWithRetry(spark, tablePath, version, allLines)
-    prevSnap.foreach(graft.plans.SnapshotFileIndex.invalidate)
     WriteResult(listed.size.toLong, 0L, landed)
   }
 

@@ -3,7 +3,7 @@ package graft.formats.hudi
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.{FileEntry, PartitionMember, TableSnapshot}
+import graft.model.{FileEntry, PartitionMember}
 import graft.util.PathUtils
 
 /** Hudi incremental query (read-optimized): the rows ADDED in the
@@ -56,9 +56,9 @@ object HudiChanges {
             s.fileSizeInBytes, s.numWrites, "parquet", pv, Nil,
             HudiTimeline.instantMillis(instant))
         }
-        val snap = TableSnapshot(table, spark.createDataset(entries),
-          s"$instant-incr")
-        graft.formats.delta.DeltaRead.toDataFrame(spark, snap)
+        graft.formats.delta.DeltaRead.toDataFrame(spark,
+          graft.plans.SnapshotFileIndex.snapshot(spark, table, instant,
+            Left(entries.toIndexedSeq)))
           .withColumn("_commit_instant", lit(instant))
     }
     perInstant.reduceOption(_ unionByName _).getOrElse {

@@ -39,7 +39,7 @@ object HudiClustering {
         "clustering rewrite would drop their row-level changes; run " +
         "GRAFT OPTIMIZE (log compaction) first")
 
-    val listing = graft.plans.SnapshotFileIndex.listingFor(snap)
+    val listing = snap.listing.dataset
       .localCheckpoint(eager = false)   // lazy pin: sizing agg materializes
     val agg0 = listing.agg(count(lit(1)), sum("fileSizeBytes")).head()
     val (nOld, oldBytes) = (agg0.getLong(0), agg0.getLong(1))
@@ -63,8 +63,8 @@ object HudiClustering {
     val wrote = adds.count()
 
     // full-set sync: every old group replaced → one replacecommit
-    val altered = snap.copy(files = adds,
-      commitId = s"${System.currentTimeMillis()}-cluster")
+    val altered = snap.withFiles(adds)
+      .copy(commitId = s"${System.currentTimeMillis()}-cluster")
     val target = new HudiConversionTarget(spark, path)
     // pin the planning instant: a concurrent commit landing since
     // currentSnapshot() must fail this CAS loudly — a silent rebase would
@@ -73,7 +73,6 @@ object HudiClustering {
       altered, src.sourceFormat, expectBase = Some(snap.commitId))
     outcomes.find(_.status != "SUCCESS").foreach(o =>
       throw new IllegalStateException(s"hudi clustering failed: $o"))
-    graft.plans.SnapshotFileIndex.invalidate(snap)
     Result(nOld, oldBytes, wrote)
   }
 }

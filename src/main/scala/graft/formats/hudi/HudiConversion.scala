@@ -232,14 +232,16 @@ class HudiConversionSource(spark: SparkSession, tablePath: String,
       instants.lastOption.map(_.toLong).getOrElse(0L))
   }
 
-  /** Stat enrichment of a live listing, decoded where [[Placement]] puts
-    * it: the metadata index serves stats when the table has one (zero
-    * footer opens — reference HudiFileStatsExtractor.java:136-188
-    * metadata-table path); files absent from it fall back to a footer read
-    * (:115-126) under the session's Hadoop conf. The placement's inputs
-    * are the index deltas plus one per listed file, the footer it may
-    * open: counted, not sized, since a footer read is bounded by the
-    * footer and not by the file. `at` pins a placement for tests.
+  /** Stat enrichment of a live listing, in two steps, each placed by
+    * [[Placement]] on what it reads. First the metadata index, which
+    * serves stats when the table has one (zero footer opens — reference
+    * HudiFileStatsExtractor.java:136-188 metadata-table path): its inputs
+    * are the index deltas. Then the listed files the index lacks fall
+    * back to a footer read (:115-126) under the session's Hadoop conf:
+    * those footers are the step's inputs, counted, not sized, since a
+    * footer read is bounded by the footer and not by the file. An index
+    * read in tasks keeps the footer step there too. `at` pins both
+    * placements for tests.
     */
   private[graft] def toFileEntries(
       rows: Seq[(String, HudiTimeline.WriteStat, String)],
@@ -249,21 +251,29 @@ class HudiConversionSource(spark: SparkSession, tablePath: String,
       (PathUtils.resolve(tablePath, s.path), s.fileSizeInBytes, part, instant)
     }
     val deltas = HudiMetadataIndex.deltas(tablePath)
-    val placement = at.getOrElse(
-      Placement.of(rows.size + deltas.size, deltas.view.map(_.size)))
-    HudiMetadataIndex.read(spark, deltas, placement) match {
-      case Left(index) =>
-        val byPath = index.iterator.map(e => e.path -> e).toMap
+    val index = HudiMetadataIndex.read(spark, deltas,
+      at.getOrElse(Placement.of(deltas.map(_.size))))
+    // the index hits, when the index and the footer step are on the driver
+    val driverHits = index.swap.toOption.flatMap { entries =>
+      val hits = entries.iterator.filter(_.columnStats.nonEmpty)
+        .map(e => e.path -> e).toMap
+      val footers = input.count(r => !hits.contains(r._1))
+      Option.when(at.getOrElse(Placement.of(footers, Nil)) ==
+        Placement.Driver)(hits)
+    }
+    driverHits match {
+      case Some(hits) =>
         val conf = graft.util.HadoopConfs.session(spark)
         Left(input.toIndexedSeq.map { case (path, size, part, instant) =>
           HudiMetadataIndex.fileEntry(conf, path, size, part, instant,
-            byPath.get(path).map(e => (e.recordCount, e.columnStats)))
+            hits.get(path).map(e => (e.recordCount, e.columnStats)))
         })
-      case Right(index) =>
+      case None =>
         val bconf = graft.util.HadoopConfs.broadcastSession(spark)
         Right(graft.util.Par.ds(spark, input, 128)
           .toDF("path", "size", "part", "instant")
-          .join(index.select("path", "recordCount", "columnStats"),
+          .join(Placement.dataset(spark, index)
+              .select("path", "recordCount", "columnStats"),
             Seq("path"), "left")
           .as[(String, Long, String, String, Option[Long],
             Option[Seq[FileColumnStat]])]

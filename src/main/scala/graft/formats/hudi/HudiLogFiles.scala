@@ -554,11 +554,9 @@ object HudiLogFiles {
     // uncommitted log files are invisible to readers (the timeline is
     // the only log-file source) — one full batch pass saved per upsert
     val routed = routeToGroups(spark, src, snap, proj, keyCols)
-    val deltas = writeGroupLogs(spark, src, tablePath, routed, schema,
+    writeGroupLogs(spark, src, tablePath, routed, schema,
       HudiTimeline.newInstant(tablePath), AvroDataBlock, schema.json,
       dupCheckKeys = keyCols)
-    graft.plans.SnapshotFileIndex.invalidate(snap)
-    deltas
   }
 
   /** Route `proj` rows (table-schema projection) to their owning file
@@ -570,7 +568,7 @@ object HudiLogFiles {
       snap: graft.model.TableSnapshot, proj: DataFrame,
       keyCols: Seq[String]): DataFrame = {
     import spark.implicits._
-    val groupOf = graft.plans.SnapshotFileIndex.listingFor(snap)
+    val groupOf = snap.listing.dataset
       .map(fe => (fe.path, HudiTimeline.fileId(fe.path)))
       .toDF("__scan_path", "__fid")
     val keyed = graft.formats.delta.DeltaRead
@@ -711,11 +709,9 @@ object HudiLogFiles {
     val keySchema = StructType(snap.table.schema.fields
       .filter(f => keyCols.contains(f.name)))
     val routed = routeToGroups(spark, ro, snap, victims, keyCols)
-    val n = writeGroupLogs(spark, ro, tablePath, routed, keySchema,
+    writeGroupLogs(spark, ro, tablePath, routed, keySchema,
       HudiTimeline.newInstant(tablePath), DeleteBlock,
       snap.table.schema.json)
-    graft.plans.SnapshotFileIndex.invalidate(snap)
-    n
   }
 
   /** Row-level UPDATE on a MERGE_ON_READ table: the matching real-time
@@ -835,7 +831,6 @@ object HudiLogFiles {
       HudiTimeline.tableName(tablePath).getOrElse("table"), instant,
       Left(stats.result().toIndexedSeq.map(s =>
         ("", s.path, s.fileSizeInBytes, false))))
-    graft.plans.SnapshotFileIndex.invalidate(snap)
     total
   }
 

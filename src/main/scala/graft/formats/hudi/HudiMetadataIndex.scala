@@ -77,19 +77,23 @@ object HudiMetadataIndex {
   /** One index delta: the instant that wrote it and its JSON sidecar or
     * parquet directory.
     */
-  private[hudi] case class IndexDelta(instant: String,
+  private[graft] case class IndexDelta(instant: String,
       path: java.nio.file.Path) {
     def isParquet: Boolean = Files.isDirectory(path)
-    /** Bytes a read of it costs. A parquet directory is not listed here,
-      * so its size is unknown and it keeps the read in tasks.
+    /** Bytes a read of it costs: the JSON sidecar, or the parquet
+      * directory's part files.
       */
-    def size: Option[Long] = if (isParquet) None else Some(Files.size(path))
+    def size: Option[Long] = Some(
+      if (!isParquet) Files.size(path)
+      else Using.resource(Files.list(path))(_.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-"))
+        .map(p => Files.size(p)).sum))
   }
 
   /** The index's deltas in instant order; empty when the table has no
     * index (readers fall back to footers).
     */
-  private[hudi] def deltas(tablePath: String): Seq[IndexDelta] = {
+  private[graft] def deltas(tablePath: String): Seq[IndexDelta] = {
     val dir = resolvedDir(tablePath)
     if (!Files.exists(dir)) return Nil
     Using.resource(Files.list(dir))(_.iterator().asScala.flatMap { p =>
@@ -135,37 +139,36 @@ object HudiMetadataIndex {
     (e._2.lastModifiedMillis, e._1)
 
   /** The merged index decoded where `at` puts it. JSON sidecars parse on
-    * the driver in both placements; parquet deltas are a Spark scan.
+    * the driver in both placements. Parquet deltas are one Spark scan
+    * under the fixed `FileEntry` schema, so no job infers it; a column
+    * that a delta written by older code lacks reads as null.
     */
-  private[hudi] def read(spark: SparkSession, deltas: Seq[IndexDelta],
+  private[graft] def read(spark: SparkSession, deltas: Seq[IndexDelta],
       at: Placement): Placed[FileEntry] = {
     import spark.implicits._
     val (parquet, json) = deltas.partition(_.isParquet)
     val fromJson = json.flatMap(d => jsonFileEntries(d.path).map((d.instant, _)))
+    val schema = org.apache.spark.sql.Encoders.product[FileEntry].schema
+    // each row tagged with its delta's instant (the directory name)
+    val fromParquet = Option.when(parquet.nonEmpty)(spark.read.schema(schema)
+      .parquet(parquet.map(_.path.toString): _*)
+      .select(regexp_extract(input_file_name(), "([^/]+)/[^/]+$", 1)
+        .as("_1"), struct(schema.fieldNames.toIndexedSeq.map(col): _*)
+        .as("_2"))
+      .as[(String, FileEntry)])
     at match {
       case Placement.Driver =>
-        val fromParquet = parquet.flatMap(d =>
-          FileEntry.aligned(spark.read.parquet(d.path.toString)).collect()
-            .map((d.instant, _)))
         val best = scala.collection.mutable.HashMap.empty[String,
           (String, FileEntry)]
         val ord = Ordering[(Long, String)]
-        (fromParquet ++ fromJson).foreach { e =>
+        (fromParquet.toSeq.flatMap(_.collect()) ++ fromJson).foreach { e =>
           if (best.get(e._2.path).forall(b => ord.gteq(winner(e), winner(b))))
             best(e._2.path) = e
         }
         Left(best.valuesIterator.map(_._2).toIndexedSeq)
       case Placement.Tasks =>
-        val fields = org.apache.spark.sql.Encoders.product[FileEntry].schema
-          .fieldNames.toIndexedSeq.map(col)
-        val tagged = Seq(
-          Option.when(parquet.nonEmpty)(FileEntry.aligned(
-              spark.read.parquet(parquet.map(_.path.toString): _*))
-            .select(regexp_extract(input_file_name(), "([^/]+)/[^/]+$", 1)
-              .as("_1"), struct(fields: _*).as("_2"))
-            .as[(String, FileEntry)]),
+        val tagged = (fromParquet.toSeq ++
           Option.when(fromJson.nonEmpty)(spark.createDataset(fromJson)))
-          .flatten
         if (tagged.isEmpty) Right(spark.emptyDataset[FileEntry])
         else Right(tagged.reduce(_ union _)
           .groupBy(col("_2.path"))

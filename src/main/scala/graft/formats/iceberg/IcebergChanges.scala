@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{FileEntry, TableSnapshot}
+import graft.plans.Placement
+import graft.plans.Placement.Placed
 import graft.util.PathUtils
 
 /** Row-level change feed over an Iceberg table — the Iceberg twin of
@@ -40,9 +42,16 @@ object IcebergChanges {
       s"no snapshots in ($fromSeq, $toSeq] at $tablePath — expired?")
     val src = new IcebergConversionSource(spark, tablePath,
       PathUtils.canonical(tablePath).stripSuffix("/").split('/').last)
+    // a sequence's listing is immutable (manifests are write-once), so
+    // one snapshot per sequence serves step N's after side and step
+    // N+1's before side: one manifest decode per boundary
+    val snaps = scala.collection.mutable.Map.empty[Long, Option[TableSnapshot]]
+    def snapAt(s: Long): Option[TableSnapshot] = snaps.getOrElseUpdate(s,
+      if (s == 0 || m.snapshotBySeq(s).isEmpty) None
+      else Some(src.snapshotAtSeq(m, s, src.currentTable(), s.toString)))
     var prev = fromSeq
     val parts = steps.map { s =>
-      val d = changesOf(spark, src, m, tablePath, prev, s)
+      val d = changesOf(spark, src, m, tablePath, prev, s, snapAt)
       prev = s.sequenceNumber
       d
     }
@@ -51,7 +60,8 @@ object IcebergChanges {
 
   private def changesOf(spark: SparkSession, src: IcebergConversionSource,
       m: IcebergTableMetadata, tablePath: String, prevSeq: Long,
-      snap: IcebergSnapshot): DataFrame = {
+      snap: IcebergSnapshot, snapAt: Long => Option[TableSnapshot])
+      : DataFrame = {
     import spark.implicits._
     val seq = snap.sequenceNumber
     val schema = m.schema
@@ -66,39 +76,9 @@ object IcebergChanges {
     // (file, pos) everywhere — by definition no row-level change
     if (snap.operation == "replace") return emptyFeed
 
-    // the UNFILTERED listing at a sequence is immutable (manifests are
-    // write-once), so it is persisted under a per-sequence key and
-    // SHARED: step N's after-read, step N+1's before-read and both
-    // added/removed diffs at that boundary all reuse one manifest scan
-    // instead of re-running it (the safe half of the sharing the r13
-    // collision fix removed — the FILTERED per-step listings below keep
-    // their unique ids)
-    def snapAt(s: Long): Option[TableSnapshot] =
-      if (s == 0 || m.snapshotBySeq(s).isEmpty) None
-      else Some(src.snapshotAtSeq(m, s, src.currentTable(), s"$s-cdfbase"))
-    def listingAt(s: Long): Dataset[FileEntry] =
-      snapAt(s).map(graft.plans.SnapshotFileIndex.listingFor)
-        .getOrElse(spark.emptyDataset[FileEntry])
-    // SMALL tables diff their listings DRIVER-SIDE (guide §1.2): the
-    // per-sequence listing is already collected once by the listing
-    // fast path (localFor), so added/removed and the touched-file
-    // restriction become Set operations instead of 2 anti-joins + 2
-    // semi-joins worth of Spark jobs per step. Tables past the
-    // localMax threshold keep the distributed path below (None).
-    val beforeLocal: Option[IndexedSeq[FileEntry]] =
-      snapAt(prevSeq).map(graft.plans.SnapshotFileIndex.localFor)
-        .getOrElse(Some(IndexedSeq.empty))
-    val afterLocal: Option[IndexedSeq[FileEntry]] =
-      snapAt(seq).map(graft.plans.SnapshotFileIndex.localFor)
-        .getOrElse(Some(IndexedSeq.empty))
-    lazy val beforeListing = listingAt(prevSeq).select("path").as[String]
-    lazy val afterListing = listingAt(seq).select("path").as[String]
-    lazy val added = afterListing.toDF("__p")
-      .join(beforeListing.toDF("__q"), col("__p") === col("__q"),
-        "left_anti")
-    lazy val removed = beforeListing.toDF("__p")
-      .join(afterListing.toDF("__q"), col("__p") === col("__q"),
-        "left_anti")
+    def listingAt(s: Long): Placed[FileEntry] =
+      snapAt(s).map(_.listing.placed).getOrElse(Left(Vector.empty))
+    val (beforeListing, afterListing) = (listingAt(prevSeq), listingAt(seq))
 
     // delete files NEW in this step widen the touched set
     val prevDeletePaths =
@@ -134,49 +114,28 @@ object IcebergChanges {
         .withColumn("__scan_path", lit(null).cast("string"))
         .withColumn("__scan_pos", lit(null).cast("long"))
 
-    // UNIQUE id per read: adjacent steps read the SAME sequence with
-    // DIFFERENT touched sets (step N's after vs step N+1's before) —
-    // under a shared "$at-cdf" id the execution-time listing cache
-    // (SnapshotFileIndex.listingFor keys on basePath#commitId) served
-    // one step's filtered listing to the other, surfacing phantom
-    // deletes/inserts in multi-step feeds
-    def keyedRead(at: Long, files: Dataset[FileEntry]): DataFrame = {
-      val sub = TableSnapshot(src.currentTable(), files,
-        s"$at-cdf-${java.util.UUID.randomUUID()}")
-      val out = IcebergDeletes.scan(spark, sub, m, at, tablePath, keyed = true)
-      graft.plans.SnapshotFileIndex.invalidate(sub)
-      out
-    }
+    /** The keyed, delete-masked read of `files` as of sequence `at`. */
+    def read(at: Long, files: Placed[FileEntry]): DataFrame =
+      if (at == 0 || m.snapshotBySeq(at).isEmpty) emptyKeyed
+      else IcebergDeletes.scan(spark, graft.plans.SnapshotFileIndex.snapshot(
+        spark, src.currentTable(), at.toString, files), m, at, tablePath,
+        keyed = true)
 
-    def read(at: Long, touched: DataFrame): DataFrame = {
-      val listing = listingAt(at)
-      if (at == 0 || m.snapshotBySeq(at).isEmpty) return emptyKeyed
-      val files =
-        if (newEq) listing   // equality deletes reach any file: full diff
-        else listing.join(touched, listing("path") === touched("__p"),
-          "left_semi").as[FileEntry]
-      keyedRead(at, files)
-    }
-
-    def readLocal(at: Long, entries: IndexedSeq[FileEntry],
-        touched: Seq[String]): DataFrame = {
-      if (at == 0 || m.snapshotBySeq(at).isEmpty) return emptyKeyed
-      val sel =
-        if (newEq) entries
-        else { val t = touched.toSet; entries.filter(e => t(e.path)) }
-      keyedRead(at, spark.createDataset(sel))
-    }
-
-    val (after, before) = (beforeLocal, afterLocal) match {
-      case (Some(bl), Some(al)) if newPosFiles.isEmpty =>
-        // driver-side diff: the same path-equality comparisons the
-        // anti-/semi-joins made, on listings the fast path already holds
+    val (after, before) = (beforeListing, afterListing) match {
+      case (Left(bl), Left(al)) if newPosFiles.isEmpty =>
+        // both listings on the driver: the diff and the touched-file
+        // restriction are set operations on the same path equality the
+        // anti-/semi-joins below compare, with no Spark job
         val beforePaths = bl.iterator.map(_.path).toSet
         val afterPaths = al.iterator.map(_.path).toSet
         val addedP = al.iterator.map(_.path)
           .filterNot(beforePaths).toSeq
         val removedP = bl.iterator.map(_.path)
           .filterNot(afterPaths).toSeq
+        def touching(entries: IndexedSeq[FileEntry], touched: Seq[String])
+            : Placed[FileEntry] =
+          if (newEq) Left(entries)   // equality deletes reach any file
+          else { val t = touched.toSet; Left(entries.filter(e => t(e.path))) }
         // PURE-APPEND step fast path (guide §1.2): no new delete files,
         // nothing removed, every added path absent from the before
         // listing — the before side restricted to the touched set is
@@ -186,15 +145,31 @@ object IcebergChanges {
         // delete-masked path, so prior-sequence delete semantics are
         // untouched).
         if (newDeletes.isEmpty && removedP.isEmpty && addedP.nonEmpty)
-          return readLocal(seq, al, addedP)
+          return read(seq, touching(al, addedP))
             .select(cols :+ lit("insert").as("_change_type"): _*)
             .withColumn("_commit_version", lit(seq))
-        (readLocal(seq, al, (addedP ++ dvTargets).distinct),
-          readLocal(prevSeq, bl,
-            (addedP ++ removedP ++ dvTargets).distinct))
+        (read(seq, touching(al, (addedP ++ dvTargets).distinct)),
+          read(prevSeq, touching(bl,
+            (addedP ++ removedP ++ dvTargets).distinct)))
       case _ =>
-        (read(seq, added.union(posTargets)),
-          read(prevSeq, added.union(removed).union(posTargets)))
+        val beforeFiles = Placement.dataset(spark, beforeListing)
+        val afterFiles = Placement.dataset(spark, afterListing)
+        val beforePaths = beforeFiles.select("path").as[String]
+        val afterPaths = afterFiles.select("path").as[String]
+        val added = afterPaths.toDF("__p")
+          .join(beforePaths.toDF("__q"), col("__p") === col("__q"),
+            "left_anti")
+        val removed = beforePaths.toDF("__p")
+          .join(afterPaths.toDF("__q"), col("__p") === col("__q"),
+            "left_anti")
+        def touching(files: Dataset[FileEntry], touched: DataFrame)
+            : Placed[FileEntry] =
+          if (newEq) Right(files)   // equality deletes reach any file
+          else Right(files.join(touched, files("path") === touched("__p"),
+            "left_semi").as[FileEntry])
+        (read(seq, touching(afterFiles, added.union(posTargets))),
+          read(prevSeq, touching(beforeFiles,
+            added.union(removed).union(posTargets))))
     }
 
     val key = Seq("__scan_path", "__scan_pos")

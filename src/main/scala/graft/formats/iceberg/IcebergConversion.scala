@@ -151,8 +151,7 @@ class IcebergConversionSource(spark: SparkSession, tablePath: String,
     val m = meta
     require(m.snapshotBySeq(seq).isDefined,
       s"no snapshot at sequence $seq in $tablePath (expired?)")
-    val snap = TableSnapshot(currentTable(),
-      filesAtSeq(m, seq), seq.toString)
+    val snap = snapshotAtSeq(m, seq, currentTable(), seq.toString)
     IcebergDeletes.scan(spark, snap, m, seq, tablePath, keyed = false)
   }
 }

@@ -109,8 +109,8 @@ object IcebergDeletes {
     val (version, m) = currentMeta(spark, tablePath)
     val src = new IcebergConversionSource(spark, tablePath,
       m.properties.getOrElse("graft.table-name", "table"))
-    val snap = graft.model.TableSnapshot(src.currentTable(),
-      src.filesAtSeq(m, m.headSequence), m.headSequence.toString)
+    val snap = src.snapshotAtSeq(m, m.headSequence, src.currentTable(),
+      m.headSequence.toString)
     val live = scan(spark, snap, m, m.headSequence, tablePath, keyed = true)
     val victims = live.filter(predicate)
       .select(col("__scan_path").as("file_path"),
@@ -131,7 +131,6 @@ object IcebergDeletes {
         appendCommit(spark, tablePath, rows, content = 1, equalityIds = Nil,
           expectVersion = Some(version))
       }
-      graft.plans.SnapshotFileIndex.invalidate(snap)
       n
     } finally victims.unpersist()
   }
@@ -1063,9 +1062,7 @@ object IcebergDeletes {
   }
 
   /** `snap` with each v3 deletion vector attached to its data file's
-    * listing entry. The listing keeps the snapshot's id: every
-    * delete-aware read of the table at one sequence attaches the same
-    * vectors, so the shared listing cache stays consistent.
+    * listing entry, where the listing is.
     */
   private def withDeletionVectors(spark: SparkSession,
       snap: graft.model.TableSnapshot, dvs: Seq[DeleteFileRef],
@@ -1091,8 +1088,9 @@ object IcebergDeletes {
       s"table at $tablePath has more than one live deletion vector for " +
         s"data file(s) ${shared.mkString(", ")}")
     val b = spark.sparkContext.broadcast(byFile.toMap)
-    snap.copy(files = snap.files.map(f =>
-      f.copy(deletionVector = b.value.get(f.path))))
+    snap.copy(listing = new graft.plans.Listing(spark,
+      graft.plans.Placement.mapRows(snap.listing.placed)(_.map(f =>
+        f.copy(deletionVector = b.value.get(f.path))))))
   }
 
   /** Mask v2 position-deleted rows out of a data scan. Position deletes

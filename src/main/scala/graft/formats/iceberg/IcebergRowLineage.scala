@@ -94,11 +94,9 @@ object IcebergRowLineage {
     val ext = StructType(base.schema.fields ++ Seq(
       StructField(RowIdCol, LongType, nullable = true),
       StructField(LastUpdatedCol, LongType, nullable = true)))
-    val snap = graft.model.TableSnapshot(
-      base.copy(schemaJson = ext.json), src.filesAtSeq(m, seq),
+    val snap = src.snapshotAtSeq(m, seq, base.copy(schemaJson = ext.json),
       seq.toString)
     val live = IcebergDeletes.scan(spark, snap, m, seq, tablePath, keyed = true)
-    graft.plans.SnapshotFileIndex.invalidate(snap)
     val manifestList = m.snapshotBySeq(seq).getOrElse(
       throw new IllegalStateException(
         s"no snapshot at sequence $seq at $tablePath")).manifestList

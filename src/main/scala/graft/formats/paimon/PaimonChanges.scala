@@ -3,8 +3,7 @@ package graft.formats.paimon
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.{FileEntry, TableSnapshot}
-import graft.plans.Placement
+import graft.model.FileEntry
 import graft.plans.Placement.Placed
 import graft.util.PathUtils
 
@@ -38,15 +37,11 @@ object PaimonChanges {
     val cols = table.schema.fieldNames.toSeq.map(col)
     val parts = ids.map { id =>
       val change = src.changeForCommit(id.toString)
-      def readTagged(files: Placed[FileEntry], tag: String): DataFrame = {
-        import spark.implicits._
-        val snap = TableSnapshot(table, Placement.dataset(spark, files),
-          s"$id-cdf-$tag")
-        val out = graft.formats.delta.DeltaRead.toDataFrame(spark, snap)
+      def readTagged(files: Placed[FileEntry], tag: String): DataFrame =
+        graft.formats.delta.DeltaRead.toDataFrame(spark,
+          graft.plans.SnapshotFileIndex.snapshot(spark, table, id.toString,
+            files))
           .select(cols :+ lit(tag).as("_change_type"): _*)
-        graft.plans.SnapshotFileIndex.invalidate(snap)
-        out
-      }
       readTagged(change.diff.added, "insert")
         .unionByName(readTagged(change.diff.removed, "delete"))
         .withColumn("_commit_version", lit(id))

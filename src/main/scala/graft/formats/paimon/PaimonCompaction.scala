@@ -47,7 +47,7 @@ object PaimonCompaction {
         s"zorder column $c is not in the table schema"))
     // WHERE scopes by partition values (the Delta optimizer's grammar)
     val listing = graft.formats.delta.DeltaOptimize.filterByPartition(
-      snap, graft.plans.SnapshotFileIndex.listingFor(snap), where)
+      snap, snap.listing.dataset, where)
 
     def partKey(f: FileEntry): String =
       f.partitionValues.map(p => s"${p.field}=${p.value}").mkString("/")
@@ -72,7 +72,7 @@ object PaimonCompaction {
     if (agg0.getLong(0) == 0L) return Result(0L, 0L, 0L)
     val (nOld, oldBytes) = (agg0.getLong(0), agg0.getLong(1))
     val rows = graft.formats.delta.DeltaRead.toDataFrame(spark,
-      snap.copy(files = candidates, commitId = snap.commitId + "-compact"))
+      snap.withFiles(candidates))
     val nOut = math.max(1L, (oldBytes + targetFileBytes - 1) /
       targetFileBytes)
     val partCols = snap.table.partitionFields.map(_.partitionColumnName)
@@ -100,10 +100,10 @@ object PaimonCompaction {
     val victims = candidates.select(col("path").as("__vp"))
     // survivors come from the FULL live set — a WHERE-scoped rewrite
     // must carry the out-of-scope partitions forward untouched
-    val survivors = graft.plans.SnapshotFileIndex.listingFor(snap).toDF()
+    val survivors = snap.listing.dataset.toDF()
       .join(victims, col("path") === col("__vp"), "left_anti")
       .drop("__vp").as[FileEntry]
-    val altered = snap.copy(files = survivors.unionByName(adds))
+    val altered = snap.withFiles(survivors.unionByName(adds))
     val target = new PaimonConversionTarget(spark, path)
     // pin the planning snapshot: a concurrent commit landing since
     // currentSnapshot() must fail this CAS loudly — a silent rebase would
@@ -112,7 +112,6 @@ object PaimonCompaction {
       altered, src.sourceFormat, expectBase = Some(snap.commitId))
     outcomes.find(_.status != "SUCCESS").foreach(o =>
       throw new IllegalStateException(s"paimon compaction failed: $o"))
-    graft.plans.SnapshotFileIndex.invalidate(snap)
     Result(nOld, oldBytes, wrote)
   }
 }

@@ -93,7 +93,7 @@ object PaimonDeletes {
       val conf = graft.util.HadoopConfs.session(spark)
       val added = graft.sources.ParquetFooters.fileEntries(spark, outDir,
         graft.sources.ParquetFooters.listFiles(outDir, conf))
-      val listing = graft.plans.SnapshotFileIndex.listingFor(snap)
+      val listing = snap.listing.dataset
       val removed = listing
         .join(victims, listing("path") === victims("__scan_path"),
           "left_semi")
@@ -108,7 +108,6 @@ object PaimonDeletes {
       tgt.syncPartitionSpec(table.partitionFields)
       tgt.syncFilesForDiff(FilesDelta(added, removed))
       tgt.completeSync()
-      graft.plans.SnapshotFileIndex.invalidate(snap)
       (matched, srcCount - matched)
     } finally {
       keyed.unpersist(); srcProj.unpersist()
@@ -162,7 +161,7 @@ object PaimonDeletes {
       val conf = graft.util.HadoopConfs.session(spark)
       val added = graft.sources.ParquetFooters.fileEntries(spark, outDir,
         graft.sources.ParquetFooters.listFiles(outDir, conf))
-      val listing = graft.plans.SnapshotFileIndex.listingFor(snap)
+      val listing = snap.listing.dataset
       val removed = listing
         .join(victims, listing("path") === victims("__scan_path"),
           "left_semi")
@@ -181,7 +180,6 @@ object PaimonDeletes {
       tgt.syncPartitionSpec(table.partitionFields)
       tgt.syncFilesForDiff(FilesDelta(added, removed))
       tgt.completeSync()
-      graft.plans.SnapshotFileIndex.invalidate(snap)
       deleted
     } finally keyed.unpersist()
   }

@@ -111,33 +111,31 @@ case class FileEntry(
     lastModifiedMillis: Long,
     deletionVector: Option[DvDescriptor] = None)
 
-object FileEntry {
-  /** Align a DataFrame written under an older FileEntry schema (e.g. a
-    * pre-DV metadata-index parquet) with the current encoder by adding
-    * absent optional columns as nulls.
-    */
-  def aligned(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.Dataset[FileEntry] = {
-    import org.apache.spark.sql.functions.lit
-    val spark = df.sparkSession
-    import spark.implicits._
-    val enc = implicitly[org.apache.spark.sql.Encoder[FileEntry]]
-    val withCols = enc.schema.fields.foldLeft(df) { (d, f) =>
-      if (d.columns.contains(f.name)) d
-      else d.withColumn(f.name, lit(null).cast(f.dataType))
-    }
-    withCols.as[FileEntry]
-  }
-}
-
-/** Reference InternalSnapshot.java:48-52: table state + distributed file
-  * listing + the commit that produced it.
+/** Reference InternalSnapshot.java:48-52: table state + file listing +
+  * the commit that produced it. The listing is the snapshot's own value,
+  * placed where its decode ran ([[graft.plans.Listing]]).
   */
 case class TableSnapshot(
     table: TableDescriptor,
-    files: Dataset[FileEntry],
+    listing: graft.plans.Listing,
     commitId: String,
-    pendingCommits: Seq[String] = Nil)
+    pendingCommits: Seq[String] = Nil) {
+  /** The listing as a Dataset view. */
+  def files: Dataset[FileEntry] = listing.files
+
+  /** This snapshot over a derived distributed listing. */
+  def withFiles(derived: Dataset[FileEntry]): TableSnapshot =
+    copy(listing = new graft.plans.Listing(derived.sparkSession,
+      Right(derived)))
+}
+
+object TableSnapshot {
+  /** A snapshot over a distributed listing. */
+  def apply(table: TableDescriptor, files: Dataset[FileEntry],
+      commitId: String): TableSnapshot =
+    TableSnapshot(table, new graft.plans.Listing(files.sparkSession,
+      Right(files)), commitId)
+}
 
 /** Reference InternalFilesDiff.java:35-80. Each side crosses the SPI
   * where its source decoded it: rows on the driver or a distributed

@@ -123,7 +123,7 @@ object BloomIndex {
       s"table has no column '$column' " +
         s"(columns: ${snap.table.schema.fieldNames.mkString(", ")})")
 
-    val live = SnapshotFileIndex.listingFor(snap)
+    val live = snap.listing.dataset
     val totalLive = live.count()
 
     // bloom sizing from the LISTING's row counts — no data read
@@ -157,7 +157,7 @@ object BloomIndex {
             .emptyRDD[org.apache.spark.sql.Row],
           StructType(Nil).add("path", "string").add("bloom", "binary"))
       else {
-        val restricted = snap.copy(files = unindexed)
+        val restricted = snap.withFiles(unindexed)
         val df = graft.formats.delta.DeltaRead.toDataFrame(spark, restricted)
         val hashed = df.select(
           PathCols.scanPath(input_file_name()).as("path"),

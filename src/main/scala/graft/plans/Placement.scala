@@ -85,14 +85,15 @@ object Placement {
     * job. A `Right` side gets one [[probe]]: when it brought every row the
     * side becomes `Left`, otherwise it stays `Right`, over the pinned rows
     * so its writers do not re-run the lineage. `at = Some(Tasks)` keeps a
-    * `Right` side distributed (a pin for tests).
+    * `Right` side distributed over its pin (a placement pin for tests).
     */
   def fetch[T](p: Placed[T], at: Option[Placement] = None)(
       weight: T => Long): Fetched[T] = p match {
     case Left(rows) => Fetched(p, rows.size, rows.iterator.map(weight).sum)
     case Right(ds) =>
-      val pr = probe(ds, weight)
-      val rows = pr.rows.filterNot(_ => at.contains(Tasks))
+      val keep = at.contains(Tasks)
+      val pr = probe(ds, weight, keep)
+      val rows = pr.rows.filterNot(_ => keep)
       Fetched(rows.map(Left(_)).getOrElse(
         Right(ds.sparkSession.createDataset(pr.pinned)(ds.encoder))),
         pr.counts.sum, pr.weight, Some(pr.pinned))
@@ -101,13 +102,14 @@ object Placement {
   /** The fused probe: ONE job pins `ds` in the block manager (lazily: the
     * job itself materializes the pin) and returns, per partition, the
     * row count, the weight sum and up to `MaxRows / partitions` rows.
-    * `rows` is set when that was every row, and the pin is then freed;
-    * the driver never holds more than [[MaxRows]] of them.
+    * `rows` is set when that was every row, and the pin is then freed
+    * unless `keep`; the driver never holds more than [[MaxRows]] of them.
     */
   private[graft] final case class Probe[T](pinned: RDD[T],
       counts: Array[Long], weight: Long, rows: Option[IndexedSeq[T]])
 
-  private[graft] def probe[T](ds: Dataset[T], weight: T => Long): Probe[T] = {
+  private[graft] def probe[T](ds: Dataset[T], weight: T => Long,
+      keep: Boolean = false): Probe[T] = {
     implicit val ct: scala.reflect.ClassTag[T] = ds.encoder.clsTag
     val rdd = ds.rdd.persist(StorageLevel.MEMORY_AND_DISK_SER)
     val n = rdd.getNumPartitions
@@ -125,7 +127,7 @@ object Placement {
         (buf.toArray, c, w)
       })
     val complete = parts.forall { case (taken, c, _) => c <= taken.length }
-    if (complete) rdd.unpersist(blocking = false)
+    if (complete && !keep) rdd.unpersist(blocking = false)
     Probe(rdd, parts.map(_._2), parts.map(_._3).sum,
       if (complete) Some(parts.iterator.flatMap(_._1).toIndexedSeq)
       else None)

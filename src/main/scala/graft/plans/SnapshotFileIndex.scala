@@ -10,14 +10,16 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model._
 
-/** A Catalyst `FileIndex` over a snapshot's distributed file listing.
+/** A Catalyst `FileIndex` over a snapshot's placed file listing.
   *
   * This is the converted-table read path. The naive alternative — collect
   * every file path and hand the list to `spark.read.parquet` — holds
   * O(num-files) strings on the driver and embeds them in the logical plan;
-  * at 10^6..10^7 files (100 TB) that is a driver OOM. Here the listing stays
-  * a `Dataset[FileEntry]` and two prunings run *distributed, before*
-  * anything is collected:
+  * at 10^6..10^7 files (100 TB) that is a driver OOM. Here the listing is
+  * the snapshot's own [[Listing]]: a listing of at most
+  * [[Placement.MaxRows]] entries is held on the driver, a larger one stays
+  * a pinned `Dataset[FileEntry]`, and two prunings run where it is
+  * (distributed for a large listing), *before* anything is collected:
   *
   *   1. partition pruning — Catalyst partition filters are bound to the
   *      partition schema and evaluated per file against its
@@ -38,23 +40,14 @@ class SnapshotFileIndex(spark: SparkSession, snap: TableSnapshot)
 
   private val tableSchema: StructType = snap.table.schema
 
-  /** The listing, materialized once. Every FileIndex entry point
-    * (`sizeInBytes` during join planning, `listFiles` per scan, possibly
-    * again under AQE) is a separate Spark action; without this each action
-    * re-executes the full metadata replay (log JSON parse + latest-action
-    * window shuffle). Persisted through a bounded registry keyed by
-    * (table, commit): reads of the same snapshot share one materialization
-    * and old entries are unpersisted, so a long-lived session doesn't
-    * accumulate cached listings (mirrors Spark's own CatalogFileIndex
-    * caching, with an explicit bound).
-    */
-  private lazy val filesDs = SnapshotFileIndex.listingFor(snap)
-
-  /** The snapshot's file listing (metadata-plane aggregates — e.g. the
-    * count(*) pushdown in [[MetadataCountRule]] — read it directly).
+  /** The snapshot's listing, fetched once per snapshot and shared by every
+    * FileIndex entry point (`sizeInBytes` during join planning,
+    * `listFiles` per scan, possibly again under AQE) and by every index
+    * over the same snapshot ([[Listing]]). Metadata-plane aggregates (the
+    * count(*) pushdown in [[MetadataCountRule]]) read it directly.
     */
   private[graft] def listing: org.apache.spark.sql.Dataset[FileEntry] =
-    filesDs
+    snap.listing.dataset
 
   /** Physical partition columns: typed from the table schema when present,
     * string otherwise (time-transform columns like `ts_day` are layout
@@ -76,24 +69,18 @@ class SnapshotFileIndex(spark: SparkSession, snap: TableSnapshot)
 
   override def rootPaths: Seq[Path] = Seq(new Path(snap.table.basePath))
 
-  override def refresh(): Unit = SnapshotFileIndex.invalidate(snap)
+  /** A snapshot is immutable: there is nothing to re-list. */
+  override def refresh(): Unit = ()
 
-  override lazy val sizeInBytes: Long =
-    SnapshotFileIndex.localFor(snap) match {
-      case Some(entries) => entries.iterator.map(_.fileSizeBytes).sum
-      case None =>
-        import org.apache.spark.sql.functions.{coalesce, lit, sum}
-        filesDs.agg(coalesce(sum("fileSizeBytes"), lit(0L))).head().getLong(0)
-    }
+  override lazy val sizeInBytes: Long = snap.listing.fetched.weight
 
-  override def inputFiles: Array[String] =
-    SnapshotFileIndex.localFor(snap) match {
-      case Some(entries) => entries.iterator.map(_.path).toArray
-      case None =>
-        val s = filesDs.sparkSession
-        import s.implicits._
-        filesDs.select("path").as[String].collect()
-    }
+  override def inputFiles: Array[String] = snap.listing.placed match {
+    case scala.util.Left(entries) => entries.iterator.map(_.path).toArray
+    case scala.util.Right(files) =>
+      val s = files.sparkSession
+      import s.implicits._
+      files.select("path").as[String].collect()
+  }
 
   /** Bloom-indexed columns, resolved once per index instance (one FS
     * round-trip); pruning #3 below is skipped entirely when empty.
@@ -130,25 +117,22 @@ class SnapshotFileIndex(spark: SparkSession, snap: TableSnapshot)
         f.deletionVector.map(graft.formats.delta.DeletionVectors
           .toScanField(tablePath, _)).orNull)
 
-    // small listings (already bounded on the driver by the collect below)
-    // prune driver-side — the same predicates over the same rows, minus
-    // one Spark job per scan planning; bloom-indexed tables keep the
-    // distributed prune (the index join is a data-plane read)
-    val local: Option[Seq[FileEntry]] =
-      if (bloomCols.isEmpty) SnapshotFileIndex.localFor(snap) else None
-    val survivors = local match {
-      case Some(entries) =>
+    // a listing on the driver prunes there — the same predicates over
+    // the same rows, minus one Spark job per scan planning; bloom-indexed
+    // tables keep the distributed prune (the index join is a data-plane
+    // read)
+    val survivors = snap.listing.placed match {
+      case scala.util.Left(entries) if bloomCols.isEmpty =>
         val pred = partPredicate.map { case (e, _) =>
           Predicate.createInterpreted(e)
         }
         entries.filter(keepEntry(pred)).map(shape(_)).toArray
-      case None =>
+      case placed =>
         // pruning #3 — file-level bloom index (point lookups on columns
         // min/max can't cut): a distributed join against the index sidecar
-        val files = BloomIndex.prune(filesDs.sparkSession, filesDs,
+        import spark.implicits._
+        val files = BloomIndex.prune(spark, Placement.dataset(spark, placed),
           snap.table.basePath, dataFilters, bloomCols)
-        val session = files.sparkSession
-        import session.implicits._
         files.mapPartitions { it =>
           val pred = partPredicate.map { case (e, _) =>
             Predicate.createInterpreted(e)
@@ -195,142 +179,13 @@ class SnapshotFileIndex(spark: SparkSession, snap: TableSnapshot)
 
 object SnapshotFileIndex {
 
-  /** How many snapshot listings stay persisted at once. Each entry is
-    * O(live files) rows distributed across the cluster; the bound exists so
-    * a session touching many tables doesn't grow the block-manager (and
-    * CacheManager plan-lookup) without limit.
-    */
-  private val MaxCachedListings = 8
-
-  private val cachedListings =
-    new java.util.LinkedHashMap[String, org.apache.spark.sql.Dataset[FileEntry]](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, org.apache.spark.sql.Dataset[FileEntry]])
-          : Boolean =
-        if (size > MaxCachedListings) { e.getValue.unpersist(false); true }
-        else false
-    }
-
-  /** The persisted listing for a snapshot, shared across every FileIndex
-    * over the same (table, commit).
-    */
-  def listingFor(snap: TableSnapshot): org.apache.spark.sql.Dataset[FileEntry] =
-    cachedListings.synchronized {
-      val key = snap.table.basePath + "#" + snap.commitId
-      Option(cachedListings.get(key)).getOrElse {
-        val ds = snap.files.persist()
-        cachedListings.put(key, ds)
-        ds
-      }
-    }
-
-  /** Drop a snapshot's persisted listing (FileIndex.refresh contract). */
-  def invalidate(snap: TableSnapshot): Unit = cachedListings.synchronized {
-    val key = snap.table.basePath + "#" + snap.commitId
-    Option(cachedListings.remove(key)).foreach(_.unpersist(false))
-    cachedSummaries.remove(key)
-    cachedLocals.remove(key)
-  }
-
-  /** Small-listing fast path: listings at or under [[LocalListingMax]]
-    * entries are collected ONCE per (table, commit) and every subsequent
-    * metadata question — `sizeInBytes` at plan time, `listFiles` per scan,
-    * the DV/format summary — answers driver-side instead of running its
-    * own Spark job (guide §1.2: the per-read job count IS the hot path at
-    * small file counts). The driver bound is explicit and no larger than
-    * what `listFiles` already collects for a full-table scan; listings
-    * past it keep the distributed path, so a 10^6-file table never
-    * materializes on the driver. `None` verdicts (too big) are cached so
-    * the probe never re-runs.
-    */
-  private val LocalListingMax = 4096
-
-  private val cachedLocals =
-    new java.util.LinkedHashMap[String, Option[IndexedSeq[FileEntry]]](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Option[IndexedSeq[FileEntry]]])
-          : Boolean = size > 64
-    }
-
-  /** The one snapshot factory over a placed listing decode. A listing
-    * decoded on the driver ([[Placement.Driver]]) becomes a local Dataset
-    * and seeds the small-listing cache, so no later metadata question
-    * runs [[localFor]]'s plan+collect probe job for it; a distributed
-    * listing is wrapped as is.
+  /** The one snapshot factory over a placed listing decode: the snapshot
+    * holds the listing where the decode placed it ([[Listing]]).
     */
   def snapshot(spark: SparkSession, table: TableDescriptor,
       commitId: String, listing: Placement.Placed[FileEntry])
-      : TableSnapshot = listing match {
-    case scala.util.Right(files) => TableSnapshot(table, files, commitId)
-    case scala.util.Left(entries) =>
-      import spark.implicits._
-      val snap = TableSnapshot(table, spark.createDataset(entries), commitId)
-      cachedLocals.synchronized {
-        cachedLocals.putIfAbsent(table.basePath + "#" + commitId,
-          Some(entries))
-      }
-      snap
-  }
-
-  def localFor(snap: TableSnapshot): Option[IndexedSeq[FileEntry]] = {
-    val key = snap.table.basePath + "#" + snap.commitId
-    val cached = cachedLocals.synchronized(Option(cachedLocals.get(key)))
-    cached.getOrElse {
-      val probe = listingFor(snap).limit(LocalListingMax + 1).collect()
-        .toIndexedSeq
-      val verdict =
-        if (probe.length > LocalListingMax) None else Some(probe)
-      cachedLocals.synchronized {
-        // the persisted listing is immutable per (table, commit): a
-        // racing probe computed the same rows, either verdict is fine
-        Option(cachedLocals.get(key)).getOrElse {
-          cachedLocals.put(key, verdict); verdict
-        }
-      }
-    }
-  }
-
-  /** One-job roll-up of the scan-relevant listing facts: deletion-vector
-    * volume (whether the scan needs its row mask) and the file formats
-    * present (drives FileFormat selection). Every read needs both;
-    * computing them separately cost two Spark jobs per read — cached here
-    * beside the listing, dropped on [[invalidate]].
-    */
-  case class ScanSummary(dvFiles: Long, dvRows: Long, formats: Seq[String])
-
-  private val cachedSummaries =
-    new java.util.LinkedHashMap[String, ScanSummary](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, ScanSummary]): Boolean =
-        size > 64
-    }
-
-  def summaryFor(snap: TableSnapshot): ScanSummary = {
-    import org.apache.spark.sql.functions._
-    val key = snap.table.basePath + "#" + snap.commitId
-    cachedSummaries.synchronized {
-      Option(cachedSummaries.get(key))
-    }.getOrElse {
-      val s = localFor(snap) match {
-        case Some(entries) =>
-          // small listing already on the driver: same roll-up, no job
-          val dvs = entries.flatMap(_.deletionVector.map(_.cardinality))
-          ScanSummary(dvs.length.toLong, dvs.sum,
-            entries.iterator.map(_.fileFormat).toSeq.distinct.sorted)
-        case None =>
-          val row = listingFor(snap).agg(
-            sum(when(col("deletionVector").isNotNull, 1L).otherwise(0L)),
-            sum(col("deletionVector.cardinality")),
-            sort_array(collect_set(col("fileFormat")))).head()
-          def l(i: Int): Long = if (row.isNullAt(i)) 0L else row.getLong(i)
-          ScanSummary(l(0), l(1), row.getSeq[String](2))
-      }
-      cachedSummaries.synchronized { cachedSummaries.put(key, s) }
-      s
-    }
-  }
+      : TableSnapshot =
+    TableSnapshot(table, new Listing(spark, listing), commitId)
 
   private val HiveDefaultPartition = "__HIVE_DEFAULT_PARTITION__"
 

@@ -39,8 +39,7 @@ object MaintenanceQueries {
     val res = DeltaOptimize.compact(s, table)
     require(res.rewrote == 8 && res.wrote < 8, res.toString)
     val src = new DeltaConversionSource(s, table, "customer")
-    val listing = graft.plans.SnapshotFileIndex
-      .listingFor(src.currentSnapshot())
+    val listing = src.currentSnapshot().files
     require(listing.collect().forall(_.deletionVector.isEmpty),
       "OPTIMIZE left live deletion vectors")
     src.toDataFrame

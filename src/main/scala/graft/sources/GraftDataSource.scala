@@ -481,11 +481,11 @@ class GraftDataSource extends RelationProvider
     // cannot, so refuse loudly (same pattern as the Hudi MOR real-time
     // refusal). Reference: DeltaConversionSource.java:104-174.
     locally {
-      val dv = graft.formats.delta.DeltaRead.liveDvSummary(snap)
-      if (dv.files > 0)
+      val dv = snap.listing.summary
+      if (dv.dvFiles > 0)
         throw new graft.model.DeletionVectorsUnsupported(
-          s"table at $path has ${dv.files} live file(s) carrying deletion " +
-            s"vectors (${dv.rows} deleted row(s)); format(\"graft\") maps " +
+          s"table at $path has ${dv.dvFiles} live file(s) carrying deletion " +
+            s"vectors (${dv.dvRows} deleted row(s)); format(\"graft\") maps " +
             "files 1:1 and would return deleted rows — read via " +
             "DeltaConversionSource.toDataFrame, which masks DV positions")
     }

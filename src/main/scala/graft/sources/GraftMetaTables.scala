@@ -33,7 +33,7 @@ object GraftMetaTables {
   }
 
   private def listing(spark: SparkSession, source: ConversionSource) =
-    graft.plans.SnapshotFileIndex.listingFor(source.currentSnapshot())
+    source.currentSnapshot().listing.dataset
 
   private def files(spark: SparkSession, source: ConversionSource)
       : DataFrame =

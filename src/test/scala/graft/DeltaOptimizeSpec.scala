@@ -37,7 +37,7 @@ class DeltaOptimizeSpec extends SparkSuite {
     assert(deleted > 0)
     def src() = new DeltaConversionSource(spark, table, "customer")
     val before = src().currentSnapshot()
-    val beforeFiles = SnapshotFileIndex.listingFor(before).collect()
+    val beforeFiles = before.files.collect()
     assert(beforeFiles.length == 8)
     assert(beforeFiles.exists(_.deletionVector.isDefined))
     val want = src().toDataFrame
@@ -48,7 +48,7 @@ class DeltaOptimizeSpec extends SparkSuite {
     assert(res.wrote < 8, res.toString)
 
     val after = src().currentSnapshot()
-    val afterFiles = SnapshotFileIndex.listingFor(after).collect()
+    val afterFiles = after.files.collect()
     assert(afterFiles.length.toLong == res.wrote)
     assert(afterFiles.forall(_.deletionVector.isEmpty),
       "compaction must retire every DV")

@@ -243,10 +243,9 @@ class DvMaskSpec extends SparkSuite {
       .select("__scan_path", "__scan_pos"))
 
     // the same files with no vectors: the mask adds no job
-    val plainSnap = snap.copy(
-      files = snap.files.map(_.copy(deletionVector = None))(
-        org.apache.spark.sql.Encoders.product[graft.model.FileEntry]),
-      commitId = snap.commitId + "-plain")
+    val plainSnap = snap.withFiles(
+      snap.files.map(_.copy(deletionVector = None))(
+        org.apache.spark.sql.Encoders.product[graft.model.FileEntry]))
     def fullAgg(s: TableSnapshot) = {
       val q = DeltaRead.toDataFrame(spark, s).agg(count(lit(1)), sum("id"))
       q.queryExecution.executedPlan

@@ -187,6 +187,57 @@ class PlacementEquivalenceSpec extends SparkSuite {
     assert(hudiListing(dir).map(_.recordCount) == Seq(8L))
   }
 
+  /** A Hudi table synced from `files` parquet files of sf0.001 orders. */
+  private def hudiTable(name: String, files: Int): String = {
+    val data = tmpDir(s"${name}_data")
+    spark.read.parquet(sf("sf0.001/orders.parquet")).repartition(files)
+      .write.mode("overwrite").parquet(data)
+    val dir = tmpDir(name)
+    val src = new ParquetDirectorySource(spark, data, "orders")
+    val out = TableFormatSync.syncSnapshot(
+      Seq(new HudiConversionTarget(spark, dir)), src.currentSnapshot(),
+      src.sourceFormat)
+    assert(out.forall(_.status == "SUCCESS"), out.mkString(";"))
+    dir
+  }
+
+  test("hudi footer fallback: listed files the index lacks decode " +
+      "identically in both placements") {
+    val dir = hudiTable("place_hudi_partial", 6)
+    val full = hudiListing(dir)
+    assert(full.size == 6 && full.forall(_.columnStats.nonEmpty))
+    // keep index entries for two of the six files: the other four take
+    // the footer read
+    val kept = HudiMetadataIndex.read(spark, dir).collect()
+      .sortBy(_.path).take(2).toSeq
+    val indexDir = Paths.get(HudiMetadataIndex.indexDir(dir))
+    Files.walk(indexDir).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+    HudiMetadataIndex.writeSmall(dir, "00000000000000001", kept)
+    assert(HudiMetadataIndex.read(spark, dir).count() == 2)
+    assert(hudiListing(dir) == full)
+  }
+
+  test("hudi index deltas written without the deletionVector column " +
+      "read in both placements") {
+    val dir = hudiTable("place_hudi_old", 3)
+    val full = hudiListing(dir)
+    val entries = HudiMetadataIndex.read(spark, dir).collect().toSeq
+    val indexDir = Paths.get(HudiMetadataIndex.indexDir(dir))
+    Files.walk(indexDir).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+    import spark.implicits._
+    entries.toDS().drop("deletionVector").write
+      .parquet(s"$indexDir/00000000000000001")
+    Seq(Placement.Driver, Placement.Tasks).foreach { at =>
+      val ds = HudiMetadataIndex.deltas(dir)
+      assert(ds.map(_.isParquet) == Seq(true))
+      assert(rows(HudiMetadataIndex.read(spark, ds, at)) ==
+        entries.sortBy(_.path), at)
+    }
+    assert(hudiListing(dir) == full)
+  }
+
   // ---- Paimon ----
 
   private def paimonListings(dir: String): Seq[FileEntry] = {
