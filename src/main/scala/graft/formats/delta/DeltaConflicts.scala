@@ -1,14 +1,10 @@
 package graft.formats.delta
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths => JPaths}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.io.TableStore
 import graft.plans.StatSkipping
 import graft.util.{HadoopConfs, Jsons}
 
@@ -104,19 +100,16 @@ object DeltaConflicts {
       read: Option[ReadFootprint],
       txnGuard: Option[(String, Long)]): Option[Long] = {
     val conf = HadoopConfs.session(spark)
-    val logDir = JPaths.get(DeltaLog.logPath(tablePath))
-    Files.createDirectories(logDir)
+    val store = new TableStore(conf)
     // the ONE write pass of the commit bytes: in the log directory, so
     // publishing is a hard-link of this very file (same filesystem); the
     // name matches no commit/checkpoint pattern, so log readers skip it
-    val spool = Files.createTempFile(logDir, "graft-spool-", ".jsonl")
+    val spool = store.spool(DeltaLog.logPath(tablePath), lines)
     try {
-      val w = Files.newBufferedWriter(spool, StandardCharsets.UTF_8)
-      try lines.foreach { l => w.write(l); w.write('\n') } finally w.close()
       var version = plannedVersion
       var attempt = 0
       while (attempt <= MaxRetries) {
-        if (DeltaLog.publishCommitFile(tablePath, version, spool))
+        if (store.publishSpool(spool, DeltaLog.versionFile(tablePath, version)))
           return Some(version)
         attempt += 1
         // exactly-once recheck BEFORE deciding to re-land: if any commit
@@ -130,13 +123,13 @@ object DeltaConflicts {
         val head = DeltaLog.latestVersion(tablePath, conf).getOrElse(version)
         val intervening = DeltaLog.listVersions(tablePath, conf)
           .filter(v => v >= version && v <= head)
-        checkReconcilable(spark, tablePath, intervening, spool.toString, read)
+        checkReconcilable(spark, store, tablePath, intervening, spool, read)
         version = head + 1
       }
       throw new IllegalStateException(
         s"gave up after $MaxRetries conflict retries at $tablePath — " +
           "re-run the operation against the new snapshot")
-    } finally Files.deleteIfExists(spool)
+    } finally store.discard(spool)
   }
 
   /** add/remove path of one commit line, if it is a data-file action
@@ -153,7 +146,8 @@ object DeltaConflicts {
     * and — for read-based commits — no dataChange add that could match
     * the read predicate).
     */
-  private def checkReconcilable(spark: SparkSession, tablePath: String,
+  private def checkReconcilable(spark: SparkSession, store: TableStore,
+      tablePath: String,
       versions: Seq[Long], spoolPath: String,
       read: Option[ReadFootprint]): Unit = {
     import spark.implicits._
@@ -184,12 +178,9 @@ object DeltaConflicts {
       // from identical inputs — delta-spark treats that as compatible)
       val theirProtocols = theirs.flatMap(_._2).distinct().collect()
       if (theirProtocols.nonEmpty) {
-        val ours = Files.lines(java.nio.file.Paths.get(spoolPath))
-        val ourProtocol =
-          try ours.iterator().asScala
-            .flatMap(l => Option(Jsons.mapper.readTree(l).get("protocol")))
-            .nextOption()
-          finally ours.close()
+        val ourProtocol = store.readString(spoolPath).linesIterator
+          .flatMap(l => Option(Jsons.mapper.readTree(l).get("protocol")))
+          .nextOption()
         val same = ourProtocol.exists(o =>
           theirProtocols.forall(t => Jsons.mapper.readTree(t) == o))
         if (!same) fail("protocol changed")

@@ -151,7 +151,7 @@ class DeltaConversionTarget(spark: SparkSession, tablePath: String)
     })
 
     val ok = DeltaLog.writeCommit(tablePath, version,
-      header ++ stampedAdds ++ removeLines)
+      header ++ stampedAdds ++ removeLines, new graft.io.TableStore(conf))
     if (!ok) throw new IllegalStateException(
       s"concurrent writer committed version $version first at $tablePath")
 

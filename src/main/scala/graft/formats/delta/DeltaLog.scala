@@ -1,17 +1,17 @@
 package graft.formats.delta
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths => JPaths, StandardCopyOption}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+
+import graft.io.TableStore
 
 /** Minimal Delta-protocol transaction log layout (public spec:
   * github.com/delta-io/delta PROTOCOL.md; reference reads the same layout
   * through delta-spark's DeltaLog — DeltaConversionSource.java:63-239).
   *
   * Log lives at `<table>/_delta_log/<%020d>.json`, one JSON action per line.
-  * Commits are atomic via write-temp + atomic-rename; a commit whose version
+  * Commits are put-if-absent through [[TableStore]]; a commit whose version
   * file already exists loses the race (optimistic concurrency, as in the
   * reference's OptimisticTransaction usage DeltaConversionTarget.java:294).
   */
@@ -24,16 +24,14 @@ object DeltaLog {
     f"${logPath(tablePath)}/$version%020d.json"
 
   /** Sorted list of commit versions present in the log. */
-  def listVersions(tablePath: String, conf: Configuration): Seq[Long] = {
-    val dir = new Path(logPath(tablePath))
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return Nil
-    fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
+  def listVersions(tablePath: String, conf: Configuration): Seq[Long] =
+    logNames(tablePath, conf)
       .filter(n => n.endsWith(".json") && n.dropRight(5).forall(_.isDigit))
       .map(_.dropRight(5).toLong)
       .sorted
-  }
+
+  private def logNames(tablePath: String, conf: Configuration): Seq[String] =
+    new TableStore(conf).names(logPath(tablePath))
 
   def latestVersion(tablePath: String, conf: Configuration): Option[Long] =
     listVersions(tablePath, conf).lastOption
@@ -78,10 +76,7 @@ object DeltaLog {
     */
   private def completeCheckpoints(tablePath: String, conf: Configuration)
       : Seq[(Long, Seq[String])] = {
-    val dir = new Path(logPath(tablePath))
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return Nil
-    val names = fs.listStatus(dir).toSeq.map(_.getPath.getName)
+    val names = logNames(tablePath, conf)
     val matches = names.flatMap {
       case n @ CheckpointName(v, _, parts) =>
         Some((v.toLong, Option(parts).map(_.toInt).getOrElse(1), n))
@@ -113,10 +108,7 @@ object DeltaLog {
     */
   def jsonOnlyCheckpointVersions(tablePath: String, conf: Configuration)
       : Seq[Long] = {
-    val dir = new Path(logPath(tablePath))
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return Nil
-    val names = fs.listStatus(dir).toSeq.map(_.getPath.getName)
+    val names = logNames(tablePath, conf)
     val readable = completeCheckpoints(tablePath, conf).map(_._1).toSet
     names.collect {
       case CheckpointV2Name(v, _, "json") if !readable.contains(v.toLong) =>
@@ -171,67 +163,29 @@ object DeltaLog {
     cp match {
       case None => 0
       case Some(v) =>
-        val dir = new Path(logPath(tablePath))
-        val fs = dir.getFileSystem(conf)
+        val store = new TableStore(conf)
         val old = listVersions(tablePath, conf).filter(_ < v)
-        old.foreach(ver =>
-          fs.delete(new Path(versionFile(tablePath, ver)), false))
+        old.foreach(ver => store.delete(versionFile(tablePath, ver)))
         old.size
     }
   }
 
-  def writeLastCheckpointHint(tablePath: String, version: Long,
-      parts: Int = 1, size: Long = -1L): Unit = {
+  def writeLastCheckpointHint(store: TableStore, tablePath: String,
+      version: Long, parts: Int = 1, size: Long = -1L): Unit = {
     // spec: `size` (action count) is required; `parts` only when multi-part
     val sz = if (size >= 0) s""","size":$size""" else ""
     val json = if (parts <= 1) s"""{"version":$version$sz}"""
       else s"""{"version":$version$sz,"parts":$parts}"""
-    // atomic publish: a real delta-spark reader following
-    // _last_checkpoint must never see a torn/empty hint mid-write
-    val target = JPaths.get(lastCheckpointFile(tablePath))
-    val tmp = Files.createTempFile(target.getParent, ".lastckpt", ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Put-if-absent publish of an ALREADY-WRITTEN commit file without
-    * consuming it: the content file (expected in the log directory, i.e.
-    * the same filesystem) is hard-linked as the version file, so the
-    * commit bytes are written exactly once and the caller keeps `content`
-    * as its conflict-retry spool. Returns false when a concurrent writer
-    * won the version.
-    */
-  def publishCommitFile(tablePath: String, version: Long,
-      content: java.nio.file.Path): Boolean = {
-    val target = JPaths.get(versionFile(tablePath, version))
-    Files.createDirectories(target.getParent)
-    if (Files.exists(target)) return false
-    try { Files.createLink(target, content); true }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-      case _: UnsupportedOperationException =>
-        // no hard links on this filesystem: fall back to copy + atomic
-        // publish — the copy is the price of keeping the spool, paid
-        // only on this rare path
-        val tmp = Files.createTempFile(target.getParent,
-          s".$version", ".json.tmp")
-        Files.copy(content, tmp, StandardCopyOption.REPLACE_EXISTING)
-        graft.util.AtomicFiles.publish(tmp, target)
-    }
+    // a real delta-spark reader following _last_checkpoint must never
+    // see a torn/empty hint mid-write
+    store.replace(lastCheckpointFile(tablePath),
+      json.getBytes(StandardCharsets.UTF_8))
   }
 
   /** Atomically write one commit file; returns false if the version already
     * exists (concurrent writer won).
     */
-  def writeCommit(tablePath: String, version: Long, lines: Iterator[String])
-      : Boolean = {
-    val target = JPaths.get(versionFile(tablePath, version))
-    Files.createDirectories(target.getParent)
-    if (Files.exists(target)) return false
-    val tmp = Files.createTempFile(target.getParent, s".$version", ".json.tmp")
-    val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
-    try { lines.foreach { l => w.write(l); w.write('\n') } } finally w.close()
-    graft.util.AtomicFiles.publish(tmp, target)
-  }
+  def writeCommit(tablePath: String, version: Long, lines: Iterator[String],
+      store: TableStore = TableStore.active()): Boolean =
+    store.putLinesIfAbsent(versionFile(tablePath, version), lines)
 }

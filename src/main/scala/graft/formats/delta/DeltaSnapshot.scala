@@ -568,7 +568,8 @@ object DeltaSnapshot {
         fs.rename(f.getPath, dst)
       }
       fs.delete(tmpDir, true)
-      DeltaLog.writeLastCheckpointHint(tablePath, version, written.size, n)
+      DeltaLog.writeLastCheckpointHint(new graft.io.TableStore(conf), tablePath,
+        version, written.size, n)
     } finally rows.unpersist()
   }
 
@@ -692,8 +693,8 @@ object DeltaSnapshot {
       val dst = new Path(logDir, mainName)
       fs.rename(mainPart.getPath, dst)
       fs.delete(mainTmp, true)
-      DeltaLog.writeLastCheckpointHint(tablePath, version, 1,
-        n + mainRows.size)
+      DeltaLog.writeLastCheckpointHint(new graft.io.TableStore(conf),
+        tablePath, version, 1, n + mainRows.size)
     } finally addRows.unpersist()
   }
 

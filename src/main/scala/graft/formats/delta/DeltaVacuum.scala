@@ -1,10 +1,9 @@
 package graft.formats.delta
 
-import org.apache.hadoop.fs.Path
-
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.TableStore
 import graft.util.{HadoopConfs, Jsons, PathUtils}
 
 /** VACUUM — physical removal of files no longer referenced by the Delta
@@ -93,12 +92,10 @@ object DeltaVacuum {
 
     val bconf = HadoopConfs.broadcastSession(spark)
     val sums = doomed.mapPartitions { it =>
-      val c = bconf.value.value
+      val store = new TableStore(bconf.value.value)
       var n = 0L; var b = 0L
       it.foreach { f =>
-        graft.util.FaultInjection.beforeDelete(f.path)
-        val p = new Path(f.path)
-        if (p.getFileSystem(c).delete(p, false)) { n += 1; b += f.size }
+        if (store.delete(f.path)) { n += 1; b += f.size }
       }
       Iterator.single((n, b))
     }.collect()
@@ -109,18 +106,11 @@ object DeltaVacuum {
     // _delta_log (hard-link publish) and deletes it in a finally — only
     // a hard crash strands one. Sweep spools older than the horizon;
     // in-flight writers' spools are younger by construction.
-    val logDir = java.nio.file.Paths.get(DeltaLog.logPath(tablePath))
-    if (java.nio.file.Files.exists(logDir)) {
-      scala.util.Using.resource(java.nio.file.Files.list(logDir)) { s =>
-        val it = s.iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (n.startsWith("graft-spool-") && n.endsWith(".jsonl") &&
-              java.nio.file.Files.getLastModifiedTime(p).toMillis < horizon)
-            java.nio.file.Files.deleteIfExists(p)
-        }
-      }
+    val store = new TableStore(conf)
+    store.list(DeltaLog.logPath(tablePath)).foreach { f =>
+      if (TableStore.isTemp(f.getPath.getName) &&
+          f.getModificationTime < horizon)
+        store.delete(f.getPath.toString)
     }
 
     VacuumResult(deleted, bytes, scanned, scanned - deleted)

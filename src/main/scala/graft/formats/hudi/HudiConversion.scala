@@ -3,6 +3,7 @@ package graft.formats.hudi
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.io.TableStore
 import graft.model._
 import graft.plans.Placement
 import graft.spi._
@@ -33,7 +34,9 @@ class HudiConversionSource(spark: SparkSession, tablePath: String,
 
   override def sourceFormat: String = TableFormats.Hudi
 
-  private def instants: Seq[String] = HudiTimeline.listInstants(tablePath)
+  private val store = TableStore(spark)
+
+  private def instants: Seq[String] = HudiTimeline.listInstants(tablePath, store)
 
   /** Per-instant cumulative live state (latest write per fileId + replaced
     * set) for the WHOLE timeline — archived plus active — folded ONCE and
@@ -55,8 +58,8 @@ class HudiConversionSource(spark: SparkSession, tablePath: String,
       timelineCache match {
         case Some((key, commits, states)) if key == active => (commits, states)
         case _ =>
-          val commits = (HudiTimeline.readArchivedCommits(tablePath) ++
-            active.map(HudiTimeline.readCommit(tablePath, _)))
+          val commits = (HudiTimeline.readArchivedCommits(tablePath, store) ++
+            active.map(HudiTimeline.readCommit(tablePath, _, store)))
             .sortBy(_.instant)
           val states = commits.scanLeft(
             ("", Map.empty[String, (String, HudiTimeline.WriteStat, String)],
@@ -250,9 +253,9 @@ class HudiConversionSource(spark: SparkSession, tablePath: String,
     val input = rows.map { case (part, s, instant) =>
       (PathUtils.resolve(tablePath, s.path), s.fileSizeInBytes, part, instant)
     }
-    val deltas = HudiMetadataIndex.deltas(tablePath)
+    val deltas = HudiMetadataIndex.deltas(tablePath, store)
     val index = HudiMetadataIndex.read(spark, deltas,
-      at.getOrElse(Placement.of(deltas.map(_.size))))
+      at.getOrElse(Placement.of(deltas.map(_.size))), store)
     // the index hits, when the index and the footer step are on the driver
     val driverHits = index.swap.toOption.flatMap { entries =>
       val hits = entries.iterator.filter(_.columnStats.nonEmpty)
@@ -342,7 +345,7 @@ class HudiConversionSource(spark: SparkSession, tablePath: String,
 
   override def changeForCommit(commit: String): TableChange = {
     import spark.implicits._
-    val c = HudiTimeline.readCommit(tablePath, commit)
+    val c = HudiTimeline.readCommit(tablePath, commit, store)
     // log-file write stats (MOR deltacommits) never change the RO view:
     // only base-file writes become adds
     val adds = c.partitionToWriteStats.toSeq.flatMap { case (p, ss) =>
@@ -379,17 +382,17 @@ class HudiConversionSource(spark: SparkSession, tablePath: String,
     * doesCommitExistsAsOfInstant).
     */
   override def isIncrementalSyncSafeFrom(commit: String): Boolean =
-    HudiTimeline.archivedInstants(tablePath).forall(_ <= commit) &&
+    HudiTimeline.archivedInstants(tablePath, store).forall(_ <= commit) &&
       (instants.isEmpty || commit <= instants.last) &&
       // a CLEAN whose horizon is newer than the resume point has deleted
       // files the backlog replay would reference — fall back to full sync
-      HudiTimeline.cleanHorizons(tablePath).forall(_ <= commit) &&
+      HudiTimeline.cleanHorizons(tablePath, store).forall(_ <= commit) &&
       // a ROLLBACK that retracted an instant at or before the resume
       // point means already-synced state was withdrawn — incremental
       // replay cannot express that; fall back to full sync. Rollbacks of
       // LATER (failed) instants are safe: their data never reached the
       // backlog (only completed instants list).
-      HudiTimeline.rollbackTargets(tablePath).forall(_ > commit)
+      HudiTimeline.rollbackTargets(tablePath, store).forall(_ > commit)
 
   /** Read the table's rows. `read_optimized` serves the base files; the
     * `snapshot` (real-time) view MERGES unabsorbed log records over the
@@ -407,7 +410,7 @@ class HudiConversionSource(spark: SparkSession, tablePath: String,
       return graft.formats.delta.DeltaRead.toDataFrame(
         spark, hudiSnapshot(currentTable(), last))
     val keyCols = HudiTimeline
-      .property(tablePath, HudiLogFiles.RecordKeyFieldsProp)
+      .property(tablePath, HudiLogFiles.RecordKeyFieldsProp, store)
       .map(_.split(',').toSeq)
       .getOrElse(throw new UnsupportedOperationException(
         s"real-time merge at $tablePath needs " +
@@ -439,6 +442,8 @@ class HudiConversionTarget(spark: SparkSession, tablePath: String)
   private var extraStamps: Map[String, String] = Map.empty
   private var expectedBase: Option[String] = None
 
+  private val store = TableStore(spark)
+
   private def source = new HudiConversionSource(spark, tablePath, "target")
 
   /** Extra extraMetadata entries for the NEXT commit — the hook the
@@ -453,8 +458,8 @@ class HudiConversionTarget(spark: SparkSession, tablePath: String)
     pending = FilesDelta.empty
     extraStamps = Map.empty
     expectedBase = None
-    if (!HudiTimeline.exists(tablePath))
-      HudiTimeline.writeProperties(tablePath, t.name)
+    if (!HudiTimeline.exists(tablePath, store))
+      HudiTimeline.writeProperties(tablePath, t.name, store = store)
   }
 
   /** CAS pin for read-modify-write full-set syncs: commit ids on Hudi are
@@ -476,7 +481,7 @@ class HudiConversionTarget(spark: SparkSession, tablePath: String)
 
   override def syncFilesForSnapshot(files: Dataset[FileEntry]): Unit =
     pending =
-      if (HudiTimeline.listInstants(tablePath).isEmpty)
+      if (HudiTimeline.listInstants(tablePath, store).isEmpty)
         FilesDelta(Right(files), Left(Vector.empty))
       else FilesDelta.between(files, source.listingFromTimeline())
 
@@ -484,7 +489,7 @@ class HudiConversionTarget(spark: SparkSession, tablePath: String)
 
   override def completeSync(): Unit = {
     expectedBase.foreach { planned =>
-      val head = HudiTimeline.listInstants(tablePath).lastOption
+      val head = HudiTimeline.listInstants(tablePath, store).lastOption
         .getOrElse("")
       if (head != planned)
         throw new IllegalStateException(
@@ -498,7 +503,7 @@ class HudiConversionTarget(spark: SparkSession, tablePath: String)
     val instant = expectedBase match {
       case Some(planned) if planned.nonEmpty && planned.forall(_.isDigit) =>
         (BigInt(planned) + 1).toString
-      case _ => HudiTimeline.newInstant(tablePath)
+      case _ => HudiTimeline.newInstant(tablePath, store)
     }
     val tp = tablePath
     import spark.implicits._
@@ -554,7 +559,7 @@ class HudiConversionTarget(spark: SparkSession, tablePath: String)
       extraStamps
 
     val ok = HudiTimeline.writeCommitStreamed(tablePath, instant, action,
-      statLines, replaceLines, extra)
+      statLines, replaceLines, extra, store)
     if (!ok) throw new IllegalStateException(
       s"concurrent writer committed instant $instant first at $tablePath")
     // maintain the metadata index: one per-instant delta with the commit's
@@ -563,7 +568,7 @@ class HudiConversionTarget(spark: SparkSession, tablePath: String)
     // index read could take on the driver is a JSON sidecar (no job).
     adds match {
       case Left(rows) if rows.size <= Placement.MaxFiles =>
-        HudiMetadataIndex.writeSmall(tablePath, instant, rows)
+        HudiMetadataIndex.writeSmall(tablePath, instant, rows, store)
       case _ => HudiMetadataIndex.write(spark, tablePath, instant,
         Placement.dataset(spark, adds))
     }
@@ -574,14 +579,14 @@ class HudiConversionTarget(spark: SparkSession, tablePath: String)
     // them physically (the files partition tracks filesystem state;
     // visibility stays with the timeline).
     HudiMetadataTable.maintain(spark, tablePath, table.name, instant,
-      Placement.mapRows(adds)(HudiMetadataTable.addsOf(tp)))
+      Placement.mapRows(adds)(HudiMetadataTable.addsOf(tp)), store)
     added.unpin(); removes.unpin()
   }
 
   override def tableMetadata(): Option[SyncMetadata] = {
-    val is = HudiTimeline.listInstants(tablePath)
+    val is = HudiTimeline.listInstants(tablePath, store)
     is.reverse.iterator
-      .map(HudiTimeline.readCommit(tablePath, _))
+      .map(HudiTimeline.readCommit(tablePath, _, store))
       .flatMap(_.extraMetadata.get(SyncMetadata.PropertyKey))
       .map(SyncMetadata.fromJson)
       .collectFirst { case Some(m) => m }

@@ -1,6 +1,6 @@
 package graft.formats.hudi
 
-import java.nio.file.{Files, Paths}
+import graft.io.TableStore
 
 /** Table-level commit lock for Hudi writers — the
   * FileSystemBasedLockProvider pattern Hudi itself ships for
@@ -16,27 +16,22 @@ object HudiLock {
   val StaleLockMillis: Long = 10 * 60 * 1000L
   val AcquireTimeoutMillis: Long = 120000L
 
-  def withLock[T](tablePath: String, name: String)(f: => T): T = {
-    val lock = Paths.get(tablePath, ".hoodie", s".graft-lock-$name")
-    Files.createDirectories(lock.getParent)
+  def withLock[T](tablePath: String, name: String,
+      store: TableStore = TableStore.active())(f: => T): T = {
+    val lock = s"${HudiTimeline.hoodieDir(tablePath)}/.graft-lock-$name"
     val deadline = System.currentTimeMillis() + AcquireTimeoutMillis
-    var held = false
-    while (!held) {
-      try { Files.createFile(lock); held = true }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          val stale = try Files.getLastModifiedTime(lock).toMillis <
-            System.currentTimeMillis() - StaleLockMillis
-          catch { case _: java.io.IOException => false }
-          if (stale) Files.deleteIfExists(lock)
-          else if (System.currentTimeMillis() > deadline)
-            throw new IllegalStateException(
-              s"could not acquire Hudi lock $lock within " +
-                s"${AcquireTimeoutMillis / 1000}s — break it manually if " +
-                "its holder crashed")
-          else Thread.sleep(25)
-      }
+    while (!store.putIfAbsent(lock, Array.emptyByteArray)) {
+      val stale = try store.modificationTime(lock) <
+        System.currentTimeMillis() - StaleLockMillis
+      catch { case _: java.io.IOException => false }
+      if (stale) store.discard(lock)
+      else if (System.currentTimeMillis() > deadline)
+        throw new IllegalStateException(
+          s"could not acquire Hudi lock $lock within " +
+            s"${AcquireTimeoutMillis / 1000}s — break it manually if " +
+            "its holder crashed")
+      else Thread.sleep(25)
     }
-    try f finally Files.deleteIfExists(lock)
+    try f finally store.discard(lock)
   }
 }

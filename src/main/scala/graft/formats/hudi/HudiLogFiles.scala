@@ -795,28 +795,27 @@ object HudiLogFiles {
 
     // one pass only: per-group row counts come from the written files'
     // footers, not a second scan of the merged view
-    val jt = java.nio.file.Paths.get(tmp)
-    val written = Option(jt.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("__fid=")).toSeq
+    val store = graft.io.TableStore(spark)
+    val written = store.names(tmp).filter(_.startsWith("__fid="))
     val stats = Seq.newBuilder[HudiTimeline.WriteStat]
     var total = 0L
     val writtenGroups = written.map { dir =>
-      val fid = dir.getName.stripPrefix("__fid=")
-      val files = dir.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+      val fid = dir.stripPrefix("__fid=")
+      val files = store.names(s"$tmp/$dir").filter(_.endsWith(".parquet"))
+        .map(f => s"$tmp/$dir/$f")
       require(files.size == 1,
         s"compaction expected one file per group, got ${files.size} for $fid")
       val n = {
         import scala.jdk.CollectionConverters._
         val reader = graft.sources.ParquetFooters.open(
-          new Path(files.head.toString), bconfOf(spark))
+          new Path(files.head), bconfOf(spark))
         try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
         finally reader.close()
       }
       val name = s"${fid}_0-1-0_$instant.parquet"
-      java.nio.file.Files.move(files.head.toPath,
-        java.nio.file.Paths.get(tablePath, name))
+      store.move(files.head, s"$tablePath/$name")
       stats += HudiTimeline.WriteStat(fid, name, n,
-        java.nio.file.Files.size(java.nio.file.Paths.get(tablePath, name)))
+        store.length(s"$tablePath/$name"))
       total += n
       fid
     }

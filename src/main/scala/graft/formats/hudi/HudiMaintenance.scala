@@ -1,10 +1,10 @@
 package graft.formats.hudi
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths => JPaths}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.io.TableStore
 import graft.util.{HadoopConfs, Jsons, PathUtils}
 
 /** Hudi cleaning — the physical-file retirement every production Hudi
@@ -89,12 +89,10 @@ object HudiMaintenance {
     import spark.implicits._
     val sums = graft.util.Par.ds(spark, dead, 32)
       .mapPartitions { it =>
-        val c = bconf.value.value
+        val store = new TableStore(bconf.value.value)
         var n = 0L; var b = 0L
         it.foreach { case (p, size) =>
-          graft.util.FaultInjection.beforeDelete(p)
-          val hp = new org.apache.hadoop.fs.Path(p)
-          if (hp.getFileSystem(c).delete(hp, false)) { n += 1; b += size }
+          if (store.delete(p)) { n += 1; b += size }
         }
         Iterator.single((n, b))
       }.collect()
@@ -108,9 +106,9 @@ object HudiMaintenance {
       "earliestCommitToRetain" -> horizon,
       "totalFilesDeleted" -> sums.map(_._1).sum,
       "deletedFiles" -> dead.map(_._1).sorted))
-    val target = JPaths.get(
-      s"${HudiTimeline.hoodieDir(tablePath)}/$instant.clean")
-    Files.write(target, body.getBytes(StandardCharsets.UTF_8))
+    TableStore(spark).putIfAbsent(
+      s"${HudiTimeline.hoodieDir(tablePath)}/$instant.clean",
+      body.getBytes(StandardCharsets.UTF_8))
 
     // tombstone the physically deleted files in .hoodie/metadata — the
     // files partition tracks filesystem state, so clean is the one
@@ -164,12 +162,9 @@ object HudiMaintenance {
       if (owned.isEmpty) 0L
       else graft.util.Par.ds(spark, owned, 32)
         .mapPartitions { it =>
-          val c = bconf.value.value
+          val store = new TableStore(bconf.value.value)
           var n = 0L
-          it.foreach { p =>
-            val hp = new org.apache.hadoop.fs.Path(p)
-            if (hp.getFileSystem(c).delete(hp, false)) n += 1
-          }
+          it.foreach(p => if (store.delete(p)) n += 1)
           Iterator.single(n)
         }.collect().sum
 
@@ -179,8 +174,8 @@ object HudiMaintenance {
     // is always correct
     HudiMetadataTable.drop(tablePath)
     val marker = HudiTimeline.newInstant(tablePath)
-    Files.write(
-      JPaths.get(s"${HudiTimeline.hoodieDir(tablePath)}/$marker.restore"),
+    TableStore(spark).putIfAbsent(
+      s"${HudiTimeline.hoodieDir(tablePath)}/$marker.restore",
       Jsons.toJson(Map(
         "restoredTo" -> instant,
         "rolledBackInstants" -> later,

@@ -1,14 +1,14 @@
 package graft.formats.hudi
 
-import java.nio.file.{Files, Paths => JPaths}
+import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
-import scala.util.Using
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.TableStore
 import graft.model.{FileColumnStat, FileEntry, PartitionMember}
 import graft.plans.Placement
 import graft.plans.Placement.Placed
@@ -44,15 +44,10 @@ object HudiMetadataIndex {
   private[hudi] def legacyIndexDir(tablePath: String): String =
     s"${HudiTimeline.hoodieDir(tablePath)}/metadata/files"
 
-  /** The directory this table's index actually lives in. */
-  private def resolvedDir(tablePath: String): java.nio.file.Path = {
-    val nw = JPaths.get(indexDir(tablePath))
-    if (Files.exists(nw)) nw else JPaths.get(legacyIndexDir(tablePath))
-  }
-
-  def exists(tablePath: String): Boolean =
-    Files.exists(JPaths.get(indexDir(tablePath))) ||
-      Files.exists(JPaths.get(legacyIndexDir(tablePath)))
+  def exists(tablePath: String,
+      store: TableStore = TableStore.active()): Boolean =
+    store.exists(indexDir(tablePath)) ||
+      store.exists(legacyIndexDir(tablePath))
 
   /** Append one commit's added files (with their stats) as an index delta. */
   def write(spark: SparkSession, tablePath: String, instant: String,
@@ -66,47 +61,41 @@ object HudiMetadataIndex {
     * sidecar on the driver; readers merge both forms.
     */
   def writeSmall(tablePath: String, instant: String,
-      entries: Seq[FileEntry]): Unit = {
-    if (entries.isEmpty) return
-    val dir = JPaths.get(indexDir(tablePath))
-    Files.createDirectories(dir)
-    Files.writeString(dir.resolve(s"$instant.json"),
-      graft.util.Jsons.toJson(entries))
-  }
+      entries: Seq[FileEntry], store: TableStore = TableStore.active())
+      : Unit =
+    if (entries.nonEmpty)
+      store.replace(s"${indexDir(tablePath)}/$instant.json",
+        graft.util.Jsons.toJson(entries).getBytes(StandardCharsets.UTF_8))
 
-  /** One index delta: the instant that wrote it and its JSON sidecar or
-    * parquet directory.
+  /** One index delta: the instant that wrote it, its JSON sidecar or
+    * parquet directory, and the bytes a read of it costs (the sidecar, or
+    * the directory's part files).
     */
-  private[graft] case class IndexDelta(instant: String,
-      path: java.nio.file.Path) {
-    def isParquet: Boolean = Files.isDirectory(path)
-    /** Bytes a read of it costs: the JSON sidecar, or the parquet
-      * directory's part files.
-      */
-    def size: Option[Long] = Some(
-      if (!isParquet) Files.size(path)
-      else Using.resource(Files.list(path))(_.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-"))
-        .map(p => Files.size(p)).sum))
-  }
+  private[graft] case class IndexDelta(instant: String, path: String,
+      isParquet: Boolean, size: Option[Long])
 
   /** The index's deltas in instant order; empty when the table has no
     * index (readers fall back to footers).
     */
-  private[graft] def deltas(tablePath: String): Seq[IndexDelta] = {
-    val dir = resolvedDir(tablePath)
-    if (!Files.exists(dir)) return Nil
-    Using.resource(Files.list(dir))(_.iterator().asScala.flatMap { p =>
-      val name = p.getFileName.toString
-      if (Files.isDirectory(p)) Some(IndexDelta(name, p))
+  private[graft] def deltas(tablePath: String,
+      store: TableStore = TableStore.active()): Seq[IndexDelta] = {
+    val dir =
+      if (store.exists(indexDir(tablePath))) indexDir(tablePath)
+      else legacyIndexDir(tablePath)
+    store.names(dir).flatMap { name =>
+      val p = s"$dir/$name"
+      if (store.isDirectory(p)) Some(IndexDelta(name, p, isParquet = true,
+        Some(store.names(p).filter(_.startsWith("part-"))
+          .map(n => store.length(s"$p/$n")).sum)))
       else if (name.endsWith(".json"))
-        Some(IndexDelta(name.stripSuffix(".json"), p))
+        Some(IndexDelta(name.stripSuffix(".json"), p, isParquet = false,
+          Some(store.length(p))))
       else None
-    }.toSeq).sortBy(_.instant)
+    }.sortBy(_.instant)
   }
 
-  private def jsonFileEntries(p: java.nio.file.Path): Seq[FileEntry] = {
-    val arr = graft.util.Jsons.mapper.readTree(Files.readString(p))
+  private def jsonFileEntries(store: TableStore, p: String): Seq[FileEntry] = {
+    val arr = graft.util.Jsons.mapper.readTree(store.read(p))
     arr.elements().asScala.map { n =>
       FileEntry(n.get("path").asText, n.get("fileSizeBytes").asLong,
         n.get("recordCount").asLong, n.get("fileFormat").asText,
@@ -144,14 +133,16 @@ object HudiMetadataIndex {
     * that a delta written by older code lacks reads as null.
     */
   private[graft] def read(spark: SparkSession, deltas: Seq[IndexDelta],
-      at: Placement): Placed[FileEntry] = {
+      at: Placement, store: TableStore = TableStore.active())
+      : Placed[FileEntry] = {
     import spark.implicits._
     val (parquet, json) = deltas.partition(_.isParquet)
-    val fromJson = json.flatMap(d => jsonFileEntries(d.path).map((d.instant, _)))
+    val fromJson = json.flatMap(d =>
+      jsonFileEntries(store, d.path).map((d.instant, _)))
     val schema = org.apache.spark.sql.Encoders.product[FileEntry].schema
     // each row tagged with its delta's instant (the directory name)
     val fromParquet = Option.when(parquet.nonEmpty)(spark.read.schema(schema)
-      .parquet(parquet.map(_.path.toString): _*)
+      .parquet(parquet.map(_.path): _*)
       .select(regexp_extract(input_file_name(), "([^/]+)/[^/]+$", 1)
         .as("_1"), struct(schema.fieldNames.toIndexedSeq.map(col): _*)
         .as("_2"))

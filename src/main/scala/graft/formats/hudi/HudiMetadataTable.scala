@@ -2,7 +2,6 @@ package graft.formats.hudi
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths => JPaths}
 
 import scala.jdk.CollectionConverters._
 
@@ -12,9 +11,10 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader,
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 import org.apache.spark.sql.SparkSession
 
+import graft.io.TableStore
 import graft.plans.Placement
 import graft.plans.Placement.Placed
-import graft.util.{HadoopConfs, PathUtils}
+import graft.util.PathUtils
 
 /** Hudi's `.hoodie/metadata` table — the `files` partition, in the real
   * wire format a Hudi reader with `hoodie.metadata.enable=true` consumes
@@ -56,9 +56,9 @@ object HudiMetadataTable {
   def metadataPath(tablePath: String): String =
     s"$tablePath/.hoodie/metadata"
 
-  def exists(tablePath: String): Boolean =
-    Files.exists(JPaths.get(metadataPath(tablePath),
-      ".hoodie", "hoodie.properties"))
+  def exists(tablePath: String,
+      store: TableStore = TableStore.active()): Boolean =
+    HudiTimeline.exists(metadataPath(tablePath), store)
 
   /** HoodieMetadataRecord writer schema, verbatim from the golden
     * metadata log block header (wire format — readers parse this JSON
@@ -118,11 +118,10 @@ object HudiMetadataTable {
     * populated — byte-matching golden modulo the write token) and the
     * empty delete block log.1, under timeline instant 00000000000000010.
     */
-  def bootstrap(tablePath: String, tableName: String): Unit = {
+  def bootstrap(tablePath: String, tableName: String,
+      store: TableStore = TableStore.active()): Unit = {
     val mp = metadataPath(tablePath)
-    if (exists(tablePath)) return
-    val hoodie = JPaths.get(mp, ".hoodie")
-    Files.createDirectories(hoodie)
+    if (exists(tablePath, store)) return
     val props =
       s"""#Properties saved by graft
          |hoodie.table.name=${tableName}_metadata
@@ -138,12 +137,11 @@ object HudiMetadataTable {
          |hoodie.datasource.write.drop.partition.columns=false
          |hoodie.compaction.record.merger.strategy=eeb8d96f-b1e4-49fd-bbf8-28ac514178e5
          |""".stripMargin
-    Files.write(hoodie.resolve("hoodie.properties"),
+    store.replace(HudiTimeline.propertiesFile(mp),
       props.getBytes(StandardCharsets.UTF_8))
 
-    val filesDir = JPaths.get(mp, FilesPartition)
-    Files.createDirectories(filesDir)
-    Files.write(filesDir.resolve(".hoodie_partition_metadata"),
+    val filesDir = s"$mp/$FilesPartition"
+    store.replace(s"$filesDir/.hoodie_partition_metadata",
       s"""#partition metadata
          |commitTime=$BootstrapInstant
          |partitionDepth=1
@@ -154,13 +152,13 @@ object HudiMetadataTable {
     val value = recordBytes(TypePartitionList, Nil, Some(baseName))
     val hfile = HFiles.write(Iterator(row -> value), schemaJson,
       bloom = true)
-    Files.write(filesDir.resolve(baseName), hfile)
+    store.putIfAbsent(s"$filesDir/$baseName", hfile)
 
     val logName = s".${FileGroupId}_$BootstrapInstant.log.1_0-0-0"
-    HudiLogFiles.writeDeleteMarker(HadoopConfs.active(),
-      filesDir.resolve(logName).toString, BootstrapInstant)
+    HudiLogFiles.writeDeleteMarker(store.conf, s"$filesDir/$logName",
+      BootstrapInstant)
 
-    writeDeltaCommit(mp, BootstrapInstant,
+    writeDeltaCommit(store, mp, BootstrapInstant,
       path = s"$FilesPartition/$baseName", prevCommit = "null",
       numWrites = 1, fileSize = hfile.length.toLong,
       logFiles = Nil, baseFile = baseName)
@@ -180,10 +178,12 @@ object HudiMetadataTable {
     */
   def appendCommit(tablePath: String, instant: String,
       deltas: Iterator[(String, String, Long, Boolean)],
-      touchedPartitions: Seq[String]): Unit = {
-    require(exists(tablePath), s"metadata table missing at $tablePath")
+      touchedPartitions: Seq[String],
+      store: TableStore = TableStore.active()): Unit = {
+    require(exists(tablePath, store), s"metadata table missing at $tablePath")
     val mp = metadataPath(tablePath)
-    val filesDir = JPaths.get(mp, FilesPartition)
+    val filesDir = s"$mp/$FilesPartition"
+    val names = store.names(filesDir)
 
     // one cell per partition, plus __all_partitions__ at its sorted
     // position; the grouped iterator is folded partition-by-partition so
@@ -211,20 +211,21 @@ object HudiMetadataTable {
     val cells = mergeSorted(partCells, allPartsCell)
 
     val hfile = HFiles.write(cells, schemaJson, bloom = false)
-    val baseInstant = latestBaseInstant(filesDir)
-    val version = nextLogVersion(filesDir, baseInstant)
+    val baseInstant = latestBaseInstant(names)
+    val logs = logNames(names, baseInstant)
+    val version = logs.lastOption.fold(1)(logVersion(_) + 1)
     val logName = s".${FileGroupId}_$baseInstant.log.${version}_0-0-0"
-    val logLen = HudiLogFiles.appendHFileBlock(HadoopConfs.active(),
-      filesDir.resolve(logName).toString, instant, schemaJson, hfile)
+    val logLen = HudiLogFiles.appendHFileBlock(store.conf,
+      s"$filesDir/$logName", instant, schemaJson, hfile)
 
-    writeDeltaCommit(mp, instant,
+    writeDeltaCommit(store, mp, instant,
       path = s"$FilesPartition/$logName", prevCommit = baseInstant,
       numWrites = 1, fileSize = logLen,
-      logFiles = currentLogNames(filesDir, baseInstant),
+      logFiles = logs :+ logName,
       baseFile = s"${FileGroupId}_0-0-0_$baseInstant.hfile")
 
-    if (currentLogNames(filesDir, baseInstant).size > CompactLogThreshold)
-      compact(tablePath, s"${instant}001")
+    if (logs.size + 1 > CompactLogThreshold)
+      compact(tablePath, s"${instant}001", store)
   }
 
   /** Log files tolerated on the current file slice before the merged
@@ -246,11 +247,12 @@ object HudiMetadataTable {
     * across multiple file groups (files-0001, ...) is the scale-out
     * path beyond that and is not modeled here.
     */
-  def compact(tablePath: String, instant: String): Unit = {
+  def compact(tablePath: String, instant: String,
+      store: TableStore = TableStore.active()): Unit = {
     val mp = metadataPath(tablePath)
-    val filesDir = JPaths.get(mp, FilesPartition)
-    val oldBase = latestBaseInstant(filesDir)
-    val (partitions, files) = readFiles(tablePath)
+    val filesDir = s"$mp/$FilesPartition"
+    val oldBase = latestBaseInstant(store.names(filesDir))
+    val (partitions, files) = readFiles(tablePath, store)
     val baseName = s"${FileGroupId}_0-0-0_$instant.hfile"
 
     val rows: Seq[(String, Int, Seq[(String, Long, Boolean)])] =
@@ -268,20 +270,20 @@ object HudiMetadataTable {
       }
       .sortWith((a, b) => HFiles.RowOrdering.compare(a._1, b._1) < 0)
     val hfile = HFiles.write(cells.iterator, schemaJson, bloom = true)
-    Files.write(filesDir.resolve(baseName), hfile)
-    writeDeltaCommit(mp, instant,
+    store.putIfAbsent(s"$filesDir/$baseName", hfile)
+    writeDeltaCommit(store, mp, instant,
       path = s"$FilesPartition/$baseName", prevCommit = oldBase,
       numWrites = cells.size.toLong, fileSize = hfile.length.toLong,
       logFiles = Nil, baseFile = baseName, action = "commit")
     // drop the superseded slice (logs and any-token bases of the old
     // instant) plus the Hadoop ChecksumFileSystem .crc siblings the log
     // writer leaves next to local files
-    val stale = Option(filesDir.toFile.list()).getOrElse(Array.empty)
+    val stale = store.names(filesDir)
       .filter(n => n.startsWith(s".${FileGroupId}_$oldBase.log.") ||
         (n.endsWith(s"_$oldBase.hfile") && n != baseName) ||
         (n.endsWith(".crc") && (n.contains(s"_$oldBase.log.") ||
           n.contains(s"_$oldBase.hfile"))))
-    stale.foreach(n => Files.deleteIfExists(filesDir.resolve(n)))
+    stale.foreach(n => store.delete(s"$filesDir/$n"))
   }
 
   private def mergeSorted(
@@ -301,40 +303,31 @@ object HudiMetadataTable {
   }
 
   /** Base instant of the current file slice (newest base HFile). */
-  private def latestBaseInstant(filesDir: java.nio.file.Path): String = {
-    val bases = Option(filesDir.toFile.list()).getOrElse(Array.empty)
-      .filter(n => !n.startsWith(".") && n.endsWith(".hfile") &&
-        n.startsWith(FileGroupId))
-    if (bases.isEmpty) BootstrapInstant
-    else bases.map { n =>
-      val stem = n.stripSuffix(".hfile")
-      stem.substring(stem.lastIndexOf('_') + 1)
-    }.max
+  private def latestBaseInstant(names: Seq[String]): String =
+    latestBase(names).fold(BootstrapInstant)(baseInstantOf)
+
+  /** The newest base HFile: its instant is the final underscore-separated
+    * token of its name.
+    */
+  private def latestBase(names: Seq[String]): Option[String] =
+    names.filter(n => !n.startsWith(".") && n.endsWith(".hfile") &&
+      n.startsWith(FileGroupId)).maxByOption(baseInstantOf)
+
+  private def baseInstantOf(name: String): String = {
+    val stem = name.stripSuffix(".hfile")
+    stem.substring(stem.lastIndexOf('_') + 1)
   }
 
-  private def nextLogVersion(filesDir: java.nio.file.Path,
-      baseInstant: String): Int = {
-    val existing = Option(filesDir.toFile.list()).getOrElse(Array.empty)
-      .filter(_.startsWith(s".${FileGroupId}_$baseInstant.log."))
-    val versions = existing.flatMap { n =>
-      val after = n.substring(n.indexOf(".log.") + 5)
-      after.takeWhile(_.isDigit) match {
-        case "" => None
-        case d => Some(d.toInt)
-      }
-    }
-    if (versions.isEmpty) 1 else versions.max + 1
-  }
+  private def logVersion(name: String): Int =
+    name.substring(name.indexOf(".log.") + 5).takeWhile(_.isDigit).toInt
 
-  private def currentLogNames(filesDir: java.nio.file.Path,
-      baseInstant: String): Seq[String] =
-    Option(filesDir.toFile.list()).getOrElse(Array.empty)
-      .filter(_.startsWith(s".${FileGroupId}_$baseInstant.log."))
-      .sortBy(n => n.substring(n.indexOf(".log.") + 5)
-        .takeWhile(_.isDigit).toInt)
-      .toSeq
+  /** The log files of the slice based at `baseInstant`, in version order. */
+  private def logNames(names: Seq[String], baseInstant: String): Seq[String] =
+    names.filter(n => n.startsWith(s".${FileGroupId}_$baseInstant.log.") &&
+      !n.endsWith(".crc")).sortBy(logVersion)
 
-  private def writeDeltaCommit(mp: String, instant: String, path: String,
+  private def writeDeltaCommit(store: TableStore, mp: String,
+      instant: String, path: String,
       prevCommit: String, numWrites: Long, fileSize: Long,
       logFiles: Seq[String], baseFile: String,
       action: String = "deltacommit"): Unit = {
@@ -350,7 +343,7 @@ object HudiMetadataTable {
       "logFiles" -> logFiles))
     val ok = HudiTimeline.writeCommitStreamed(mp, instant, action,
       Iterator(FilesPartition + HudiTimeline.GroupSep + stat),
-      Iterator.empty, Map("schema" -> schemaJson))
+      Iterator.empty, Map("schema" -> schemaJson), store)
     require(ok, s"metadata $action $instant already exists at $mp")
   }
 
@@ -362,22 +355,15 @@ object HudiMetadataTable {
     * HFILE blocks in version order — the same merge a real Hudi
     * metadata reader performs.
     */
-  def readFiles(tablePath: String)
+  def readFiles(tablePath: String, store: TableStore = TableStore.active())
       : (Set[String], Map[String, Map[String, Long]]) = {
-    val filesDir = JPaths.get(metadataPath(tablePath), FilesPartition)
-    require(Files.isDirectory(filesDir),
-      s"no metadata files partition at $filesDir")
-    val names = Option(filesDir.toFile.list()).getOrElse(Array.empty)
+    val filesDir = s"${metadataPath(tablePath)}/$FilesPartition"
+    val names = store.names(filesDir)
+    require(names.nonEmpty, s"no metadata files partition at $filesDir")
 
-    val bases = names.filter(n => !n.startsWith(".") &&
-      n.endsWith(".hfile") && n.startsWith(FileGroupId))
-    require(bases.nonEmpty, s"no base HFile in $filesDir")
-    // base instant is the final underscore-separated token
-    val base = bases.maxBy(n =>
-      n.stripSuffix(".hfile").substring(n.stripSuffix(".hfile")
-        .lastIndexOf('_') + 1))
-    val baseInstant = base.stripSuffix(".hfile")
-      .substring(base.stripSuffix(".hfile").lastIndexOf('_') + 1)
+    val base = latestBase(names).getOrElse(
+      throw new IllegalArgumentException(s"no base HFile in $filesDir"))
+    val baseInstant = baseInstantOf(base)
 
     var partitions = Set.empty[String]
     var files = Map.empty[String, Map[String, Long]]
@@ -408,25 +394,20 @@ object HudiMetadataTable {
       }
     }
 
-    applyCells(HFiles.read(
-      Files.readAllBytes(filesDir.resolve(base))).cells)
+    applyCells(HFiles.read(store.read(s"$filesDir/$base")).cells)
 
-    val conf = HadoopConfs.active()
-    names.filter(_.startsWith(s".${FileGroupId}_$baseInstant.log."))
-      .sortBy(n => n.substring(n.indexOf(".log.") + 5)
-        .takeWhile(_.isDigit).toInt)
-      .foreach { log =>
-        HudiLogFiles.walkBlocks(conf, filesDir.resolve(log).toString)
-          .foreach { blk =>
-            if (blk.blockType == HudiLogFiles.HFileDataBlock)
-              applyCells(HFiles.read(blk.content).cells)
-          }
+    logNames(names, baseInstant).foreach { log =>
+      HudiLogFiles.walkBlocks(store.conf, s"$filesDir/$log").foreach { blk =>
+        if (blk.blockType == HudiLogFiles.HFileDataBlock)
+          applyCells(HFiles.read(blk.content).cells)
       }
+    }
     (partitions, files)
   }
 
-  def listPartitions(tablePath: String): Set[String] =
-    if (!exists(tablePath)) Set.empty else readFiles(tablePath)._1
+  def listPartitions(tablePath: String,
+      store: TableStore = TableStore.active()): Set[String] =
+    if (!exists(tablePath, store)) Set.empty else readFiles(tablePath, store)._1
 
   // --------------------------------------------- best-effort hooks
 
@@ -436,13 +417,9 @@ object HudiMetadataTable {
     * (restore) and for any maintenance failure: a MISSING metadata
     * table degrades, a STALE one lies.
     */
-  def drop(tablePath: String): Unit = {
-    val root = JPaths.get(metadataPath(tablePath))
-    if (Files.exists(root)) {
-      val all = Files.walk(root).iterator().asScala.toSeq.reverse
-      all.foreach(Files.deleteIfExists(_))
-    }
-  }
+  def drop(tablePath: String,
+      store: TableStore = TableStore.active()): Unit =
+    store.deleteTree(metadataPath(tablePath))
 
   /** Hudi's files-partition key for a data file's partition path
     * (empty relative path maps to "." — golden convention).
@@ -468,9 +445,9 @@ object HudiMetadataTable {
     * bound (same class as clean's allWrites fold).
     */
   private def catchUpAdds(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, instant: String)
+      tablePath: String, instant: String, store: TableStore)
       : Option[(String, Seq[(String, String, Long)])] = {
-    val prior = HudiTimeline.listInstants(tablePath).filter(_ < instant)
+    val prior = HudiTimeline.listInstants(tablePath, store).filter(_ < instant)
     if (prior.isEmpty) return Some(("", Nil))
     val upTo = prior.last
     val src = new HudiConversionSource(spark, tablePath,
@@ -501,18 +478,19 @@ object HudiMetadataTable {
     * performed).
     */
   private def ensureTable(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, tableName: String, instant: String): Boolean = {
-    if (exists(tablePath)) return true
-    catchUpAdds(spark, tablePath, instant) match {
+      tablePath: String, tableName: String, instant: String,
+      store: TableStore): Boolean = {
+    if (exists(tablePath, store)) return true
+    catchUpAdds(spark, tablePath, instant, store) match {
       case None =>
-        drop(tablePath)
+        drop(tablePath, store)
         false
       case Some((upTo, catchUp)) =>
-        bootstrap(tablePath, tableName)
+        bootstrap(tablePath, tableName, store)
         if (catchUp.nonEmpty)
           append(spark, tablePath, upTo,
             Left(catchUp.toIndexedSeq.map { case (p, n, s) =>
-              (p, n, s, false) }))
+              (p, n, s, false) }), store)
         true
     }
   }
@@ -538,20 +516,21 @@ object HudiMetadataTable {
     * stale listing behind.
     */
   def maintain(spark: SparkSession, tablePath: String, tableName: String,
-      instant: String, deltas: Placed[FileDelta]): Unit =
-    try HudiLock.withLock(tablePath, "metadata") {
+      instant: String, deltas: Placed[FileDelta],
+      store: TableStore = TableStore.active()): Unit =
+    try HudiLock.withLock(tablePath, "metadata", store) {
       // one external path means split-dir layout — the whole commit
       // shares one layout, so a distributed side's head decides
       if (deltas.fold(_.iterator, _.take(1).iterator)
           .exists(d => external(d._1))) {
-        drop(tablePath)
+        drop(tablePath, store)
         return
       }
-      if (!ensureTable(spark, tablePath, tableName, instant)) return
-      append(spark, tablePath, instant, deltas)
+      if (!ensureTable(spark, tablePath, tableName, instant, store)) return
+      append(spark, tablePath, instant, deltas, store)
     } catch {
       case e: Exception =>
-        drop(tablePath)
+        drop(tablePath, store)
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           s"dropping .hoodie/metadata at $tablePath after failed " +
             s"maintenance for instant $instant: ${e.getMessage}")
@@ -562,7 +541,7 @@ object HudiMetadataTable {
     * added files' partitions as the touched set.
     */
   private def append(spark: SparkSession, tablePath: String,
-      instant: String, deltas: Placed[FileDelta]): Unit = {
+      instant: String, deltas: Placed[FileDelta], store: TableStore): Unit = {
     import spark.implicits._
     val sep = HudiTimeline.GroupSep
     val lines = Placement.mapRows(deltas)(_.map { case (p, n, size, del) =>
@@ -575,6 +554,6 @@ object HudiMetadataTable {
       val Array(p, n, size, del) = line.split(sep)
       (p, n, size.toLong, del.toBoolean)
     }
-    appendCommit(tablePath, instant, it, touched)
+    appendCommit(tablePath, instant, it, touched, store)
   }
 }

@@ -1,13 +1,12 @@
 package graft.formats.hudi
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths => JPaths, StandardCopyOption}
 import java.time.ZoneOffset
 import java.time.format.DateTimeFormatter
 
 import scala.jdk.CollectionConverters._
-import scala.util.Using
 
+import graft.io.TableStore
 import graft.plans.Placement.Placed
 import graft.util.Jsons
 
@@ -83,71 +82,73 @@ object HudiTimeline {
     * the clock hasn't advanced (second-granularity writers are why the
     * reference special-cases this — HudiInstantUtils.java:78).
     */
-  def newInstant(tablePath: String): String = {
+  def newInstant(tablePath: String,
+      store: TableStore = TableStore.active()): String = {
     val now = InstantFormat.format(java.time.Instant.now())
-    listInstants(tablePath).lastOption match {
+    listInstants(tablePath, store).lastOption match {
       case Some(last) if last >= now =>
         (BigInt(last) + 1).toString
       case _ => now
     }
   }
 
-  def exists(tablePath: String): Boolean =
-    Files.exists(JPaths.get(hoodieDir(tablePath), "hoodie.properties"))
+  def propertiesFile(tablePath: String): String =
+    s"${hoodieDir(tablePath)}/hoodie.properties"
 
+  def exists(tablePath: String,
+      store: TableStore = TableStore.active()): Boolean =
+    store.exists(propertiesFile(tablePath))
+
+  /** `key=value` lines of a hoodie.properties body (comments skipped). */
+  private def parseProperties(text: String): Map[String, String] =
+    text.linesIterator.filterNot(_.startsWith("#")).flatMap { l =>
+      val i = l.indexOf('=')
+      if (i < 0) None else Some(l.substring(0, i) -> l.substring(i + 1).trim)
+    }.toMap
+
+  /** hoodie.properties, read and parsed once (empty when absent). */
+  def properties(tablePath: String,
+      store: TableStore = TableStore.active()): Map[String, String] =
+    store.readOption(propertiesFile(tablePath)).fold(Map.empty[String, String])(
+      b => parseProperties(new String(b, StandardCharsets.UTF_8)))
+
+  /** Publish a whole hoodie.properties: a concurrent reader sees the old
+    * file or the new one, never a truncated one.
+    */
   def writeProperties(tablePath: String, tableName: String,
-      tableType: String = "COPY_ON_WRITE"): Unit = {
-    val dir = JPaths.get(hoodieDir(tablePath))
-    Files.createDirectories(dir)
-    val props =
+      tableType: String = "COPY_ON_WRITE",
+      store: TableStore = TableStore.active()): Unit =
+    store.replace(propertiesFile(tablePath),
       s"""#Updated at ${System.currentTimeMillis()}
          |hoodie.table.name=$tableName
          |hoodie.table.type=$tableType
          |hoodie.table.version=6
          |hoodie.timeline.layout.version=1
-         |""".stripMargin
-    Files.write(dir.resolve("hoodie.properties"),
-      props.getBytes(StandardCharsets.UTF_8))
-  }
+         |""".stripMargin.getBytes(StandardCharsets.UTF_8))
 
   /** COPY_ON_WRITE (default when unreadable) or MERGE_ON_READ. */
-  def tableType(tablePath: String): String = {
-    val p = JPaths.get(hoodieDir(tablePath), "hoodie.properties")
-    if (!Files.exists(p)) "COPY_ON_WRITE"
-    else new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .linesIterator.find(_.startsWith("hoodie.table.type="))
-      .map(_.substring("hoodie.table.type=".length).trim)
-      .getOrElse("COPY_ON_WRITE")
-  }
+  def tableType(tablePath: String,
+      store: TableStore = TableStore.active()): String =
+    properties(tablePath, store).getOrElse("hoodie.table.type", "COPY_ON_WRITE")
 
   /** One property from hoodie.properties. */
-  def property(tablePath: String, key: String): Option[String] = {
-    val p = JPaths.get(hoodieDir(tablePath), "hoodie.properties")
-    if (!Files.exists(p)) None
-    else new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .linesIterator.find(_.startsWith(s"$key="))
-      .map(_.substring(key.length + 1).trim)
-  }
+  def property(tablePath: String, key: String,
+      store: TableStore = TableStore.active()): Option[String] =
+    properties(tablePath, store).get(key)
 
   /** Set (append or replace) one property in hoodie.properties. */
-  def setProperty(tablePath: String, key: String, value: String): Unit = {
-    val p = JPaths.get(hoodieDir(tablePath), "hoodie.properties")
-    val lines =
-      if (Files.exists(p))
-        new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-          .linesIterator.filterNot(_.startsWith(s"$key=")).toSeq
-      else Nil
-    Files.write(p, (lines :+ s"$key=$value").mkString("", "\n", "\n")
-      .getBytes(StandardCharsets.UTF_8))
+  def setProperty(tablePath: String, key: String, value: String,
+      store: TableStore = TableStore.active()): Unit = {
+    val lines = store.readOption(propertiesFile(tablePath)).toSeq
+      .flatMap(b => new String(b, StandardCharsets.UTF_8).linesIterator)
+      .filterNot(_.startsWith(s"$key="))
+    store.replace(propertiesFile(tablePath), (lines :+ s"$key=$value")
+      .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
   }
 
-  def tableName(tablePath: String): Option[String] = {
-    val p = JPaths.get(hoodieDir(tablePath), "hoodie.properties")
-    if (!Files.exists(p)) None
-    else new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .linesIterator.find(_.startsWith("hoodie.table.name="))
-      .map(_.substring("hoodie.table.name=".length))
-  }
+  def tableName(tablePath: String,
+      store: TableStore = TableStore.active()): Option[String] =
+    property(tablePath, "hoodie.table.name", store)
 
   // ---- Hudi 1.x timeline layout ----------------------------------------
   // Public layout (Hudi 1.0 release: hoodie.table.version 8, 1.1: 9;
@@ -165,42 +166,38 @@ object HudiTimeline {
   // split: 1.x timelines READ natively below, writes stay 0.x.
 
   /** `hoodie.table.version` (6 — the 0.x final — when absent). */
-  def tableVersion(tablePath: String): Int =
-    property(tablePath, "hoodie.table.version")
-      .flatMap(_.toIntOption).getOrElse(6)
+  def tableVersion(tablePath: String,
+      store: TableStore = TableStore.active()): Int =
+    versionOf(properties(tablePath, store))
+
+  private def versionOf(props: Map[String, String]): Int =
+    props.get("hoodie.table.version").flatMap(_.toIntOption).getOrElse(6)
 
   /** Newest table version this engine can serve correctly. */
   private val MaxReadableTableVersion = 9
 
-  /** True when the active timeline lives under the 1.x location —
-    * decided by table version, with a layout probe as the tiebreak for
-    * tables whose properties file is missing or unreadable.
+  /** A table's timeline layout, from one read of its properties: whether
+    * the active timeline lives under the 1.x location (decided by table
+    * version, with a layout probe as the tiebreak for tables whose
+    * properties file is missing or unreadable) and that directory.
     */
-  def isV1Layout(tablePath: String): Boolean = {
-    val tv = property(tablePath, "hoodie.table.version").flatMap(_.toIntOption)
-    tv match {
+  private final case class Layout(props: Map[String, String], v1: Boolean,
+      active: String)
+
+  private def layout(tablePath: String, store: TableStore): Layout = {
+    val props = properties(tablePath, store)
+    val sub = s"${hoodieDir(tablePath)}/" +
+      props.getOrElse("hoodie.timeline.path", "timeline")
+    val v1 = props.get("hoodie.table.version").flatMap(_.toIntOption) match {
       case Some(v) => v >= 7
-      case None =>
-        val tl = JPaths.get(hoodieDir(tablePath))
-          .resolve(timelineSubdir(tablePath))
-        Files.exists(tl) && {
-          val s = Files.list(tl)
-          try s.iterator().asScala.exists(p =>
-            CompletedV1Name.matches(p.getFileName.toString))
-          finally s.close()
-        }
+      case None => store.names(sub).exists(CompletedV1Name.matches)
     }
+    Layout(props, v1, if (v1) sub else hoodieDir(tablePath))
   }
 
-  private def timelineSubdir(tablePath: String): String =
-    property(tablePath, "hoodie.timeline.path").getOrElse("timeline")
-
-  /** Directory holding the ACTIVE timeline for this table's layout. */
-  def activeTimelineDir(tablePath: String): java.nio.file.Path = {
-    val base = JPaths.get(hoodieDir(tablePath))
-    if (isV1Layout(tablePath)) base.resolve(timelineSubdir(tablePath))
-    else base
-  }
+  def isV1Layout(tablePath: String,
+      store: TableStore = TableStore.active()): Boolean =
+    layout(tablePath, store).v1
 
   // `<requestTime>_<completionTime>.<action>`; a 1.x timeline migrated
   // from 0.x may retain legacy-named completed files, so both shapes list
@@ -209,8 +206,8 @@ object HudiTimeline {
   private val CompletedLegacyName =
     "([^.]+)\\.(commit|deltacommit|replacecommit)".r
 
-  private def requireReadableVersion(tablePath: String): Unit = {
-    val tv = tableVersion(tablePath)
+  private def requireReadableVersion(tablePath: String, l: Layout): Unit = {
+    val tv = versionOf(l.props)
     if (tv > MaxReadableTableVersion)
       throw new UnsupportedOperationException(
         s"Hudi table at $tablePath has hoodie.table.version $tv — newer " +
@@ -220,75 +217,67 @@ object HudiTimeline {
   }
 
   /** Completed instants, oldest first. */
-  def listInstants(tablePath: String): Seq[String] = {
-    val dir = JPaths.get(hoodieDir(tablePath))
-    if (!Files.exists(dir)) return Nil
-    requireReadableVersion(tablePath)
-    val active = activeTimelineDir(tablePath)
-    if (!Files.exists(active)) return Nil
-    val v1 = isV1Layout(tablePath)
-    Using.resource(Files.list(active))(_.iterator().asScala
-      .map(_.getFileName.toString)
-      .flatMap {
-        case CompletedV1Name(req, _, _) if v1 => Some(req)
-        case CompletedLegacyName(req, _) => Some(req)
-        case _ => None
-      }
-      .toSeq).sorted
+  def listInstants(tablePath: String,
+      store: TableStore = TableStore.active()): Seq[String] = {
+    val l = layout(tablePath, store)
+    requireReadableVersion(tablePath, l)
+    store.names(l.active).flatMap {
+      case CompletedV1Name(req, _, _) if l.v1 => Some(req)
+      case CompletedLegacyName(req, _) => Some(req)
+      case _ => None
+    }.sorted
   }
 
-  private val CleanV1Name = "([0-9]+)_([0-9]+)\\.clean".r
-  private val CleanLegacyName = "([^.]+)\\.clean".r
+  /** Completed `action` instants (cleans, rollbacks) under either layout,
+    * each with the value of `field` in its body: graft's JSON node, or the
+    * field of a real writer's avro container, decoded by name whichever
+    * minor release wrote it. None when the body does not parse or lacks
+    * the field.
+    */
+  private def instantField(tablePath: String, action: String, field: String,
+      store: TableStore): Seq[(String, Option[AnyRef])] = {
+    val V1Name = s"([0-9]+)_([0-9]+)\\.$action".r
+    val LegacyName = s"([^.]+)\\.$action".r
+    val active = layout(tablePath, store).active
+    store.names(active).flatMap {
+      case n @ V1Name(req, _) => Some((n, req))
+      case n @ LegacyName(req) => Some((n, req))
+      case _ => None
+    }.map { case (n, instant) =>
+      instant -> (try {
+        val bytes = store.read(s"$active/$n")
+        if (!isAvroContainer(bytes))
+          Option[AnyRef](Jsons.mapper.readTree(bytes).get(field))
+        else {
+          val reader = new org.apache.avro.file.DataFileReader(
+            new org.apache.avro.file.SeekableByteArrayInput(bytes),
+            new org.apache.avro.generic.GenericDatumReader[
+              org.apache.avro.generic.GenericRecord]())
+          try Option.when(reader.hasNext)(reader.next()).flatMap(rec =>
+            Option(rec.getSchema.getField(field)).flatMap(f =>
+              Option(rec.get(f.pos()))))
+          finally reader.close()
+        }
+      } catch { case _: Exception => None })
+    }
+  }
 
   /** Horizons of completed CLEAN instants under either layout: each is
     * the earliest commit whose files the clean RETAINED — an incremental
     * consumer resuming from BEFORE a horizon would reference physically
-    * deleted files. The body is graft's JSON (`earliestCommitToRetain`)
-    * or a real writer's avro-container HoodieCleanMetadata (same field,
-    * decoded by name); an unparseable body falls back to the clean's own
-    * instant, which is always >= its horizon (conservative, never
-    * unsafe-open).
+    * deleted files. The body's `earliestCommitToRetain` (graft's JSON or a
+    * real writer's HoodieCleanMetadata); an unparseable body falls back to
+    * the clean's own instant, which is always >= its horizon
+    * (conservative, never unsafe-open).
     */
-  def cleanHorizons(tablePath: String): Seq[String] = {
-    val active = activeTimelineDir(tablePath)
-    if (!Files.exists(active)) return Nil
-    val files = Using.resource(Files.list(active))(_.iterator().asScala
-      .map(p => (p, p.getFileName.toString))
-      .flatMap {
-        case (p, CleanV1Name(req, _)) => Some((p, req))
-        case (p, CleanLegacyName(req)) => Some((p, req))
-        case _ => None
-      }.toSeq)
-    files.map { case (p, instant) =>
-      val horizon: Option[String] =
-        try {
-          val bytes = Files.readAllBytes(p)
-          if (bytes.length >= 4 && bytes(0) == 'O' && bytes(1) == 'b' &&
-              bytes(2) == 'j') {
-            // avro object container: decode generically, read the field
-            // by name whichever HoodieCleanMetadata minor wrote it
-            val reader = new org.apache.avro.file.DataFileReader(
-              new org.apache.avro.file.SeekableByteArrayInput(bytes),
-              new org.apache.avro.generic.GenericDatumReader[
-                org.apache.avro.generic.GenericRecord]())
-            try {
-              if (!reader.hasNext) None
-              else {
-                val rec = reader.next()
-                Option(rec.getSchema.getField("earliestCommitToRetain"))
-                  .flatMap(f => Option(rec.get(f.pos())))
-                  .map(_.toString)
-              }
-            } finally reader.close()
-          } else Option(graft.util.Jsons.mapper.readTree(bytes)
-            .get("earliestCommitToRetain")).map(_.asText)
-        } catch { case _: Exception => None }
-      horizon.filter(_.nonEmpty).getOrElse(instant)
+  def cleanHorizons(tablePath: String,
+      store: TableStore = TableStore.active()): Seq[String] =
+    instantField(tablePath, "clean", "earliestCommitToRetain", store).map {
+      case (instant, v) => v.map {
+        case j: com.fasterxml.jackson.databind.JsonNode => j.asText
+        case o => o.toString
+      }.filter(_.nonEmpty).getOrElse(instant)
     }.sorted
-  }
-
-  private val RollbackV1Name = "([0-9]+)_([0-9]+)\\.rollback".r
-  private val RollbackLegacyName = "([^.]+)\\.rollback".r
 
   /** Instants retracted by completed ROLLBACK instants under either
     * layout: HoodieRollbackMetadata's `commitsRollback` (decoded by name
@@ -301,70 +290,37 @@ object HudiTimeline {
     * everything): conservative, forces the full resync, never
     * unsafe-open.
     */
-  def rollbackTargets(tablePath: String): Seq[String] = {
-    val active = activeTimelineDir(tablePath)
-    if (!Files.exists(active)) return Nil
-    val files = Using.resource(Files.list(active))(_.iterator().asScala
-      .map(p => (p, p.getFileName.toString))
-      .flatMap {
-        case (p, RollbackV1Name(req, _)) => Some((p, req))
-        case (p, RollbackLegacyName(req)) => Some((p, req))
-        case _ => None
-      }.toSeq)
-    files.flatMap { case (p, _) =>
-      val targets: Option[Seq[String]] =
-        try {
-          val bytes = Files.readAllBytes(p)
-          if (bytes.length >= 4 && bytes(0) == 'O' && bytes(1) == 'b' &&
-              bytes(2) == 'j') {
-            val reader = new org.apache.avro.file.DataFileReader(
-              new org.apache.avro.file.SeekableByteArrayInput(bytes),
-              new org.apache.avro.generic.GenericDatumReader[
-                org.apache.avro.generic.GenericRecord]())
-            try {
-              if (!reader.hasNext) None
-              else {
-                val rec = reader.next()
-                Option(rec.getSchema.getField("commitsRollback"))
-                  .flatMap(f => Option(rec.get(f.pos())))
-                  .map {
-                    case l: java.util.List[_] =>
-                      l.asScala.map(_.toString).toSeq
-                    case other => Seq(other.toString)
-                  }
-              }
-            } finally reader.close()
-          } else Option(graft.util.Jsons.mapper.readTree(bytes)
-            .get("commitsRollback"))
-            .map(_.elements().asScala.map(_.asText).toSeq)
-        } catch { case _: Exception => None }
-      targets.filter(_.nonEmpty).getOrElse(Seq("0"))
+  def rollbackTargets(tablePath: String,
+      store: TableStore = TableStore.active()): Seq[String] =
+    instantField(tablePath, "rollback", "commitsRollback", store).flatMap {
+      case (_, v) => v.map {
+        case j: com.fasterxml.jackson.databind.JsonNode =>
+          j.elements().asScala.map(_.asText).toSeq
+        case l: java.util.List[_] => l.asScala.map(_.toString).toSeq
+        case o => Seq(o.toString)
+      }.filter(_.nonEmpty).getOrElse(Seq("0"))
     }.sorted
-  }
 
   private def commitPath(tablePath: String, instant: String, action: String)
-      : java.nio.file.Path =
-    JPaths.get(hoodieDir(tablePath), s"$instant.$action")
+      : String =
+    s"${hoodieDir(tablePath)}/$instant.$action"
+
+  private val CompletedActions = Seq("replacecommit", "deltacommit", "commit")
 
   /** Completed-instant file for `instant` under EITHER layout: the legacy
-    * exact name, or the 1.x `<instant>_<completionTime>.<action>` shape.
-    * Returns (path, action).
+    * exact name (probed, no listing, on a 0.x timeline), or the 1.x
+    * `<instant>_<completionTime>.<action>` shape. Returns (path, action).
     */
-  private def completedFile(tablePath: String, instant: String)
-      : Option[(java.nio.file.Path, String)] = {
-    val active = activeTimelineDir(tablePath)
-    if (!Files.exists(active)) return None
-    val s = Files.list(active)
-    try s.iterator().asScala
-      .map(p => (p, p.getFileName.toString))
-      .collectFirst {
-        case (p, CompletedV1Name(req, _, action)) if req == instant =>
-          (p, action)
-        case (p, CompletedLegacyName(req, action)) if req == instant =>
-          (p, action)
-      }
-    finally s.close()
-  }
+  private def completedFile(tablePath: String, instant: String,
+      l: Layout, store: TableStore): Option[(String, String)] =
+    if (!l.v1) CompletedActions.map(a => (commitPath(tablePath, instant, a), a))
+      .find(f => store.exists(f._1))
+    else store.names(l.active).collectFirst {
+      case n @ CompletedV1Name(req, _, action) if req == instant =>
+        (s"${l.active}/$n", action)
+      case n @ CompletedLegacyName(req, action) if req == instant =>
+        (s"${l.active}/$n", action)
+    }
 
   /** Refuse to author timeline files into a 1.x table: this engine's
     * write dialect is the 0.x layout (table version 6) — the same pin the
@@ -372,8 +328,9 @@ object HudiTimeline {
     * (HudiConversionTarget.java:625-628). Writing legacy-located instants
     * into a v1 table would fork the timeline.
     */
-  private def requireLegacyWritable(tablePath: String, op: String): Unit =
-    if (exists(tablePath) && isV1Layout(tablePath))
+  private def requireLegacyWritable(tablePath: String, op: String,
+      store: TableStore): Unit =
+    if (exists(tablePath, store) && isV1Layout(tablePath, store))
       throw new UnsupportedOperationException(
         s"$op on the Hudi 1.x-layout table at $tablePath: this engine " +
           s"writes the 0.x timeline dialect (hoodie.table.version 6) — " +
@@ -392,19 +349,18 @@ object HudiTimeline {
     } else instant.toLongOption.getOrElse(0L)
 
   /** Remove a completed instant from the timeline (restore/rollback). */
-  def deleteInstant(tablePath: String, instant: String): Unit = {
-    requireLegacyWritable(tablePath, "deleteInstant")
-    Files.deleteIfExists(commitPath(tablePath, instant,
-      actionOf(tablePath, instant)))
+  def deleteInstant(tablePath: String, instant: String,
+      store: TableStore = TableStore.active()): Unit = {
+    requireLegacyWritable(tablePath, "deleteInstant", store)
+    store.delete(commitPath(tablePath, instant, actionOf(tablePath, instant,
+      store)))
   }
 
   /** Find the action suffix for an instant on disk. */
-  private def actionOf(tablePath: String, instant: String): String =
-    if (Files.exists(commitPath(tablePath, instant, "replacecommit")))
-      "replacecommit"
-    else if (Files.exists(commitPath(tablePath, instant, "deltacommit")))
-      "deltacommit"
-    else "commit"
+  private def actionOf(tablePath: String, instant: String,
+      store: TableStore): String =
+    CompletedActions.find(a => store.exists(commitPath(tablePath, instant, a)))
+      .getOrElse("commit")
 
   private def commitJson(meta: CommitMeta): String = Jsons.toJson(Map(
     "partitionToWriteStats" -> meta.partitionToWriteStats.map {
@@ -441,29 +397,36 @@ object HudiTimeline {
         .getOrElse(Map.empty))
   }
 
-  def writeCommit(meta: CommitMeta, tablePath: String): Boolean = {
-    requireLegacyWritable(tablePath, "writeCommit")
-    val target = commitPath(tablePath, meta.instant, meta.action)
-    Files.createDirectories(target.getParent)
-    if (Files.exists(target)) return false
-    // a real Hudi timeline carries the full state machine: empty
-    // `.requested` and `.inflight` markers precede the completed instant
-    // (commit's inflight has NO action suffix — golden hudi_dimCustomer)
-    val requested = target.getParent.resolve(
-      s"${meta.instant}.${meta.action}.requested")
-    val inflight = target.getParent.resolve(
-      if (meta.action == "commit") s"${meta.instant}.inflight"
-      else s"${meta.instant}.${meta.action}.inflight")
-    // racing writers both staging the same instant: marker creation is
-    // first-wins-tolerant (arbitration happens at the completed file's
-    // create-exclusive publish, not here)
-    try { if (!Files.exists(requested)) Files.createFile(requested) }
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    try { if (!Files.exists(inflight)) Files.createFile(inflight) }
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    val tmp = Files.createTempFile(target.getParent, s".${meta.instant}", ".tmp")
-    Files.write(tmp, commitJson(meta).getBytes(StandardCharsets.UTF_8))
-    graft.util.AtomicFiles.publish(tmp, target)
+  def writeCommit(meta: CommitMeta, tablePath: String,
+      store: TableStore = TableStore.active()): Boolean =
+    publishCommit(tablePath, meta.instant, meta.action, store)(
+      _.write(commitJson(meta)))
+
+  /** The instant's state machine, then its completed file put-if-absent:
+    * a real Hudi timeline carries empty `.requested` and `.inflight`
+    * markers before the completed instant (commit's inflight has NO
+    * action suffix — golden hudi_dimCustomer). Racing writers both staging
+    * the same instant share the markers; the completed file's
+    * put-if-absent arbitrates.
+    */
+  private def publishCommit(tablePath: String, instant: String,
+      action: String, store: TableStore)(
+      body: java.io.Writer => Unit): Boolean = {
+    requireLegacyWritable(tablePath, s"writing instant $instant", store)
+    val target = commitPath(tablePath, instant, action)
+    if (store.exists(target)) return false
+    Seq(s"$instant.$action.requested",
+      if (action == "commit") s"$instant.inflight"
+      else s"$instant.$action.inflight").foreach { m =>
+      val marker = s"${hoodieDir(tablePath)}/$m"
+      if (!store.exists(marker)) store.create(marker).close()
+    }
+    store.putIfAbsent(target) { out =>
+      val w = new java.io.BufferedWriter(
+        new java.io.OutputStreamWriter(out, StandardCharsets.UTF_8))
+      body(w)
+      w.flush()
+    }
   }
 
   /** Stream-author a commit file with O(1) driver state — the 10^6-file
@@ -496,26 +459,9 @@ object HudiTimeline {
 
   def writeCommitStreamed(tablePath: String, instant: String, action: String,
       stats: Iterator[String], replaced: Iterator[String],
-      extraMetadata: Map[String, String]): Boolean = {
-    requireLegacyWritable(tablePath, "writeCommitStreamed")
-    val target = commitPath(tablePath, instant, action)
-    Files.createDirectories(target.getParent)
-    if (Files.exists(target)) return false
-    val requested = target.getParent.resolve(
-      s"$instant.$action.requested")
-    val inflight = target.getParent.resolve(
-      if (action == "commit") s"$instant.inflight"
-      else s"$instant.$action.inflight")
-    // racing writers both staging the same instant: marker creation is
-    // first-wins-tolerant (arbitration happens at the completed file's
-    // create-exclusive publish, not here)
-    try { if (!Files.exists(requested)) Files.createFile(requested) }
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    try { if (!Files.exists(inflight)) Files.createFile(inflight) }
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    val tmp = Files.createTempFile(target.getParent, s".$instant", ".tmp")
-    val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
-    try {
+      extraMetadata: Map[String, String],
+      store: TableStore = TableStore.active()): Boolean =
+    publishCommit(tablePath, instant, action, store) { w =>
       def writeGrouped(lines: Iterator[String]): Unit = {
         var curPart: String = null
         w.write("{")
@@ -543,15 +489,18 @@ object HudiTimeline {
       w.write(",\"extraMetadata\":")
       w.write(Jsons.toJson(extraMetadata))
       w.write("}")
-    } finally w.close()
-    graft.util.AtomicFiles.publish(tmp, target)
-  }
+    }
 
-  def readCommit(tablePath: String, instant: String): CommitMeta = {
-    val (path, action) = completedFile(tablePath, instant).getOrElse(
-      (commitPath(tablePath, instant, actionOf(tablePath, instant)),
-        actionOf(tablePath, instant)))
-    val bytes = Files.readAllBytes(path)
+  /** (path, action) of a completed instant, from one properties read. */
+  private def instantFile(tablePath: String, instant: String,
+      store: TableStore): (String, String) =
+    completedFile(tablePath, instant, layout(tablePath, store), store)
+      .getOrElse((commitPath(tablePath, instant, "commit"), "commit"))
+
+  def readCommit(tablePath: String, instant: String,
+      store: TableStore = TableStore.active()): CommitMeta = {
+    val (path, action) = instantFile(tablePath, instant, store)
+    val bytes = store.read(path)
     if (isAvroContainer(bytes)) parseAvroCommit(bytes, instant, action)
     else parseCommit(Jsons.mapper.readTree(bytes), instant, action)
   }
@@ -626,21 +575,22 @@ object HudiTimeline {
     * (schema resolution, exactly-once txn stamps) must not materialize a
     * million stat objects to read a 5-entry map.
     */
-  def readCommitExtraMetadata(tablePath: String, instant: String)
-      : Map[String, String] = {
-    val (path, action) = completedFile(tablePath, instant).getOrElse(
-      (commitPath(tablePath, instant, actionOf(tablePath, instant)),
-        actionOf(tablePath, instant)))
-    val head = new Array[Byte](4)
-    val probe = Files.newInputStream(path)
-    val n = try probe.read(head) finally probe.close()
-    if (n == 4 && isAvroContainer(head))
-      // avro container: the generic decode already skips nothing useful —
-      // read whole (1.x commit files are written by real Hudi, which also
-      // materializes them to serialize)
-      return readCommit(tablePath, instant).extraMetadata
-    val in = Files.newInputStream(path)
+  def readCommitExtraMetadata(tablePath: String, instant: String,
+      store: TableStore = TableStore.active()): Map[String, String] = {
+    val (path, action) = instantFile(tablePath, instant, store)
+    val in = new java.io.BufferedInputStream(store.open(path))
     try {
+      in.mark(4)
+      val head = in.readNBytes(4)
+      if (isAvroContainer(head)) {
+        // avro container: the generic decode already skips nothing useful
+        // — read whole (1.x commit files are written by real Hudi, which
+        // also materializes them to serialize)
+        in.reset()
+        return parseAvroCommit(in.readAllBytes(), instant, action)
+          .extraMetadata
+      }
+      in.reset()
       val p = Jsons.mapper.getFactory.createParser(in)
       val out = scala.collection.mutable.Map.empty[String, String]
       import com.fasterxml.jackson.core.JsonToken
@@ -675,54 +625,45 @@ object HudiTimeline {
     s"${hoodieDir(tablePath)}/archived"
 
   /** Archived instants, oldest first. */
-  def archivedInstants(tablePath: String): Seq[String] =
-    readArchivedCommits(tablePath).map(_.instant)
+  def archivedInstants(tablePath: String,
+      store: TableStore = TableStore.active()): Seq[String] =
+    readArchivedCommits(tablePath, store).map(_.instant)
 
   /** Every archived commit's metadata, oldest first. */
-  def readArchivedCommits(tablePath: String): Seq[CommitMeta] = {
-    val dir = JPaths.get(archiveDir(tablePath))
-    if (!Files.exists(dir)) return Nil
-    Using.resource(Files.list(dir))(_.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".archived"))
-      .toSeq).sortBy(_.getFileName.toString)
+  def readArchivedCommits(tablePath: String,
+      store: TableStore = TableStore.active()): Seq[CommitMeta] =
+    store.names(archiveDir(tablePath)).filter(_.endsWith(".archived")).sorted
       .flatMap { batch =>
-        new String(Files.readAllBytes(batch), StandardCharsets.UTF_8)
+        store.readString(s"${archiveDir(tablePath)}/$batch")
           .linesIterator.filter(_.nonEmpty).map { line =>
             val n = Jsons.mapper.readTree(line)
             parseCommit(n.get("commit"),
               n.get("instant").asText, n.get("action").asText)
           }.toSeq
       }.sortBy(_.instant)
-  }
 
   /** Move all but the newest `retainLast` active instants into one archive
     * batch. Returns the archived instants (empty when under the window).
     */
-  def archiveInstants(tablePath: String, retainLast: Int): Seq[String] = {
+  def archiveInstants(tablePath: String, retainLast: Int,
+      store: TableStore = TableStore.active()): Seq[String] = {
     require(retainLast >= 1, "must retain at least one active instant")
-    requireLegacyWritable(tablePath, "archiveInstants")
-    val active = listInstants(tablePath)
+    requireLegacyWritable(tablePath, "archiveInstants", store)
+    val active = listInstants(tablePath, store)
     if (active.size <= retainLast) return Nil
     val toArchive = active.dropRight(retainLast)
-    val dir = JPaths.get(archiveDir(tablePath))
-    Files.createDirectories(dir)
-    val lines = toArchive.map { i =>
-      val action = actionOf(tablePath, i)
-      val body = new String(Files.readAllBytes(
-        commitPath(tablePath, i, action)), StandardCharsets.UTF_8)
-      s"""{"instant":"$i","action":"$action","commit":$body}"""
+    val files = toArchive.map(i =>
+      commitPath(tablePath, i, actionOf(tablePath, i, store)))
+    val lines = toArchive.zip(files).map { case (i, f) =>
+      val action = f.substring(f.lastIndexOf('.') + 1)
+      s"""{"instant":"$i","action":"$action","commit":${store.readString(f)}}"""
     }
-    val batch = dir.resolve(
-      s"commits_${toArchive.head}_${toArchive.last}.archived")
-    val tmp = Files.createTempFile(dir, ".batch", ".tmp")
-    Files.write(tmp, lines.mkString("", "\n", "\n")
-      .getBytes(StandardCharsets.UTF_8))
-    if (!graft.util.AtomicFiles.publish(tmp, batch))
+    val batch = s"${archiveDir(tablePath)}/" +
+      s"commits_${toArchive.head}_${toArchive.last}.archived"
+    if (!store.putLinesIfAbsent(batch, lines.iterator))
       throw new IllegalStateException(s"archive batch $batch already exists")
     // archive batch is durable; now retire the active files
-    toArchive.foreach { i =>
-      Files.deleteIfExists(commitPath(tablePath, i, actionOf(tablePath, i)))
-    }
+    files.foreach(store.delete)
     toArchive
   }
 }

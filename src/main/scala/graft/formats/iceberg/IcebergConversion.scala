@@ -5,6 +5,7 @@ import java.util.UUID
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.io.TableStore
 import graft.model._
 import graft.plans.Placement
 import graft.spi._
@@ -18,10 +19,12 @@ class IcebergConversionSource(spark: SparkSession, tablePath: String,
 
   override def sourceFormat: String = TableFormats.Iceberg
 
+  private val store = TableStore(spark)
+
   private def meta: IcebergTableMetadata = {
-    val v = IcebergMetadata.currentVersion(tablePath).getOrElse(
+    val v = IcebergMetadata.currentVersion(tablePath, store).getOrElse(
       throw new IllegalStateException(s"no Iceberg table at $tablePath"))
-    IcebergMetadata.read(tablePath, v)
+    IcebergMetadata.read(tablePath, v, store)
   }
 
   override def currentTable(): TableDescriptor = {
@@ -53,7 +56,7 @@ class IcebergConversionSource(spark: SparkSession, tablePath: String,
   private def uniformCurrentSpec(m: IcebergTableMetadata): Boolean =
     m.otherSpecs.isEmpty || m.currentSnapshot.forall { s =>
       uniformSpecMemo.getOrElseUpdate(s"${s.manifestList}#${m.defaultSpecId}",
-        IcebergManifests.readManifestListRecords(s.manifestList)
+        IcebergManifests.readManifestListRecords(s.manifestList, store)
           .filter(IcebergManifests.contentOf(_) == 0)
           .forall(r => (r.get("partition_spec_id") match {
             case i: java.lang.Integer => i.intValue
@@ -175,9 +178,11 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
   /** Pins where this target's commit writes run (tests only). */
   private[graft] var at: Option[Placement] = None
 
+  private val store = TableStore(spark)
+
   private def currentMeta: Option[IcebergTableMetadata] =
-    IcebergMetadata.currentVersion(tablePath)
-      .map(IcebergMetadata.read(tablePath, _))
+    IcebergMetadata.currentVersion(tablePath, store)
+      .map(IcebergMetadata.read(tablePath, _, store))
 
   /** Ids merge against the current table schema so evolution keeps
     * existing ids stable (IcebergSchemaSync semantics).
@@ -225,7 +230,7 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
         s.sourceIdentifier.exists(sid => completed.forall(c =>
           graft.sync.TableFormatSync.isBefore(c, sid))))
       if (corrupt.nonEmpty) {
-        val version = IcebergMetadata.currentVersion(tablePath)
+        val version = IcebergMetadata.currentVersion(tablePath, store)
           .getOrElse(0L) + 1
         val restored = m.copy(
           snapshots = sound,
@@ -233,7 +238,7 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
           lastSequenceNumber = sound.lastOption.map(_.sequenceNumber)
             .getOrElse(0L),
           lastUpdatedMs = System.currentTimeMillis())
-        if (!IcebergMetadata.write(tablePath, version, restored))
+        if (!IcebergMetadata.write(tablePath, version, restored, store))
           throw new IllegalStateException(
             s"concurrent writer while rolling back corrupt commits at $tablePath")
       }
@@ -262,7 +267,8 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
     pending = currentMeta.flatMap(_.currentSnapshot) match {
       case None => FilesDelta(Right(files), Left(Vector.empty))
       case Some(s) =>
-        val records = IcebergManifests.readManifestListRecords(s.manifestList)
+        val records =
+          IcebergManifests.readManifestListRecords(s.manifestList, store)
         requireNoDeleteManifests(records)
         import spark.implicits._
         val m = currentMeta.get
@@ -283,7 +289,8 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
             s"to $cur since this operation planned its file set — re-run " +
             "against the new snapshot")
     }
-    val version = IcebergMetadata.currentVersion(tablePath).getOrElse(0L) + 1
+    val version = IcebergMetadata.currentVersion(tablePath, store)
+      .getOrElse(0L) + 1
     val seq = prev.map(_.lastSequenceNumber).getOrElse(0L) + 1
     val snapshotId = seq
     val now = System.currentTimeMillis()
@@ -351,7 +358,7 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
       prev.flatMap(_.currentSnapshot)
         .map { s =>
           val records =
-            IcebergManifests.readManifestListRecords(s.manifestList)
+            IcebergManifests.readManifestListRecords(s.manifestList, store)
           requireNoDeleteManifests(records)
           records.filter(IcebergManifests.contentOf(_) == 0)
             .map(IcebergConversionTarget.PrevManifest.of(_, seq))
@@ -369,9 +376,8 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
       val md = mdir
       kept ++= (Placement.of(opened.map(_.length)) match {
         case Placement.Driver =>
-          val conf = graft.util.HadoopConfs.session(spark)
           prevManifests.map(IcebergConversionTarget.carryForwardManifest(
-            _, removedPaths, md, conf))
+            _, removedPaths, md, store))
         case Placement.Tasks =>
           val sc = spark.sparkContext
           val bc = sc.broadcast(removedPaths)
@@ -379,7 +385,7 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
           try sc.parallelize(prevManifests,
               math.min(prevManifests.size, 128))
             .map(IcebergConversionTarget.carryForwardManifest(_, bc.value,
-              md, bconf.value.value))
+              md, new TableStore(bconf.value.value)))
             .collect().toSeq
           finally bc.unpersist()
       }).flatten // a fully-dropped manifest is not carried forward at all
@@ -448,7 +454,8 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
                 specFields = sfb.getOrElse(sid, null)))
             }
           }
-          val len = IcebergManifests.writeManifest(np, run, bconf.value.value)
+          val len = IcebergManifests.writeManifest(np, run,
+            new TableStore(bconf.value.value))
           out += ((np, len, n, rows, sid, origSeq, bounds.summaries))
         }
         out.result().iterator
@@ -469,8 +476,7 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
     val writer = IcebergConversionTarget.AddedManifest(mdir, snapshotId,
       schema, specFieldsNow, defaultSpecId, isV3)
     kept ++= (adds.rows match {
-      case Left(rows) => writer.write(rows.iterator, baseRowId,
-        graft.util.HadoopConfs.session(spark)).toSeq
+      case Left(rows) => writer.write(rows.iterator, baseRowId, store).toSeq
       case Right(ds) =>
         val nParts = math.max(1, math.min(256, math.ceil(
           adds.count.toDouble / IcebergConversionTarget.EntriesPerManifest)
@@ -486,7 +492,8 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
         val bBases = spark.sparkContext.broadcast(bases)
         val bconf = graft.util.HadoopConfs.broadcastSession(spark)
         try rep.rdd.mapPartitionsWithIndex { (i, it) =>
-          writer.write(it, bBases.value(i), bconf.value.value).iterator
+          writer.write(it, bBases.value(i), new TableStore(bconf.value.value))
+            .iterator
         }.collect().toSeq
         finally { rep.unpersist(); bBases.unpersist() }
     })
@@ -508,7 +515,6 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
         // last-updated — merging across sequences would falsify it.
         // (v2 keeps the coarser spec-only merge; nothing reads per-file
         // sequences there once delete manifests are refused.)
-        val conf = graft.util.HadoopConfs.session(spark)
         val grouped =
           if (isV3) ks.groupBy(s => (s.specId, s.snapshotId)).toSeq
           else ks.groupBy(s => (s.specId, snapshotId)).toSeq
@@ -517,7 +523,7 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
           var n = 0
           var rows = 0L
           val entries = grp.iterator.flatMap { case m =>
-            IcebergManifests.readManifest(m.path, conf).filter(e =>
+            IcebergManifests.readManifest(m.path, store.conf).filter(e =>
               e.get("status").asInstanceOf[Int] != IcebergManifests.Status.Deleted)
           }.map { e =>
             e.put("status", IcebergManifests.Status.Existing); n += 1
@@ -526,7 +532,7 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
               .get("record_count").asInstanceOf[Long]
             e
           }
-          val len = IcebergManifests.writeManifest(np, entries)
+          val len = IcebergManifests.writeManifest(np, entries, store)
           IcebergManifests.ManifestSummary(np, len, grpSeq,
             0, n, 0, 0L, rows, specId = sid)
         }
@@ -537,7 +543,7 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
     // winner's already-referenced list file
     val listPath =
       s"$mdir/snap-$snapshotId-${UUID.randomUUID()}-manifest-list.avro"
-    IcebergManifests.writeManifestList(listPath, keptList)
+    IcebergManifests.writeManifestListRecords(listPath, Nil, keptList, store)
 
     val properties = prev.map(_.properties).getOrElse(Map.empty) ++
       // name mapping: graft-synced data files are plain-Spark parquet
@@ -566,7 +572,7 @@ class IcebergConversionTarget(spark: SparkSession, tablePath: String)
       otherSchemas = otherSchemas,
       otherSpecs = otherSpecs,
       formatVersion = fmtV,
-      nextRowId = if (isV3) baseRowId + newRowsTotal else 0L))
+      nextRowId = if (isV3) baseRowId + newRowsTotal else 0L), store)
     if (!ok) throw new IllegalStateException(
       s"concurrent writer committed metadata v$version first at $tablePath")
   }
@@ -695,7 +701,7 @@ object IcebergConversionTarget {
       specFields: Seq[(String, Int)], specId: Int, v3: Boolean) {
 
     def write(files: Iterator[FileEntry], firstRowId: Long,
-        conf: org.apache.hadoop.conf.Configuration)
+        store: TableStore)
         : Option[IcebergManifests.ManifestSummary] =
       if (!files.hasNext) None
       else {
@@ -709,7 +715,7 @@ object IcebergConversionTarget {
           bounds.track(IcebergManifests.toEntry(f,
             IcebergManifests.Status.Added, snapshotId, schema,
             firstRowId = fr, specFields = specFields))
-        }, conf)
+        }, store)
         Some(IcebergManifests.ManifestSummary(path, len, snapshotId, n, 0, 0,
           rows, 0L, partitions = bounds.summaries,
           specId = specId))
@@ -725,8 +731,7 @@ object IcebergConversionTarget {
     * dragging the target (SparkSession and all) along.
     */
   private[iceberg] def carryForwardManifest(m: PrevManifest,
-      removed: Set[String], mdir: String,
-      conf: org.apache.hadoop.conf.Configuration)
+      removed: Set[String], mdir: String, store: TableStore)
       : Option[IcebergManifests.ManifestSummary] = {
     def summary(path: String, len: Long, files: Int, dropped: Int,
         rows: Long, partitions: Seq[IcebergManifests.PartitionFieldSummary]
@@ -745,7 +750,7 @@ object IcebergConversionTarget {
     // pass 1 streams counts only — a 10^6-entry manifest never
     // materializes; the rewrite (pass 2) streams reader→writer
     var remaining = 0; var dropped = 0; var remainingRows = 0L
-    IcebergManifests.readManifest(m.path, conf).foreach { e =>
+    IcebergManifests.readManifest(m.path, store.conf).foreach { e =>
       if (isLive(e)) {
         if (removed.contains(pathOf(e))) dropped += 1
         else {
@@ -756,21 +761,18 @@ object IcebergConversionTarget {
       }
     }
     if (dropped == 0) {
-      val len = m.length.getOrElse {
-        val hp = new org.apache.hadoop.fs.Path(m.path)
-        hp.getFileSystem(conf).getFileStatus(hp).getLen
-      }
+      val len = m.length.getOrElse(store.length(m.path))
       Some(summary(m.path, len, remaining, 0, remainingRows))
     } else if (remaining > 0) {
       val np = s"$mdir/m-${UUID.randomUUID()}.avro"
       val bounds = new PartitionBounds
-      val survivors = IcebergManifests.readManifest(m.path, conf)
+      val survivors = IcebergManifests.readManifest(m.path, store.conf)
         .filter(e => isLive(e) && !removed.contains(pathOf(e)))
         .map { e =>
           e.put("status", IcebergManifests.Status.Existing)
           bounds.track(e)
         }
-      val len = IcebergManifests.writeManifest(np, survivors, conf)
+      val len = IcebergManifests.writeManifest(np, survivors, store)
       Some(summary(np, len, remaining, dropped, remainingRows,
         bounds.summaries))
     } else None

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.formats.iceberg.IcebergManifests.DeleteFileRef
+import graft.io.TableStore
 import graft.model.{DeletionVectorsUnsupported, FileEntry}
 
 /** Iceberg v2 row-level deletes (spec §Row-level Deletes) in graft's
@@ -306,7 +307,7 @@ object IcebergDeletes {
     val listPath =
       s"$mdir/snap-$snapshotId-${UUID.randomUUID()}-manifest-list.avro"
     IcebergManifests.writeManifestListRecords(listPath, deleteRecs,
-      lineageSummaries)
+      lineageSummaries, TableStore(spark))
     val now = System.currentTimeMillis()
     val ok = IcebergMetadata.write(tablePath, version + 1, m.copy(
       formatVersion = 3,
@@ -428,6 +429,7 @@ object IcebergDeletes {
     val seq = snapshotId
     // one puffin per non-empty shuffle partition; a file's positions are
     // co-located by the repartition, so each file gets exactly one blob
+    val wconf = graft.util.HadoopConfs.broadcastSession(spark)
     val blobMetas: Seq[(String, String, Long, Long, Long, Long)] =
       all.repartition(col("file")).sortWithinPartitions("file", "pos")
         .as[(String, Long)]
@@ -448,10 +450,10 @@ object IcebergDeletes {
             flush()
             val puffinPath =
               s"$tablePath/data/dv-${UUID.randomUUID()}.puffin"
+            val store = new TableStore(wconf.value.value)
             val blobs = Puffin.writeDeletionVectors(puffinPath,
-              snapshotId, seq, dvs.toSeq)
-            val size = java.nio.file.Files.size(java.nio.file.Paths.get(
-              graft.util.PathUtils.canonical(puffinPath)))
+              snapshotId, seq, dvs.toSeq, store)
+            val size = store.length(graft.util.PathUtils.canonical(puffinPath))
             dvs.toSeq.zip(blobs).iterator.map { case (dv, b) =>
               (dv.referencedDataFile, puffinPath, b.offset, b.length,
                 dv.positions.size.toLong, size)
@@ -459,6 +461,7 @@ object IcebergDeletes {
           }
         }.collect().toSeq.sortBy(_._1)
 
+    val store = new TableStore(wconf.value.value)
     val manifestPath = s"$mdir/m-${UUID.randomUUID()}-dv-deletes.avro"
     val len = IcebergManifests.writeManifest(manifestPath,
       blobMetas.iterator.map { case (file, pf, off, blen, card, psize) =>
@@ -466,7 +469,7 @@ object IcebergDeletes {
           pf, psize, card, file, off, blen,
           schema = m.schema, specFields = partSpecFields,
           partitionValues = partByFile.getOrElse(file, Nil))
-      })
+      }, store)
     val dvManifest = IcebergManifests.ManifestSummary(manifestPath, len,
       snapshotId, blobMetas.size, 0, 0, blobMetas.map(_._5).sum, 0L,
       content = 1, specId = m.defaultSpecId)
@@ -520,7 +523,7 @@ object IcebergDeletes {
         // readers' entry status agrees with the list-record counts below
         kept.foreach(_.put("status", IcebergManifests.Status.Existing))
         val p = s"$mdir/m-${UUID.randomUUID()}-dv-carry.avro"
-        val l = IcebergManifests.writeManifest(p, kept.iterator)
+        val l = IcebergManifests.writeManifest(p, kept.iterator, store)
         Some(IcebergManifests.ManifestSummary(p, l,
           IcebergManifests.longOf(r.get("sequence_number"), seq),
           0, kept.size, 0, 0L, kept.map { e =>
@@ -533,7 +536,7 @@ object IcebergDeletes {
     val listPath =
       s"$mdir/snap-$snapshotId-${UUID.randomUUID()}-manifest-list.avro"
     IcebergManifests.writeManifestListRecords(listPath, untouched,
-      lineageSummaries ++ rewritten :+ dvManifest)
+      lineageSummaries ++ rewritten :+ dvManifest, store)
 
     val now = System.currentTimeMillis()
     val ok = IcebergMetadata.write(tablePath, version + 1, m.copy(
@@ -858,6 +861,7 @@ object IcebergDeletes {
     }
     val now = System.currentTimeMillis()
     val conf = spark.sessionState.newHadoopConf()
+    val store = new TableStore(conf)
     val mdir = IcebergMetadata.metadataDir(tablePath)
 
     // per-file record counts AND column bounds from a DISTRIBUTED footer
@@ -899,7 +903,7 @@ object IcebergDeletes {
             firstRowId = firstRowId,
             specFields = IcebergMetadata.specFieldIds(
               m.schema, m.partitionSpec, m.otherSpecs))
-        })
+        }, store)
       Some(IcebergManifests.ManifestSummary(manifestPath, len, snapshotId,
         nFiles, 0, 0, nRows, 0L,
         content = if (manifestContent == 0) 0 else 1,
@@ -977,7 +981,7 @@ object IcebergDeletes {
       val listPath =
         s"$mdir/snap-$snapshotId-${UUID.randomUUID()}-manifest-list.avro"
       IcebergManifests.writeManifestListRecords(listPath, carried,
-        deleteManifest.toSeq ++ dataManifest.toSeq)
+        deleteManifest.toSeq ++ dataManifest.toSeq, store)
 
       val ok = IcebergMetadata.write(tablePath, version + 1, m.copy(
         lastSequenceNumber = seq,

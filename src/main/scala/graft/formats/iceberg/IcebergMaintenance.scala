@@ -1,7 +1,5 @@
 package graft.formats.iceberg
 
-import org.apache.hadoop.fs.Path
-
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.util.{HadoopConfs, PathUtils}
@@ -79,7 +77,7 @@ object IcebergMaintenance {
     // set, the sweep would remove them, and every position/equality
     // delete would silently resurrect its rows
     val manifests: Seq[String] = manifestLists
-      .flatMap(IcebergManifests.readManifestListRecords)
+      .flatMap(IcebergManifests.readManifestListRecords(_))
       .map(_.get("manifest_path").toString)
     val bconf = HadoopConfs.broadcastSession(spark)
     val referencedData: Dataset[String] =
@@ -118,12 +116,10 @@ object IcebergMaintenance {
       // millisecond the sweep started is still sweepable
       .filter(_.mtime <= horizon)
     val sums = doomed.mapPartitions { it =>
-      val c = bconf.value.value
+      val store = new graft.io.TableStore(bconf.value.value)
       var n = 0L; var b = 0L
       it.foreach { f =>
-        graft.util.FaultInjection.beforeDelete(f.path)
-        val p = new Path(f.path)
-        if (p.getFileSystem(c).delete(p, false)) { n += 1; b += f.size }
+        if (store.delete(f.path)) { n += 1; b += f.size }
       }
       Iterator.single((n, b))
     }.collect()

@@ -1,6 +1,5 @@
 package graft.formats.iceberg
 
-import java.io.File
 import java.nio.ByteBuffer
 
 import scala.jdk.CollectionConverters._
@@ -11,6 +10,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.io.TableStore
 import graft.model._
 import graft.plans.Placement
 
@@ -525,33 +525,17 @@ object IcebergManifests {
     e
   }
 
-  def writeManifest(path: String, entries: Iterator[GenericRecord]): Long = {
-    val f = new File(path)
-    f.getParentFile.mkdirs()
+  /** Write one manifest through `store`; returns its length. */
+  def writeManifest(path: String, entries: Iterator[GenericRecord],
+      store: TableStore): Long = {
     // the container's schema is the FIRST record's; any record arriving
     // in a different dialect re-encodes to it (see reencodeEntry)
     val buf = entries.buffered
     val sch = if (buf.hasNext) buf.head.getSchema else EntrySchema
     val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](sch))
-    w.create(sch, f)
+    w.create(sch, store.create(path))
     try buf.foreach(e => w.append(reencodeEntry(e, sch))) finally w.close()
-    f.length()
-  }
-
-  /** Hadoop-FS variant for executor-side manifest writes (the
-    * big-removes carry-forward): object-store-safe, returns length.
-    */
-  def writeManifest(path: String, entries: Iterator[GenericRecord],
-      conf: org.apache.hadoop.conf.Configuration): Long = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(conf)
-    val out = fs.create(hp, true)
-    val buf = entries.buffered
-    val sch = if (buf.hasNext) buf.head.getSchema else EntrySchema
-    val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](sch))
-    w.create(sch, out)
-    try buf.foreach(e => w.append(reencodeEntry(e, sch))) finally w.close()
-    fs.getFileStatus(hp).getLen
+    store.length(path)
   }
 
   /** A manifest's entries, read through the FileSystem `conf` names. */
@@ -561,40 +545,13 @@ object IcebergManifests {
     // manifests (k_v arrays, unions, no engine-extension fields) resolve
     // exactly; graft's own files read as before. `file:` URIs (what real
     // java writers store) canonicalize to filesystem paths.
-    val r = new DataFileReader(new org.apache.avro.mapred.FsInput(
-        new org.apache.hadoop.fs.Path(graft.util.PathUtils.canonical(path)),
-        conf),
+    val r = new DataFileReader(new TableStore(conf)
+        .seekable(graft.util.PathUtils.canonical(path)),
       new GenericDatumReader[GenericRecord]())
     new Iterator[GenericRecord] {
       def hasNext: Boolean = { val h = r.hasNext; if (!h) r.close(); h }
       def next(): GenericRecord = r.next()
     }
-  }
-
-  def writeManifestList(path: String,
-      manifests: Seq[ManifestSummary]): Unit = {
-    val f = new File(path)
-    f.getParentFile.mkdirs()
-    val w = new DataFileWriter(
-      new GenericDatumWriter[GenericRecord](ManifestFileSchema))
-    w.create(ManifestFileSchema, f)
-    try manifests.foreach { m =>
-      val r = new GenericData.Record(ManifestFileSchema)
-      r.put("manifest_path", m.path); r.put("manifest_length", m.length)
-      r.put("partition_spec_id", m.specId)
-      r.put("content", m.content)
-      r.put("sequence_number", m.snapshotId)
-      r.put("min_sequence_number", 0L)
-      r.put("added_snapshot_id", m.snapshotId)
-      r.put("added_data_files_count", m.addedFiles)
-      r.put("existing_data_files_count", m.existingFiles)
-      r.put("deleted_data_files_count", m.deletedFiles)
-      r.put("added_rows_count", m.addedRows)
-      r.put("existing_rows_count", m.existingRows)
-      r.put("deleted_rows_count", 0L)
-      putPartitionSummaries(r, m.partitions)
-      w.append(r)
-    } finally w.close()
   }
 
   private def putPartitionSummaries(r: GenericData.Record,
@@ -642,10 +599,10 @@ object IcebergManifests {
   /** Every manifest_file record of a manifest list, verbatim (data AND
     * delete manifests) — for delete-awareness checks and carry-forward.
     */
-  def readManifestListRecords(path: String): Seq[GenericRecord] = {
-    val hp = new org.apache.hadoop.fs.Path(graft.util.PathUtils.canonical(path))
+  def readManifestListRecords(path: String,
+      store: TableStore = TableStore.active()): Seq[GenericRecord] = {
     val r = new org.apache.avro.file.DataFileStream(
-      hp.getFileSystem(graft.util.HadoopConfs.active()).open(hp),
+      store.open(graft.util.PathUtils.canonical(path)),
       new GenericDatumReader[GenericRecord]())
     try {
       val out = Seq.newBuilder[GenericRecord]
@@ -686,12 +643,10 @@ object IcebergManifests {
     * summaries into a new manifest list.
     */
   def writeManifestListRecords(path: String, carried: Seq[GenericRecord],
-      fresh: Seq[ManifestSummary]): Unit = {
-    val f = new File(path)
-    f.getParentFile.mkdirs()
+      fresh: Seq[ManifestSummary], store: TableStore): Unit = {
     val w = new DataFileWriter(
       new GenericDatumWriter[GenericRecord](ManifestFileSchema))
-    w.create(ManifestFileSchema, f)
+    w.create(ManifestFileSchema, store.create(path))
     try {
       // carried records may come from a REAL writer's manifest list (a
       // different avro schema: extra fields, different field order) —

@@ -1,7 +1,6 @@
 package graft.formats.iceberg
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths => JPaths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -9,6 +8,7 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import org.apache.spark.sql.types.StructType
 
+import graft.io.TableStore
 import graft.model.PartitionFieldSpec
 import graft.util.Jsons
 
@@ -107,29 +107,17 @@ object IcebergMetadata {
     * order). The metadata-file listing is authoritative; the max of
     * both is returned.
     */
-  def currentVersion(tablePath: String): Option[Long] = {
-    val hint: Option[Long] = {
-      val h = JPaths.get(versionHint(tablePath))
-      if (!Files.exists(h)) None
-      else scala.util.Try(new String(Files.readAllBytes(h),
-        StandardCharsets.UTF_8).trim.toLong).toOption
-    }
-    val dir = JPaths.get(metadataDir(tablePath))
-    val listed: Option[Long] =
-      if (!Files.exists(dir)) None
-      else {
-        val stream = Files.list(dir)
-        try {
-          import scala.jdk.CollectionConverters._
-          stream.iterator().asScala.map(_.getFileName.toString)
-            .filter(n => n.startsWith("v") && n.endsWith(".metadata.json"))
-            .flatMap(n => scala.util.Try(
-              n.stripPrefix("v").stripSuffix(".metadata.json").toLong)
-              .toOption)
-            .foldLeft(Option.empty[Long])((acc, v) =>
-              Some(acc.fold(v)(math.max(_, v))))
-        } finally stream.close()
-      }
+  def currentVersion(tablePath: String,
+      store: TableStore = TableStore.active()): Option[Long] = {
+    val hint: Option[Long] =
+      if (!store.exists(versionHint(tablePath))) None
+      else scala.util.Try(
+        store.readString(versionHint(tablePath)).trim.toLong).toOption
+    val listed = store.names(metadataDir(tablePath))
+      .filter(n => n.startsWith("v") && n.endsWith(".metadata.json"))
+      .flatMap(n => n.stripPrefix("v").stripSuffix(".metadata.json")
+        .toLongOption)
+      .maxOption
     (hint.toSeq ++ listed.toSeq).reduceOption(_ max _)
   }
 
@@ -246,7 +234,8 @@ object IcebergMetadata {
   def currentSpecJson(meta: IcebergTableMetadata): String =
     Jsons.mapper.writeValueAsString(currentSpecNode(meta))
 
-  def write(tablePath: String, version: Long, meta: IcebergTableMetadata)
+  def write(tablePath: String, version: Long, meta: IcebergTableMetadata,
+      store: TableStore = TableStore.active())
       : Boolean = {
     val nf = JsonNodeFactory.instance
     val o = nf.objectNode()
@@ -300,28 +289,20 @@ object IcebergMetadata {
         sum.put("graft.source-identifier", sid))
     }
 
-    val target = JPaths.get(metadataFile(tablePath, version))
-    Files.createDirectories(target.getParent)
-    if (Files.exists(target)) return false
-    val tmp = Files.createTempFile(target.getParent, s".v$version", ".tmp")
-    Files.write(tmp, Jsons.mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsString(o).getBytes(StandardCharsets.UTF_8))
-    if (graft.util.AtomicFiles.publish(tmp, target)) {
+    store.putIfAbsent(metadataFile(tablePath, version),
+      Jsons.mapper.writerWithDefaultPrettyPrinter()
+        .writeValueAsString(o).getBytes(StandardCharsets.UTF_8)) && {
       // atomic hint publish: a plain overwrite lets a concurrent reader
       // see a truncated/empty hint mid-write
-      val hint = JPaths.get(versionHint(tablePath))
-      val htmp = Files.createTempFile(hint.getParent, ".hint", ".tmp")
-      Files.write(htmp, version.toString.getBytes(StandardCharsets.UTF_8))
-      Files.move(htmp, hint,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      store.replace(versionHint(tablePath),
+        version.toString.getBytes(StandardCharsets.UTF_8))
       true
-    } else false
+    }
   }
 
-  def read(tablePath: String, version: Long): IcebergTableMetadata = {
-    val json = new String(Files.readAllBytes(
-      JPaths.get(metadataFile(tablePath, version))), StandardCharsets.UTF_8)
+  def read(tablePath: String, version: Long,
+      store: TableStore = TableStore.active()): IcebergTableMetadata = {
+    val json = store.readString(metadataFile(tablePath, version))
     val n = Jsons.mapper.readTree(json)
     // spec §Format Versioning: v1/v2/v3 are implemented (v3 since r13:
     // puffin deletion vectors applied at read, next-row-id carried,

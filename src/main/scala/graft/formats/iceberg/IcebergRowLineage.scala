@@ -193,7 +193,7 @@ object IcebergRowLineage {
           out
         }
       val len = IcebergManifests.writeManifest(np, entries,
-        bconf.value.value)
+        new graft.io.TableStore(bconf.value.value))
       IcebergManifests.ManifestSummary(np, len, origSeq, 0, n, 0, 0L,
         rows, content = 0, specId = specId)
     }

@@ -1,6 +1,5 @@
 package graft.formats.iceberg
 
-import java.io.File
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.util.zip.CRC32
@@ -11,6 +10,7 @@ import scala.util.Using
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
 
+import graft.io.TableStore
 import graft.util.Jsons
 
 /** Puffin file codec — the public Iceberg puffin-spec.md layout that
@@ -62,18 +62,15 @@ object Puffin {
   final case class Dv(referencedDataFile: String, positions: Seq[Long])
 
   /** Write one puffin file holding one `deletion-vector-v1` blob per
-    * [[Dv]]; returns the blob metadata in input order (the manifest
-    * author needs each blob's offset/length for data_file fields
-    * 144/145). Local-filesystem writer — graft tables in this engine are
-    * path-addressed through [[graft.util.PathUtils.canonical]] like the
-    * avro manifest writers in [[IcebergManifests]].
+    * [[Dv]] through `store`; returns the blob metadata in input order (the
+    * manifest author needs each blob's offset/length for data_file fields
+    * 144/145).
     */
   def writeDeletionVectors(path: String, snapshotId: Long,
-      sequenceNumber: Long, dvs: Seq[Dv]): Seq[Blob] = {
-    val f = new File(graft.util.PathUtils.canonical(path))
-    Option(f.getParentFile).foreach(_.mkdirs())
+      sequenceNumber: Long, dvs: Seq[Dv],
+      store: TableStore = TableStore.active()): Seq[Blob] = {
     val out = new java.io.BufferedOutputStream(
-      new java.io.FileOutputStream(f))
+      store.create(graft.util.PathUtils.canonical(path)))
     try {
       out.write(Magic)
       var offset = 4L

@@ -5,6 +5,7 @@ import java.util.UUID
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.io.TableStore
 import graft.model._
 import graft.plans.Placement
 import graft.spi._
@@ -20,7 +21,9 @@ class PaimonConversionSource(spark: SparkSession, tablePath: String,
 
   override def sourceFormat: String = "PAIMON"
 
-  private def latest: Long = PaimonFormat.latestSnapshotId(tablePath)
+  private val store = TableStore(spark)
+
+  private def latest: Long = PaimonFormat.latestSnapshotId(tablePath, store)
     .getOrElse(throw new IllegalStateException(s"no Paimon table at $tablePath"))
 
   /** A snapshot's manifests, base ∪ delta, with the sizes their lists
@@ -29,7 +32,8 @@ class PaimonConversionSource(spark: SparkSession, tablePath: String,
   private def manifestsOf(snap: PaimonFormat.PaimonSnapshot)
       : Seq[(String, Long)] =
     Seq(snap.baseManifestList, snap.deltaManifestList).flatMap(l =>
-      PaimonFormat.readManifestList(PaimonFormat.manifestListPath(tablePath, l)))
+      PaimonFormat.readManifestList(PaimonFormat.manifestListPath(tablePath, l),
+        store))
 
   /** (kind, entry) pairs of `manifests`, decoded where [[Placement]] puts
     * them: on the driver, or one task PER MANIFEST.
@@ -42,14 +46,13 @@ class PaimonConversionSource(spark: SparkSession, tablePath: String,
       s"${PaimonFormat.manifestDir(tablePath)}/$n" }
     at.getOrElse(Placement.of(manifests.map(m => Some(m._2)))) match {
       case Placement.Driver =>
-        val conf = graft.util.HadoopConfs.session(spark)
         Left(paths.toIndexedSeq.flatMap(p =>
-          PaimonFormat.readManifest(p, conf).map(PaimonFormat.fromEntry(_, tp))))
+          PaimonFormat.readManifest(p, store).map(PaimonFormat.fromEntry(_, tp))))
       case Placement.Tasks =>
         val bconf = graft.util.HadoopConfs.broadcastSession(spark)
         Right(graft.util.Par.ds(spark, paths, 128)
-          .flatMap(p => PaimonFormat.readManifest(p, bconf.value.value)
-            .map(PaimonFormat.fromEntry(_, tp))))
+          .flatMap(p => PaimonFormat.readManifest(p,
+            new TableStore(bconf.value.value)).map(PaimonFormat.fromEntry(_, tp))))
     }
   }
 
@@ -80,8 +83,8 @@ class PaimonConversionSource(spark: SparkSession, tablePath: String,
   }
 
   override def currentTable(): TableDescriptor = {
-    val snap = PaimonFormat.readSnapshot(tablePath, latest)
-    val schema = PaimonFormat.readSchema(tablePath, snap.schemaId)
+    val snap = PaimonFormat.readSnapshot(tablePath, latest, store)
+    val schema = PaimonFormat.readSchema(tablePath, snap.schemaId, store)
     TableDescriptor(tableName, "PAIMON", PathUtils.canonical(tablePath),
       schema.schema,
       schema.partitionKeys.map(k => PartitionFieldSpec(k, Transform.Value)),
@@ -98,8 +101,8 @@ class PaimonConversionSource(spark: SparkSession, tablePath: String,
     val head = latest
     require(id >= 1 && id <= head,
       s"no Paimon snapshot $id at $tablePath (head is $head)")
-    val snap = PaimonFormat.readSnapshot(tablePath, id)
-    val schema = PaimonFormat.readSchema(tablePath, snap.schemaId)
+    val snap = PaimonFormat.readSnapshot(tablePath, id, store)
+    val schema = PaimonFormat.readSchema(tablePath, snap.schemaId, store)
     val table = TableDescriptor(tableName, "PAIMON",
       PathUtils.canonical(tablePath), schema.schema,
       schema.partitionKeys.map(k => PartitionFieldSpec(k, Transform.Value)),
@@ -115,13 +118,14 @@ class PaimonConversionSource(spark: SparkSession, tablePath: String,
       listing(snap))
 
   override def currentSnapshot(): TableSnapshot =
-    snapshotOf(currentTable(), PaimonFormat.readSnapshot(tablePath, latest))
+    snapshotOf(currentTable(), PaimonFormat.readSnapshot(tablePath, latest, store))
 
   override def changeForCommit(commit: String): TableChange = {
     import spark.implicits._
-    val snap = PaimonFormat.readSnapshot(tablePath, commit.toLong)
+    val snap = PaimonFormat.readSnapshot(tablePath, commit.toLong, store)
     val delta = entries(PaimonFormat.readManifestList(
-      PaimonFormat.manifestListPath(tablePath, snap.deltaManifestList)), None)
+      PaimonFormat.manifestListPath(tablePath, snap.deltaManifestList), store),
+      None)
     def side(kind: Int) = Placement.mapRows(delta)(
       _.collect { case (k, f) if k == kind => f })
     TableChange(commit, currentTable().copy(latestCommitMillis = commit.toLong),
@@ -129,12 +133,12 @@ class PaimonConversionSource(spark: SparkSession, tablePath: String,
   }
 
   override def commitsBacklog(lastSynced: String): Seq[String] =
-    PaimonFormat.listSnapshotIds(tablePath)
+    PaimonFormat.listSnapshotIds(tablePath, store)
       .filter(_ > lastSynced.toLong).map(_.toString)
 
   override def isIncrementalSyncSafeFrom(commit: String): Boolean =
-    PaimonFormat.listSnapshotIds(tablePath).contains(commit.toLong) ||
-      PaimonFormat.listSnapshotIds(tablePath).headOption
+    PaimonFormat.listSnapshotIds(tablePath, store).contains(commit.toLong) ||
+      PaimonFormat.listSnapshotIds(tablePath, store).headOption
         .contains(commit.toLong + 1)
 
   def toDataFrame: DataFrame =
@@ -161,6 +165,8 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
   private var expectedBase: Option[Long] = None
 
   private var commitStamp: Option[(String, Long)] = None
+
+  private val store = TableStore(spark)
 
   /** CAS guard for read-modify-write commits (deleteWhere/updateWhere):
     * the caller planned its victim set against snapshot `id`, and the
@@ -196,7 +202,7 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
     partitionSpec = spec
 
   override def syncFilesForSnapshot(files: Dataset[FileEntry]): Unit =
-    pending = PaimonFormat.latestSnapshotId(tablePath) match {
+    pending = PaimonFormat.latestSnapshotId(tablePath, store) match {
       case None => FilesDelta(Right(files), Left(Vector.empty))
       case Some(_) => FilesDelta.between(files,
         new PaimonConversionSource(spark, tablePath, "target")
@@ -208,7 +214,7 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
   override def completeSync(): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val prevId = PaimonFormat.latestSnapshotId(tablePath)
+    val prevId = PaimonFormat.latestSnapshotId(tablePath, store)
     expectedBase.foreach { planned =>
       if (prevId.getOrElse(0L) != planned)
         throw new IllegalStateException(
@@ -223,13 +229,13 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
     // differs from the table's latest writes schema-(latest+1) and the
     // new snapshot references it (previously snapshots hardcoded schema
     // id 0, silently serving a stale schema after source evolution)
-    val schemaId: Long = PaimonFormat.latestSchemaId(tablePath) match {
+    val schemaId: Long = PaimonFormat.latestSchemaId(tablePath, store) match {
       case None =>
         PaimonFormat.writeSchema(tablePath, PaimonFormat.PaimonSchema(0,
-          schema, partitionSpec.map(_.partitionColumnName), Map.empty))
+          schema, partitionSpec.map(_.partitionColumnName), Map.empty), store)
         0L
       case Some(latest) =>
-        val cur = PaimonFormat.readSchema(tablePath, latest)
+        val cur = PaimonFormat.readSchema(tablePath, latest, store)
         val sameFields = cur.schema.map(f =>
             (f.name, f.dataType.catalogString, f.nullable)) ==
           schema.map(f => (f.name, f.dataType.catalogString, f.nullable))
@@ -237,7 +243,7 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
         else {
           PaimonFormat.writeSchema(tablePath, PaimonFormat.PaimonSchema(
             latest + 1, schema, partitionSpec.map(_.partitionColumnName),
-            cur.options))
+            cur.options), store)
           latest + 1
         }
     }
@@ -257,19 +263,19 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
     // never a 10^6-entry live set (the r5 Iceberg carry-forward shape).
     val base: Seq[(String, Long)] = {
       val raw = prevId.map { p =>
-        val s = PaimonFormat.readSnapshot(tablePath, p)
+        val s = PaimonFormat.readSnapshot(tablePath, p, store)
         Seq(s.baseManifestList, s.deltaManifestList).flatMap(l =>
           PaimonFormat.readManifestList(
-            PaimonFormat.manifestListPath(tablePath, l)).map(_._1))
+            PaimonFormat.manifestListPath(tablePath, l), store).map(_._1))
       }.getOrElse(Nil)
       if (raw.size <= 16)
-        raw.map(n => (n, new java.io.File(s"$mdir/$n").length()))
+        raw.map(n => (n, store.length(s"$mdir/$n")))
       else {
         val tp = tablePath
         val md = mdir
         val entries = graft.util.Par.ds(spark, raw.map(n => s"$md/$n"), 128)
-          .flatMap(mp => PaimonFormat.readManifest(mp, bconf.value.value)
-            .map(PaimonFormat.fromEntry(_, tp)))
+          .flatMap(mp => PaimonFormat.readManifest(mp,
+            new TableStore(bconf.value.value)).map(PaimonFormat.fromEntry(_, tp)))
         val adds = entries.filter(_._1 == PaimonFormat.Kind.Add).map(_._2)
         val dels = entries.filter(_._1 == PaimonFormat.Kind.Delete)
           .map(_._2.path).toDF("__del")
@@ -281,7 +287,7 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
               val np = s"manifest-${UUID.randomUUID()}-compacted"
               val len = PaimonFormat.writeManifest(s"$md/$np",
                 it.map(PaimonFormat.toEntry(_, PaimonFormat.Kind.Add)),
-                bconf.value.value)
+                new TableStore(bconf.value.value))
               Iterator((np, len))
             }
           }.collect().toSeq
@@ -293,13 +299,13 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
     // job); otherwise one manifest PER TASK with bounded entries each, so
     // the commit's write path is O(1) on the driver at any commit size
     val md = mdir
-    val writeDelta = (conf: org.apache.hadoop.conf.Configuration) =>
+    val writeDelta = (store: TableStore) =>
       (it: Iterator[(Int, FileEntry)]) =>
         if (!it.hasNext) Iterator.empty
         else {
           val np = s"manifest-${UUID.randomUUID()}"
           val len = PaimonFormat.writeManifest(s"$md/$np",
-            it.map { case (k, f) => PaimonFormat.toEntry(f, k) }, conf)
+            it.map { case (k, f) => PaimonFormat.toEntry(f, k) }, store)
           Iterator((np, len))
         }
     def tagged(side: Placement.Placed[FileEntry], kind: Int) =
@@ -308,7 +314,7 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
       (tagged(adds.rows, PaimonFormat.Kind.Add),
         tagged(removes.rows, PaimonFormat.Kind.Delete)) match {
         case (Left(a), Left(r)) =>
-          writeDelta(graft.util.HadoopConfs.session(spark))(
+          writeDelta(store)(
             a.iterator ++ r.iterator).toSeq
         case (a, r) =>
           val nParts = math.max(1, math.min(256, math.ceil(
@@ -316,14 +322,15 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
               PaimonConversionTarget.EntriesPerManifest).toInt))
           Placement.dataset(spark, a).union(Placement.dataset(spark, r))
             .repartition(nParts)
-            .mapPartitions(it => writeDelta(bconf.value.value)(it))
+            .mapPartitions(it => writeDelta(new TableStore(bconf.value.value))(it))
             .collect().toSeq
       }
 
     val baseListName = s"manifest-list-${UUID.randomUUID()}-base"
     val deltaListName = s"manifest-list-${UUID.randomUUID()}-delta"
-    PaimonFormat.writeManifestList(s"$mdir/$baseListName", base)
-    PaimonFormat.writeManifestList(s"$mdir/$deltaListName", deltaManifests)
+    PaimonFormat.writeManifestList(s"$mdir/$baseListName", base, store)
+    PaimonFormat.writeManifestList(s"$mdir/$deltaListName", deltaManifests,
+      store)
 
     // real Paimon's running row accounting: delta = this commit's
     // adds − removes; total chains from the previous snapshot's total
@@ -332,7 +339,7 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
     val deltaRows = adds.weight - removes.weight
     val totalRows: Option[Long] = prevId match {
       case None => Some(deltaRows)
-      case Some(p) => PaimonFormat.readSnapshot(tablePath, p)
+      case Some(p) => PaimonFormat.readSnapshot(tablePath, p, store)
         .totalRecordCount.map(_ + deltaRows)
     }
 
@@ -344,15 +351,15 @@ class PaimonConversionTarget(spark: SparkSession, tablePath: String)
       commitUser = commitStamp.map(_._1),
       commitIdentifier = commitStamp.map(_._2),
       totalRecordCount = totalRows,
-      deltaRecordCount = Some(deltaRows)))
+      deltaRecordCount = Some(deltaRows)), store)
     adds.unpin(); removes.unpin()
     if (!ok) throw new IllegalStateException(
       s"concurrent writer committed snapshot $id first at $tablePath")
   }
 
   override def tableMetadata(): Option[SyncMetadata] =
-    PaimonFormat.latestSnapshotId(tablePath)
-      .flatMap(id => PaimonFormat.readSnapshot(tablePath, id).graftMetadata)
+    PaimonFormat.latestSnapshotId(tablePath, store)
+      .flatMap(id => PaimonFormat.readSnapshot(tablePath, id, store).graftMetadata)
       .flatMap(SyncMetadata.fromJson)
 }
 

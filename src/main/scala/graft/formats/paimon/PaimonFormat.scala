@@ -1,18 +1,15 @@
 package graft.formats.paimon
 
-import java.io.File
-import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths => JPaths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
-import scala.util.Using
 
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.types._
 
+import graft.io.TableStore
 import graft.util.Jsons
 
 /** Paimon-layout table metadata (public layout: `snapshot/LATEST` +
@@ -93,9 +90,11 @@ object PaimonFormat {
   def snapshotDir(tablePath: String): String = s"$tablePath/snapshot"
   def manifestDir(tablePath: String): String = s"$tablePath/manifest"
 
-  def writeSchema(tablePath: String, s: PaimonSchema): Unit = {
-    val dir = JPaths.get(schemaDir(tablePath))
-    Files.createDirectories(dir)
+  /** Publish `schema-<id>` put-if-absent: of two writers of the same id
+    * exactly one wins, and the loser refuses instead of overwriting it.
+    */
+  def writeSchema(tablePath: String, s: PaimonSchema,
+      store: TableStore = TableStore.active()): Unit = {
     val json = Jsons.toJson(Map(
       "id" -> s.id,
       "fields" -> s.schema.fields.zipWithIndex.map { case (f, i) => Map(
@@ -106,26 +105,23 @@ object PaimonFormat {
       "partitionKeys" -> s.partitionKeys,
       "primaryKeys" -> Nil,
       "options" -> s.options))
-    Files.write(dir.resolve(s"schema-${s.id}"),
-      json.getBytes(StandardCharsets.UTF_8))
+    if (!store.putIfAbsent(s"${schemaDir(tablePath)}/schema-${s.id}",
+        json.getBytes(StandardCharsets.UTF_8)))
+      throw new IllegalStateException(
+        s"concurrent writer published schema-${s.id} first at $tablePath")
   }
 
   /** Highest schema-N file present, None before table creation. */
-  def latestSchemaId(tablePath: String): Option[Long] = {
-    val dir = JPaths.get(schemaDir(tablePath))
-    if (!Files.isDirectory(dir)) None
-    else {
-      val ids = Using.resource(Files.list(dir))(_.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith("schema-") && n.drop(7).forall(_.isDigit))
-        .map(_.drop(7).toLong).toSeq)
-      if (ids.isEmpty) None else Some(ids.max)
-    }
-  }
+  def latestSchemaId(tablePath: String,
+      store: TableStore = TableStore.active()): Option[Long] =
+    store.names(schemaDir(tablePath))
+      .filter(n => n.startsWith("schema-") && n.drop(7).forall(_.isDigit))
+      .map(_.drop(7).toLong).maxOption
 
-  def readSchema(tablePath: String, id: Long): PaimonSchema = {
-    val n = Jsons.mapper.readTree(Files.readAllBytes(
-      JPaths.get(schemaDir(tablePath), s"schema-$id")))
+  def readSchema(tablePath: String, id: Long,
+      store: TableStore = TableStore.active()): PaimonSchema = {
+    val n = Jsons.mapper.readTree(
+      store.read(s"${schemaDir(tablePath)}/schema-$id"))
     val fields = n.get("fields").elements().asScala.map { f =>
       val raw = f.get("type").asText
       val nullable = !raw.endsWith(" NOT NULL")
@@ -161,22 +157,17 @@ object PaimonFormat {
     * order). The snapshot-file listing is authoritative; the max of
     * both is returned.
     */
-  def latestSnapshotId(tablePath: String): Option[Long] = {
-    val hint: Option[Long] = {
-      val latest = JPaths.get(snapshotDir(tablePath), "LATEST")
-      if (!Files.exists(latest)) None
-      else scala.util.Try(new String(Files.readAllBytes(latest),
-        StandardCharsets.UTF_8).trim.toLong).toOption
-    }
-    val listed = listSnapshotIds(tablePath).lastOption
+  def latestSnapshotId(tablePath: String,
+      store: TableStore = TableStore.active()): Option[Long] = {
+    val hint = store.readOption(s"${snapshotDir(tablePath)}/LATEST")
+      .flatMap(b => new String(b, StandardCharsets.UTF_8).trim.toLongOption)
+    val listed = listSnapshotIds(tablePath, store).lastOption
     (hint.toSeq ++ listed.toSeq).reduceOption(_ max _)
   }
 
-  def writeSnapshot(tablePath: String, s: PaimonSnapshot): Boolean = {
-    val dir = JPaths.get(snapshotDir(tablePath))
-    Files.createDirectories(dir)
-    val target = dir.resolve(s"snapshot-${s.id}")
-    if (Files.exists(target)) return false
+  def writeSnapshot(tablePath: String, s: PaimonSnapshot,
+      store: TableStore = TableStore.active()): Boolean = {
+    val dir = snapshotDir(tablePath)
     val json = Jsons.toJson(Map(
       "version" -> 3, "id" -> s.id, "schemaId" -> s.schemaId,
       "commitKind" -> s.commitKind, "timeMillis" -> s.timeMillis,
@@ -190,23 +181,19 @@ object PaimonFormat {
         .map(java.lang.Long.valueOf).orNull,
       "deltaRecordCount" -> s.deltaRecordCount
         .map(java.lang.Long.valueOf).orNull))
-    val tmp = Files.createTempFile(dir, s".snap${s.id}", ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    if (graft.util.AtomicFiles.publish(tmp, target)) {
+    store.putIfAbsent(s"$dir/snapshot-${s.id}",
+      json.getBytes(StandardCharsets.UTF_8)) && {
       // atomic hint publish — a racing reader must never see a torn
       // LATEST (the listing remains the authority regardless)
-      val htmp = Files.createTempFile(dir, ".latest", ".tmp")
-      Files.write(htmp, s.id.toString.getBytes(StandardCharsets.UTF_8))
-      Files.move(htmp, dir.resolve("LATEST"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      store.replace(s"$dir/LATEST", s.id.toString.getBytes(StandardCharsets.UTF_8))
       true
-    } else false
+    }
   }
 
-  def readSnapshot(tablePath: String, id: Long): PaimonSnapshot = {
-    val n = Jsons.mapper.readTree(Files.readAllBytes(
-      JPaths.get(snapshotDir(tablePath), s"snapshot-$id")))
+  def readSnapshot(tablePath: String, id: Long,
+      store: TableStore = TableStore.active()): PaimonSnapshot = {
+    val n = Jsons.mapper.readTree(
+      store.read(s"${snapshotDir(tablePath)}/snapshot-$id"))
     PaimonSnapshot(n.get("id").asLong, n.get("schemaId").asLong,
       n.get("commitKind").asText, n.get("timeMillis").asLong,
       n.get("deltaManifestList").asText, n.get("baseManifestList").asText,
@@ -224,54 +211,41 @@ object PaimonFormat {
 
   def tagDir(tablePath: String): String = s"$tablePath/tag"
 
-  def createTag(tablePath: String, name: String, snapshotId: Long): Unit = {
+  def createTag(tablePath: String, name: String, snapshotId: Long,
+      store: TableStore = TableStore.active()): Unit = {
     require(name.nonEmpty && name.forall(c =>
       c.isLetterOrDigit || c == '-' || c == '_'),
       s"invalid tag name '$name'")
-    val src = JPaths.get(snapshotDir(tablePath), s"snapshot-$snapshotId")
-    require(Files.exists(src),
+    val src = s"${snapshotDir(tablePath)}/snapshot-$snapshotId"
+    require(store.exists(src),
       s"no Paimon snapshot $snapshotId at $tablePath to tag")
-    val dir = JPaths.get(tagDir(tablePath))
-    Files.createDirectories(dir)
-    val target = dir.resolve(s"tag-$name")
-    require(!Files.exists(target), s"tag '$name' already exists")
-    val tmp = Files.createTempFile(dir, s".tag$name", ".tmp")
-    Files.copy(src, tmp, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    if (!graft.util.AtomicFiles.publish(tmp, target))
+    val target = s"${tagDir(tablePath)}/tag-$name"
+    require(!store.exists(target), s"tag '$name' already exists")
+    if (!store.putIfAbsent(target, store.read(src)))
       throw new IllegalStateException(s"concurrent writer created tag '$name'")
   }
 
   /** Snapshot id a tag points at; None if the tag doesn't exist. */
-  def readTag(tablePath: String, name: String): Option[Long] = {
-    val p = JPaths.get(tagDir(tablePath), s"tag-$name")
-    if (!Files.exists(p)) None
-    else Some(Jsons.mapper.readTree(Files.readAllBytes(p)).get("id").asLong)
-  }
+  def readTag(tablePath: String, name: String,
+      store: TableStore = TableStore.active()): Option[Long] =
+    store.readOption(s"${tagDir(tablePath)}/tag-$name")
+      .map(Jsons.mapper.readTree(_).get("id").asLong)
 
-  def dropTag(tablePath: String, name: String): Unit = {
-    val p = JPaths.get(tagDir(tablePath), s"tag-$name")
-    require(Files.exists(p), s"no tag '$name' at $tablePath")
-    Files.delete(p)
-  }
+  def dropTag(tablePath: String, name: String,
+      store: TableStore = TableStore.active()): Unit =
+    require(store.delete(s"${tagDir(tablePath)}/tag-$name"),
+      s"no tag '$name' at $tablePath")
 
-  def listTags(tablePath: String): Seq[(String, Long)] = {
-    val dir = JPaths.get(tagDir(tablePath))
-    if (!Files.exists(dir)) return Nil
-    Using.resource(Files.list(dir))(_.iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(_.startsWith("tag-"))
+  def listTags(tablePath: String,
+      store: TableStore = TableStore.active()): Seq[(String, Long)] =
+    store.names(tagDir(tablePath)).filter(_.startsWith("tag-"))
       .map(n => n.stripPrefix("tag-"))
-      .toSeq).map(n => n -> readTag(tablePath, n).get).sortBy(_._1)
-  }
+      .map(n => n -> readTag(tablePath, n, store).get).sortBy(_._1)
 
-  def listSnapshotIds(tablePath: String): Seq[Long] = {
-    val dir = JPaths.get(snapshotDir(tablePath))
-    if (!Files.exists(dir)) return Nil
-    Using.resource(Files.list(dir))(_.iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(_.startsWith("snapshot-"))
-      .map(_.stripPrefix("snapshot-").toLong).toSeq).sorted
-  }
+  def listSnapshotIds(tablePath: String,
+      store: TableStore = TableStore.active()): Seq[Long] =
+    store.names(snapshotDir(tablePath)).filter(_.startsWith("snapshot-"))
+      .map(_.stripPrefix("snapshot-").toLong).sorted
 
   // ---- manifests (avro) ----
 
@@ -295,25 +269,25 @@ object PaimonFormat {
 
   object Kind { val Add = 0; val Delete = 1 }
 
-  def writeManifest(path: String, entries: Iterator[GenericRecord]): Long = {
-    val f = new File(path); f.getParentFile.mkdirs()
+  def writeManifest(path: String, entries: Iterator[GenericRecord],
+      store: TableStore): Long = {
     val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](EntrySchema))
-    w.create(EntrySchema, f)
+    w.create(EntrySchema, store.create(path))
     try entries.foreach(w.append) finally w.close()
-    f.length()
+    store.length(path)
   }
 
-  def readManifest(path: String): Seq[GenericRecord] = {
-    val r = new DataFileReader(new File(path),
+  def readManifest(path: String, store: TableStore): Seq[GenericRecord] = {
+    val r = new DataFileReader(store.seekable(path),
       new GenericDatumReader[GenericRecord](EntrySchema))
     try { val b = Seq.newBuilder[GenericRecord]
       while (r.hasNext) b += r.next(); b.result() } finally r.close()
   }
 
-  def writeManifestList(path: String, files: Seq[(String, Long)]): Unit = {
-    val f = new File(path); f.getParentFile.mkdirs()
+  def writeManifestList(path: String, files: Seq[(String, Long)],
+      store: TableStore): Unit = {
     val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](ListSchema))
-    w.create(ListSchema, f)
+    w.create(ListSchema, store.create(path))
     try files.foreach { case (name, size) =>
       val r = new GenericData.Record(ListSchema)
       r.put("fileName", name); r.put("fileSize", size)
@@ -329,9 +303,10 @@ object PaimonFormat {
     if (ref.contains('/')) ref else s"${manifestDir(tablePath)}/$ref"
 
   /** (manifest file name, its size) pairs of a manifest list. */
-  def readManifestList(path: String): Seq[(String, Long)] = {
-    if (!Files.exists(JPaths.get(path))) return Nil
-    val r = new DataFileReader(new File(path),
+  def readManifestList(path: String,
+      store: TableStore = TableStore.active()): Seq[(String, Long)] = {
+    if (!store.exists(path)) return Nil
+    val r = new DataFileReader(store.seekable(path),
       new GenericDatumReader[GenericRecord](ListSchema))
     try { val b = Seq.newBuilder[(String, Long)]
       while (r.hasNext) {
@@ -342,33 +317,7 @@ object PaimonFormat {
       b.result() } finally r.close()
   }
 
-  // ---- executor-side manifest IO + entry codecs ----
-
-  /** Hadoop-FS write variant for EXECUTOR-side manifest authoring (one
-    * task per manifest at 10^6-file scale); object-store-safe. Returns
-    * the written length for the manifest list.
-    */
-  def writeManifest(path: String, entries: Iterator[GenericRecord],
-      conf: org.apache.hadoop.conf.Configuration): Long = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(conf)
-    val out = fs.create(hp, true)
-    val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](EntrySchema))
-    w.create(EntrySchema, out)
-    try entries.foreach(w.append) finally w.close()
-    fs.getFileStatus(hp).getLen
-  }
-
-  /** Hadoop-FS read variant for executor-side manifest scans. */
-  def readManifest(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Seq[GenericRecord] = {
-    val in = new org.apache.avro.mapred.FsInput(
-      new org.apache.hadoop.fs.Path(path), conf)
-    val r = DataFileReader.openReader(in,
-      new GenericDatumReader[GenericRecord](EntrySchema))
-    try { val b = Seq.newBuilder[GenericRecord]
-      while (r.hasNext) b += r.next(); b.result() } finally r.close()
-  }
+  // ---- entry codecs ----
 
   /** FileEntry → manifest entry record (kind = Add | Delete). */
   def toEntry(f: graft.model.FileEntry, kind: Int): GenericRecord = {

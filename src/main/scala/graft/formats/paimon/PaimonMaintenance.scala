@@ -1,10 +1,8 @@
 package graft.formats.paimon
 
-import java.nio.file.{Files, Paths => JPaths}
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 
+import graft.io.TableStore
 import graft.util.{HadoopConfs, PathUtils}
 
 /** Paimon table maintenance — snapshot expiration plus orphan-file
@@ -38,19 +36,19 @@ object PaimonMaintenance {
   def expireSnapshots(tablePath: String, retainLast: Int,
       olderThanMillis: Long = Long.MaxValue): Seq[Long] = {
     require(retainLast >= 1, "must retain at least one snapshot")
+    val store = TableStore.active()
     val path = PathUtils.canonical(tablePath)
-    val ids = PaimonFormat.listSnapshotIds(path)
+    val ids = PaimonFormat.listSnapshotIds(path, store)
     if (ids.isEmpty)
       throw new IllegalStateException(s"no Paimon table at $path")
     if (ids.size <= retainLast) return Nil
-    val pinned = PaimonFormat.listTags(path).map(_._2).toSet
+    val pinned = PaimonFormat.listTags(path, store).map(_._2).toSet
     val expired = ids.dropRight(retainLast).takeWhile(id =>
       !pinned.contains(id) &&
-        PaimonFormat.readSnapshot(path, id).timeMillis < olderThanMillis)
+        PaimonFormat.readSnapshot(path, id, store).timeMillis < olderThanMillis)
     // oldest-first: a concurrent reader resolving the head never loses it
     expired.foreach { id =>
-      Files.deleteIfExists(
-        JPaths.get(PaimonFormat.snapshotDir(path), s"snapshot-$id"))
+      store.delete(s"${PaimonFormat.snapshotDir(path)}/snapshot-$id")
     }
     expired
   }
@@ -98,12 +96,12 @@ object PaimonMaintenance {
       if (manifestNames.isEmpty) spark.emptyDataset[String]
       else graft.util.Par.ds(spark, manifestNames.map(n => s"$mdir/$n"), 64)
         .mapPartitions { it =>
-          val conf = bconf.value.value
+          val store = new TableStore(bconf.value.value)
           // ADD entries only: a path no retained snapshot ADDs is dead
           // weight even if a retained DELETE entry names it (the
           // reconciliation anti-join matches by path and tolerates the
           // file's absence)
-          it.flatMap(mp => PaimonFormat.readManifest(mp, conf)
+          it.flatMap(mp => PaimonFormat.readManifest(mp, store)
             .filter(_.get("kind").asInstanceOf[Int] == PaimonFormat.Kind.Add)
             .map(e => PathUtils.canonical(PathUtils.resolve(tp,
               e.get("fileName").toString))))
@@ -129,12 +127,10 @@ object PaimonMaintenance {
       .as[graft.util.DistributedWalk.WalkedFile]
       .filter(_.mtime <= horizon)
     val sums = doomed.mapPartitions { it =>
-      val c = bconf.value.value
+      val store = new TableStore(bconf.value.value)
       var n = 0L; var b = 0L
       it.foreach { f =>
-        graft.util.FaultInjection.beforeDelete(f.path)
-        val p = new Path(f.path)
-        if (p.getFileSystem(c).delete(p, false)) { n += 1; b += f.size }
+        if (store.delete(f.path)) { n += 1; b += f.size }
       }
       Iterator.single((n, b))
     }.collect()

@@ -169,17 +169,13 @@ object MaterializedAgg {
       val stateDir = s"$mvPath/state-v$toVersion"
       next.write.mode("overwrite").parquet(stateDir)
       val groups = stateRows(stateDir)
-      Files.createDirectories(JPaths.get(mvPath))
-      val tmp = Files.createTempFile(JPaths.get(mvPath), "._mv", ".tmp")
-      Files.write(tmp, graft.util.Jsons.toJson(Map(
-        "lastVersion" -> toVersion,
-        "stateDir" -> stateDir)).getBytes(StandardCharsets.UTF_8))
       // the manifest is a LAST-WRITER-WINS pointer (single serial
       // consumer), not a put-if-absent commit — atomic replace, so
       // readers only ever see a complete manifest
-      Files.move(tmp, manifestPath(mvPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      graft.io.TableStore(spark).replace(manifestPath(mvPath).toString,
+        graft.util.Jsons.toJson(Map(
+          "lastVersion" -> toVersion,
+          "stateDir" -> stateDir)).getBytes(StandardCharsets.UTF_8))
       // retire the superseded state (manifest already points away; a
       // crash here only leaks the old dir, never loses the view)
       old.filter(_.stateDir != stateDir).foreach { m =>

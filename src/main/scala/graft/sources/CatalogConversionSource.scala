@@ -1,10 +1,9 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths => JPaths}
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
 
+import graft.io.TableStore
 import graft.model.TableFormats
 import graft.spi.ConversionSource
 
@@ -16,9 +15,10 @@ import graft.spi.ConversionSource
 object CatalogConversionSource {
 
   /** Detect a table's format from its directory layout. */
-  def detectFormat(rawPath: String): String = {
+  def detectFormat(rawPath: String,
+      store: TableStore = TableStore.active()): String = {
     val path = graft.util.PathUtils.canonical(rawPath)
-    def has(child: String) = Files.exists(JPaths.get(path, child))
+    def has(child: String) = store.exists(s"$path/$child")
     if (has("_delta_log")) TableFormats.Delta
     else if (has("metadata/version-hint.text")) TableFormats.Iceberg
     else if (has(".hoodie/hoodie.properties")) TableFormats.Hudi

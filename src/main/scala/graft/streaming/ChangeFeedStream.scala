@@ -1,13 +1,12 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Executors, TimeUnit}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.formats.delta.{DeltaChanges, DeltaLog}
-import graft.util.HadoopConfs
+import graft.io.TableStore
 
 /** Incremental change-feed consumption with a durable offset — the CDC
   * pipeline primitive: every Delta commit's row-level changes are
@@ -35,7 +34,8 @@ class ChangeFeedStream(spark: SparkSession, tablePath: String,
     checkpointDir: String, intervalMillis: Long = 5000L,
     startingVersion: Option[Long] = None) {
 
-  private val offsetFile = Paths.get(checkpointDir, "offset")
+  private val store = TableStore(spark)
+  private val offsetFile = s"$checkpointDir/offset"
   private val executor = Executors.newSingleThreadScheduledExecutor(r => {
     val t = new Thread(r, "graft-change-feed"); t.setDaemon(true); t
   })
@@ -51,23 +51,15 @@ class ChangeFeedStream(spark: SparkSession, tablePath: String,
     * FUTURE commits, like a streaming query started at the tail).
     */
   def lastDelivered: Long =
-    if (Files.exists(offsetFile))
-      new String(Files.readAllBytes(offsetFile), StandardCharsets.UTF_8)
-        .trim.toLong
-    else startingVersion.getOrElse(
-      DeltaLog.latestVersion(tablePath, HadoopConfs.session(spark))
-        .getOrElse(0L))
+    store.readOption(offsetFile)
+      .map(new String(_, StandardCharsets.UTF_8).trim.toLong)
+      .getOrElse(startingVersion.getOrElse(
+        DeltaLog.latestVersion(tablePath, store.conf).getOrElse(0L)))
 
-  private def writeOffset(v: Long): Unit = {
-    Files.createDirectories(offsetFile.getParent)
-    val tmp = Files.createTempFile(offsetFile.getParent, ".offset", ".tmp")
-    Files.write(tmp, v.toString.getBytes(StandardCharsets.UTF_8))
-    // offsets advance in place (single consumer, last writer wins) —
-    // atomic REPLACE, not the commit files' put-if-absent CAS
-    Files.move(tmp, offsetFile,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  // offsets advance in place (single consumer, last writer wins) —
+  // atomic REPLACE, not the commit files' put-if-absent CAS
+  private def writeOffset(v: Long): Unit =
+    store.replace(offsetFile, v.toString.getBytes(StandardCharsets.UTF_8))
 
   /** One catch-up step: deliver `(lastDelivered, head]` if the table has
     * advanced. Returns the number of versions delivered (0 = caught up).
@@ -76,7 +68,7 @@ class ChangeFeedStream(spark: SparkSession, tablePath: String,
     */
   def deliverOnce(batchFn: (DataFrame, Long, Long) => Unit): Long = {
     val last = lastDelivered
-    val head = DeltaLog.latestVersion(tablePath, HadoopConfs.session(spark))
+    val head = DeltaLog.latestVersion(tablePath, store.conf)
       .getOrElse(0L)
     if (head <= last) return 0L
     val feed = DeltaChanges.changesBetween(spark, tablePath, last, head)

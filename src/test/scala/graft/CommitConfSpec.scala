@@ -12,9 +12,12 @@ import graft.formats.iceberg.{IcebergConversionSource, IcebergConversionTarget, 
 import graft.sources.ParquetDirectorySource
 import graft.sync.TableFormatSync
 
-/** A local filesystem that records every path it stats, lists or opens.
-  * Registered for the `file` scheme in the session conf only, so a
-  * writer that builds a bare `new Configuration()` never reaches it.
+/** A local filesystem that records every path it stats, lists or opens,
+  * and every path the table store resolves through it (the store reads,
+  * lists and writes a local file on the `java.io.File` this filesystem
+  * maps the path to). Registered for the `file` scheme in the session
+  * conf only, so a writer that builds a bare `new Configuration()` never
+  * reaches it.
   */
 class StatRecordingFileSystem extends LocalFileSystem {
   override def getFileStatus(f: Path): FileStatus = {
@@ -29,6 +32,10 @@ class StatRecordingFileSystem extends LocalFileSystem {
     StatRecordingFileSystem.opened.add(f.toUri.getPath)
     super.open(f, bufferSize)
   }
+  override def pathToFile(f: Path): java.io.File = {
+    StatRecordingFileSystem.resolved.add(f.toUri.getPath)
+    super.pathToFile(f)
+  }
 }
 
 object StatRecordingFileSystem {
@@ -36,6 +43,8 @@ object StatRecordingFileSystem {
   /** Every listing, in order, repeats included. */
   val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val opened = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** Every path the table store resolved, in order, repeats included. */
+  val resolved = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
 
 /** Commit writers and metadata readers reach storage through the
@@ -57,6 +66,7 @@ class CommitConfSpec extends SparkSuite {
     StatRecordingFileSystem.paths.clear()
     StatRecordingFileSystem.listed.clear()
     StatRecordingFileSystem.opened.clear()
+    StatRecordingFileSystem.resolved.clear()
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally keys.foreach { case (k, _) => spark.conf.unset(k) }
@@ -78,7 +88,8 @@ class CommitConfSpec extends SparkSuite {
         src.currentSnapshot(), src.sourceFormat)
       assert(out.forall(_.status == "SUCCESS"), out.mkString(";"))
     }
-    val seen = StatRecordingFileSystem.paths.asScala.toSeq
+    val seen = StatRecordingFileSystem.paths.asScala.toSeq ++
+      StatRecordingFileSystem.resolved.asScala
     assert(seen.exists(p => p.startsWith(s"$ice/metadata/") &&
       p.endsWith(".avro")), s"no Iceberg manifest in $seen")
     assert(seen.exists(_.startsWith(s"$hudi/.hoodie/metadata/files/")),
@@ -102,7 +113,8 @@ class CommitConfSpec extends SparkSuite {
     // and its delete manifest are read back
     recording(IcebergDeletes.appendDeletionVectors(spark, ice,
       Map(file -> Seq(1L))))
-    val opened = StatRecordingFileSystem.opened.asScala.toSeq
+    val opened = StatRecordingFileSystem.opened.asScala.toSeq ++
+      StatRecordingFileSystem.resolved.asScala
     assert(opened.exists(_.endsWith(".puffin")), s"no puffin in $opened")
     assert(opened.exists(p => p.startsWith(s"$ice/metadata/m-") &&
       p.endsWith(".avro")), s"no Iceberg manifest in $opened")
@@ -121,9 +133,11 @@ class CommitConfSpec extends SparkSuite {
       .currentSnapshot().files.count())
     assert(files == 4L)
     // the versions once, then the newest checkpoint with its files once
-    // for the state and once for the live set
-    val logLists = StatRecordingFileSystem.listed.asScala
-      .count(_ == s"$dir/_delta_log")
-    assert(logLists == 3, StatRecordingFileSystem.listed)
+    // for the state and once for the live set — names-only listings go
+    // through the store, which resolves the log directory once per listing
+    val logLists = (StatRecordingFileSystem.listed.asScala ++
+      StatRecordingFileSystem.resolved.asScala).count(_ == s"$dir/_delta_log")
+    assert(logLists == 3, (StatRecordingFileSystem.listed,
+      StatRecordingFileSystem.resolved))
   }
 }

@@ -463,6 +463,11 @@ class OpenRecordingFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
     OpenRecordingFileSystem.opened.add(f.toUri.getPath)
     super.open(f, bufferSize)
   }
+  // the table store reads a local file on the file this resolves
+  override def pathToFile(f: org.apache.hadoop.fs.Path): java.io.File = {
+    OpenRecordingFileSystem.opened.add(f.toUri.getPath)
+    super.pathToFile(f)
+  }
 }
 
 object OpenRecordingFileSystem {

@@ -11,6 +11,7 @@ import graft.formats.delta.{DeltaConversionSource, DeltaLog, DeltaSnapshot}
 import graft.formats.hudi.{HudiConversionSource, HudiConversionTarget, HudiMetadataIndex, HudiMetadataTable, HudiTimeline}
 import graft.formats.iceberg.{IcebergConversionSource, IcebergConversionTarget, IcebergManifests, IcebergMetadata}
 import graft.formats.paimon.{PaimonConversionSource, PaimonFormat}
+import graft.io.TableStore
 import graft.model._
 import graft.plans.Placement
 import graft.plans.Placement.Placed
@@ -27,6 +28,8 @@ import graft.sync.TableFormatSync
 class PlacementEquivalenceSpec extends SparkSuite {
 
   private val Both = Seq(Placement.Driver, Placement.Tasks)
+
+  private lazy val store = TableStore(spark)
 
   private def golden(name: String): String =
     new java.io.File(s"src/test/resources/golden/$name").getAbsolutePath
@@ -137,11 +140,11 @@ class PlacementEquivalenceSpec extends SparkSuite {
         else IcebergManifests.Status.Added))
       val len = IcebergManifests.writeManifest(path, es.iterator.map {
         case (f, st) => IcebergManifests.toEntry(f, st, 1L, schema)
-      })
+      }, store)
       IcebergManifests.ManifestSummary(path, len, 1L, 2, 0, 1, 20L, 0L)
     }
     val list = s"$dir/metadata/snap-1.avro"
-    IcebergManifests.writeManifestList(list, manifests)
+    IcebergManifests.writeManifestListRecords(list, Nil, manifests, store)
     val live = same("generated iceberg")(at => IcebergManifests.liveFiles(
       spark, IcebergManifests.dataManifests(list), schema, Some(at)))
     assert(live.map(_.path) ==
@@ -271,10 +274,12 @@ class PlacementEquivalenceSpec extends SparkSuite {
       val dels = if (m < 5) Nil else Seq(0, 3, 7).map(i =>
         PaimonFormat.toEntry(entry(i), PaimonFormat.Kind.Delete))
       (name, PaimonFormat.writeManifest(s"$mdir/$name",
-        (adds ++ dels).iterator))
+        (adds ++ dels).iterator, store))
     }
-    PaimonFormat.writeManifestList(s"$mdir/list-base", manifests.take(5))
-    PaimonFormat.writeManifestList(s"$mdir/list-delta", manifests.drop(5))
+    PaimonFormat.writeManifestList(s"$mdir/list-base", manifests.take(5),
+      store)
+    PaimonFormat.writeManifestList(s"$mdir/list-delta", manifests.drop(5),
+      store)
     assert(PaimonFormat.writeSnapshot(dir, PaimonFormat.PaimonSnapshot(1L,
       0L, "APPEND", 1L, "list-delta", "list-base", None)))
     val live = paimonListings(dir)
